@@ -78,8 +78,9 @@ def refresh_bloom_index(table, col: str) -> dict:
     """Build/refresh the bloom sidecar for ``col`` at the CURRENT
     snapshot: hash only live data files that have no index row yet
     (immutability makes old rows permanently valid), drop rows for
-    files no longer live. Returns {'indexed': new, 'kept': reused,
-    'files': total_live}."""
+    files no longer live. Returns {'indexed': bitsets built now (files
+    with no non-null key get an empty sentinel and are not counted),
+    'kept': reused, 'files': total_live}."""
     spark = table.spark
     live = set(e["file_path"] for e in table.data_entries())
     existing: dict[str, tuple] = {}
@@ -96,6 +97,7 @@ def refresh_bloom_index(table, col: str) -> dict:
     todo = sorted(p for p in live if p not in existing)
 
     rows: list[tuple] = list(existing.values())
+    built: dict[str, tuple] = {}
     if todo:
         # evolution-aware read of the todo files: old files store the
         # PHYSICAL pre-rename column names, so a raw read would fail to
@@ -117,9 +119,8 @@ def refresh_bloom_index(table, col: str) -> dict:
         # NULL keys carry no probe positions (md5(NULL) is NULL; the
         # NaN positions crashed the bitset scatter) and a point lookup
         # is by definition on a concrete key — leave them unindexed.
-        # A file of ONLY null keys then has no index row, which
-        # point_lookup already treats as unprunable (read it), so the
-        # no-false-negative invariant holds.
+        # A file of ONLY null keys yields no row here; it gets an empty
+        # sentinel bitset below.
         df = df.select(
             F.col(col).cast("string").alias("_key"),
             F.input_file_name().alias("_file"),
@@ -153,16 +154,18 @@ def refresh_bloom_index(table, col: str) -> dict:
             df.select("_file", probe.alias("_pos")).distinct()
         )
 
-        root = table.root
+        root = table.root.split("://", 1)[-1].rstrip("/") + "/"
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
+            from urllib.parse import unquote
+
             bits = np.zeros(BLOOM_BITS, bool)
             bits[pdf["_pos"].to_numpy()] = True
             # normalize the absolute input_file_name URI back to the
             # manifest-relative path ("file:///.../table/data/x.parquet"
-            # -> "data/x.parquet")
-            f = pdf["_file"].iloc[0].split("://", 1)[-1]
-            rel = f.split(root.rstrip("/") + "/", 1)[-1]
+            # -> "data/x.parquet"; the root may carry a scheme too)
+            f = unquote(pdf["_file"].iloc[0]).split("://", 1)[-1]
+            rel = f.split(root, 1)[-1]
             return pd.DataFrame(
                 {
                     "file_path": [rel],
@@ -171,18 +174,30 @@ def refresh_bloom_index(table, col: str) -> dict:
                 }
             )
 
-        rows.extend(
-            (r.file_path, bytes(r.bitset), int(r.n_bits))
+        built = {
+            r.file_path: (r.file_path, bytes(r.bitset), int(r.n_bits))
             for r in pos_df.groupBy("_file")
             .applyInPandas(build, schema=_INDEX_SCHEMA)
             .collect()
-        )
+        }
+        stray = set(built) - set(todo)
+        if stray:
+            # a sentinel for a file whose real row went astray would
+            # prune it for every key: fail loudly instead
+            raise RuntimeError(f"bloom rows for unknown files: {sorted(stray)[:3]}")
+        rows.extend(built.values())
+        # files with no non-null key get an all-zero bitset: immutability
+        # makes it permanently valid, so later refreshes skip them, and
+        # point_lookup prunes them for every key (col == key never
+        # matches NULL)
+        empty = bytes(BLOOM_BITS // 8)
+        rows.extend((p, empty, 0) for p in todo if p not in built)
 
     if rows:
         spark.createDataFrame(rows, _INDEX_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(idx_dir)
-    return {"indexed": len(todo), "kept": len(existing), "files": len(live)}
+    return {"indexed": len(built), "kept": len(existing), "files": len(live)}
 
 
 def point_lookup(table, col: str, key: str) -> tuple[DataFrame, int, int]:

@@ -17,31 +17,22 @@ tie-broken orderings, md5-free here).
 
 from __future__ import annotations
 
-import shutil
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _l2_sql, register
+from .queries import SCRATCH, _l2_sql, register, scratch
 from .search import embed_query
-
-# per-process scratch (oracle SQL embeds the path at import; a pytest
-# run and a concurrent driver sweep must not clobber each other)
-SCRATCH = f"/tmp/fupi_spark_mq_{os.getpid()}"
 
 
 def _fresh(spark: SparkSession, name: str, n: int, parts: int):
     from . import meta
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/{name}"
-    shutil.rmtree(root, ignore_errors=True)
-    t = meta.create_table(spark, root)
+    t = meta.create_table(spark, scratch(name))
     meta.append(t, synth_clips(spark, n, dur_range_ms=(50, 150), parts=parts), job_id="seed")
     return t
 
@@ -271,8 +262,7 @@ def audio_verify_snr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .audio import verify_clips
     from .synth import synth_clips
 
-    meta_path = f"{SCRATCH}/verify_meta"
-    shutil.rmtree(meta_path, ignore_errors=True)
+    meta_path = scratch("verify_meta")
     clips = synth_clips(spark, 200, dur_range_ms=(50, 120), parts=8)
     clips.select("clip_id", "sr_hz", "dur_ms", "codec").write.mode("overwrite").parquet(meta_path)
     v = verify_clips(_corrupt_where_dur_div5(clips))
@@ -307,10 +297,7 @@ def audio_verify_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .integrity import corrupt_file_on_disk, verify_table
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/verify_sampled"
-    meta_path = f"{SCRATCH}/verify_sampled_meta"
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(meta_path, ignore_errors=True)
+    root, meta_path = scratch("verify_sampled", "verify_sampled_meta")
     t = meta.create_table(spark, root)
     meta.append(
         t,
@@ -359,8 +346,7 @@ def audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .audio import extract_features
     from .synth import synth_clips
 
-    meta_path = f"{SCRATCH}/features_meta"
-    shutil.rmtree(meta_path, ignore_errors=True)
+    meta_path = scratch("features_meta")
     clips = synth_clips(spark, 150, dur_range_ms=(50, 120), parts=6)
     clips.select("clip_id", "sr_hz", "dur_ms", "transcript").write.mode("overwrite").parquet(meta_path)
     f = extract_features(clips)
@@ -394,8 +380,7 @@ def audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .audio import extract_features, resample_clips
     from .synth import synth_clips
 
-    meta_path = f"{SCRATCH}/resample_meta"
-    shutil.rmtree(meta_path, ignore_errors=True)
+    meta_path = scratch("resample_meta")
     clips = synth_clips(spark, 150, dur_range_ms=(50, 120), parts=6)
     clips.select("clip_id", "sr_hz", "dur_ms").write.mode("overwrite").parquet(
         meta_path
@@ -435,8 +420,7 @@ def lakehouse_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .merge import delete_where
 
     t = _fresh(spark, "delete", 800, parts=16)
-    shutil.rmtree(f"{SCRATCH}/delete_sidecar", ignore_errors=True)
-    t.scan().write.mode("overwrite").parquet(f"{SCRATCH}/delete_sidecar")
+    t.scan().write.mode("overwrite").parquet(scratch("delete_sidecar"))
     snap = delete_where(t, "dur_ms % 7 = 0", job_id="q-del")
     expire_snapshots(t, retain_last=1)
     residual = t.scan().filter(F.expr("dur_ms % 7 = 0")).count()
@@ -471,13 +455,11 @@ def lakehouse_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import meta as M
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/rollback"
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(f"{SCRATCH}/rollback_sidecar", ignore_errors=True)
+    root, sidecar = scratch("rollback", "rollback_sidecar")
     t = M.create_table(spark, root)
     b1 = synth_clips(spark, 250, seed=1, dur_range_ms=(50, 100))
     M.append(t, b1, job_id="b1", parts=3)
-    b1.write.mode("overwrite").parquet(f"{SCRATCH}/rollback_sidecar")
+    b1.write.mode("overwrite").parquet(sidecar)
     target = t.current_snapshot().snapshot_id
 
     b2 = synth_clips(spark, 120, seed=2, dur_range_ms=(50, 100)).withColumn(
@@ -536,21 +518,19 @@ def lakehouse_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .merge import delete_keys_mor
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/mor"
-    for d in ("mor", "mor_orig", "mor_delkeys", "mor_reins"):
-        shutil.rmtree(f"{SCRATCH}/{d}", ignore_errors=True)
+    root, orig, delkeys, reins_path = scratch("mor", "mor_orig", "mor_delkeys", "mor_reins")
     t = M.create_table(spark, root)
     M.append(t, synth_clips(spark, 300, dur_range_ms=(50, 120), parts=6), job_id="seed")
-    t.scan().write.mode("overwrite").parquet(f"{SCRATCH}/mor_orig")
+    t.scan().write.mode("overwrite").parquet(orig)
 
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
     victims = ids[:50]
     kdf = spark.createDataFrame([(k,) for k in victims], "clip_id string")
-    kdf.write.mode("overwrite").parquet(f"{SCRATCH}/mor_delkeys")
+    kdf.write.mode("overwrite").parquet(delkeys)
     delete_keys_mor(t, kdf, job_id="q-mor")
 
     reins = t.scan(snapshot_id=2).filter(F.col("clip_id").isin(victims[:10]))
-    reins.write.mode("overwrite").parquet(f"{SCRATCH}/mor_reins")
+    reins.write.mode("overwrite").parquet(reins_path)
     M.append(t, reins, job_id="q-re", parts=2)
 
     compact(t, target_bytes=1 << 30, job_id="q-compact")
@@ -623,12 +603,12 @@ def lakehouse_mor_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .merge import consolidate_deletes, delete_keys_mor
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/morc"
-    for d in ("morc", "morc_orig", "morc_b1", "morc_d2", "morc_d3", "morc_reins"):
-        shutil.rmtree(f"{SCRATCH}/{d}", ignore_errors=True)
+    root, orig, b1_path, d2_path, d3_path, reins_path = scratch(
+        "morc", "morc_orig", "morc_b1", "morc_d2", "morc_d3", "morc_reins"
+    )
     t = M.create_table(spark, root)
     M.append(t, synth_clips(spark, 300, dur_range_ms=(50, 120), parts=6), job_id="seed")
-    t.scan().write.mode("overwrite").parquet(f"{SCRATCH}/morc_orig")
+    t.scan().write.mode("overwrite").parquet(orig)
 
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
     b1, d2, d3 = ids[:30], ids[40:70], ids[:5]
@@ -638,12 +618,12 @@ def lakehouse_mor_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
         kdf.write.mode("overwrite").parquet(path)
         return kdf
 
-    s1 = delete_keys_mor(t, _kdf(b1, f"{SCRATCH}/morc_b1"), job_id="q-d1")
+    s1 = delete_keys_mor(t, _kdf(b1, b1_path), job_id="q-d1")
     reins = t.scan(snapshot_id=2).filter(F.col("clip_id").isin(b1[:10]))
-    reins.write.mode("overwrite").parquet(f"{SCRATCH}/morc_reins")
+    reins.write.mode("overwrite").parquet(reins_path)
     M.append(t, reins, job_id="q-re", parts=2)
-    s2 = delete_keys_mor(t, _kdf(d2, f"{SCRATCH}/morc_d2"), job_id="q-d2")
-    s3 = delete_keys_mor(t, _kdf(d3, f"{SCRATCH}/morc_d3"), job_id="q-d3")
+    s2 = delete_keys_mor(t, _kdf(d2, d2_path), job_id="q-d2")
+    s3 = delete_keys_mor(t, _kdf(d3, d3_path), job_id="q-d3")
 
     consolidate_deletes(t, job_id="q-consol")
     expire_snapshots(t, retain_last=1)
@@ -701,13 +681,11 @@ def lakehouse_tag_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .expire import expire_snapshots
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/tagged"
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(f"{SCRATCH}/tag_sidecar", ignore_errors=True)
+    root, sidecar = scratch("tagged", "tag_sidecar")
     t = M.create_table(spark, root)
     b1 = synth_clips(spark, 300, seed=1, dur_range_ms=(50, 100))
     M.append(t, b1, job_id="b1", parts=4)
-    b1.write.mode("overwrite").parquet(f"{SCRATCH}/tag_sidecar")
+    b1.write.mode("overwrite").parquet(sidecar)
     t.set_tag("baseline")
 
     b2 = synth_clips(spark, 200, seed=2, dur_range_ms=(50, 100)).withColumn(
@@ -765,9 +743,7 @@ def lakehouse_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .synth import synth_clips
     from .wap import audited_append, publish_init, published_scan, snr_audit
 
-    root = f"{SCRATCH}/wap"
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(f"{SCRATCH}/wap_sidecar", ignore_errors=True)
+    root, sidecar = scratch("wap", "wap_sidecar")
     t = M.create_table(spark, root)
     seed = synth_clips(spark, 300, seed=1, dur_range_ms=(50, 100))
     M.append(t, seed, job_id="seed", parts=4)
@@ -803,9 +779,7 @@ def lakehouse_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_bad = audited_append(t, bad, snr_audit(), job_id="wap-bad", parts=2)
     expire_snapshots(t, retain_last=1)
 
-    seed.unionByName(good).write.mode("overwrite").parquet(
-        f"{SCRATCH}/wap_sidecar"
-    )
+    seed.unionByName(good).write.mode("overwrite").parquet(sidecar)
     return (
         published_scan(t)
         .agg(
@@ -849,8 +823,7 @@ def audio_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .audio import chunk_clips, extract_features
     from .synth import synth_clips
 
-    meta_path = f"{SCRATCH}/chunk_meta"
-    shutil.rmtree(meta_path, ignore_errors=True)
+    meta_path = scratch("chunk_meta")
     clips = synth_clips(spark, 150, dur_range_ms=(400, 900), parts=6)
     clips.select("clip_id", "sr_hz", "dur_ms").write.mode("overwrite").parquet(
         meta_path
@@ -896,9 +869,7 @@ def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .evolve import add_column
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/evolve"
-    shutil.rmtree(root, ignore_errors=True)
-    t = meta.create_table(spark, root)
+    t = meta.create_table(spark, scratch("evolve"))
     meta.append(
         t, synth_clips(spark, 300, dur_range_ms=(50, 100), parts=4), job_id="b1"
     )
@@ -941,9 +912,7 @@ def lakehouse_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import meta
     from .synth import synth_clips
 
-    root = f"{SCRATCH}/incremental"
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(f"{SCRATCH}/inc_sidecar", ignore_errors=True)
+    root, sidecar = scratch("incremental", "inc_sidecar")
     t = meta.create_table(spark, root)
     b1 = synth_clips(spark, 300, seed=1, dur_range_ms=(50, 100))
     b2 = synth_clips(spark, 400, seed=2, dur_range_ms=(50, 100))
@@ -952,7 +921,7 @@ def lakehouse_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline = t.current_snapshot().snapshot_id
     meta.append(t, b2, job_id="b2", parts=4)
     meta.append(t, b3, job_id="b3", parts=4)
-    b2.unionByName(b3).write.mode("overwrite").parquet(f"{SCRATCH}/inc_sidecar")
+    b2.unionByName(b3).write.mode("overwrite").parquet(sidecar)
     inc = t.incremental_scan(baseline)
     return inc.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -984,8 +953,7 @@ def dedup_exact_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch."""
     from .synth import synth_clips
 
-    sidecar = f"{SCRATCH}/aud_dedup_sidecar"
-    shutil.rmtree(sidecar, ignore_errors=True)
+    sidecar = scratch("aud_dedup_sidecar")
     base = synth_clips(spark, 200, seed=21, dur_range_ms=(50, 120), parts=4)
     dupes = base.filter("dur_ms % 4 = 0").withColumn(
         "clip_id", F.concat(F.lit("dup_"), F.col("clip_id"))
@@ -1061,9 +1029,9 @@ def lakehouse_two_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     from .expire import expire_snapshots
     from .merge import delete_where, merge_into
 
-    root = f"{SCRATCH}/twotab"
-    for d in ("twotab", "twotab_sent_pre", "twotab_text_pre", "twotab_upd"):
-        shutil.rmtree(f"{SCRATCH}/{d}", ignore_errors=True)
+    root, sent_pre, text_pre, upd_path = scratch(
+        "twotab", "twotab_sent_pre", "twotab_text_pre", "twotab_upd"
+    )
     os.makedirs(root, exist_ok=True)
     jsonl = f"{root}/docs.jsonl.gz"
     ingest.write_raw_docs_jsonl(jsonl, 40)
@@ -1071,10 +1039,8 @@ def lakehouse_two_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
 
     t_sent.scan().select("text_id", "sentence_id", "sentence").write.mode(
         "overwrite"
-    ).parquet(f"{SCRATCH}/twotab_sent_pre")
-    t_text.scan().select("text_id").write.mode("overwrite").parquet(
-        f"{SCRATCH}/twotab_text_pre"
-    )
+    ).parquet(sent_pre)
+    t_text.scan().select("text_id").write.mode("overwrite").parquet(text_pre)
 
     # edit doc 2: update every sentence + insert a new one (embedding
     # columns carried from an existing row — the lifecycle under test
@@ -1094,7 +1060,7 @@ def lakehouse_two_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     upd.count()
     upd.select("text_id", "sentence_id", "sentence").write.mode(
         "overwrite"
-    ).parquet(f"{SCRATCH}/twotab_upd")
+    ).parquet(upd_path)
     merge_into(
         t_sent, upd, keys=["text_id", "sentence_id"], job_id="q-sent-merge"
     )
@@ -1196,8 +1162,7 @@ def fupi_ingest_search_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .expire import expire_snapshots
     from .search import search
 
-    root = f"{SCRATCH}/fupi_e2e"
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch("fupi_e2e")
     os.makedirs(root, exist_ok=True)
     jsonl = f"{root}/docs.jsonl.gz"
     ingest.write_raw_docs_jsonl(jsonl, 80)
@@ -1364,8 +1329,7 @@ def audio_vad_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .audio import plant_silence, vad_segments
     from .synth import synth_clips
 
-    sidecar = f"{SCRATCH}/vad_sidecar"
-    shutil.rmtree(sidecar, ignore_errors=True)
+    sidecar = scratch("vad_sidecar")
     clips = synth_clips(spark, 150, dur_range_ms=(300, 700), parts=6)
     planted = plant_silence(clips, frame_ms=20)
     planted.select("clip_id", "sr_hz", "dur_ms", "sil_frames").write.mode(
@@ -1412,16 +1376,17 @@ def lakehouse_changelog_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .merge import delete_keys_mor, merge_into
     from .synth import synth_clips
 
-    for d in ("cdc", "cdc_base", "cdc_upd", "cdc_del", "cdc_ins"):
-        shutil.rmtree(f"{SCRATCH}/{d}", ignore_errors=True)
-    t = M.create_table(spark, f"{SCRATCH}/cdc")
+    root, base_path, upd_path, del_path, ins_path = scratch(
+        "cdc", "cdc_base", "cdc_upd", "cdc_del", "cdc_ins"
+    )
+    t = M.create_table(spark, root)
     M.append(
         t,
         synth_clips(spark, 400, dur_range_ms=(50, 120), parts=8),
         job_id="seed",
     )
     base_id = t.current_snapshot().snapshot_id
-    t.scan().write.mode("overwrite").parquet(f"{SCRATCH}/cdc_base")
+    t.scan().write.mode("overwrite").parquet(base_path)
 
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
     upd_ids, del_ids = ids[100:130], ids[0:20]
@@ -1435,10 +1400,10 @@ def lakehouse_changelog_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "clip_id", F.concat(F.lit("clip_zz_"), F.col("clip_id"))
     ).cache()
     ins.count()
-    upd.select("clip_id").write.mode("overwrite").parquet(f"{SCRATCH}/cdc_upd")
-    ins.write.mode("overwrite").parquet(f"{SCRATCH}/cdc_ins")
+    upd.select("clip_id").write.mode("overwrite").parquet(upd_path)
+    ins.write.mode("overwrite").parquet(ins_path)
     kdf = spark.createDataFrame([(k,) for k in del_ids], "clip_id string")
-    kdf.write.mode("overwrite").parquet(f"{SCRATCH}/cdc_del")
+    kdf.write.mode("overwrite").parquet(del_path)
 
     merge_into(t, upd.unionByName(ins.select(*upd.columns)), job_id="q-cdc-m")
     delete_keys_mor(t, kdf, job_id="q-cdc-d")
@@ -1477,8 +1442,7 @@ def audio_tone_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .audio import detect_missing_tone, plant_tone_drop
     from .synth import synth_clips
 
-    sidecar = f"{SCRATCH}/probe_sidecar"
-    shutil.rmtree(sidecar, ignore_errors=True)
+    sidecar = scratch("probe_sidecar")
     clips = synth_clips(spark, 120, dur_range_ms=(300, 600), parts=4)
     planted = plant_tone_drop(clips)
     planted.select("clip_id", "dropped").write.mode("overwrite").parquet(
@@ -1515,9 +1479,8 @@ def lakehouse_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataF
     from .merge import delete_keys_mor, merge_into
     from .synth import synth_clips
 
-    for d in ("cdcagg", "cdcagg_mv"):
-        shutil.rmtree(f"{SCRATCH}/{d}", ignore_errors=True)
-    t = M.create_table(spark, f"{SCRATCH}/cdcagg")
+    root, mv_path, out_path = scratch("cdcagg", "cdcagg_mv", "cdcagg_out")
+    t = M.create_table(spark, root)
     M.append(
         t,
         synth_clips(spark, 400, dur_range_ms=(50, 120), parts=8),
@@ -1528,7 +1491,7 @@ def lakehouse_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataF
     t.scan().groupBy("codec").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("dur_ms").cast("bigint").alias("sum_dur_ms"),
-    ).write.mode("overwrite").parquet(f"{SCRATCH}/cdcagg_mv")
+    ).write.mode("overwrite").parquet(mv_path)
 
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
     upd = (
@@ -1563,7 +1526,7 @@ def lakehouse_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataF
             F.sum(sign * F.col("dur_ms")).cast("bigint").alias("ddur"),
         )
     )
-    mv = spark.read.parquet(f"{SCRATCH}/cdcagg_mv")
+    mv = spark.read.parquet(mv_path)
     refreshed = (
         mv.join(delta, "codec", "full_outer")
         .select(
@@ -1585,12 +1548,12 @@ def lakehouse_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataF
     # THEN release the baseline tag and GC: the changelog's base files
     # are only needed until the delta is consumed, and the oracle's
     # physical-dir recompute requires listing == live set
-    refreshed.write.mode("overwrite").parquet(f"{SCRATCH}/cdcagg_out")
+    refreshed.write.mode("overwrite").parquet(out_path)
     t.delete_tag("agg-base")
     from .expire import expire_snapshots
 
     expire_snapshots(t, retain_last=1)
-    return spark.read.parquet(f"{SCRATCH}/cdcagg_out").orderBy("codec")
+    return spark.read.parquet(out_path).orderBy("codec")
 
 
 @register(
@@ -1624,17 +1587,14 @@ def lakehouse_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .bloom import point_lookup, refresh_bloom_index
     from .synth import synth_clips
 
-    for d in ("bloom", "bloom_pre", "bloom_probes"):
-        shutil.rmtree(f"{SCRATCH}/{d}", ignore_errors=True)
-    t = M.create_table(spark, f"{SCRATCH}/bloom")
+    root, pre_path, probes_path = scratch("bloom", "bloom_pre", "bloom_probes")
+    t = M.create_table(spark, root)
     M.append(
         t,
         synth_clips(spark, 400, dur_range_ms=(50, 120), parts=8),
         job_id="seed",
     )
-    t.scan().select("clip_id", "dur_ms").write.mode("overwrite").parquet(
-        f"{SCRATCH}/bloom_pre"
-    )
+    t.scan().select("clip_id", "dur_ms").write.mode("overwrite").parquet(pre_path)
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
     probes = [ids[i] for i in (3, 77, 150, 222, 301, 388)] + [
         "absent_key_a",
@@ -1642,7 +1602,7 @@ def lakehouse_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spark.createDataFrame(
         [(p,) for p in probes], "probe_key string"
-    ).write.mode("overwrite").parquet(f"{SCRATCH}/bloom_probes")
+    ).write.mode("overwrite").parquet(probes_path)
 
     refresh_bloom_index(t, "clip_id")
     rows = []
@@ -1705,9 +1665,8 @@ def lakehouse_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .cluster import cluster
     from .synth import synth_clips
 
-    shutil.rmtree(f"{SCRATCH}/cq", ignore_errors=True)
-    shutil.rmtree(f"{SCRATCH}/cq_manifests", ignore_errors=True)
-    t = M.create_table(spark, f"{SCRATCH}/cq")
+    root, manifests = scratch("cq", "cq_manifests")
+    t = M.create_table(spark, root)
     M.append(
         t,
         synth_clips(spark, 500, dur_range_ms=(50, 120), parts=10),
@@ -1729,12 +1688,12 @@ def lakehouse_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pre = manifest_phase("a_pre")
-    pre.write.mode("overwrite").parquet(f"{SCRATCH}/cq_manifests/pre")
+    pre.write.mode("overwrite").parquet(f"{manifests}/pre")
     cluster(t, curve="zorder", target_bytes=1 << 18, job_id="q-cq-z")
     post = manifest_phase("b_post")
-    post.write.mode("append").parquet(f"{SCRATCH}/cq_manifests/pre")
+    post.write.mode("append").parquet(f"{manifests}/pre")
 
-    m = spark.read.parquet(f"{SCRATCH}/cq_manifests/pre")
+    m = spark.read.parquet(f"{manifests}/pre")
     a, b = m.alias("a"), m.alias("b")
     ov = (
         a.join(
@@ -1802,15 +1761,14 @@ def audio_silence_trim_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .synth import synth_clips
     from .transform import transform_payloads
 
-    for d in ("trim", "trim_sidecar"):
-        shutil.rmtree(f"{SCRATCH}/{d}", ignore_errors=True)
+    root, sidecar = scratch("trim", "trim_sidecar")
     clips = synth_clips(spark, 150, dur_range_ms=(300, 700), parts=6)
     planted = plant_silence(clips, frame_ms=20)
     planted.select("clip_id", "sr_hz", "dur_ms", "sil_frames").write.mode(
         "overwrite"
-    ).parquet(f"{SCRATCH}/trim_sidecar")
+    ).parquet(sidecar)
 
-    t = M.create_table(spark, f"{SCRATCH}/trim")
+    t = M.create_table(spark, root)
     M.append(t, planted.drop("sil_frames"), job_id="seed", parts=6)
     transform_payloads(
         t,

@@ -20,13 +20,11 @@ brute-force Jaccard join is band-limited the same way.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .queries import QUERY_VEC, _l2_col, _l2_sql, load, register
+from .queries import QUERY_VEC, SCRATCH, _l2_col, _l2_sql, load, register, scratch
 
 # ---------------------------------------------------------------------------
 # shared fragments
@@ -1424,10 +1422,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the artifact cells with the shared-text rerank distance.
 # ---------------------------------------------------------------------------
 
-# per-process scratch: the oracle SQL (built at import) and the Spark
-# write both live in this process, and concurrent harnesses (pytest +
-# a driver sweep) must not clobber each other's artifacts
-_KM_SCRATCH = f"/tmp/fupi_spark_ivfk_{_os.getpid()}"
 _KM_K = 4
 _KM_QV_VALUES = ", ".join(
     f"({i}, CAST({q!r} AS DOUBLE))" for i, q in enumerate(QUERY_VEC)
@@ -1437,9 +1431,9 @@ _KM_QV_VALUES = ", ".join(
 @register(
     "ann_ivf_kmeans",
     oracle=f"""
-WITH a AS (SELECT vec_id, cell FROM read_parquet('{_KM_SCRATCH}/assign/*.parquet')),
+WITH a AS (SELECT vec_id, cell FROM read_parquet('{SCRATCH}/ivfk/assign/*.parquet')),
 cen AS (SELECT cell, pos, val, val_next
-        FROM read_parquet('{_KM_SCRATCH}/centroids/*.parquet')),
+        FROM read_parquet('{SCRATCH}/ivfk/centroids/*.parquet')),
 ex AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS v,
               generate_subscripts(embedding, 1) - 1 AS pos
        FROM embeddings),
@@ -1500,8 +1494,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must agree, and independently re-derives the probed top-k. At
     10^12 rows: train on a sample, final assign is one scan, cell is a
     partition column (see ann_ivf_topk for the probe plan notes)."""
-    import shutil as _sh
-
     from .kmeans import assign_cells, kmeans_fit, update_centroids
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1509,9 +1501,9 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = assign_cells(emb, "embedding", cents)
     cents_next = update_centroids(assigned, "embedding", cents)
 
-    _sh.rmtree(_KM_SCRATCH, ignore_errors=True)
+    root = scratch("ivfk")
     assigned.select("vec_id", "cell").write.mode("overwrite").parquet(
-        f"{_KM_SCRATCH}/assign"
+        f"{root}/assign"
     )
     cen_rows = [
         (cell, pos, cents[cell][pos], cents_next[cell][pos])
@@ -1520,7 +1512,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spark.createDataFrame(
         cen_rows, "cell int, pos int, val double, val_next double"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{_KM_SCRATCH}/centroids")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{root}/centroids")
 
     qdist = [
         sum((q - c) ** 2 for q, c in zip(QUERY_VEC, cen)) for cen in cents
@@ -1897,14 +1889,12 @@ vocab_topk_coverage.__doc__ = vocab_topk_coverage.__doc__.format(k=_VOCAB_K)
 # scan -> exact rerank (pq.py; the PQ half of Lance's IVF_PQ)
 # ---------------------------------------------------------------------------
 
-_PQ_SCRATCH = f"/tmp/fupi_spark_pq_{_os.getpid()}"
-
 
 @register(
     "ann_pq_topk",
     oracle=f"""
-WITH lut AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/lut/*.parquet')),
-codes AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/codes/*.parquet')),
+WITH lut AS (SELECT * FROM read_parquet('{SCRATCH}/pq/lut/*.parquet')),
+codes AS (SELECT * FROM read_parquet('{SCRATCH}/pq/codes/*.parquet')),
 adc AS (
   -- correlated scalar lookups (see ann_ivf_pq_residual_topk: an 8-way
   -- join invites the optimizer to cross-join the LUT relations)
@@ -1937,16 +1927,14 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-encoded codes, a wrong lookup, a broken sum order, or a bad
     rerank all break rows. Completes the from-scratch IVF_PQ story the
     reference delegates to Lance."""
-    import shutil as _sh
-
     from .pq import pq_encode, pq_lut, pq_topk, pq_train
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     books = pq_train(emb, "embedding", "vec_id", dim=64, subs=8, iters=2)
     codes = pq_encode(emb, "embedding", "vec_id", books, dim=64)
 
-    _sh.rmtree(_PQ_SCRATCH, ignore_errors=True)
-    codes.coalesce(1).write.mode("overwrite").parquet(f"{_PQ_SCRATCH}/codes")
+    root = scratch("pq")
+    codes.coalesce(1).write.mode("overwrite").parquet(f"{root}/codes")
     lut = pq_lut(QUERY_VEC, books)
     spark.createDataFrame(
         [
@@ -1955,9 +1943,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k, v in enumerate(row)
         ],
         "s int, k int, v double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{_PQ_SCRATCH}/lut")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{root}/lut")
 
-    codes_back = spark.read.parquet(f"{_PQ_SCRATCH}/codes")
+    codes_back = spark.read.parquet(f"{root}/codes")
     top = pq_topk(emb, codes_back, "embedding", "vec_id", lut, QUERY_VEC)
     # order by the FULL-PRECISION exact distance (the oracle's ORDER
     # BY), not the floored e4 projection: two candidates sharing an e4
@@ -1982,7 +1970,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_ivf_pq_topk",
     oracle=f"""
-WITH cen AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/ivf_cents/*.parquet')),
+WITH cen AS (SELECT * FROM read_parquet('{SCRATCH}/pq/ivf_cents/*.parquet')),
 qv(pos, q) AS (VALUES {_KM_QV_VALUES}),
 probes AS (
   SELECT cell FROM (
@@ -1991,9 +1979,9 @@ probes AS (
     GROUP BY cen.cell ORDER BY d ASC, cen.cell ASC LIMIT 2
   )
 ),
-assign AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/ivf_assign/*.parquet')),
-lut AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/lut/*.parquet')),
-codes AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/codes/*.parquet')),
+assign AS (SELECT * FROM read_parquet('{SCRATCH}/pq/ivf_assign/*.parquet')),
+lut AS (SELECT * FROM read_parquet('{SCRATCH}/pq/lut/*.parquet')),
+codes AS (SELECT * FROM read_parquet('{SCRATCH}/pq/codes/*.parquet')),
 adc AS (
   -- correlated scalar lookups (see ann_ivf_pq_residual_topk)
   SELECT codes.vec_id, assign.cell,
@@ -2024,8 +2012,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors: cell is a partition column (scan reads 2/K of the codes),
     codes are 32 bits/vector, rerank reads 50 full vectors — the
     trillion-vector plan end to end, from-scratch."""
-    import shutil as _sh
-
     from .kmeans import assign_cells, kmeans_fit
     from .pq import pq_encode, pq_lut, pq_topk, pq_train
 
@@ -2036,8 +2022,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = pq_encode(emb, "embedding", "vec_id", books, dim=64)
     lut = pq_lut(QUERY_VEC, books)
 
-    _sh.rmtree(f"{_PQ_SCRATCH}/ivf_cents", ignore_errors=True)
-    _sh.rmtree(f"{_PQ_SCRATCH}/ivf_assign", ignore_errors=True)
+    cents_path, assign_path = scratch("pq/ivf_cents", "pq/ivf_assign")
     spark.createDataFrame(
         [
             (cell, pos, float(v))
@@ -2045,11 +2030,9 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pos, v in enumerate(cen)
         ],
         "cell int, pos int, val double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{_PQ_SCRATCH}/ivf_cents")
-    assigned.coalesce(1).write.mode("overwrite").parquet(
-        f"{_PQ_SCRATCH}/ivf_assign"
-    )
-    codes.coalesce(1).write.mode("overwrite").parquet(f"{_PQ_SCRATCH}/codes")
+    ).coalesce(1).write.mode("overwrite").parquet(cents_path)
+    assigned.coalesce(1).write.mode("overwrite").parquet(assign_path)
+    codes.coalesce(1).write.mode("overwrite").parquet(f"{SCRATCH}/pq/codes")
     spark.createDataFrame(
         [
             (s, k, float(v))
@@ -2057,7 +2040,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k, v in enumerate(row)
         ],
         "s int, k int, v double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{_PQ_SCRATCH}/lut")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{SCRATCH}/pq/lut")
 
     qdist = [
         sum((q - c) ** 2 for q, c in zip(QUERY_VEC, cen)) for cen in cents
@@ -2100,7 +2083,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_ivf_pq_residual_topk",
     oracle=f"""
-WITH cen AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/r_cents/*.parquet')),
+WITH cen AS (SELECT * FROM read_parquet('{SCRATCH}/pq/r_cents/*.parquet')),
 qv(pos, q) AS (VALUES {_KM_QV_VALUES}),
 probes AS (
   SELECT cell FROM (
@@ -2109,9 +2092,9 @@ probes AS (
     GROUP BY cen.cell ORDER BY d ASC, cen.cell ASC LIMIT 2
   )
 ),
-assign AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/r_assign/*.parquet')),
-lut AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/r_lut/*.parquet')),
-codes AS (SELECT * FROM read_parquet('{_PQ_SCRATCH}/r_codes/*.parquet')),
+assign AS (SELECT * FROM read_parquet('{SCRATCH}/pq/r_assign/*.parquet')),
+lut AS (SELECT * FROM read_parquet('{SCRATCH}/pq/r_lut/*.parquet')),
+codes AS (SELECT * FROM read_parquet('{SCRATCH}/pq/r_codes/*.parquet')),
 adc AS (
   -- correlated scalar lookups, not an 8-way join: the join-order
   -- optimizer cross-joined the LUT relations before applying the
@@ -2145,8 +2128,6 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-isotropic (cells explain little variance), so the pytest gates
     a recall floor rather than superiority — the hard contract is the
     sidecar-audited oracle equality."""
-    import shutil as _sh
-
     from .kmeans import assign_cells, kmeans_fit
     from .pq import (
         adc_distance,
@@ -2166,13 +2147,11 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subspace trainers makes Catalyst analysis itself the bottleneck;
     # at 10^12 rows you materialize this projection anyway (it is the
     # training set) — one write, flat plans everywhere downstream
-    _sh.rmtree(f"{_PQ_SCRATCH}/r_resid", ignore_errors=True)
+    resid_path = scratch("pq/r_resid")
     assigned.withColumn(
         "_resid", residual_col("embedding", "cell", cents)
-    ).select("vec_id", "cell", "_resid").write.mode("overwrite").parquet(
-        f"{_PQ_SCRATCH}/r_resid"
-    )
-    resid = spark.read.parquet(f"{_PQ_SCRATCH}/r_resid")
+    ).select("vec_id", "cell", "_resid").write.mode("overwrite").parquet(resid_path)
+    resid = spark.read.parquet(resid_path)
     books = pq_train(resid, "_resid", "vec_id", dim=64, subs=8, iters=2)
     codes = pq_encode(resid, "_resid", "vec_id", books, dim=64)
 
@@ -2185,8 +2164,9 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cell in probes
     }
 
-    for d in ("r_cents", "r_assign", "r_codes", "r_lut"):
-        _sh.rmtree(f"{_PQ_SCRATCH}/{d}", ignore_errors=True)
+    cents_path, assign_path, codes_path, lut_path = scratch(
+        "pq/r_cents", "pq/r_assign", "pq/r_codes", "pq/r_lut"
+    )
     spark.createDataFrame(
         [
             (cell, pos, float(v))
@@ -2194,13 +2174,9 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pos, v in enumerate(cen)
         ],
         "cell int, pos int, val double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{_PQ_SCRATCH}/r_cents")
-    resid.select("vec_id", "cell").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{_PQ_SCRATCH}/r_assign")
-    codes.coalesce(1).write.mode("overwrite").parquet(
-        f"{_PQ_SCRATCH}/r_codes"
-    )
+    ).coalesce(1).write.mode("overwrite").parquet(cents_path)
+    resid.select("vec_id", "cell").coalesce(1).write.mode("overwrite").parquet(assign_path)
+    codes.coalesce(1).write.mode("overwrite").parquet(codes_path)
     spark.createDataFrame(
         [
             (cell, s, k, float(v))
@@ -2209,14 +2185,14 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k, v in enumerate(row)
         ],
         "cell int, s int, k int, v double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{_PQ_SCRATCH}/r_lut")
+    ).coalesce(1).write.mode("overwrite").parquet(lut_path)
 
     # read the just-written artifacts back: the codes frame carries
     # 8x16 fold expressions whose re-analysis under two union branches
     # dwarfs the actual compute — the flat sidecar read is the plan
     # the oracle audits anyway
-    cells_codes = spark.read.parquet(f"{_PQ_SCRATCH}/r_codes").join(
-        spark.read.parquet(f"{_PQ_SCRATCH}/r_assign"), "vec_id"
+    cells_codes = spark.read.parquet(codes_path).join(
+        spark.read.parquet(assign_path), "vec_id"
     )
     per_cell = [
         cells_codes.filter(F.col("cell") == cell).withColumn(

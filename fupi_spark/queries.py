@@ -23,7 +23,10 @@ collect-to-driver anywhere).
 
 from __future__ import annotations
 
+import fcntl
 import math
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +49,30 @@ def register(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+# Entries whose oracle audits the engine's own files write them here. The
+# root is fixed so oracle SQL (built at import) reads the same in every
+# process; concurrent runs are serialized by the lock scratch() takes.
+SCRATCH = "/tmp/fupi_spark_scratch"
+_scratch_lock = None
+
+
+def scratch(*names: str):
+    """Remove ``SCRATCH/<name>`` for each name and return its path (a
+    tuple of paths for several names). The first call in a process
+    blocks on an exclusive ``flock`` of ``SCRATCH/.lock`` and holds it
+    until the process exits, so two processes never share the root."""
+    global _scratch_lock
+    if _scratch_lock is None:
+        os.makedirs(SCRATCH, exist_ok=True)
+        lock = open(f"{SCRATCH}/.lock", "a")
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        _scratch_lock = lock
+    paths = tuple(f"{SCRATCH}/{n}" for n in names)
+    for p in paths:
+        shutil.rmtree(p, ignore_errors=True)
+    return paths[0] if len(paths) == 1 else paths
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -52,19 +52,22 @@ def transform_payloads(
     removed = {e["file_path"] for e in entries} | dels
     bytes_in = sum(e["byte_size"] for e in entries)
 
-    table.mark_job_active(job_id)
     src = table.scan(base.snapshot_id)
     out = transform(src)
     # the docstring contract ("must preserve the table's user-facing
     # schema") was unenforced: a callback that drops, adds, or retypes
     # a column would commit a replacing snapshot with a silently
-    # divergent schema (advice r6). Enforce it before any write.
+    # divergent schema (advice r6). Enforce it before any write, and
+    # before the lineage marker: a rejected job must leave no in-flight
+    # entry for orphan GC to honour. transform() is lazy, so the schema
+    # is known without running it.
     got = [(f.name, f.dataType.simpleString()) for f in out.schema.fields]
     want = [(f.name, f.dataType.simpleString()) for f in src.schema.fields]
     if got != want:
         raise ValueError(
             f"transform changed the user-facing schema: expected {want}, got {got}"
         )
+    table.mark_job_active(job_id)
     n_parts = parts or max(1, len(entries))
     added = table.write_datafiles(out.repartition(n_parts), job_id)
 

@@ -11,7 +11,6 @@ Usage:  python tests/local_sweep.py [round_number]
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -22,24 +21,12 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
     p for p in (_REPO, os.environ.get("PYTHONPATH", "")) if p
 )
 
-import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as E  # noqa: E402
+from tests.oracle_check import duck_conn, normalize_rows  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-def norm(v):
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else f"{v:.9g}"
-    if isinstance(v, list):
-        return "[" + ",".join(norm(x) for x in v) + "]"
-    return str(v)
 
 
 def main() -> None:
@@ -51,9 +38,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    con = duck_conn(SF)
 
     t_all = time.perf_counter()
     entries: dict[str, dict] = {}
@@ -65,17 +50,15 @@ def main() -> None:
             srows = [tuple(r) for r in sdf.collect()]
             sql = E.oracle_sql().get(name)
             if not sql:
-                status = "rows_only" if len(srows) >= 0 else "FAIL"
+                status = "rows_only"
                 n_rows_only += 1
             else:
                 res = con.execute(sql)
                 dcols = [d[0] for d in res.description]
                 drows = res.fetchall()
-                o = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-                o2 = sorted(range(len(dcols)), key=lambda i: dcols[i])
-                s = sorted(tuple(norm(r[i]) for i in o) for r in srows)
-                d = sorted(tuple(norm(r[i]) for i in o2) for r in drows)
-                if s == d and sorted(sdf.columns) == sorted(dcols):
+                if sorted(sdf.columns) == sorted(dcols) and normalize_rows(
+                    sdf.columns, srows
+                ) == normalize_rows(dcols, drows):
                     status = "OK"
                     n_ok += 1
                 else:

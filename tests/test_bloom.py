@@ -109,14 +109,17 @@ def test_refresh_after_column_rename(spark, tmp_path):
 def test_refresh_with_null_keys_stays_sound(spark, tmp_path):
     """ADVICE r6: NULL keys have no probe positions (their NaN
     positions used to crash the bitset scatter) — they stay unindexed;
-    a file whose keys are ALL null simply gets no index row, which
-    point_lookup already treats as unprunable (no false negatives)."""
+    a file whose keys are ALL null gets an empty sentinel bitset, so a
+    later refresh skips it and a lookup of any concrete key prunes it
+    (col == key never matches NULL). The root holds a space, which
+    input_file_name URL-encodes: file rows must still map back."""
     from fupi_spark.evolve import add_column
 
-    t = make_table(spark, str(tmp_path / "t"), n=40, parts=2)
+    t = make_table(spark, str(tmp_path / "t t"), n=40, parts=2)
     add_column(t, "lang", "string")  # no default: old rows read as NULL
     rep = refresh_bloom_index(t, "lang")  # must not raise
-    assert rep["files"] == 2
+    assert rep["files"] == 2 and rep["indexed"] == 0
+    assert refresh_bloom_index(t, "lang")["indexed"] == 0  # sentinels kept
 
     extra = (
         synth_clips(spark, 20, seed=9, dur_range_ms=(50, 80))
@@ -124,9 +127,8 @@ def test_refresh_with_null_keys_stays_sound(spark, tmp_path):
         .withColumn("lang", F.lit("bg"))
     )
     meta.append(t, extra, job_id="a2", parts=1)
-    refresh_bloom_index(t, "lang")
+    assert refresh_bloom_index(t, "lang")["indexed"] == 1
     df, files_read, total = point_lookup(t, "lang", "bg")
     assert df.count() == 20 and total == 3
-    # the all-null files carry no index row and are read unpruned; the
-    # indexed file holds every 'bg' row — lookup is complete either way
-    assert files_read >= 1
+    # the all-null files are pruned; only the indexed file is read
+    assert files_read == 1

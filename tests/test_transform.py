@@ -99,3 +99,7 @@ def test_schema_changing_transform_rejected(spark, tmp_path):
             job_id="bad3",
         )
     assert t.current_snapshot().snapshot_id == before  # nothing committed
+    # the guard runs before the lineage marker: no rejected job is left
+    # looking in-flight to orphan GC
+    for job in ("bad1", "bad2", "bad3"):
+        assert not t.storage.list(f"_lineage/{job}")
