@@ -15,7 +15,7 @@ orchestrator owns the policy; this module owns the measurement.
 
 from __future__ import annotations
 
-from .bloom import INDEX_REL
+from .bloom import read_index
 
 
 def advise(
@@ -104,15 +104,7 @@ def advise(
                 )
 
     if bloom_col is not None:
-        try:
-            idx = {
-                r.file_path
-                for r in table.spark.read.parquet(
-                    f"{table.root}/{INDEX_REL}"
-                ).collect()
-            }
-        except Exception:
-            idx = set()
+        idx = read_index(table)
         missing = [e["file_path"] for e in entries if e["file_path"] not in idx]
         if missing:
             recs.append(

@@ -31,6 +31,8 @@ Scale properties:
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -43,6 +45,8 @@ BLOOM_BITS = 1 << 15
 BLOOM_K = 4
 
 INDEX_REL = "metadata/bloom"
+
+_log = logging.getLogger("fupi_spark")
 
 
 def _positions(keys: np.ndarray) -> np.ndarray:
@@ -74,6 +78,22 @@ _INDEX_SCHEMA = T.StructType(
 )
 
 
+def read_index(table) -> dict[str, tuple[str, bytes, int]]:
+    """The table's bloom rows as {file_path: (file_path, bitset,
+    n_bits)}. An index that was never written reads as empty without a
+    Spark job. Any other read failure is logged and also reads as
+    empty: files without a row are never pruned, so a lost index costs
+    reads, never rows."""
+    if not table.storage.list(INDEX_REL):
+        return {}
+    try:
+        rows = table.spark.read.parquet(f"{table.root}/{INDEX_REL}").collect()
+    except Exception as e:
+        _log.warning("bloom index of %s unreadable, not pruning: %s", table.root, e)
+        return {}
+    return {r.file_path: (r.file_path, bytes(r.bitset), int(r.n_bits)) for r in rows}
+
+
 def refresh_bloom_index(table, col: str) -> dict:
     """Build/refresh the bloom sidecar for ``col`` at the CURRENT
     snapshot: hash only live data files that have no index row yet
@@ -83,17 +103,7 @@ def refresh_bloom_index(table, col: str) -> dict:
     'kept': reused, 'files': total_live}."""
     spark = table.spark
     live = set(e["file_path"] for e in table.data_entries())
-    existing: dict[str, tuple] = {}
-    idx_dir = f"{table.root}/{INDEX_REL}"
-    try:
-        old = spark.read.parquet(idx_dir).collect()
-        existing = {
-            r.file_path: (r.file_path, bytes(r.bitset), int(r.n_bits))
-            for r in old
-            if r.file_path in live
-        }
-    except Exception:
-        existing = {}
+    existing = {p: row for p, row in read_index(table).items() if p in live}
     todo = sorted(p for p in live if p not in existing)
 
     rows: list[tuple] = list(existing.values())
@@ -196,7 +206,7 @@ def refresh_bloom_index(table, col: str) -> dict:
     if rows:
         spark.createDataFrame(rows, _INDEX_SCHEMA).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(idx_dir)
+        ).parquet(f"{table.root}/{INDEX_REL}")
     return {"indexed": len(built), "kept": len(existing), "files": len(live)}
 
 
@@ -207,14 +217,12 @@ def point_lookup(table, col: str, key: str) -> tuple[DataFrame, int, int]:
     predicate pushed to parquet. No index row for a live file (e.g.
     refresh not yet run after a commit) means the file cannot be
     pruned — it is read unconditionally (no false negatives ever)."""
-    spark = table.spark
     live = [e["file_path"] for e in table.data_entries()]
     pos = probe_positions(key)
-    try:
-        idx = spark.read.parquet(f"{table.root}/{INDEX_REL}").collect()
-    except Exception:
-        idx = []
-    bitsets = {r.file_path: np.unpackbits(np.frombuffer(r.bitset, np.uint8)) for r in idx}
+    bitsets = {
+        p: np.unpackbits(np.frombuffer(bits, np.uint8))
+        for p, (_, bits, _) in read_index(table).items()
+    }
     keep = [
         p
         for p in live

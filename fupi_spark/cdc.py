@@ -68,31 +68,34 @@ def _delete_signature(specs: list[dict], file_seq: int) -> tuple:
 def _schema_frame(table, snap) -> DataFrame:
     """Zero-row DataFrame with ``snap``'s user-facing schema. scan()
     reads data files; for a FILE-FREE snapshot (e.g. the end of a
-    delete-everything interval) the schema is derived instead from the
-    nearest earlier snapshot that has files, replaying the schema-op
-    suffix committed between the two (ops are inherited append-only;
-    after a rollback that rewrote op history the fallback's own schema
-    is the best available expression)."""
+    delete-everything interval) the schema is derived instead from a
+    file-bearing snapshot whose schema ops are a prefix of ``snap``'s,
+    nearest earlier one first, replaying the op suffix. Only if none
+    qualifies (every such snapshot expired) does the first file-bearing
+    candidate's own schema stand in, evolution after ``snap`` included."""
     if table.data_entries(snap):
         return table.scan(snap.snapshot_id).limit(0)
     ops_here = table.schema_ops(snap)
     ids = [s for s in table.snapshot_ids() if s != snap.snapshot_id]
     earlier = [s for s in ids if s < snap.snapshot_id]
     later = [s for s in ids if s > snap.snapshot_id]
+    fallback = None
     for sid in list(reversed(earlier)) + later:
         cand = table.snapshot(sid)
         if not table.data_entries(cand):
             continue
-        base = table.scan(cand.snapshot_id).limit(0)
         ops_base = table.schema_ops(cand)
-        if ops_here[: len(ops_base)] == ops_base and len(ops_here) > len(ops_base):
+        if ops_here[: len(ops_base)] == ops_base:
             from .evolve import apply_schema_ops
 
+            base = table.scan(sid).limit(0)
             return apply_schema_ops(base, ops_here[len(ops_base):])
-        return base
-    raise ValueError(
-        "cannot derive a schema: no snapshot of this table ever had data files"
-    )
+        fallback = fallback or sid
+    if fallback is None:
+        raise ValueError(
+            "cannot derive a schema: no snapshot of this table ever had data files"
+        )
+    return table.scan(fallback).limit(0)
 
 
 def changelog_scan(

@@ -70,14 +70,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .lineage import LineageLog
-from .meta import Snapshot, Table
+from .meta import Snapshot, Table, prune_manifest
 
 MERGE_KEY = "clip_id"
 
 
 #: distinct source keys up to this count prune on the DRIVER (one
-#: collect of the key column, numpy searchsorted against the file
-#: boundaries) instead of a Spark job with a pandas-UDF bin assignment —
+#: collect of the key column, then meta.stats_keep_mask over the
+#: manifest) instead of a Spark job with a pandas-UDF bin assignment —
 #: that job cost a fixed ~0.5-0.8 s per merge (measured r6, guide §4:
 #: the Python-worker roundtrip is pure overhead at this size). Larger
 #: sources keep the distributed equi-join path.
@@ -92,23 +92,35 @@ def plan_touched_files(
     n_keys: int | None = None,
 ) -> list[dict]:
     """File pruning by key-range stats: a file is touched iff some
-    source key falls inside its [min, max] key range.
+    source key falls inside its [min, max] key range; a NULL min or max
+    is unbounded (always touched).
 
-    Equi-join formulation (no nested-loop): bin the key space at the
-    sorted file-min boundaries (driver-small by design), assign each
-    source key its bin with one vectorized searchsorted, explode each
-    file into the bins its range covers, equi-join on bin with a
-    residual range filter.
+    Small sources (``n_keys`` <= PRUNE_KEYS_DRIVER_MAX) collect their
+    distinct keys and run meta.stats_keep_mask with the keys as point
+    intervals — no Spark job beyond the key collect. Larger or
+    uncounted sources stay distributed, as an equi-join (no
+    nested-loop): bin the key space at the sorted file-min boundaries
+    (driver-small by design), assign each source key its bin with one
+    vectorized searchsorted, explode each file into the bins its range
+    covers, equi-join on bin with a residual range filter.
 
     Composite merge keys prune on their LEADING column only — sound
     (a superset of the truly touched files) and exactly what a
     leading-key-clustered layout rewards; a key without manifest stats
     disables pruning (all files touched, still correct)."""
-    entries = [e for e in table.data_entries(base) if e["row_count"] != 0]
-    if not entries:
-        return []
-    if key not in table.stats_cols:
+    m = table.data_manifest(base)
+    entries = [e for e in m.to_pylist() if e["row_count"] != 0]
+    if not entries or key not in table.stats_cols:
         return entries  # no stats for this key → no pruning possible
+    if n_keys is not None and n_keys <= PRUNE_KEYS_DRIVER_MAX:
+        keys = sorted(
+            {r[0] for r in source.select(key).distinct().collect()} - {None}
+        )
+        hit = set(prune_manifest(m, key, keys, keys)["file_path"].to_pylist())
+        return sorted(
+            (e for e in entries if e["file_path"] in hit), key=lambda e: e["file_path"]
+        )
+
     lo_k, hi_k = f"min_{key}", f"max_{key}"
     # NULL stats → unbounded range → always touched
     unbounded = [e for e in entries if e[lo_k] is None or e[hi_k] is None]
@@ -126,26 +138,6 @@ def plan_touched_files(
         b_hi = int(np.searchsorted(barr, e[hi_k], side="right")) - 1
         for b in range(max(b_lo, 0), b_hi + 1):
             file_bins.append((b, ord_, e[lo_k], e[hi_k]))
-
-    if n_keys is not None and n_keys <= PRUNE_KEYS_DRIVER_MAX:
-        # small-source fast path (r6): the distinct keys fit on the
-        # driver by a measured gate, so the whole bin/range test runs
-        # as one numpy searchsorted — zero extra Spark jobs beyond the
-        # key collect, identical touched set (forced-path tested).
-        kvals = np.array(
-            [r[0] for r in source.select(key).distinct().collect()], dtype=object
-        )
-        by_bin: dict[int, list] = {}
-        for b, ord_, f_lo, f_hi in file_bins:
-            by_bin.setdefault(b, []).append((ord_, f_lo, f_hi))
-        kb = np.searchsorted(barr, kvals, side="right") - 1
-        hit: set[int] = set()
-        for kv, b in zip(kvals, kb):
-            for ord_, f_lo, f_hi in by_bin.get(int(b), ()):
-                if f_lo <= kv <= f_hi:
-                    hit.add(ord_)
-        touched = [bounded[o] for o in sorted(hit)]
-        return sorted(touched + unbounded, key=lambda e: e["file_path"])
 
     spark = table.spark
     # schema inferred so the key's min/max type follows the key column
@@ -468,17 +460,11 @@ def delete_where(
     spark = table.spark
     base = table.current_snapshot()
     job_id = job_id or f"delete-{uuid.uuid4().hex[:8]}"
-    entries = [e for e in table.data_entries(base) if e["row_count"] != 0]
+    m = table.data_manifest(base)
     if prune is not None:
         col, lo, hi = prune
-        lo_k, hi_k = f"min_{col}", f"max_{col}"
-        entries = [
-            e
-            for e in entries
-            if e.get(lo_k) is None
-            or e.get(hi_k) is None
-            or not (e[hi_k] < lo or e[lo_k] > hi)
-        ]
+        m = prune_manifest(m, col, [lo], [hi])
+    entries = [e for e in m.to_pylist() if e["row_count"] != 0]
     touched_paths = [e["file_path"] for e in entries]
     if not touched_paths:
         return base

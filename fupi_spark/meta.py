@@ -45,8 +45,9 @@ The reference's Lance table versioning (every create/add/compact makes
 a new version, /root/reference/fupi/utils.py:42,48 +
 fupi/embedders.py:124-128) is the seed of this snapshot chain.
 
-Scale notes: manifests are parquet and consumed as DataFrames (not
-driver JSON), so planning scales with Spark, not driver memory; per-file
+Scale notes: manifests are parquet (not driver JSON); file skipping is
+one vectorized driver pass over the Arrow manifest (stats_keep_mask —
+the same load every commit already makes), not a Spark job; per-file
 stats are computed as distributed DataFrame aggregations over
 ``_metadata.file_path`` (manifest "rewrite + stats recomputation as
 DataFrame aggregations", BASELINE.json north_star); the snapshot JSON
@@ -62,7 +63,9 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -294,14 +297,14 @@ class Table:
     def live_files(self, snapshot: Snapshot | None = None) -> list[str]:
         return self.manifest_entries(snapshot).column("file_path").to_pylist()
 
+    def data_manifest(self, snapshot: Snapshot | None = None) -> pa.Table:
+        """Row-data file entries as Arrow (excludes MOR equality-delete
+        files; NULL content == 'data' for pre-MOR manifests)."""
+        m = self.manifest_entries(snapshot)
+        return m.filter(pc.fill_null(pc.equal(m["content"], "data"), True))
+
     def data_entries(self, snapshot: Snapshot | None = None) -> list[dict]:
-        """Row-data file entries (excludes MOR equality-delete files;
-        NULL content == 'data' for pre-MOR manifests)."""
-        return [
-            e
-            for e in self.manifest_entries(snapshot).to_pylist()
-            if (e.get("content") or "data") == "data"
-        ]
+        return self.data_manifest(snapshot).to_pylist()
 
     def delete_entries(self, snapshot: Snapshot | None = None) -> list[dict]:
         """Outstanding MOR equality-delete file entries."""
@@ -516,10 +519,6 @@ class Table:
             .agg(F.max("_del_seq").alias("_del_seq"))
         )
 
-    #: manifest sizes above this run the file-skip decision as a
-    #: distributed filter over manifest_df instead of a driver loop
-    PRUNE_DRIVER_MAX = 100_000
-
     def scan_pruned(
         self, col: str, lo, hi, snapshot_id: int | None = None
     ) -> tuple[DataFrame, int, int]:
@@ -527,52 +526,25 @@ class Table:
         payoff of clustering: a file is read only if its [min, max]
         range for ``col`` intersects [lo, hi]. Returns (df, files_read,
         files_total). The residual row filter still reaches the parquet
-        reader (row-group pruning), so skipping composes with pushdown.
+        reader (row-group pruning), so skipping composes with pushdown."""
+        return self._scan_skipping(
+            col, [lo], [hi], (F.col(col) >= lo) & (F.col(col) <= hi), snapshot_id
+        )
 
-        Two-path skip decision (same design as expire's anti-join):
-        small manifests filter on the driver (zero Spark jobs); past
-        PRUNE_DRIVER_MAX entries the same predicate runs as a
-        distributed filter over manifest_df — only the SURVIVING file
-        paths reach the driver, which on a clustered table is
-        O(selectivity), not O(files)."""
+    def _scan_skipping(
+        self, col: str, starts, ends, residual, snapshot_id: int | None
+    ) -> tuple[DataFrame, int, int]:
+        """Read the data files prune_manifest keeps for the probe
+        intervals, filtered by ``residual``; files_total counts data
+        files only (never MOR delete files)."""
         snap = self.snapshot(snapshot_id) if snapshot_id else self.current_snapshot()
-        total = (snap.summary or {}).get("total_files") if snap else None
-        # NULL stats (column absent at write time) are unbounded — the
-        # file can never be skipped on that column.
-        _is_data = F.col("content").isNull() | (F.col("content") == "data")
-        if total is not None and total > self.PRUNE_DRIVER_MAX:
-            mdf = self.manifest_df(snap)
-            keep_paths = [
-                r["file_path"]
-                for r in mdf.filter(_is_data)
-                .filter(
-                    F.col(f"max_{col}").isNull()
-                    | F.col(f"min_{col}").isNull()
-                    | ~(
-                        (F.col(f"max_{col}") < F.lit(lo))
-                        | (F.col(f"min_{col}") > F.lit(hi))
-                    )
-                )
-                .select("file_path")
-                .collect()
-            ]
-            files_total = total
-        else:
-            entries = self.data_entries(snap)
-            keep_paths = [
-                e["file_path"]
-                for e in entries
-                if e[f"max_{col}"] is None
-                or e[f"min_{col}"] is None
-                or not (e[f"max_{col}"] < lo or e[f"min_{col}"] > hi)
-            ]
-            files_total = len(entries)
+        m = self.data_manifest(snap)
+        keep_paths = prune_manifest(m, col, starts, ends)["file_path"].to_pylist()
         if not keep_paths:
             df = self.spark.createDataFrame([], self.scan(snapshot_id).schema)
-            return df, 0, files_total
+            return df, 0, m.num_rows
         df = self._read_files([f"{self.root}/{p}" for p in keep_paths], snap)
-        df = self._drop_internal(df).filter((F.col(col) >= lo) & (F.col(col) <= hi))
-        return df, len(keep_paths), files_total
+        return self._drop_internal(df).filter(residual), len(keep_paths), m.num_rows
 
     def incremental_scan(
         self, from_snapshot_id: int, to_snapshot_id: int | None = None
@@ -620,49 +592,11 @@ class Table:
         range for ``col`` contains at least one of ``values`` (the
         probe-set analogue of scan_pruned; used by LSH bucket probes).
         The residual isin filter is pushed to the parquet reader, so
-        row-group pruning composes with the manifest skip.
-
-        Same two-path decision as scan_pruned: past PRUNE_DRIVER_MAX
-        manifest entries the probe runs as a broadcast left-semi range
-        join of the values onto manifest_df."""
-        snap = self.snapshot(snapshot_id) if snapshot_id else self.current_snapshot()
-        total = (snap.summary or {}).get("total_files") if snap else None
-        if total is not None and total > self.PRUNE_DRIVER_MAX and values:
-            vdf = self.spark.createDataFrame([(v,) for v in values], ["_v"])
-            keep_paths = [
-                r["file_path"]
-                for r in self.manifest_df(snap)
-                .filter(F.col("content").isNull() | (F.col("content") == "data"))
-                .join(
-                    F.broadcast(vdf),
-                    F.col(f"min_{col}").isNull()
-                    | F.col(f"max_{col}").isNull()
-                    | (
-                        (F.col("_v") >= F.col(f"min_{col}"))
-                        & (F.col("_v") <= F.col(f"max_{col}"))
-                    ),
-                    "left_semi",
-                )
-                .select("file_path")
-                .collect()
-            ]
-            files_total = total
-        else:
-            entries = self.data_entries(snap)
-            keep_paths = [
-                e["file_path"]
-                for e in entries
-                if e[f"min_{col}"] is None
-                or e[f"max_{col}"] is None
-                or any(e[f"min_{col}"] <= v <= e[f"max_{col}"] for v in values)
-            ]
-            files_total = len(entries)
-        if not keep_paths:
-            df = self.spark.createDataFrame([], self.scan(snapshot_id).schema)
-            return df, 0, files_total
-        df = self._read_files([f"{self.root}/{p}" for p in keep_paths], snap)
-        df = self._drop_internal(df)
-        return df.filter(F.col(col).isin(list(values))), len(keep_paths), files_total
+        row-group pruning composes with the manifest skip."""
+        points = sorted({v for v in values if v is not None})
+        return self._scan_skipping(
+            col, points, points, F.col(col).isin(list(values)), snapshot_id
+        )
 
     def scan_in_manifest_order(self, snapshot_id: int | None = None) -> DataFrame:
         """Scan with a per-file ordinal so tests can reconstruct the
@@ -799,8 +733,6 @@ class Table:
         """Per-file ``_crc`` sums via driver-side pyarrow column reads
         (only the 8-byte checksum column is materialized). Caller gates
         on CRC_DRIVER_MAX_ROWS/FOOTER_DRIVER_MAX."""
-        import pyarrow.compute as pc
-
         from .integrity import CRC_COL
 
         out: dict[str, int] = {}
@@ -1154,6 +1086,39 @@ def _stamp_added(tbl: pa.Table, schema: pa.Schema, seq: int) -> pa.Table:
             )
         cols.append(col)
     return pa.Table.from_arrays(cols, schema=schema)
+
+
+def stats_keep_mask(mins, maxs, starts, ends) -> np.ndarray:
+    """The file-skipping decision, vectorized over a manifest's stats
+    columns: True where a file whose ``[min, max]`` are ``mins[i]``,
+    ``maxs[i]`` (Arrow arrays) can hold a value inside one of the probe
+    intervals ``[starts[j], ends[j]]`` — sorted and disjoint, so a key
+    set is its sorted distinct values as point intervals. A NULL min or
+    max (read from the validity mask: an int column with nulls turns
+    into float NaN under to_numpy) is unbounded and always kept.
+
+    Intervals ending before ``min`` and intervals starting at or before
+    ``max`` are both prefixes of the sorted probe list; the file
+    overlaps one iff the second prefix is longer."""
+    bounded = pc.and_(pc.is_valid(mins), pc.is_valid(maxs))
+    keep = ~np.asarray(bounded, dtype=bool)
+    if len(starts) and not keep.all():
+        lo = pc.filter(mins, bounded).to_numpy(zero_copy_only=False)
+        hi = pc.filter(maxs, bounded).to_numpy(zero_copy_only=False)
+        keep[~keep] = np.searchsorted(starts, hi, "right") > np.searchsorted(
+            ends, lo, "left"
+        )
+    return keep
+
+
+def prune_manifest(manifest: pa.Table, col: str, starts, ends) -> pa.Table:
+    """The manifest entries stats_keep_mask keeps for ``col``; a column
+    without manifest stats prunes nothing."""
+    if f"min_{col}" not in manifest.column_names:
+        return manifest
+    return manifest.filter(
+        stats_keep_mask(manifest[f"min_{col}"], manifest[f"max_{col}"], starts, ends)
+    )
 
 
 def pad_cast_manifest(tbl: pa.Table, schema: pa.Schema) -> pa.Table:

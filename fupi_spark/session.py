@@ -13,6 +13,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -162,5 +163,6 @@ def _warm_engine(spark: SparkSession) -> None:
             ).count()
         finally:
             shutil.rmtree(d, ignore_errors=True)
-    except Exception:
-        pass  # warm-up is best-effort; never fail session construction
+    except Exception as e:
+        # warm-up is best-effort; never fail session construction
+        logging.getLogger("fupi_spark").warning("session warm-up failed: %s", e)

@@ -132,3 +132,25 @@ def test_refresh_with_null_keys_stays_sound(spark, tmp_path):
     assert df.count() == 20 and total == 3
     # the all-null files are pruned; only the indexed file is read
     assert files_read == 1
+
+
+def test_unreadable_index_logs_and_disables_pruning(spark, tmp_path, caplog):
+    """A never-written index is silently empty; an unreadable one logs
+    a warning and prunes nothing, so lookups stay exact."""
+    import logging
+    import os
+
+    t = make_table(spark, str(tmp_path / "t"), n=40, parts=2)
+    key = t.scan().select("clip_id").first().clip_id
+    with caplog.at_level(logging.WARNING, logger="fupi_spark"):
+        df, files_read, total = point_lookup(t, "clip_id", key)
+        assert df.count() == 1 and files_read == total == 2
+        assert not caplog.records
+
+        os.makedirs(f"{t.root}/metadata/bloom")
+        with open(f"{t.root}/metadata/bloom/part-00000.parquet", "wb") as f:
+            f.write(b"not a parquet file")
+        df, files_read, total = point_lookup(t, "clip_id", key)
+        assert [r.clip_id for r in df.collect()] == [key]
+        assert files_read == total == 2
+    assert any("bloom index" in r.getMessage() for r in caplog.records)

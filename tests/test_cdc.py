@@ -189,3 +189,28 @@ def test_changelog_interval_ending_in_full_deletion(spark, tmp_path):
     # degenerate empty interval over the file-free endpoint also works
     wiped = t.current_snapshot().snapshot_id
     assert _changes(t, wiped, wiped) == []
+
+
+def test_file_free_endpoint_ignores_later_rename(spark, tmp_path):
+    """The changelog schema at a file-free endpoint is that snapshot's:
+    a rename_column committed after it stays out, also once the earlier
+    file-bearing snapshots have expired and only later ones, the
+    pre-rename append among them, can supply a schema."""
+    from fupi_spark.evolve import rename_column
+    from fupi_spark.expire import expire_snapshots
+
+    t = make_table(spark, str(tmp_path / "t"), n=30, parts=2)
+    seeded = t.current_snapshot().snapshot_id
+    wiped = meta.rollback(t, min(t.snapshot_ids())).snapshot_id
+    meta.append(t, synth_clips(spark, 10, seed=5, dur_range_ms=(50, 80)), parts=1)
+    rename_column(t, "codec", "fmt")
+
+    cl = changelog_scan(t, seeded, wiped)
+    assert "codec" in cl.columns and "fmt" not in cl.columns
+    assert {r[CHANGE_TYPE_COL] for r in cl.collect()} == {"delete"}
+
+    t.set_tag("wiped", wiped)
+    expire_snapshots(t, retain_last=2)
+    assert min(t.snapshot_ids()) == wiped
+    cols = changelog_scan(t, wiped, wiped).columns
+    assert "codec" in cols and "fmt" not in cols

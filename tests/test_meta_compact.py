@@ -204,6 +204,86 @@ def test_scan_pruned_skips_files_after_clustering(spark, tmp_table_dir):
     assert read_after < total_after  # clustered layout: files skipped
 
 
+def test_scan_pruned_counts_data_files_only(spark, tmp_path):
+    """Range and point-set pruned scans return exactly the matching
+    rows and skip files on a clustered table; files_total counts data
+    files only, so an outstanding MOR delete file changes neither it
+    nor files_read."""
+    from fupi_spark.cluster import cluster
+    from fupi_spark.merge import delete_keys_mor
+
+    t = make_table(spark, str(tmp_path / "t"), n=400, parts=16)
+    cluster(t, curve="linear", target_bytes=1 << 18)
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    lo, hi = ids[50], ids[120]
+    probes = [ids[10], ids[200], ids[399]]
+
+    def pruned():
+        df, read, total = t.scan_pruned("clip_id", lo, hi)
+        dfp, read_in, total_in = t.scan_pruned_in("clip_id", probes)
+        rows = sorted(r.clip_id for r in df.select("clip_id").collect())
+        rows_in = sorted(r.clip_id for r in dfp.select("clip_id").collect())
+        return (rows, rows_in), (read, total, read_in, total_in)
+
+    rows, counts = pruned()
+    read, total, read_in, total_in = counts
+    assert rows == (ids[50:121], sorted(probes))
+    assert read < total and read_in < total_in
+    assert total == total_in == len(t.data_entries())
+
+    gone = [ids[60], ids[200]]
+    delete_keys_mor(t, spark.createDataFrame([(k,) for k in gone], ["clip_id"]))
+    assert len(t.delete_entries()) == 1
+    rows, counts_after = pruned()
+    assert rows == ([c for c in ids[50:121] if c not in gone], [ids[10], ids[399]])
+    assert counts_after == counts
+    assert counts_after[1] == len(t.data_entries())
+
+
+def _bruteforce_keep(mins, maxs, intervals):
+    return [
+        lo is None or hi is None or any(s <= hi and lo <= e for s, e in intervals)
+        for lo, hi in zip(mins, maxs)
+    ]
+
+
+@pytest.mark.parametrize("kind", ["int", "str"])
+def test_stats_keep_mask_matches_bruteforce(kind):
+    """The vectorized file-skip decision equals the per-entry predicate
+    on a random 200,000-entry manifest with NULL mins and maxes, over
+    ranges, key sets and an empty probe set."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(7)
+    if kind == "int":
+        domain, typ = list(range(-1000, 1000)), pa.int64()
+    else:
+        # every word of length 1-4 over "abc", so prefixes are in play
+        words = [""]
+        for _ in range(4):
+            words = sorted({w + c for w in words for c in "abc"} | set(words))
+        domain, typ = words[1:], pa.string()
+    n = 200_000
+    a = rng.integers(0, len(domain), n)
+    b = np.minimum(a + rng.integers(0, 30, n), len(domain) - 1)
+    mins = [None if r < 0.05 else domain[i] for i, r in zip(a, rng.random(n))]
+    maxs = [None if r < 0.03 else domain[i] for i, r in zip(b, rng.random(n))]
+    for k, points in [(0, False), (1, False), (4, False), (1, True), (12, True)]:
+        idx = np.sort(rng.choice(len(domain), k if points else 2 * k, replace=False))
+        vals = [domain[i] for i in idx]
+        intervals = (
+            [(v, v) for v in vals] if points else list(zip(vals[::2], vals[1::2]))
+        )
+        got = meta.stats_keep_mask(
+            pa.array(mins, typ),
+            pa.array(maxs, typ),
+            [s for s, _ in intervals],
+            [e for _, e in intervals],
+        )
+        assert got.tolist() == _bruteforce_keep(mins, maxs, intervals)
+
+
 def test_group_aware_compaction_preserves_ranges(spark, tmp_table_dir):
     """group_fn compaction: bins never mix groups, per-file stat ranges
     stay within their group, and content survives."""

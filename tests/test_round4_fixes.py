@@ -368,46 +368,6 @@ def test_cluster_marker_survives_expiry(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# scan_pruned: distributed skip decision past the driver threshold
-# ---------------------------------------------------------------------------
-
-
-def test_scan_pruned_distributed_path_matches_driver_path(spark, tmp_path, monkeypatch):
-    """Forcing PRUNE_DRIVER_MAX=0 routes the file-skip decision through
-    the distributed manifest_df filter; results (rows, skip counts)
-    must be identical to the driver loop."""
-    import importlib
-
-    C = importlib.import_module("fupi_spark.cluster")
-
-    t = make_table(spark, str(tmp_path / "t"), n=400, parts=16)
-    C.cluster(t, curve="linear", target_bytes=1 << 18)
-    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
-    lo, hi = ids[50], ids[120]
-
-    df1, read1, total1 = t.scan_pruned("clip_id", lo, hi)
-    rows1 = sorted(r.clip_id for r in df1.select("clip_id").collect())
-    assert read1 < total1  # clustering makes skipping real
-
-    monkeypatch.setattr(type(t), "PRUNE_DRIVER_MAX", 0)
-    df2, read2, total2 = t.scan_pruned("clip_id", lo, hi)
-    rows2 = sorted(r.clip_id for r in df2.select("clip_id").collect())
-    assert (read2, total2) == (read1, total1)
-    assert rows2 == rows1 == ids[50:121]
-
-    # point-set probe: distributed path must match the driver loop too
-    probes = [ids[10], ids[200], ids[399]]
-    monkeypatch.setattr(type(t), "PRUNE_DRIVER_MAX", 1_000_000)
-    dfa, ra, ta = t.scan_pruned_in("clip_id", probes)
-    monkeypatch.setattr(type(t), "PRUNE_DRIVER_MAX", 0)
-    dfb, rb, tb = t.scan_pruned_in("clip_id", probes)
-    assert (ra, ta) == (rb, tb) and ra < ta
-    assert sorted(r.clip_id for r in dfa.collect()) == sorted(
-        r.clip_id for r in dfb.collect()
-    ) == sorted(probes)
-
-
-# ---------------------------------------------------------------------------
 # VERDICT r3 #6: dense_ids spills keys, not payloads
 # ---------------------------------------------------------------------------
 
