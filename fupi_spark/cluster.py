@@ -24,10 +24,10 @@ Physical plan (idiomatic Spark, no RDDs):
    past BUCKET_FOLD_MAX boundaries a vectorized searchsorted pandas
    UDF, O(log n) per row), ONE hash shuffle on it,
    ``sortWithinPartitions(_zval, clip_id)``,
-   ``write.partitionBy(_bucket)`` — bucket directories are renamed to
-   range-ordered file names, so file-name order IS curve order and
-   concatenating files reproduces the global clustering order (tested
-   against the pandas oracle). A hash collision that co-locates two
+   ``write.partitionBy(_bucket)`` — Table.promote_staged renames the
+   bucket directories to range-ordered file names, so file-name order
+   IS curve order and concatenating files reproduces the global
+   clustering order (tested against the pandas oracle). A hash collision that co-locates two
    buckets in one task still emits one file per bucket, each
    internally sorted, so the property survives;
 5. manifest rewrite + per-file stats recomputation, snapshot commit
@@ -49,16 +49,17 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import zorder
 from .lineage import LineageLog
 from .meta import Snapshot, Table
-from .compact import promote_partition_dirs
 
 CLUSTER_DIMS = ["clip_id", "sr_hz", "dur_ms", "codec"]
 
@@ -340,6 +341,53 @@ def _sampled(df, n_out: int, rows_total: int):
     return df if frac >= 1.0 else df.sample(fraction=frac, seed=7)
 
 
+@dataclass
+class _Layout:
+    """A planned range-bucket layout: sorted ``boundaries`` over the
+    layout key, which is the curve key ``_zval`` (the Column ``zval``)
+    or, for ``linear``, clip_id itself (``zval`` None)."""
+
+    boundaries: list
+    zval: Column | None
+    codec_ranks: list | None
+
+    @property
+    def sort_cols(self) -> list[str]:
+        if self.zval is None:
+            return ["_bucket", "clip_id"]
+        return ["_bucket", "_zval", "clip_id"]
+
+    def bucket(self) -> Column:
+        """The range-bucket id of a row of a ``keyed`` frame."""
+        if not self.boundaries:
+            return F.lit(0)
+        return _bucket_expr(self.boundaries, "clip_id" if self.zval is None else "_zval")
+
+    def keyed(self, df):
+        """``df`` with the layout key attached (curve layouts)."""
+        return df if self.zval is None else df.withColumn("_zval", self.zval)
+
+
+def _plan_layout(table: Table, src, curve: str, n_out: int, rows_total: int) -> _Layout:
+    """Range boundaries for ``n_out`` buckets from a SAMPLE of the key
+    columns of ``src`` only — the payload is never read (column
+    pruning) and the curve key only ever evaluates ~200·n_out sampled
+    rows, so its full-data evaluation happens exactly once (in the
+    rewrite). ``linear`` buckets directly on the clip_id string (no
+    curve key, no dimension_bounds); curve layouts normalize from the
+    full manifest's bounds (metadata-only), so curve keys stay
+    comparable across clustering generations."""
+    if curve == "linear":
+        sample = _sampled(src.select("clip_id"), n_out, rows_total)
+        raw_q = _range_boundaries(sample, "clip_id", n_out, rows_total)
+        return _Layout(sorted(set(raw_q)), None, None)
+    bounds = dimension_bounds(table)
+    zval = curve_key_col(bounds, curve)
+    sample = _sampled(src.select(*CLUSTER_DIMS), n_out, rows_total)
+    raw_q = _range_boundaries(sample.withColumn("_zval", zval), "_zval", n_out, rows_total)
+    return _Layout(sorted(set(int(b) for b in raw_q)), zval, bounds["codec_ranks"])
+
+
 def cluster(
     table: Table,
     curve: str = "zorder",
@@ -359,7 +407,6 @@ def cluster(
         prev = table.committed_snapshot_for_job(job_id)
         if prev is not None:
             return prev  # idempotent re-submission
-    spark = table.spark
     base = table.current_snapshot()
     entries = table.data_entries(base)
     dels = table.delete_entries(base)
@@ -369,25 +416,10 @@ def cluster(
     n_out = max(1, -(-total_bytes // target_bytes))
     job_id = job_id or f"cluster-{curve}-{uuid.uuid4().hex[:8]}"
 
-    # pass 1 (planning): range boundaries from a SAMPLE of the key
-    # columns only — the payload is never read (column pruning) and the
-    # curve UDF only ever evaluates ~200·n_out sampled rows, so the
-    # full-data UDF evaluation happens exactly once (in the rewrite).
-    # linear buckets directly on the clip_id string (no curve key, no
-    # dimension_bounds job).
+    # pass 1 (planning): sampled range boundaries (_plan_layout)
     rows_total = sum(e["row_count"] for e in entries)
-    if curve == "linear":
-        keyed_sample = _sampled(table.scan().select("clip_id"), n_out, rows_total)
-        raw_q = _range_boundaries(keyed_sample, "clip_id", n_out, rows_total)
-        boundaries = sorted(set(raw_q))
-    else:
-        bounds = dimension_bounds(table)
-        key_col = curve_key_col(bounds, curve)
-        keyed_sample = _sampled(
-            table.scan().select(*CLUSTER_DIMS), n_out, rows_total
-        ).withColumn("_zval", key_col)
-        raw_q = _range_boundaries(keyed_sample, "_zval", n_out, rows_total)
-        boundaries = sorted(set(int(b) for b in raw_q))
+    layout = _plan_layout(table, table.scan(), curve, n_out, rows_total)
+    boundaries = layout.boundaries
 
     # AUTO skew salting: collapsed boundaries mean one key value owns
     # more than a bucket's worth of rows — range splitting cannot
@@ -405,14 +437,8 @@ def cluster(
     # pass 2: the rewrite shuffle (internal columns — the per-row _crc —
     # must ride the rewrite so the clustered files keep their integrity
     # column without touching the payload)
-    df = table.scan(include_internal=True)
-    if curve == "linear":
-        sort_cols = ["_bucket", "clip_id"]
-        bucket = _bucket_expr(boundaries, "clip_id") if boundaries else F.lit(0)
-    else:
-        df = df.withColumn("_zval", key_col)
-        sort_cols = ["_bucket", "_zval", "clip_id"]
-        bucket = _bucket_expr(boundaries) if boundaries else F.lit(0)
+    df = layout.keyed(table.scan(include_internal=True))
+    bucket = layout.bucket()
     if effective_salt > 1:
         # spread each range bucket over hash sub-buckets of clip_id
         bucket = bucket * effective_salt + F.pmod(
@@ -431,10 +457,10 @@ def cluster(
         "salt_buckets": effective_salt,
         "deletes_materialized": len(dels),
     }
-    if curve != "linear":
-        summary["cluster_codec_ranks"] = bounds["codec_ranks"]
+    if layout.codec_ranks is not None:
+        summary["cluster_codec_ranks"] = layout.codec_ranks
     return _write_clustered(
-        table, df, n_parts, sort_cols, job_id, entries + dels, total_bytes, base,
+        table, df, n_parts, layout.sort_cols, job_id, entries + dels, total_bytes, base,
         summary=summary,
         applied_delete_paths={e["file_path"] for e in dels},
     )
@@ -463,20 +489,9 @@ def _write_clustered(
         .partitionBy("_bucket")
         .parquet(staging)
     )
-    added = promote_partition_dirs(table, staging, job_id, "_bucket")
-
-    # per-partition lineage: one unit per output file
-    log = LineageLog(table, job_id)
+    added = table.promote_staged(staging, job_id)
     removed = [e["file_path"] for e in removed_entries]
-    for i, e in enumerate(added.to_pylist()):
-        log.complete_unit(
-            i,
-            files_in=removed if i == 0 else [],
-            files_out=[e["file_path"]],
-            bytes_in=bytes_in if i == 0 else 0,
-            bytes_out=e["byte_size"],
-            rows=e["row_count"],
-        )
+    LineageLog(table, job_id).record_outputs(added, removed, bytes_in)
 
     return table.commit(
         "cluster",
@@ -549,31 +564,11 @@ def cluster_incremental(
     new_bytes = sum(e["byte_size"] for e in entries)
     n_out = max(1, -(-new_bytes // target_bytes))
 
-    # sampled keys-only boundary pass over the NEW files only;
-    # normalization bounds still come from the full manifest
-    # (metadata-only) so curve keys stay comparable across generations
+    # sampled keys-only boundary pass over the NEW files only
     rows_total = sum(e["row_count"] for e in entries)
-    paths = [f"{table.root}/{e['file_path']}" for e in entries]
-    new_df = table._read_files(paths, base)
-    if curve == "linear":
-        sample = _sampled(new_df.select("clip_id"), n_out, rows_total)
-        boundaries = sorted(set(_range_boundaries(sample, "clip_id", n_out, rows_total)))
-        df = new_df.withColumn(
-            "_bucket", _bucket_expr(boundaries, "clip_id") if boundaries else F.lit(0)
-        )
-        sort_cols = ["_bucket", "clip_id"]
-    else:
-        bounds = dimension_bounds(table)
-        key_col = curve_key_col(bounds, curve)
-        sample = _sampled(new_df.select(*CLUSTER_DIMS), n_out, rows_total).withColumn(
-            "_zval", key_col
-        )
-        raw_q = _range_boundaries(sample, "_zval", n_out, rows_total)
-        boundaries = sorted(set(int(b) for b in raw_q))
-        df = new_df.withColumn("_zval", key_col).withColumn(
-            "_bucket", _bucket_expr(boundaries) if boundaries else F.lit(0)
-        )
-        sort_cols = ["_bucket", "_zval", "clip_id"]
+    new_df = table._read_files([f"{table.root}/{e['file_path']}" for e in entries], base)
+    layout = _plan_layout(table, new_df, curve, n_out, rows_total)
+    df = layout.keyed(new_df).withColumn("_bucket", layout.bucket())
 
     # the churn read goes through _read_files -> outstanding deletes
     # are applied to the rewritten subset; pin the applied set so a
@@ -585,10 +580,10 @@ def cluster_incremental(
         "rewritten_bytes": new_bytes,
         "untouched_files": len(prev_live & set(table.live_files(base))),
     }
-    if curve != "linear":
-        summary["cluster_codec_ranks"] = bounds["codec_ranks"]
+    if layout.codec_ranks is not None:
+        summary["cluster_codec_ranks"] = layout.codec_ranks
     return _write_clustered(
-        table, df, len(boundaries) + 1, sort_cols, job_id, entries, new_bytes, base,
+        table, df, len(layout.boundaries) + 1, layout.sort_cols, job_id, entries, new_bytes, base,
         summary=summary,
         applied_delete_paths={e["file_path"] for e in table.delete_entries(base)},
     )

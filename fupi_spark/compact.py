@@ -79,62 +79,6 @@ def ffd_pack(entries: list[dict], target_bytes: int, min_file_bytes: int | None 
     return bins
 
 
-def promote_partition_dirs(table: Table, staging: str, job_id: str, part_col: str):
-    """Promote a ``partitionBy(part_col)`` staging layout into data/ with
-    file names ordered by the partition value (zero-padded), so
-    file-name order reproduces bucket order. Returns manifest entries
-    with stats recomputed as one DataFrame aggregation."""
-    import pyarrow as pa  # noqa: F401
-
-    import uuid as _uuid
-
-    dirs = sorted(
-        (int(d.split("=")[1]), d)
-        for d in os.listdir(staging)
-        if d.startswith(f"{part_col}=")
-    )
-    table.mark_job_active(job_id)
-    # per-attempt nonce (constant within the run, so name order still
-    # follows the partition value): promotion can never overwrite a
-    # live file of an earlier run that reused the job id
-    nonce = _uuid.uuid4().hex[:6]
-    pairs = []
-    for k, d in dirs:
-        parts = sorted(f for f in os.listdir(f"{staging}/{d}") if f.endswith(".parquet"))
-        for j, p in enumerate(parts):
-            pairs.append(
-                (f"{staging}/{d}/{p}", f"data/{job_id}-{nonce}-{k:06d}-{j:02d}.parquet")
-            )
-    table.storage.promote_many(pairs)
-    promoted = [rel for _src, rel in pairs]
-    shutil.rmtree(staging, ignore_errors=True)
-
-    # footer-derived stats + _crc-only checksum agg with Spark-agg
-    # fallback — one shared implementation (meta._stats_for_files).
-    # Keyed by basename, not reconstructed absolute path: Spark reports
-    # its own canonical _metadata form, which need not string-match
-    # f"{table.root}/..." under symlinks/relative roots
-    full_paths = [f"{table.root}/{p}" for p in promoted]
-    stats = table._stats_for_files(
-        full_paths, table.spark.read.parquet(*full_paths)
-    )
-    added_entries = []
-    for p in promoted:
-        r = stats[p.rsplit("/", 1)[-1]]
-        e = {
-            "file_path": p,
-            "row_count": r["row_count"],
-            "byte_size": table.storage.size(p),
-            "checksum_bytes": r["checksum_bytes"],
-            "schema_id": table.current_schema_id(),
-        }
-        for c in table.stats_cols:
-            e[f"min_{c}"] = r[f"min_{c}"]
-            e[f"max_{c}"] = r[f"max_{c}"]
-        added_entries.append(e)
-    return entries_to_arrow(added_entries, table.stats_spec)
-
-
 def compact(
     table: Table,
     target_bytes: int = 128 * 1024 * 1024,
@@ -159,10 +103,8 @@ def compact(
     # planner cannot distinguish "already done" from "new work" by
     # looking at files alone). Mid-crash resume (no commit yet) still
     # goes through the unit-lineage path below.
-    if job_id is not None:
-        for sid_done in table.snapshot_ids():
-            if table.snapshot(sid_done).summary.get("job_id") == job_id:
-                return None
+    if job_id is not None and table.committed_snapshot_for_job(job_id) is not None:
+        return None
     entries = table.data_entries(base)
     dels = table.delete_key_specs(base)
     # bins NEVER mix schema generations (evolve.py): compaction streams
@@ -314,7 +256,9 @@ def compact(
                 conf.set("spark.sql.files.minPartitionNum", old_mpn)
 
         # promote each bin's output into data/ and checkpoint lineage.
-        # A per-ATTEMPT nonce in the name makes promotion collision-free:
+        # Not Table.promote_staged: a bin's stats fold from its input
+        # entries (no footer reads), and each bin is its own resumable
+        # unit, checked against its input row count. A per-ATTEMPT nonce in the name makes promotion collision-free:
         # without it, a job-id reuse (or the pre-idempotence re-run bug)
         # could os.rename over a LIVE data file of the earlier run.
         nonce = uuid.uuid4().hex[:6]

@@ -375,7 +375,6 @@ def ingest_corpus(
     # per-file [min,max] ranges useless. The group id is a pure
     # derivation of lsh_bucket — no sampling job, no UDF re-evaluation.
     from .ann import LSH_N_PLANES as _NB
-    from .compact import promote_partition_dirs
 
     n_groups = max(1, min(index_files, 1 << _NB))
     span = (1 << _NB) // n_groups
@@ -392,7 +391,7 @@ def ingest_corpus(
         .partitionBy("_bgrp")
         .parquet(staging)
     )
-    added = promote_partition_dirs(t_sent, staging, "ingest", "_bgrp")
+    added = t_sent.promote_staged(staging, "ingest")
     t_sent.commit("append", added, summary={"job_id": "ingest"})
 
     meta.append(t_text, text_level, job_id="ingest")

@@ -58,6 +58,26 @@ class LineageLog:
         }
         self.table.storage.put(self._unit_rel(unit_id), json.dumps(rec).encode())
 
+    def record_outputs(
+        self, added, files_in: list[str], bytes_in: int, unit_id: int = 0
+    ) -> int:
+        """Unit records of a one-shot rewrite that wrote the manifest
+        entries ``added`` (Arrow): one unit per output file, numbered
+        from ``unit_id``, with the consumed ``files_in`` and ``bytes_in``
+        on the first. Returns the next free unit id (consolidate_deletes
+        numbers its key groups in one sequence)."""
+        outs = added.select(["file_path", "byte_size", "row_count"]).to_pylist()
+        for i, e in enumerate(outs):
+            self.complete_unit(
+                unit_id + i,
+                files_in=files_in if i == 0 else [],
+                files_out=[e["file_path"]],
+                bytes_in=bytes_in if i == 0 else 0,
+                bytes_out=e["byte_size"],
+                rows=e["row_count"],
+            )
+        return unit_id + len(outs)
+
     def completed_units(self) -> dict[int, dict]:
         out = {}
         for rel in self.table.storage.list(self.prefix):

@@ -65,6 +65,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -400,15 +401,7 @@ def merge_into(
         n_matched = src_rows - n_inserts
         n_carries = n_target - n_matched
 
-    for i, e in enumerate(added.to_pylist()):
-        log.complete_unit(
-            i,
-            files_in=touched_paths if i == 0 else [],
-            files_out=[e["file_path"]],
-            bytes_in=sum(x["byte_size"] for x in touched) if i == 0 else 0,
-            bytes_out=e["byte_size"],
-            rows=e["row_count"],
-        )
+    log.record_outputs(added, touched_paths, sum(x["byte_size"] for x in touched))
 
     return table.commit(
         "merge",
@@ -485,28 +478,18 @@ def delete_where(
     else:
         n_in = sum(e["row_count"] for e in entries)
     n_out = sum(added.column("row_count").to_pylist())
-    for i, e in enumerate(added.to_pylist()):
-        log.complete_unit(
-            i,
-            files_in=touched_paths if i == 0 else [],
-            files_out=[e["file_path"]],
-            bytes_in=sum(x["byte_size"] for x in entries) if i == 0 else 0,
-            bytes_out=e["byte_size"],
-            rows=e["row_count"],
-        )
     # an un-pruned delete rewrites EVERY data file with the outstanding
     # MOR deletes applied — every output carries a fresh (higher)
     # sequence, so the delete files become permanently inert: retire
     # them here (like cluster() does) instead of leaving every later
     # scan to pay their read + anti-join forever. A pruned delete may
     # leave untouched files the deletes still cover, so it keeps them.
-    removed = set(touched_paths)
-    if prune is None:
-        removed |= applied_dels
+    removed = touched_paths + ([] if prune is not None else sorted(applied_dels))
+    log.record_outputs(added, removed, sum(x["byte_size"] for x in entries))
     return table.commit(
         "delete",
         added,
-        removed_paths=removed,
+        removed_paths=set(removed),
         base=base,
         expected_delete_paths=applied_dels,
         summary={
@@ -516,6 +499,18 @@ def delete_where(
             "deleted_rows": n_in - n_out,
         },
     )
+
+
+def _as_deletes(added: pa.Table, sequence: int | None = None) -> pa.Table:
+    """Stamp freshly written key files as MOR equality-delete entries
+    (content='deletes'). ``sequence`` pins a consolidated group's
+    sequence; None leaves it for the commit to stamp."""
+    for name, value in (("content", "deletes"), ("sequence", sequence)):
+        if value is not None:
+            i = added.schema.get_field_index(name)
+            f = added.field(i)
+            added = added.set_column(i, f, pa.array([value] * added.num_rows, f.type))
+    return added
 
 
 #: target keys per delete file: bounds write parallelism for large key
@@ -559,8 +554,6 @@ def delete_keys_mor(
         prev = table.committed_snapshot_for_job(job_id)
         if prev is not None:
             return prev  # idempotent re-submission
-    import pyarrow as pa
-
     key_cols = [key] if isinstance(key, str) else list(key)
     job_id = job_id or f"delmor-{uuid.uuid4().hex[:8]}"
     # persist: the frame is consumed twice (count + write) and a
@@ -577,20 +570,8 @@ def delete_keys_mor(
         added = table.write_datafiles(kdf_out, job_id)
     finally:
         kdf.unpersist()
-    added = added.set_column(
-        added.schema.get_field_index("content"),
-        "content",
-        pa.array(["deletes"] * added.num_rows, type=pa.string()),
-    )
-    for i, e in enumerate(added.to_pylist()):
-        log.complete_unit(
-            i,
-            files_in=[],
-            files_out=[e["file_path"]],
-            bytes_in=0,
-            bytes_out=e["byte_size"],
-            rows=e["row_count"],
-        )
+    added = _as_deletes(added)
+    log.record_outputs(added, [], 0)
     snap = table.commit(
         "delete-mor",
         added,
@@ -629,8 +610,6 @@ def consolidate_deletes(
         prev = table.committed_snapshot_for_job(job_id)
         if prev is not None:
             return prev  # idempotent re-submission
-    import pyarrow as pa
-
     base = table.current_snapshot()
     groups: dict[tuple, list[dict]] = {}
     for e in table.delete_key_specs(base):
@@ -652,35 +631,15 @@ def consolidate_deletes(
         out = (
             del_df.repartition(parts, *key_cols) if parts > 1 else del_df.coalesce(1)
         )
-        added = table.write_datafiles(out, job_id)
         max_seq = max(int(e.get("sequence") or 0) for e in entries)
-        added = added.set_column(
-            added.schema.get_field_index("content"),
-            "content",
-            pa.array(["deletes"] * added.num_rows, type=pa.string()),
-        )
-        added = added.set_column(
-            added.schema.get_field_index("sequence"),
-            "sequence",
-            pa.array([max_seq] * added.num_rows, type=pa.int64()),
-        )
+        added = _as_deletes(table.write_datafiles(out, job_id), max_seq)
         group_removed = [e["file_path"] for e in entries]
         removed.update(group_removed)
-        for i, e in enumerate(added.to_pylist()):
-            # inputs recorded on each GROUP's first unit (a global
-            # first-unit gate would drop every later key set's inputs
-            # from the provenance record)
-            log.complete_unit(
-                unit,
-                files_in=group_removed if i == 0 else [],
-                files_out=[e["file_path"]],
-                bytes_in=sum(x["byte_size"] or 0 for x in entries)
-                if i == 0
-                else 0,
-                bytes_out=e["byte_size"],
-                rows=e["row_count"],
-            )
-            unit += 1
+        # inputs recorded on each GROUP's first unit (a global first-unit
+        # gate would drop every later key set's inputs from provenance)
+        unit = log.record_outputs(
+            added, group_removed, sum(x["byte_size"] or 0 for x in entries), unit
+        )
         added_tables.append(added)
     merged = (
         pa.concat_tables(added_tables)

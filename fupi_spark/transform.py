@@ -71,17 +71,7 @@ def transform_payloads(
     n_parts = parts or max(1, len(entries))
     added = table.write_datafiles(out.repartition(n_parts), job_id)
 
-    log = LineageLog(table, job_id)
-    in_paths = sorted(removed)
-    for i, e in enumerate(added.to_pylist()):
-        log.complete_unit(
-            i,
-            files_in=in_paths if i == 0 else [],
-            files_out=[e["file_path"]],
-            bytes_in=bytes_in if i == 0 else 0,
-            bytes_out=e["byte_size"],
-            rows=e["row_count"],
-        )
+    LineageLog(table, job_id).record_outputs(added, sorted(removed), bytes_in)
 
     return table.commit(
         operation,

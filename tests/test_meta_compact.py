@@ -182,6 +182,87 @@ def test_stats_recomputed_after_compact(spark, tmp_table_dir):
     assert total == 200
 
 
+def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
+    """The footer path and the Spark-agg fallback must produce
+    identical manifest entries (stats exactness is what scan_pruned
+    and MERGE pruning rely on); the distributed footer path (forced
+    via FOOTER_DRIVER_MAX=0) must agree too. A partitioned staging
+    layout promotes in partition-value order with the same parity, and
+    on the footer path promote_staged launches no Spark job and reads
+    the schema id at most once."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    t1 = meta.create_table(spark, str(tmp_path / "t1"))
+    t2 = meta.create_table(spark, str(tmp_path / "t2"))
+    t3 = meta.create_table(spark, str(tmp_path / "t3"))
+    clips = synth_clips(spark, 150, dur_range_ms=(50, 150), parts=5)
+
+    meta.append(t1, clips, job_id="seed")  # footer path (default)
+    with monkeypatch.context() as mp:
+        mp.setattr(meta.Table, "footer_file_stats", lambda self, paths: None)
+        meta.append(t2, clips, job_id="seed")
+    with monkeypatch.context() as mp:
+        mp.setattr(meta.Table, "FOOTER_DRIVER_MAX", 0)
+        meta.append(t3, clips, job_id="seed")
+
+    def canon(entries):  # names differ by nonce
+        return [tuple(e[k] for k in sorted(e) if k != "file_path") for e in entries]
+
+    assert (
+        sorted(canon(t1.manifest_entries().to_pylist()))
+        == sorted(canon(t2.manifest_entries().to_pylist()))
+        == sorted(canon(t3.manifest_entries().to_pylist()))
+    )
+    # and the stats actually work: pruned scan agrees with full scan
+    lo = sorted(r.clip_id for r in t1.scan().select("clip_id").collect())[10]
+    df, _read, _tot = t1.scan_pruned("clip_id", lo, "zzzz")
+    assert df.count() == t1.scan().filter(F.col("clip_id") >= lo).count()
+
+    # partitioned staging: _k = dur_ms // 10 spans one- and two-digit
+    # values, so directory-name order ("_k=10" < "_k=5") differs from
+    # partition-value order
+    d1 = t1.stage_dir("part")
+    (
+        t1.scan(include_internal=True)
+        .withColumn("_k", (F.col("dur_ms") / 10).cast("int"))
+        .repartition(2, "_k")
+        .write.mode("overwrite")
+        .partitionBy("_k")
+        .parquet(d1)
+    )
+    shutil.copytree(d1, t2.stage_dir("part"), dirs_exist_ok=True)
+
+    schema_reads = []
+    real_schema_id = meta.Table.current_schema_id
+    monkeypatch.setattr(
+        meta.Table,
+        "current_schema_id",
+        lambda self: schema_reads.append(1) or real_schema_id(self),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("promote-staged-probe", "promote_staged", False)
+    try:
+        part1 = t1.promote_staged(d1, "part").to_pylist()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("promote-staged-probe")) == []
+    assert len(schema_reads) <= 1
+    with monkeypatch.context() as mp:
+        mp.setattr(meta.Table, "footer_file_stats", lambda self, paths: None)
+        part2 = t2.promote_staged(t2.stage_dir("part"), "part").to_pylist()
+
+    names = [e["file_path"] for e in part1]
+    assert names == sorted(names) and all(n.startswith("data/part-") for n in names)
+    ks = [e["min_dur_ms"] // 10 for e in part1]
+    assert ks == sorted(ks) and len(set(ks)) > 1
+    assert all(e["max_dur_ms"] // 10 == k for e, k in zip(part1, ks))
+    assert sum(e["row_count"] for e in part1) == 150
+    assert canon(part1) == canon(part2)
+
+
 def test_scan_pruned_skips_files_after_clustering(spark, tmp_table_dir):
     """Stats-based file skipping: clustering tightens per-file clip_id
     ranges, so a narrow range scan reads a small fraction of files and

@@ -3,10 +3,12 @@ content — the whole engine (append / compact / cluster / merge-update /
 merge-delete / mor-delete / consolidate-deletes / expire / rollback)
 must preserve or transform the row
 multiset exactly as the model does, with every live file present after
-every step."""
+every step and every committed job's lineage units accounting for
+exactly the files its commit swapped."""
 
 from __future__ import annotations
 
+import json
 import os
 import random
 
@@ -27,6 +29,23 @@ def _content(t) -> pd.DataFrame:
     return (
         t.scan().select(*COLS).toPandas().sort_values("clip_id").reset_index(drop=True)
     )
+
+
+def _check_lineage(t, head) -> None:
+    """When the head snapshot's job wrote unit records, their ids are
+    0..n-1, their files_out are exactly the files the commit added
+    against its parent and their files_in exactly the files it
+    removed."""
+    job = head.summary.get("job_id")
+    rels = t.storage.list(f"_lineage/{job}") if job else []
+    units = [json.loads(t.storage.read(r)) for r in rels if r.endswith(".json")]
+    if not units:
+        return
+    parent = set(t.live_files(t.snapshot(head.parent_id)))
+    live = set(t.live_files(head))
+    assert sorted(u["unit_id"] for u in units) == list(range(len(units)))
+    assert {p for u in units for p in u["files_out"]} == live - parent, job
+    assert {p for u in units for p in u["files_in"]} == parent - live, job
 
 
 @pytest.mark.parametrize("seed", [11, 23, 37, 47])
@@ -150,7 +169,11 @@ def test_random_op_sequence_matches_model(spark, tmp_table_dir, seed):
     names = list(ops)
     for step in range(8):
         op = rng.choice(names)
+        before = t.current_snapshot().snapshot_id
         ops[op]()
+        head = t.current_snapshot()
+        if head.snapshot_id != before:
+            _check_lineage(t, head)
         got = _content(t)
         want = model.sort_values("clip_id").reset_index(drop=True)
         pd.testing.assert_frame_equal(

@@ -341,52 +341,6 @@ def test_delete_keys_mor_bounds_parts(spark, tmp_path, monkeypatch):
     assert t.scan().count() == 75
 
 
-# -- 9. footer-derived manifest stats (VERDICT r4 #6) -------------------------
-
-
-def test_footer_stats_match_spark_agg(spark, tmp_path):
-    """The footer path and the Spark-agg fallback must produce
-    identical manifest entries (stats exactness is what scan_pruned
-    and MERGE pruning rely on); the distributed footer path (forced
-    via FOOTER_DRIVER_MAX=0) must agree too."""
-    from fupi_spark.synth import synth_clips
-
-    t1 = meta.create_table(spark, str(tmp_path / "t1"))
-    t2 = meta.create_table(spark, str(tmp_path / "t2"))
-    t3 = meta.create_table(spark, str(tmp_path / "t3"))
-    clips = synth_clips(spark, 150, dur_range_ms=(50, 150), parts=5)
-
-    meta.append(t1, clips, job_id="seed")  # footer path (default)
-
-    orig = Table.footer_file_stats
-    try:
-        Table.footer_file_stats = lambda self, paths: None  # force fallback
-        meta.append(t2, clips, job_id="seed")
-    finally:
-        Table.footer_file_stats = orig
-    try:
-        Table.FOOTER_DRIVER_MAX = 0  # force the distributed footer path
-        meta.append(t3, clips, job_id="seed")
-    finally:
-        Table.FOOTER_DRIVER_MAX = 4096
-
-    def canon(t):
-        return sorted(
-            tuple(
-                e[k]
-                for k in sorted(e)
-                if k not in ("file_path",)  # names differ by nonce
-            )
-            for e in t.manifest_entries().to_pylist()
-        )
-
-    assert canon(t1) == canon(t2) == canon(t3)
-    # and the stats actually work: pruned scan agrees with full scan
-    lo = sorted(r.clip_id for r in t1.scan().select("clip_id").collect())[10]
-    df, _read, _tot = t1.scan_pruned("clip_id", lo, "zzzz")
-    assert df.count() == t1.scan().filter(F.col("clip_id") >= lo).count()
-
-
 def test_reconsolidation_after_more_churn(spark, tmp_path):
     """Fold → more deletes land → fold again: the second consolidation
     must merge the keyed file with the new plain files, still one
