@@ -87,7 +87,7 @@ def read_index(table) -> dict[str, tuple[str, bytes, int]]:
     if not table.storage.list(INDEX_REL):
         return {}
     try:
-        rows = table.spark.read.parquet(f"{table.root}/{INDEX_REL}").collect()
+        rows = table.read_with_schema([f"{table.root}/{INDEX_REL}"], _INDEX_SCHEMA).collect()
     except Exception as e:
         _log.warning("bloom index of %s unreadable, not pruning: %s", table.root, e)
         return {}
@@ -112,20 +112,14 @@ def refresh_bloom_index(table, col: str) -> dict:
         # evolution-aware read of the todo files: old files store the
         # PHYSICAL pre-rename column names, so a raw read would fail to
         # resolve a renamed index column (AnalysisException). Replay
-        # the snapshot's schema ops like every other consumer — but on
-        # the raw per-file read, NOT through _read_files: MOR delete
-        # application joins away input_file_name(), and indexing
-        # to-be-deleted keys is harmless anyway (false positives only,
-        # never false negatives).
-        ops = table.schema_ops()
-        reader = spark.read
-        if ops:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[f"{table.root}/{p}" for p in todo])
-        if ops:
-            from .evolve import apply_schema_ops
-
-            df = apply_schema_ops(df, ops)
+        # the snapshot's schema ops like every other consumer — but
+        # through read_parquet, NOT _read_files: MOR delete application
+        # joins away input_file_name(), and indexing to-be-deleted keys
+        # is harmless anyway (false positives only, never false
+        # negatives).
+        df = table.read_parquet(
+            [f"{table.root}/{p}" for p in todo], table.current_snapshot()
+        )
         # NULL keys carry no probe positions (md5(NULL) is NULL; the
         # NaN positions crashed the bitset scatter) and a point lookup
         # is by definition on a concrete key — leave them unindexed.
@@ -229,8 +223,7 @@ def point_lookup(table, col: str, key: str) -> tuple[DataFrame, int, int]:
         if p not in bitsets or all(bitsets[p][i] for i in pos)
     ]
     if not keep:
-        empty = table.scan().limit(0)
-        return empty.filter(F.col(col) == key), 0, len(live)
+        return table.empty_scan().filter(F.col(col) == key), 0, len(live)
     df = table._drop_internal(
         table._read_files(
             [f"{table.root}/{p}" for p in keep], table.current_snapshot()

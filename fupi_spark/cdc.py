@@ -66,15 +66,15 @@ def _delete_signature(specs: list[dict], file_seq: int) -> tuple:
 
 
 def _schema_frame(table, snap) -> DataFrame:
-    """Zero-row DataFrame with ``snap``'s user-facing schema. scan()
-    reads data files; for a FILE-FREE snapshot (e.g. the end of a
-    delete-everything interval) the schema is derived instead from a
-    file-bearing snapshot whose schema ops are a prefix of ``snap``'s,
+    """Zero-row DataFrame with ``snap``'s user-facing schema
+    (Table.empty_scan: the reader's schema, no file scan). For a
+    FILE-FREE snapshot (e.g. the end of a delete-everything interval)
+    the schema is derived instead from a file-bearing snapshot whose schema ops are a prefix of ``snap``'s,
     nearest earlier one first, replaying the op suffix. Only if none
     qualifies (every such snapshot expired) does the first file-bearing
     candidate's own schema stand in, evolution after ``snap`` included."""
     if table.data_entries(snap):
-        return table.scan(snap.snapshot_id).limit(0)
+        return table.empty_scan(snap)
     ops_here = table.schema_ops(snap)
     ids = [s for s in table.snapshot_ids() if s != snap.snapshot_id]
     earlier = [s for s in ids if s < snap.snapshot_id]
@@ -88,14 +88,14 @@ def _schema_frame(table, snap) -> DataFrame:
         if ops_here[: len(ops_base)] == ops_base:
             from .evolve import apply_schema_ops
 
-            base = table.scan(sid).limit(0)
+            base = table.empty_scan(cand)
             return apply_schema_ops(base, ops_here[len(ops_base):])
         fallback = fallback or sid
     if fallback is None:
         raise ValueError(
             "cannot derive a schema: no snapshot of this table ever had data files"
         )
-    return table.scan(fallback).limit(0)
+    return table.empty_scan(table.snapshot(fallback))
 
 
 def changelog_scan(

@@ -11,7 +11,7 @@ becomes an explicit, resumable Spark job:
 2. rewrite— ZERO-shuffle job: compaction is pure concatenation, so no
             row ever needs to change tasks. ONE single-branch scan of
             all candidate files; each row's bin id attaches via a
-            BroadcastHashJoin on ``_metadata.file_path`` (map-side);
+            BroadcastHashJoin on ``_metadata.file_name`` (map-side);
             ``write.partitionBy(_bin)`` streams each bin into its own
             file(s). The plan is O(1) in bin count — the round-2
             union-of-branches design paid ~10 s of driver
@@ -35,10 +35,12 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .lineage import LineageLog
 from .meta import Snapshot, Table, entries_to_arrow
+from .session import session_conf
 
 
 @dataclass
@@ -77,6 +79,27 @@ def ffd_pack(entries: list[dict], target_bytes: int, min_file_bytes: int | None 
         if not placed:
             bins.append(Bin(len(bins), [e]))
     return bins
+
+
+def bins_scan(table, bins: list[Bin]) -> DataFrame:
+    """Compaction's rewrite input for one schema generation: ONE scan of
+    every bin's files through the engine reader (raw physical read — no
+    schema ops, no deletes), each row tagged with its ``_bin`` by a
+    broadcast join on ``_metadata.file_name`` (map-side, no shuffle).
+    Keying on the basename is immune to path-representation drift
+    (symlinked or relative table roots, non-file:/ schemes) that a
+    full-path string match would silently miss, dropping every row of a
+    candidate while still removing the file at commit."""
+    map_df = table.spark.createDataFrame(
+        [(e["file_path"].rsplit("/", 1)[-1], b.bin_id) for b in bins for e in b.files],
+        "_fname string, _bin int",
+    )
+    df = table.read_parquet([f"{table.root}/{e['file_path']}" for b in bins for e in b.files])
+    return (
+        df.withColumn("_fname", F.col("_metadata.file_name"))
+        .join(F.broadcast(map_df), "_fname")
+        .drop("_fname")
+    )
 
 
 def compact(
@@ -170,9 +193,10 @@ def compact(
     if todo:
         # Zero-shuffle rewrite: compaction is pure concatenation, so no
         # data needs to move between tasks. ONE single-branch job per
-        # schema generation: scan all candidate files, attach each
-        # row's bin id via a BroadcastHashJoin on _metadata.file_path
-        # (map-side, no shuffle), write.partitionBy(_bin). Round 2
+        # schema generation (bins_scan): scan all candidate files,
+        # attach each row's bin id via a BroadcastHashJoin on
+        # _metadata.file_name (map-side, no shuffle),
+        # write.partitionBy(_bin). Round 2
         # built a union of one branch PER BIN instead — at 64 bins the
         # driver spent ~10 s per compaction analyzing/codegen-ing the
         # 64-branch plan, a constant that didn't parallelize and
@@ -201,13 +225,9 @@ def compact(
         by_sid: dict = {}
         for b in todo:
             by_sid.setdefault(entry_sid[b.files[0]["file_path"]], []).append(b)
-        # the file→bin join below keys on _metadata.file_name (the
-        # basename) — immune to path-representation drift (symlinked or
-        # relative table roots, non-file:/ schemes) that a full-path
-        # string match would silently miss, dropping every row of a
-        # candidate while still removing the file at commit. Basenames
-        # are unique by construction (data/<job>-<nonce>-... in one
-        # namespace); assert it anyway.
+        # bins_scan's file→bin join keys on basenames: unique by
+        # construction (data/<job>-<nonce>-... in one namespace);
+        # assert it anyway.
         all_names = [e["file_path"].rsplit("/", 1)[-1] for b in todo for e in b.files]
         assert len(set(all_names)) == len(all_names), "duplicate data-file basenames"
         # pack scan partitions to ~the bin target so a bin's rows land
@@ -216,44 +236,25 @@ def compact(
         # the packed read back into core-count slices regardless of
         # bytes — compaction's parallelism is total bytes / target by
         # design, which exceeds any cluster's core count at real scale.
-        conf = spark.conf
-        old_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-        old_mpn = conf.get("spark.sql.files.minPartitionNum", None)
-        old_oc = conf.get("spark.sql.files.openCostInBytes")
-        try:
-            conf.set("spark.sql.files.maxPartitionBytes", str(max(target_bytes, 4 << 20)))
-            conf.set("spark.sql.files.minPartitionNum", "1")
-            # openCost (default 4 MB) padding would force one small file
-            # per partition — here packing must be purely byte-bounded
-            conf.set("spark.sql.files.openCostInBytes", "0")
+        #
+        # openCost (default 4 MB) padding would force one small file per
+        # partition — here packing must be purely byte-bounded. The
+        # confs are restored on every path: leaked compaction tuning
+        # would skew every later job in the shared session.
+        packing = {
+            "spark.sql.files.maxPartitionBytes": str(max(target_bytes, 4 << 20)),
+            "spark.sql.files.minPartitionNum": "1",
+            "spark.sql.files.openCostInBytes": "0",
+        }
+        with session_conf(spark, packing):
             for sid in sorted(by_sid):
-                sid_bins = by_sid[sid]
-                bin_map = [
-                    (e["file_path"].rsplit("/", 1)[-1], b.bin_id)
-                    for b in sid_bins
-                    for e in b.files
-                ]
-                map_df = spark.createDataFrame(bin_map, "_fname string, _bin int")
-                df = spark.read.parquet(
-                    *[f"{table.root}/{e['file_path']}" for b in sid_bins for e in b.files]
-                )
-                df = df.withColumn("_fname", F.col("_metadata.file_name")).join(
-                    F.broadcast(map_df), "_fname"
-                ).drop("_fname")
                 # _bin leads the in-task sort so the partitionBy writer's
                 # required ordering is already satisfied (it would
                 # otherwise insert its own unstable sort)
-                df = df.sortWithinPartitions("_bin", *(sort_within or []))
+                df = bins_scan(table, by_sid[sid]).sortWithinPartitions(
+                    "_bin", *(sort_within or [])
+                )
                 df.write.mode("append").partitionBy("_bin").parquet(staging)
-        finally:
-            # restore on EVERY path — leaked compaction tuning would
-            # skew every later job in the shared session
-            conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-            conf.set("spark.sql.files.openCostInBytes", old_oc)
-            if old_mpn is None:
-                conf.unset("spark.sql.files.minPartitionNum")
-            else:
-                conf.set("spark.sql.files.minPartitionNum", old_mpn)
 
         # promote each bin's output into data/ and checkpoint lineage.
         # Not Table.promote_staged: a bin's stats fold from its input

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import time
 
-from .meta import Table
+from .meta import Table, _manifest_spark_schema
 
 
 def _safe_mtime(storage, rel: str, default: float) -> float:
@@ -148,7 +148,10 @@ def expire_snapshots(
     else:
         spark = table.spark
         referenced_df = (
-            spark.read.parquet(*[f"{table.root}/{m}" for m in manifest_paths])
+            table.read_with_schema(
+                [f"{table.root}/{m}" for m in manifest_paths],
+                _manifest_spark_schema(table.stats_spec),
+            )
             .select("file_path")
             .distinct()
             if manifest_paths

@@ -52,7 +52,12 @@ stats fold from the parquet footers when a staged write is promoted
 (Table.promote_staged), with a distributed DataFrame aggregation as
 the fallback (manifest "rewrite + stats recomputation as DataFrame
 aggregations", BASELINE.json north_star); the snapshot JSON itself
-holds only manifest *paths* (O(commits), not O(files)).
+holds only manifest *paths* (O(commits), not O(files)). Reads never
+list storage and never infer a schema: every read of table files goes
+through Table.read_parquet, which takes its paths from the manifest
+and hands Spark the physical schema from one cached parquet footer
+(one per schema generation on evolved snapshots) — building a scan of
+any file count launches no Spark job on a file-local root.
 """
 
 from __future__ import annotations
@@ -63,6 +68,8 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
+from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -70,8 +77,16 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .session import session_conf
 from .storage import LocalStorage, Storage
+
+#: footer key Spark writes its row schema under — the same key Spark's
+#: own parquet schema inference reads before converting the parquet schema
+SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: above this many paths Spark lists files with a Spark job, one task each
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def local_path(uri: str) -> str:
@@ -144,8 +159,10 @@ class Table:
         self.stats_spec = stats_spec
         self.stats_cols = [c for c, _ in stats_spec]
         self.manifest_schema = pa.schema(_manifest_arrow_fields(stats_spec))
-        # delete-file footer schemas, keyed by immutable file path
-        self._delete_schema_cache: dict[str, list[str]] = {}
+        # only a file-local root opens parquet footers on the driver
+        self._local = urlparse(self.root).scheme in ("", "file")
+        # physical schema per data/delete file path (files are immutable)
+        self._schema_cache: dict[str, T.StructType] = {}
 
     # -- paths ------------------------------------------------------------
     @property
@@ -199,10 +216,10 @@ class Table:
         return len(self.schema_ops())
 
     def scan_schema_names(self) -> list[str]:
-        return self.scan().columns
+        return self.empty_scan().columns
 
     def scan_schema_types(self) -> dict[str, str]:
-        return {f.name: f.dataType.simpleString() for f in self.scan().schema.fields}
+        return {f.name: f.dataType.simpleString() for f in self.empty_scan().schema.fields}
 
     def committed_snapshot_for_job(self, job_id: str) -> Snapshot | None:
         """The snapshot a job id already committed, if any — the
@@ -290,10 +307,10 @@ class Table:
         """Manifest entries as a Spark DataFrame (scale path: planning
         joins/aggregations over file metadata run distributed)."""
         snap = snapshot or self.current_snapshot()
+        schema = _manifest_spark_schema(self.stats_spec)
         if snap is None or not snap.manifests:
-            return self.spark.createDataFrame([], schema=_manifest_spark_schema(self.stats_spec))
-        paths = [f"{self.root}/{m}" for m in snap.manifests]
-        return self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], schema=schema)
+        return self.read_with_schema([f"{self.root}/{m}" for m in snap.manifests], schema)
 
     def live_files(self, snapshot: Snapshot | None = None) -> list[str]:
         return self.manifest_entries(snapshot).column("file_path").to_pylist()
@@ -317,17 +334,13 @@ class Table:
         set and whether they carry PER-KEY sequences (``_del_seq``
         column — written by consolidate_deletes; plain delete files
         apply at their single manifest sequence). Key columns come from
-        a parquet footer read, cached per path (delete files are
-        immutable), so repeated scans cost O(new delete files) footer
-        reads — and consolidation keeps the outstanding count at ~1 per
-        key set."""
+        the reader's per-file schema (file_schema, cached per path —
+        delete files are immutable), so repeated scans cost O(new delete
+        files) footer reads — and consolidation keeps the outstanding
+        count at ~1 per key set."""
         out = []
         for e in self.delete_entries(snapshot):
-            path = e["file_path"]
-            names = self._delete_schema_cache.get(path)
-            if names is None:
-                names = pq.read_schema(local_path(f"{self.root}/{path}")).names
-                self._delete_schema_cache[path] = names
+            names = self.file_schema(f"{self.root}/{e['file_path']}").names
             out.append(
                 {
                     **e,
@@ -387,24 +400,97 @@ class Table:
         return df if include_internal else self._drop_internal(df)
 
     def _read_files(self, paths: list[str], snap: Snapshot | None) -> DataFrame:
-        """Evolution-aware, delete-aware file read: merge parquet
-        footers, replay the snapshot's schema ops, and apply the
-        snapshot's outstanding MOR equality deletes (no-op for tables
-        without either). Every consumer — scan, pruned scans, MERGE's
-        touched-file read, cluster rewrites — reads through here, so
-        merge-on-read semantics hold engine-wide; compaction
-        deliberately bypasses it (it streams bytes and partitions bins
-        by delete applicability instead)."""
-        ops = self.schema_ops(snap)
-        reader = self.spark.read
-        if ops:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths)
-        if ops:
-            from .evolve import apply_schema_ops
+        """Evolution-aware, delete-aware file read: read_parquet with
+        the snapshot's schema ops replayed, then the snapshot's
+        outstanding MOR equality deletes applied (no-op for tables
+        without either). Paths come from the manifest and the schema
+        from footers, so building the read lists nothing and infers
+        nothing. Every consumer — scan, pruned scans, MERGE's
+        touched-file read, cluster rewrites, CDC, point lookups — reads
+        through here, so merge-on-read semantics hold engine-wide;
+        compaction reads read_parquet without a snapshot instead (it
+        streams bytes and partitions bins by delete applicability)."""
+        snap = snap or self.current_snapshot()
+        return self._apply_deletes(self.read_parquet(paths, snap), snap)
 
-            df = apply_schema_ops(df, ops)
-        return self._apply_deletes(df, snap)
+    def read_parquet(self, paths: list[str], snap: Snapshot | None = None) -> DataFrame:
+        """The engine's one reader of table files: ``paths`` (taken from
+        the manifest) read with physical_schema's known schema, so
+        Spark launches no listing job and no inference job. With a
+        snapshot, its schema ops are replayed (evolve.py); without one
+        the read is the raw physical one (compaction, delete keys,
+        checksum and stats folds)."""
+        from .evolve import apply_schema_ops
+
+        df = self.read_with_schema(paths, self.physical_schema(paths, snap))
+        return apply_schema_ops(df, self.schema_ops(snap) if snap is not None else [])
+
+    def read_with_schema(self, paths: list[str], schema: T.StructType) -> DataFrame:
+        """``spark.read.schema(schema).parquet(*paths)`` — the one place
+        the listing threshold is set. On a file-local root it is raised
+        to ``len(paths)`` for this read alone, so Spark stats the
+        manifest's files on the driver instead of running a listing job
+        with one task per path; the session's own value is restored
+        after, whoever built the session. An object-store root keeps
+        Spark's parallel listing: there a serial driver listing would be
+        one round trip per file."""
+        reader = self.spark.read.schema(schema)
+        if not self._local:
+            return reader.parquet(*paths)
+        with session_conf(self.spark, {_LISTING_THRESHOLD: str(len(paths))}):
+            return reader.parquet(*paths)
+
+    def physical_schema(self, paths: list[str], snap: Snapshot | None = None) -> T.StructType:
+        """The schema Spark's own inference would give ``paths``, from
+        footers instead of an inference job. Spark sorts the files by
+        path and, without mergeSchema, infers from the first; so without
+        schema ops this is the schema of the smallest path. When
+        ``snap`` carries schema ops it is the mergeSchema fold, in that
+        same path order, over one representative file per
+        ``schema_id`` — files of one generation share a physical
+        schema, so folding every file would add nothing."""
+        ops = self.schema_ops(snap) if snap is not None else []
+        if not ops:
+            return self.file_schema(min(paths))
+        m = self.manifest_entries(snap)
+        sid = dict(zip(m["file_path"].to_pylist(), m["schema_id"].to_pylist()))
+        reps: dict = {}
+        for p in sorted(paths):
+            reps.setdefault(sid.get(p[len(self.root) + 1:], p) or 0, p)
+        return reduce(_merge_schemas, (self.file_schema(p) for p in reps.values()))
+
+    def file_schema(self, path: str) -> T.StructType:
+        """Physical (all-nullable, as Spark reads it) schema of one
+        immutable file, cached by path. On a file-local root it is the
+        row schema Spark wrote into the footer; a file without that key
+        (written by another writer) and every file under an object-store
+        root take Spark's inference over that one file instead."""
+        s = self._schema_cache.get(path)
+        if s is None:
+            kv = pq.read_metadata(local_path(path)).metadata if self._local else None
+            raw = (kv or {}).get(SPARK_ROW_SCHEMA_KEY)
+            s = _as_nullable(
+                T.StructType.fromJson(json.loads(raw)) if raw else self._infer_schema(path)
+            )
+            self._schema_cache[path] = s
+        return s
+
+    def _infer_schema(self, path: str) -> T.StructType:
+        """Spark's parquet schema inference over one file (one job)."""
+        return self.spark.read.parquet(path).schema
+
+    def empty_scan(self, snapshot: Snapshot | None = None) -> DataFrame:
+        """Zero-row frame with ``scan(snapshot)``'s columns and types,
+        built from the reader's schema with no file scan and no Spark
+        job — for callers that need only the schema."""
+        snap = snapshot or self.current_snapshot()
+        files = [f"{self.root}/{e['file_path']}" for e in self.data_entries(snap)]
+        if not files:
+            raise ValueError("empty table: no committed snapshot with files")
+        from .evolve import apply_schema_ops
+
+        df = self.spark.createDataFrame([], self.physical_schema(files, snap))
+        return self._drop_internal(apply_schema_ops(df, self.schema_ops(snap)))
 
     #: delete-key sets whose files total more than this many bytes
     #: (manifest byte_size — a MEASURED gate, mirroring merge.py's
@@ -433,8 +519,6 @@ class Table:
         dels = self.delete_key_specs(snap)
         if not dels:
             return df
-        from functools import reduce
-
         spark = self.spark
         seq_rows = [
             (e["file_path"].rsplit("/", 1)[-1], int(e.get("sequence") or 0))
@@ -462,7 +546,9 @@ class Table:
                 )
                 .drop("_del_seq")
             )
-        return out.drop("_fname", "_fseq")
+        # the key joins lead with their USING columns: restore the
+        # read's column order, which then never depends on delete state
+        return out.select(*df.columns)
 
     def _delete_keys_df(self, key_cols: list[str], entries: list[dict]) -> DataFrame:
         """(key → max applicable sequence) frame for one key-column
@@ -470,17 +556,13 @@ class Table:
         read in one batch with their manifest sequence attached via a
         broadcast basename map; keyed (consolidated) files read their
         in-file per-key ``_del_seq``."""
-        from functools import reduce
-
         spark = self.spark
         parts = []
         for keyed in (False, True):
             sub = [e for e in entries if e["keyed_seq"] == keyed]
             if not sub:
                 continue
-            d = spark.read.parquet(
-                *[f"{self.root}/{e['file_path']}" for e in sub]
-            )
+            d = self.read_parquet([f"{self.root}/{e['file_path']}" for e in sub])
             if keyed:
                 parts.append(d.select(*key_cols, "_del_seq"))
                 continue
@@ -539,8 +621,7 @@ class Table:
         m = self.data_manifest(snap)
         keep_paths = prune_manifest(m, col, starts, ends)["file_path"].to_pylist()
         if not keep_paths:
-            df = self.spark.createDataFrame([], self.scan(snapshot_id).schema)
-            return df, 0, m.num_rows
+            return self.empty_scan(snap), 0, m.num_rows
         df = self._read_files([f"{self.root}/{p}" for p in keep_paths], snap)
         return self._drop_internal(df).filter(residual), len(keep_paths), m.num_rows
 
@@ -576,7 +657,7 @@ class Table:
             and (e.get("content") or "data") == "data"
         ]
         if not added:
-            return self.spark.createDataFrame([], self.scan(to_id).schema)
+            return self.empty_scan(self.snapshot(to_id))
         return self._drop_internal(
             self._read_files(
                 [f"{self.root}/{p}" for p in added], self.snapshot(to_id)
@@ -710,7 +791,7 @@ class Table:
         from .integrity import CRC_COL
 
         rows = (
-            self.spark.read.parquet(*paths)
+            self.read_parquet(paths)
             .select(F.col("_metadata.file_name").alias("f"), F.col(CRC_COL))
             .groupBy("f")
             .agg(F.sum(CRC_COL).alias("s"))
@@ -752,7 +833,7 @@ class Table:
         if fstats is None:
             by_name = {
                 r["file_name"]: r.asDict()
-                for r in self._file_stats_df(self.spark.read.parquet(*paths)).collect()
+                for r in self._file_stats_df(self.read_parquet(paths)).collect()
             }
             return [by_name[p.rsplit("/", 1)[-1]] for p in paths]
         crc_paths = [p for p, st in zip(paths, fstats) if st.pop("has_crc")]
@@ -1034,6 +1115,34 @@ def _footer_stats_one(path: str, stats_cols: list[str]) -> dict | None:
     return rec
 
 
+def _merge_schemas(left: T.StructType, right: T.StructType) -> T.StructType:
+    """Spark's parquet ``mergeSchema`` fold of two all-nullable file
+    schemas, at the top level where schema evolution acts: left fields
+    keep their order, right-only fields append (names match
+    case-insensitively, Spark's default), and a column in both must
+    have one type — otherwise the merge fails, as Spark's does."""
+    by_name = {f.name.lower(): f for f in right.fields}
+    for f in left.fields:
+        r = by_name.pop(f.name.lower(), None)
+        if r is not None and r.dataType != f.dataType:
+            raise ValueError(f"cannot merge {f.name}: {f.dataType} vs {r.dataType}")
+    return T.StructType(left.fields + list(by_name.values()))
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """Every field, element and value nullable — how Spark reads any
+    file-source schema."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 def _manifest_arrow_fields(stats_spec: list[tuple[str, pa.DataType]]) -> list[pa.Field]:
     fields = [
         pa.field("file_path", pa.string()),
@@ -1125,23 +1234,13 @@ def _empty_manifest(stats_spec: list[tuple[str, pa.DataType]]) -> pa.Table:
     return pa.table({f.name: pa.array([], type=f.type) for f in schema})
 
 
-def _manifest_spark_schema(stats_spec: list[tuple[str, pa.DataType]]):
-    from pyspark.sql import types as T
+def _manifest_spark_schema(stats_spec: list[tuple[str, pa.DataType]]) -> T.StructType:
+    """The manifest's declared schema as Spark reads it: reading with it
+    needs no inference, and a column an older manifest lacks reads as
+    NULL (the pad_cast_manifest contract)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    _map = {pa.string(): T.StringType(), pa.int64(): T.LongType()}
-    fields = [
-        T.StructField("file_path", T.StringType()),
-        T.StructField("row_count", T.LongType()),
-        T.StructField("byte_size", T.LongType()),
-        T.StructField("checksum_bytes", T.LongType()),
-        T.StructField("schema_id", T.LongType()),
-        T.StructField("content", T.StringType()),
-        T.StructField("sequence", T.LongType()),
-    ]
-    for c, typ in stats_spec:
-        fields.append(T.StructField(f"min_{c}", _map.get(typ, T.StringType())))
-        fields.append(T.StructField(f"max_{c}", _map.get(typ, T.StringType())))
-    return T.StructType(fields)
+    return from_arrow_schema(pa.schema(_manifest_arrow_fields(stats_spec)))
 
 
 def entries_to_arrow(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import logging
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -67,6 +68,25 @@ def get_spark(
     if want_warm:
         _warm_engine(spark)
     return spark
+
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set SQL confs for the duration of a block and restore them on
+    every exit path (unset when they had no value): per-job tuning never
+    leaks into later jobs of a shared session, whoever built it."""
+    rc = spark.conf
+    old = {k: rc.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            rc.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                rc.unset(k)
+            else:
+                rc.set(k, v)
 
 
 #: session ids already warmed (getOrCreate can hand back a live session)

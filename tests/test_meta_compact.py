@@ -5,8 +5,11 @@ v1(create) → v2(append) → v3(compact), plus FFD invariants and resume."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fupi_spark import meta
 from fupi_spark.compact import Bin, compact, ffd_pack
@@ -22,6 +25,20 @@ def make_table(spark, root, n=400, parts=40, **synth_kw):
 
 def clip_multiset(df):
     return sorted((r.clip_id, r.transcript, bytes(r.bytes)) for r in df.collect())
+
+
+def jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through the status tracker
+    under a private job group (after draining the listener bus)."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # -- FFD packer unit/property tests ------------------------------------------
@@ -192,8 +209,6 @@ def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
     the schema id at most once."""
     import shutil
 
-    from pyspark.sql import functions as F
-
     t1 = meta.create_table(spark, str(tmp_path / "t1"))
     t2 = meta.create_table(spark, str(tmp_path / "t2"))
     t3 = meta.create_table(spark, str(tmp_path / "t3"))
@@ -241,14 +256,9 @@ def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
         "current_schema_id",
         lambda self: schema_reads.append(1) or real_schema_id(self),
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("promote-staged-probe", "promote_staged", False)
-    try:
-        part1 = t1.promote_staged(d1, "part").to_pylist()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup("promote-staged-probe")) == []
+    promoted = []
+    assert jobs_launched(spark, lambda: promoted.append(t1.promote_staged(d1, "part"))) == 0
+    part1 = promoted[0].to_pylist()
     assert len(schema_reads) <= 1
     with monkeypatch.context() as mp:
         mp.setattr(meta.Table, "footer_file_stats", lambda self, paths: None)
@@ -395,8 +405,6 @@ def test_group_aware_compaction_preserves_ranges(spark, tmp_table_dir):
 
 
 def F_lit_int(v):
-    from pyspark.sql import functions as F
-
     return F.lit(v).cast("int")
 
 
@@ -422,3 +430,152 @@ def test_incremental_scan_append_only(spark, tmp_table_dir):
 
     with _pytest.raises(ValueError, match="re-baseline"):
         t.incremental_scan(base)
+
+
+# -- the manifest-driven reader ------------------------------------------------
+
+
+def _rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_reads_launch_no_spark_job(spark, tmp_path):
+    """Building a scan, a pruned scan, compaction's bin scan, the
+    manifest frame and a schema-only frame over 64 data files plus an
+    outstanding MOR delete file launches no Spark job: paths come from
+    the manifest and the schema from one footer, so Spark neither lists
+    nor infers — in a fresh table handle, schema cache cold."""
+    from fupi_spark.compact import bins_scan
+    from fupi_spark.merge import delete_keys_mor
+
+    t0 = make_table(spark, str(tmp_path / "t"), n=240, parts=80)
+    ids = sorted(r.clip_id for r in t0.scan().select("clip_id").collect())
+    keys = spark.createDataFrame([(k,) for k in ids[:3]], "clip_id string")
+    delete_keys_mor(t0, keys, job_id="dm")
+    t = meta.load_table(spark, t0.root)
+    entries = t.data_entries()
+    assert len(entries) >= 64
+
+    def build():
+        t.scan()
+        t.scan_pruned("clip_id", ids[0], ids[-1])
+        bins_scan(t, [Bin(0, entries)])
+        t.manifest_df()
+        t.empty_scan()
+
+    assert jobs_launched(spark, build) == 0
+    df, files_read, _total = t.scan_pruned("clip_id", ids[0], ids[-1])
+    assert files_read == len(entries) and df.count() == 237
+
+
+def test_reader_matches_spark_inference(spark, tmp_path):
+    """read_parquet gives the schema and row multiset of Spark's own
+    inferring read on: Spark-written data files; a file rewritten by
+    another writer (no Spark schema key → one-file inference), first in
+    the path list or not; an evolved table whose files span two schema
+    generations (add + rename + widen; mergeSchema, then the op
+    replay); and plain plus keyed MOR delete files. empty_scan carries
+    scan()'s exact schema."""
+    from fupi_spark.evolve import add_column, apply_schema_ops, rename_column, widen_column
+    from fupi_spark.integrity import corrupt_file_on_disk
+    from fupi_spark.merge import consolidate_deletes, delete_keys_mor
+
+    def same(got, want):
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+
+    t = make_table(spark, str(tmp_path / "t"), n=60, parts=4)
+    paths = [f"{t.root}/{p}" for p in t.live_files()]
+    same(t.read_parquet(paths), spark.read.parquet(*paths))
+    # Spark infers from the smallest path: make that the rewritten file,
+    # then read it alone-first and behind a Spark-written file
+    paths.sort()
+    corrupt_file_on_disk(paths[0])
+    t = meta.load_table(spark, t.root)  # the rewrite broke immutability
+    for ps in (paths, paths[1:], paths[::-1]):
+        same(t.read_parquet(ps), spark.read.parquet(*ps))
+
+    e = make_table(spark, str(tmp_path / "e"), n=40, parts=2)
+    add_column(e, "lang", "string", default="en")
+    rename_column(e, "transcript", "text")
+    widen_column(e, "sr_hz", "bigint")
+    gen2 = (
+        synth_clips(spark, 20, seed=5, dur_range_ms=(50, 100))
+        .withColumnRenamed("transcript", "text")
+        .withColumn("lang", F.lit("bg"))
+    )
+    meta.append(e, gen2, job_id="gen2", parts=2)
+    snap = e.current_snapshot()
+    assert {x["schema_id"] for x in e.data_entries()} == {0, 3}
+    paths = [f"{e.root}/{p}" for p in e.live_files()]
+    for ps in (paths, paths[::-1]):
+        want = apply_schema_ops(
+            spark.read.option("mergeSchema", "true").parquet(*ps), e.schema_ops(snap)
+        )
+        same(e.read_parquet(ps, snap), want)
+    assert dict(e.scan().dtypes)["sr_hz"] == "bigint"
+    assert e.empty_scan().schema == e.scan().schema
+
+    d = make_table(spark, str(tmp_path / "d"), n=60, parts=3)
+    ids = sorted(r.clip_id for r in d.scan().select("clip_id").collect())
+
+    def keys(ks):
+        return spark.createDataFrame([(k,) for k in ks], "clip_id string")
+
+    delete_keys_mor(d, keys(ids[:5]), job_id="d1")
+    delete_keys_mor(d, keys(ids[5:10]), job_id="d2")
+    consolidate_deletes(d, job_id="c1")
+    delete_keys_mor(d, keys(ids[10:15]), job_id="d3")
+    # a delete keyed on a non-leading column: its anti-join must not
+    # move that column to the front of the read
+    tr = d.scan().filter(F.col("clip_id") == ids[20]).first().transcript
+    n_tr = d.scan().filter(F.col("transcript") == tr).count()
+    trs = spark.createDataFrame([(tr,)], "transcript string")
+    delete_keys_mor(d, trs, job_id="d4", key="transcript")
+    groups: dict = {}
+    for s in d.delete_key_specs():
+        groups.setdefault((s["key_cols"], s["keyed_seq"]), []).append(
+            f"{d.root}/{s['file_path']}"
+        )
+    assert sorted(groups) == [(("clip_id",), False), (("clip_id",), True), (("transcript",), False)]
+    for ps in groups.values():
+        same(d.read_parquet(ps), spark.read.parquet(*ps))
+    assert d.scan().count() == 45 - n_tr
+    assert d.empty_scan().schema == d.scan().schema
+
+
+def test_object_store_root_never_opens_a_local_footer(spark, monkeypatch):
+    """Under a non-file: root the reader takes each file's schema from
+    Spark's inference over that one file (cached by path) and never
+    opens a footer on the driver."""
+    inferred = []
+    schema = T.StructType([T.StructField("clip_id", T.StringType())])
+
+    def no_footer(*_a, **_k):
+        raise AssertionError("opened a local footer")
+
+    monkeypatch.setattr(meta.pq, "read_metadata", no_footer)
+    monkeypatch.setattr(
+        meta.Table, "_infer_schema", lambda self, p: inferred.append(p) or schema
+    )
+    t = meta.Table(spark, "s3a://bucket/t", meta.CLIPS_STATS)
+    paths = [f"s3a://bucket/t/data/f{i}.parquet" for i in range(3)]
+    assert t.physical_schema(paths) == schema
+    assert t.physical_schema(paths[:1]) == schema
+    assert t.file_schema(paths[2]) == schema
+    assert inferred == [paths[0], paths[2]]
+
+
+def test_manifest_df_reads_older_manifests_as_null(spark, tmp_table_dir):
+    """manifest_df reads with the declared manifest schema: a column an
+    older manifest predates reads as NULL, exactly as
+    pad_cast_manifest pads it for the Arrow path."""
+    import pyarrow.parquet as pq
+
+    t = make_table(spark, tmp_table_dir, n=40, parts=2)
+    path = f"{t.root}/{t.current_snapshot().manifests[0]}"
+    pq.write_table(pq.read_table(path).drop_columns(["content", "sequence", "min_codec"]), path)
+    got = sorted(t.manifest_df().collect(), key=lambda r: r.file_path)
+    want = sorted(t.manifest_entries().to_pylist(), key=lambda e: e["file_path"])
+    assert [r.asDict() for r in got] == want
+    assert all(r.content is None and r.min_codec is None for r in got)

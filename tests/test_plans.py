@@ -52,29 +52,17 @@ def test_compact_plan_has_no_shuffle(spark, tmp_table_dir):
     """The compaction rewrite must be shuffle-free: one task per bin,
     sequential read → sequential write."""
     from fupi_spark import meta
-    from fupi_spark.compact import ffd_pack
+    from fupi_spark.compact import bins_scan, ffd_pack
     from fupi_spark.synth import synth_clips
 
     t = meta.create_table(spark, tmp_table_dir)
     meta.append(t, synth_clips(spark, 120, dur_range_ms=(50, 80)), job_id="seed", parts=12)
     entries = t.manifest_entries().to_pylist()
     bins = ffd_pack(entries, 1 << 30)
-    # mirror compact's rewrite: one scan + broadcast file→bin map — the
-    # payload must cross NO shuffle (broadcast of the tiny map is the
-    # only exchange) and the plan is O(1) in bin count
-    bin_map = [
-        (f"{t.root}/{e['file_path']}", b.bin_id) for b in bins for e in b.files
-    ]
-    map_df = spark.createDataFrame(bin_map, "_abs string, _bin int")
-    df = (
-        spark.read.parquet(*[p_ for p_, _ in bin_map])
-        .withColumn(
-            "_abs", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
-        )
-        .join(F.broadcast(map_df), "_abs")
-        .drop("_abs")
-    )
-    p = plan_of(df)
+    # compact's own rewrite input (engine reader + broadcast file→bin
+    # map): the payload must cross NO shuffle (broadcast of the tiny
+    # map is the only exchange) and the plan is O(1) in bin count
+    p = plan_of(bins_scan(t, bins))
     assert "Exchange hashpartitioning" not in p, p
     assert "SinglePartition" not in p, p
     assert "BroadcastHashJoin" in p, p
