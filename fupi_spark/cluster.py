@@ -64,10 +64,14 @@ from .meta import Snapshot, Table
 CLUSTER_DIMS = ["clip_id", "sr_hz", "dur_ms", "codec"]
 
 
-def dimension_bounds(table: Table) -> dict:
+def dimension_bounds(table: Table, snapshot: Snapshot | None = None) -> dict:
     """Global per-dimension bounds + codec rank dictionary, ENTIRELY
     from the manifest (file-level min/max stats) — zero data scans, so
     cluster planning costs O(files) metadata regardless of table size.
+
+    ``snapshot`` (default: the current one) is the snapshot being
+    clustered — a rewrite must plan from the snapshot it reads and
+    commits against.
 
     The codec dictionary folds from the distinct values among the
     per-file min_codec/max_codec stats. A (rare) codec value that never
@@ -79,7 +83,8 @@ def dimension_bounds(table: Table) -> dict:
     # NULL for every other dimension (the seed-37 op-sequence fuzz
     # caught a TypeError here); NULL stats on data files (column absent
     # at write time) fold conservatively via the non-NULL subset.
-    entries = table.data_entries()
+    snap = snapshot or table.current_snapshot()
+    entries = table.data_entries(snap)
     if not entries:
         raise ValueError("cannot cluster an empty table")
 
@@ -111,7 +116,6 @@ def dimension_bounds(table: Table) -> dict:
     # summary (cluster stamps it, meta.commit carries it forward like
     # the last-cluster marker), so the dictionary only ever GROWS and
     # ranks are reproducible at any later snapshot.
-    snap = table.current_snapshot()
     stored = (snap.summary or {}).get("cluster_codec_ranks") if snap else None
     codecs = sorted(observed | set(stored or []))
     b["codec_ranks"] = codecs
@@ -368,20 +372,22 @@ class _Layout:
         return df if self.zval is None else df.withColumn("_zval", self.zval)
 
 
-def _plan_layout(table: Table, src, curve: str, n_out: int, rows_total: int) -> _Layout:
+def _plan_layout(
+    table: Table, base: Snapshot, src, curve: str, n_out: int, rows_total: int
+) -> _Layout:
     """Range boundaries for ``n_out`` buckets from a SAMPLE of the key
     columns of ``src`` only — the payload is never read (column
     pruning) and the curve key only ever evaluates ~200·n_out sampled
     rows, so its full-data evaluation happens exactly once (in the
     rewrite). ``linear`` buckets directly on the clip_id string (no
     curve key, no dimension_bounds); curve layouts normalize from the
-    full manifest's bounds (metadata-only), so curve keys stay
-    comparable across clustering generations."""
+    full manifest's bounds at ``base`` (metadata-only), so curve keys
+    stay comparable across clustering generations."""
     if curve == "linear":
         sample = _sampled(src.select("clip_id"), n_out, rows_total)
         raw_q = _range_boundaries(sample, "clip_id", n_out, rows_total)
         return _Layout(sorted(set(raw_q)), None, None)
-    bounds = dimension_bounds(table)
+    bounds = dimension_bounds(table, base)
     zval = curve_key_col(bounds, curve)
     sample = _sampled(src.select(*CLUSTER_DIMS), n_out, rows_total)
     raw_q = _range_boundaries(sample.withColumn("_zval", zval), "_zval", n_out, rows_total)
@@ -418,7 +424,10 @@ def cluster(
 
     # pass 1 (planning): sampled range boundaries (_plan_layout)
     rows_total = sum(e["row_count"] for e in entries)
-    layout = _plan_layout(table, table.scan(), curve, n_out, rows_total)
+    # every read below is pinned to ``base``: a file committed
+    # meanwhile must neither feed the rewrite (its rows would be
+    # duplicated — the commit removes only base's files) nor the plan
+    layout = _plan_layout(table, base, table.scan(base.snapshot_id), curve, n_out, rows_total)
     boundaries = layout.boundaries
 
     # AUTO skew salting: collapsed boundaries mean one key value owns
@@ -437,7 +446,7 @@ def cluster(
     # pass 2: the rewrite shuffle (internal columns — the per-row _crc —
     # must ride the rewrite so the clustered files keep their integrity
     # column without touching the payload)
-    df = layout.keyed(table.scan(include_internal=True))
+    df = layout.keyed(table.scan(base.snapshot_id, include_internal=True))
     bucket = layout.bucket()
     if effective_salt > 1:
         # spread each range bucket over hash sub-buckets of clip_id
@@ -567,7 +576,7 @@ def cluster_incremental(
     # sampled keys-only boundary pass over the NEW files only
     rows_total = sum(e["row_count"] for e in entries)
     new_df = table._read_files([f"{table.root}/{e['file_path']}" for e in entries], base)
-    layout = _plan_layout(table, new_df, curve, n_out, rows_total)
+    layout = _plan_layout(table, base, new_df, curve, n_out, rows_total)
     df = layout.keyed(new_df).withColumn("_bucket", layout.bucket())
 
     # the churn read goes through _read_files -> outstanding deletes

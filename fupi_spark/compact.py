@@ -17,9 +17,15 @@ becomes an explicit, resumable Spark job:
             union-of-branches design paid ~10 s of driver
             analysis/codegen per 64-bin job, a constant that didn't
             parallelize and capped the stage at every core count;
-3. record — per-bin lineage (files-in/out, bytes, rows) checkpointed
-            before commit; a resumed job re-uses completed bins;
-4. commit — optimistic snapshot commit replacing packed files.
+3. record — the staged ``_bin=<id>`` output becomes table files
+            through Table.promote_staged, whose entries carry each
+            output file's own stats (footer + ``_crc`` column, like
+            every other write); each bin's footer row counts must
+            equal its input rows before its lineage unit (files-in/out,
+            bytes, rows) is checkpointed; a resumed job re-uses
+            completed bins and reads their entries the same way;
+4. commit — optimistic snapshot commit replacing packed files; outputs
+            keep their inputs' schema generation and minimum sequence.
 
 Scale notes: no collect() of row data anywhere and NO shuffle at all —
 each task does sequential reads + one sequential write, which is the
@@ -30,16 +36,16 @@ whenever candidate bytes ≫ 1000 × maxPartitionBytes.
 
 from __future__ import annotations
 
-import os
 import shutil
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .lineage import LineageLog
-from .meta import Snapshot, Table, entries_to_arrow
+from .meta import Snapshot, Table, staged_partition
 from .session import session_conf
 
 
@@ -190,6 +196,7 @@ def compact(
     }
     todo = [b for b in bins if b.bin_id not in done]
 
+    added: list[dict] = []
     if todo:
         # Zero-shuffle rewrite: compaction is pure concatenation, so no
         # data needs to move between tasks. ONE single-branch job per
@@ -207,18 +214,18 @@ def compact(
         #
         # Scan partitioning packs small files to maxPartitionBytes, so
         # a bin's rows can span tasks → a bin may emit several files
-        # (promotion + lineage already handle multi-file bins); setting
-        # maxPartitionBytes ≈ target keeps it to ~1-2 per bin.
+        # (promote_staged + lineage handle multi-file bins, and each
+        # file gets its own exact stats); setting maxPartitionBytes ≈
+        # target keeps it to ~1-2 per bin.
         #
         # Crash-resume hygiene: a previous attempt may have died between
-        # the write and the promote loop, leaving staged part files
-        # that mode('append') would keep and the promote loop would then
+        # the write and promote_staged, leaving staged part files that
+        # mode('append') would keep and promote_staged would then
         # rename alongside this attempt's output (duplicate rows). Done
         # bins' files were already renamed out of staging, so wiping the
         # whole staging dir before rewriting is always safe.
         shutil.rmtree(table.stage_dir(job_id), ignore_errors=True)
         staging = table.stage_dir(job_id)
-        table.mark_job_active(job_id)
         # one write pass per schema generation (mixing would pad old
         # files into the new physical schema); bins are generation-pure
         entry_sid = {e["file_path"]: (e.get("schema_id") or 0) for e in entries}
@@ -256,54 +263,32 @@ def compact(
                 )
                 df.write.mode("append").partitionBy("_bin").parquet(staging)
 
-        # promote each bin's output into data/ and checkpoint lineage.
-        # Not Table.promote_staged: a bin's stats fold from its input
-        # entries (no footer reads), and each bin is its own resumable
-        # unit, checked against its input row count. A per-ATTEMPT nonce in the name makes promotion collision-free:
-        # without it, a job-id reuse (or the pre-idempotence re-run bug)
-        # could os.rename over a LIVE data file of the earlier run.
-        nonce = uuid.uuid4().hex[:6]
-        bin_outs: dict[int, list[str]] = {}
-        pairs = []
-        import pyarrow.parquet as _pq
-
+        added = table.promote_staged(staging, job_id).to_pylist()
+        outs: dict[int, list[dict]] = {}
+        for e in added:
+            outs.setdefault(staged_partition(e["file_path"]), []).append(e)
+        # promotion first, THEN per-bin checkpoints — a unit record must
+        # never precede its files (crash between them would resume a
+        # bin whose output is missing)
         for b in todo:
-            bin_dir = f"{staging}/_bin={b.bin_id}"
-            parts = sorted(
-                f for f in os.listdir(bin_dir) if f.endswith(".parquet")
-            )
+            got = outs.get(b.bin_id, [])
             # every input row must have reached the staged output — a
             # partially-matched file→bin attach (or any writer fault)
-            # must fail HERE, before the inputs are removed at commit
-            # (cheap: O(outputs-per-bin) parquet footer reads)
-            staged_rows = sum(
-                _pq.ParquetFile(f"{bin_dir}/{p}").metadata.num_rows for p in parts
-            )
+            # must fail HERE, before the bin's unit is checkpointed and
+            # before the inputs are removed at commit
+            staged_rows = sum(e["row_count"] for e in got)
             assert staged_rows == b.row_count, (
                 f"bin {b.bin_id}: staged {staged_rows} rows != "
                 f"{b.row_count} input rows — aborting before commit"
             )
-            outs = []
-            for i, p in enumerate(parts):
-                rel = f"data/{job_id}-{nonce}-b{b.bin_id:05d}-{i:03d}.parquet"
-                pairs.append((f"{bin_dir}/{p}", rel))
-                outs.append(rel)
-            bin_outs[b.bin_id] = outs
-        # concurrent promotion first, THEN per-bin checkpoints — a unit
-        # record must never precede its files (crash between them would
-        # resume a bin whose output is missing)
-        table.storage.promote_many(pairs)
-        for b in todo:
-            files_out = bin_outs[b.bin_id]
             log.complete_unit(
                 b.bin_id,
                 files_in=[e["file_path"] for e in b.files],
-                files_out=files_out,
+                files_out=[e["file_path"] for e in got],
                 bytes_in=b.byte_size,
-                bytes_out=sum(table.storage.size(p) for p in files_out),
+                bytes_out=sum(e["byte_size"] for e in got),
                 rows=b.row_count,
             )
-        shutil.rmtree(staging, ignore_errors=True)
 
     # assemble commit from lineage (covers resumed + fresh units)
     expected = {b.bin_id: sorted(e["file_path"] for e in b.files) for b in bins}
@@ -314,62 +299,23 @@ def compact(
     ]
     assert len(recs) == len(bins), f"lineage incomplete: {len(recs)}/{len(bins)}"
     removed = {p for r in recs for p in r["files_in"]}
-    # Stats fold instead of re-scan: compaction never changes rows, so a
-    # bin's min/max is the min/max over its input files' manifest stats
-    # and row_count is their sum — the manifest rewrite needs NO extra
-    # pass over the data (at 10^12 rows that pass is the single largest
-    # avoidable cost of the job).
-    by_path = {e["file_path"]: e for e in entries}
-    added_entries = []
-    for r in recs:
-        ins = [by_path[p] for p in r["files_in"]]
-        outs = r["files_out"]
-        in_sums = [x["checksum_bytes"] for x in ins]
-        folded_sum = (
-            None if any(v is None for v in in_sums) else sum(in_sums)
-        )
-        for j, p in enumerate(outs):
-            e = {
-                "file_path": p,
-                "byte_size": table.storage.size(p),
-                # multi-file bins are rare (hash-collision split); rows
-                # per out-file are only exact when the bin is one file
-                "row_count": r["rows"] if len(outs) == 1 else None,
-                # checksum folds like row_count: compaction preserves
-                # rows exactly, so the bin sum is the input sum; a
-                # multi-file split leaves per-file sums unknown (NULL →
-                # verify_table treats the file normally, per-row _crc
-                # still covers every row)
-                "checksum_bytes": folded_sum if len(outs) == 1 else None,
-                # output keeps the INPUT generation's physical schema
-                # (streamed bytes, never padded) — bins are sid-pure
-                "schema_id": ins[0].get("schema_id") or 0,
-                "content": "data",
-                # inherit the (common-applicability) minimum input
-                # sequence so outstanding MOR deletes keep applying
-                "sequence": min((x.get("sequence") or 0) for x in ins),
-            }
-            for c in table.stats_cols:
-                lo = [x[f"min_{c}"] for x in ins]
-                hi = [x[f"max_{c}"] for x in ins]
-                # a NULL input stat means that file's range is unknown →
-                # the folded range is unknown too (scan_pruned treats
-                # NULL as unbounded, so this stays conservative)
-                e[f"min_{c}"] = None if any(v is None for v in lo) else min(lo)
-                e[f"max_{c}"] = None if any(v is None for v in hi) else max(hi)
-            added_entries.append(e)
-    # exact per-file row counts for any multi-file bins (cheap metadata
-    # read of just those files)
-    missing = [e for e in added_entries if e["row_count"] is None]
-    if missing:
-        import pyarrow.parquet as pq
-
-        for e in missing:
-            e["row_count"] = pq.ParquetFile(f"{table.root}/{e['file_path']}").metadata.num_rows
+    # resumed bins' entries come from their files, like fresh ones
+    resumed = [p for r in recs if r["unit_id"] in done for p in r["files_out"]]
+    if resumed:
+        added += table.file_entries(resumed).to_pylist()
+    # compaction owns two fields: an output keeps its INPUT generation's
+    # physical schema (streamed bytes, never padded — bins are
+    # sid-pure) and inherits the (common-applicability) minimum input
+    # sequence so outstanding MOR deletes keep applying
+    ins_of = {p: bins[r["unit_id"]].files for r in recs for p in r["files_out"]}
+    for e in added:
+        ins = ins_of[e["file_path"]]
+        e["schema_id"] = ins[0].get("schema_id") or 0
+        e["sequence"] = min((x.get("sequence") or 0) for x in ins)
 
     return table.commit(
         "compact",
-        entries_to_arrow(added_entries, table.stats_spec),
+        pa.Table.from_pylist(added, schema=table.manifest_schema),
         removed_paths=removed,
         base=base,
         summary={"job_id": job_id, **log.metrics()},

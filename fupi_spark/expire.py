@@ -6,15 +6,14 @@ the union of retained manifests; the delete list is the physical
 listing MINUS that set (BASELINE.json: "orphan-file GC via anti-join of
 live vs. referenced paths").
 
-Two execution paths for the anti-join, chosen by metadata size:
-- small tables (< ``driver_threshold`` manifest entries + listed files):
-  set difference on the driver over the already-loaded Arrow manifests
-  — zero Spark jobs, microseconds. Metadata at this size never
-  justifies executor round-trips (round-1 driver bench measured ~46 s
-  for four tiny Spark jobs late in a session).
-- large tables: LEFT ANTI join of two DataFrames (listing vs
-  referenced) — at 10^12-row scale GC is a distributed join over file
-  *metadata*, never over data.
+The anti-join runs on the driver as one Arrow set difference
+(``pc.is_in``) of the ``data/`` listing against the retained manifests'
+``file_path`` columns: both sides are already driver-resident (the
+listing comes from ``storage.list``, the manifests from the same loads
+every commit makes), so it costs no Spark job — metadata at any size
+this engine commits never justifies executor round-trips (round-1
+driver bench measured ~46 s for four tiny Spark jobs late in a
+session).
 
 Safety against concurrent writers (the promoted-but-uncommitted
 window): writers register a lineage dir (``Table.mark_job_active``)
@@ -44,7 +43,10 @@ from __future__ import annotations
 
 import time
 
-from .meta import Table, _manifest_spark_schema
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from .meta import Table
 
 
 def _safe_mtime(storage, rel: str, default: float) -> float:
@@ -67,7 +69,6 @@ def expire_snapshots(
     table: Table,
     retain_last: int = 2,
     older_than_s: float = 0.0,
-    driver_threshold: int = 1_000_000,
     abandoned_after_s: float = 0.0,
 ) -> dict:
     """Expire all but the last ``retain_last`` snapshots, then GC data
@@ -136,33 +137,14 @@ def expire_snapshots(
                 return True
         return False
 
-    n_entries = sum(
-        table.manifest_entries(s).num_rows for s in retained
+    # the anti-join: listing minus every retained manifest's file_path
+    # (each retained manifest loaded once)
+    listed = pa.array(listing, pa.string())
+    referenced = pa.chunked_array(
+        [table.manifest_entries(s).column("file_path") for s in retained], pa.string()
     )
-    if n_entries + len(listing) <= driver_threshold:
-        # driver-side set difference (metadata is tiny at this size)
-        referenced: set[str] = set()
-        for s in retained:
-            referenced.update(table.manifest_entries(s).column("file_path").to_pylist())
-        orphans = [p for p in listing if p not in referenced and not protected(p)]
-    else:
-        spark = table.spark
-        referenced_df = (
-            table.read_with_schema(
-                [f"{table.root}/{m}" for m in manifest_paths],
-                _manifest_spark_schema(table.stats_spec),
-            )
-            .select("file_path")
-            .distinct()
-            if manifest_paths
-            else spark.createDataFrame([], "file_path string")
-        )
-        listing_df = spark.createDataFrame([(p,) for p in listing], "file_path string")
-        orphans = [
-            r["file_path"]
-            for r in listing_df.join(referenced_df, "file_path", "left_anti").collect()
-            if not protected(r["file_path"])
-        ]
+    unreferenced = listed.filter(pc.invert(pc.is_in(listed, value_set=referenced)))
+    orphans = [p for p in unreferenced.to_pylist() if not protected(p)]
 
     for p in orphans:
         st.delete(p)

@@ -11,10 +11,10 @@ replaces routine full-table verification with a checksum design:
   Python. It rides the row through compact/cluster/merge rewrites
   (payload untouched ⇒ checksum still valid; MERGE recomputes it for
   its source rows).
-- manifest ``checksum_bytes``: per-file sum of ``_crc`` — folded
-  through compaction like the other stats, recomputed by the normal
-  stats aggregation elsewhere (reads only the 8-byte column, never the
-  payload).
+- manifest ``checksum_bytes``: per-file sum of ``_crc`` — read from
+  each file as written, like the other stats, by the one per-file stats
+  reader every write (compaction included) promotes through (reads
+  only the 8-byte column, never the payload).
 - ``verify_table``: ONE JVM pass computes ``crc32(bytes) == _crc`` per
   row; only rows that fail (post-write corruption) plus a deterministic
   sample (coverage against wrong-at-write bytes) enter the Python SNR

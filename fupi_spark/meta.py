@@ -47,11 +47,15 @@ fupi/embedders.py:124-128) is the seed of this snapshot chain.
 
 Scale notes: manifests are parquet (not driver JSON); file skipping is
 one vectorized driver pass over the Arrow manifest (stats_keep_mask —
-the same load every commit already makes), not a Spark job; per-file
-stats fold from the parquet footers when a staged write is promoted
-(Table.promote_staged), with a distributed DataFrame aggregation as
-the fallback (manifest "rewrite + stats recomputation as DataFrame
-aggregations", BASELINE.json north_star); the snapshot JSON itself
+the same load every commit already makes), not a Spark job; every
+write, compaction included, becomes manifest entries through
+Table.promote_staged, whose per-file stats come from the file as
+written (Iceberg's data-file metrics): its parquet footer plus its
+8-byte ``_crc`` column, read in a driver loop or, past
+FOOTER_DRIVER_MAX files, fanned out over the cluster — with a
+distributed DataFrame aggregation as the fallback for footers without
+usable statistics (manifest "rewrite + stats recomputation as
+DataFrame aggregations", BASELINE.json north_star); the snapshot JSON itself
 holds only manifest *paths* (O(commits), not O(files)). Reads never
 list storage and never infer a schema: every read of table files goes
 through Table.read_parquet, which takes its paths from the manifest
@@ -418,8 +422,8 @@ class Table:
         the manifest) read with physical_schema's known schema, so
         Spark launches no listing job and no inference job. With a
         snapshot, its schema ops are replayed (evolve.py); without one
-        the read is the raw physical one (compaction, delete keys,
-        checksum and stats folds)."""
+        the read is the raw physical one (compaction, delete keys, the
+        stats aggregation fallback)."""
         from .evolve import apply_schema_ops
 
         df = self.read_with_schema(paths, self.physical_schema(paths, snap))
@@ -717,7 +721,7 @@ class Table:
         sort_within: list[str] | None = None,
     ) -> pa.Table:
         """Write df into immutable data files and return their manifest
-        entries (promote_staged: stats folded from the file footers).
+        entries (promote_staged: stats read from the files as written).
 
         The caller controls physical partitioning (repartition /
         repartitionByRange) before calling; this preserves it 1 task →
@@ -746,19 +750,20 @@ class Table:
     FOOTER_DRIVER_MAX = 4096
 
     def footer_file_stats(self, paths: list[str]) -> list[dict] | None:
-        """Per-file (row_count, min/max, has_crc) manifest stats folded
-        from the parquet FOOTERS — no data pass (VERDICT r4 #6 / the builder's
-        own BENCH/BASELINE.md §5 idea: the staged stats job was ~2-4 s
-        of every append's fixed cost; footers already hold exact
-        row-group min/max for the stats columns). Returns one dict per
-        path (same order), or None when any footer lacks a usable
-        statistic — callers fall back to the Spark aggregation, so this
-        is purely an optimization, never a correctness dependence.
+        """Every manifest stat of each file (row_count, checksum_bytes,
+        min/max per stats column) from the file as written
+        (_footer_stats_one): the parquet FOOTER plus the 8-byte ``_crc``
+        column, never the payload. Returns one dict per path (same
+        order), or None when any footer lacks a usable statistic —
+        callers fall back to the Spark aggregation, so this is purely an
+        optimization, never a correctness dependence.
 
         Scale: a driver loop up to FOOTER_DRIVER_MAX files; past that
-        the footer reads run as a mapInPandas over the path list, so a
+        the reads run as a mapInPandas over the path list, so a
         10^5-file append reads footers executor-parallel and ships only
-        the tiny stat records back."""
+        the tiny stat records back. The ``_crc`` read stays small on
+        the driver: the column exists only on tables with a ``bytes``
+        payload, where it is 8 bytes next to KB-sized audio per row."""
         if len(paths) <= self.FOOTER_DRIVER_MAX:
             out = [_footer_stats_one(local_path(p), self.stats_cols) for p in paths]
         else:
@@ -784,84 +789,34 @@ class Table:
             return None
         return out
 
-    def _crc_sums(self, paths: list[str]) -> dict[str, int]:
-        """Per-file payload checksum sums as one Spark aggregation that
-        reads ONLY the 8-byte ``_crc`` column (parquet column pruning) —
-        the one stat footers cannot provide."""
-        from .integrity import CRC_COL
-
-        rows = (
-            self.read_parquet(paths)
-            .select(F.col("_metadata.file_name").alias("f"), F.col(CRC_COL))
-            .groupBy("f")
-            .agg(F.sum(CRC_COL).alias("s"))
-            .collect()
-        )
-        return {r["f"]: r["s"] for r in rows}
-
-    #: staged writes up to this many total rows (known exactly from the
-    #: footer fold) read the 8-byte ``_crc`` column driver-side with
-    #: pyarrow instead of launching a Spark aggregation job — the job
-    #: costs a fixed ~0.3-0.4 s per maintenance stage (measured r6,
-    #: guide §1/§5: the driver may do O(small) work, never O(table));
-    #: larger stages keep the distributed aggregation
-    CRC_DRIVER_MAX_ROWS = 2_000_000
-
-    def _crc_sums_driver(self, paths: list[str]) -> dict[str, int]:
-        """Per-file ``_crc`` sums via driver-side pyarrow column reads
-        (only the 8-byte checksum column is materialized). Caller gates
-        on CRC_DRIVER_MAX_ROWS/FOOTER_DRIVER_MAX."""
-        from .integrity import CRC_COL
-
-        return {
-            p.rsplit("/", 1)[-1]: pc.sum(
-                pq.read_table(local_path(p), columns=[CRC_COL]).column(CRC_COL)
-            ).as_py()
-            for p in paths
-        }
-
     def _stats_for_files(self, paths: list[str]) -> list[dict]:
         """Per-file manifest stats (row_count, checksum_bytes, min/max
-        per stats column), in ``paths`` order. Row counts and min/max
-        fold from the parquet footers; the ``_crc`` sums of the files
-        whose footer schema has the column are read driver-side for
-        small stages. A Spark job runs only on the two branches that
-        need one: the full aggregation when any footer lacks a usable
-        statistic, and the distributed ``_crc`` sum past the driver
-        caps."""
+        per stats column), in ``paths`` order: the per-file reader
+        (footer_file_stats), or one Spark aggregation when any footer
+        lacks a usable statistic."""
         fstats = self.footer_file_stats(paths)
-        if fstats is None:
-            by_name = {
-                r["file_name"]: r.asDict()
-                for r in self._file_stats_df(self.read_parquet(paths)).collect()
-            }
-            return [by_name[p.rsplit("/", 1)[-1]] for p in paths]
-        crc_paths = [p for p, st in zip(paths, fstats) if st.pop("has_crc")]
-        if not crc_paths:
-            crc = {}
-        elif (
-            sum(st["row_count"] for st in fstats) <= self.CRC_DRIVER_MAX_ROWS
-            and len(paths) <= self.FOOTER_DRIVER_MAX
-        ):
-            crc = self._crc_sums_driver(crc_paths)
-        else:
-            crc = self._crc_sums(crc_paths)
-        return [
-            {**st, "checksum_bytes": crc.get(p.rsplit("/", 1)[-1])}
-            for p, st in zip(paths, fstats)
-        ]
+        if fstats is not None:
+            return fstats
+        by_name = {
+            r["file_name"]: r.asDict()
+            for r in self._file_stats_df(self.read_parquet(paths)).collect()
+        }
+        return [by_name[p.rsplit("/", 1)[-1]] for p in paths]
 
     def promote_staged(self, staging: str, job_id: str) -> pa.Table:
         """Promote a staged Spark write into ``data/`` and return its
-        manifest entries — the one way a staged write becomes table
-        files. The layout comes from the staging directory: flat part
-        files, or one ``<col>=<int>`` directory per partition value.
-        Output names are ``data/<job>-<nonce>-...`` (the prefix orphan
-        GC protects while the job is in flight), and name order is
-        (partition value, part file) order, so a range-partitioned
-        write (cluster, the LSH index) keeps its order in file names.
-        The per-attempt nonce means a job-id reuse never renames over a
-        live file of an earlier run."""
+        manifest entries (file_entries) — the one way a staged write
+        becomes table files, for appends, MERGE, DELETE, clustering,
+        transforms and compaction alike. The layout comes from the
+        staging directory: flat part files, or one ``<col>=<int>``
+        directory per partition value (compaction's ``_bin``,
+        clustering's ``_bucket``). Output names are
+        ``data/<job>-<nonce>-...`` (the prefix orphan GC protects while
+        the job is in flight), and name order is (partition value, part
+        file) order, so a range-partitioned write (cluster, the LSH
+        index) keeps its order in file names; staged_partition reads
+        the value back. The per-attempt nonce means a job-id reuse
+        never renames over a live file of an earlier run."""
         dirs = sorted(
             (int(d.split("=", 1)[1]), f"{staging}/{d}")
             for d in os.listdir(staging)
@@ -878,7 +833,12 @@ class Table:
         self.storage.ensure_dir("data")
         self.storage.promote_many(pairs)
         shutil.rmtree(staging, ignore_errors=True)
-        rels = [rel for _src, rel in pairs]
+        return self.file_entries([rel for _src, rel in pairs])
+
+    def file_entries(self, rels: list[str]) -> pa.Table:
+        """Manifest entries of data files already in ``data/``: stats
+        from the files themselves (_stats_for_files), sizes from
+        storage, the current schema id."""
         stats = self._stats_for_files([f"{self.root}/{rel}" for rel in rels])
         schema_id = self.current_schema_id()
         return entries_to_arrow(
@@ -1071,9 +1031,11 @@ class Table:
 
 
 def _footer_stats_one(path: str, stats_cols: list[str]) -> dict | None:
-    """(row_count, min/max per stats column, whether the file has the
-    ``_crc`` column) from ONE parquet footer. None when a needed
-    statistic is absent/unusable (caller falls back to the Spark
+    """Every manifest stat of ONE data file: row_count and min/max per
+    stats column from its parquet footer, and checksum_bytes as the sum
+    of its ``_crc`` column (NULL when the file has none) — the one stat
+    a footer cannot hold, read alone by column projection. None when a
+    needed statistic is absent/unusable (caller falls back to the Spark
     aggregation). A stats column missing from the file's
     schema (schema evolution) folds to NULL min/max — unbounded, the
     same contract the Spark agg produces; all-null chunks are skipped.
@@ -1085,9 +1047,10 @@ def _footer_stats_one(path: str, stats_cols: list[str]) -> dict | None:
     differ, which the fallback covers for exotic specs."""
     from .integrity import CRC_COL
 
-    md = pq.ParquetFile(path).metadata
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
     names = {md.schema.column(i).path: i for i in range(md.num_columns)}
-    rec: dict = {"row_count": md.num_rows, "has_crc": CRC_COL in names}
+    rec: dict = {"row_count": md.num_rows}
     for c in stats_cols:
         if c not in names:
             rec[f"min_{c}"] = None
@@ -1112,7 +1075,19 @@ def _footer_stats_one(path: str, stats_cols: list[str]) -> dict | None:
             maxs.append(st.max)
         rec[f"min_{c}"] = min(mins) if mins else None
         rec[f"max_{c}"] = max(maxs) if maxs else None
+    rec["checksum_bytes"] = (
+        pc.sum(pf.read(columns=[CRC_COL]).column(CRC_COL)).as_py()
+        if CRC_COL in names
+        else None
+    )
     return rec
+
+
+def staged_partition(rel: str) -> int:
+    """The partition value of a file Table.promote_staged promoted from
+    a ``<col>=<int>`` staging directory, read back from its name
+    (``data/<job>-<nonce>-<value>-<part>.parquet``)."""
+    return int(rel.rsplit("-", 2)[1])
 
 
 def _merge_schemas(left: T.StructType, right: T.StructType) -> T.StructType:

@@ -344,3 +344,34 @@ def test_codec_rank_dictionary_survives_extremum_hiding(spark, tmp_table_dir):
     # a single-file layout exposes only (global min, global max) as
     # extremum stats, yet every previously ranked codec must survive
     assert set(pre) <= set(post)
+
+
+def test_cluster_ignores_append_committed_while_planning(spark, tmp_table_dir, monkeypatch):
+    """cluster() pins its base snapshot: an append that commits while
+    the layout is planned must stay out of the plan and the rewrite.
+    The commit removes only the base's files, so rewriting the appended
+    rows too would leave them live twice."""
+    import importlib
+
+    from pyspark.sql import functions as F
+
+    from fupi_spark import meta
+
+    C = importlib.import_module("fupi_spark.cluster")  # the package re-exports cluster()
+
+    t = make_table(spark, tmp_table_dir, n=120, parts=6)
+    late = synth_clips(spark, 10, seed=99, dur_range_ms=(50, 80)).withColumn(
+        "clip_id", F.concat(F.lit("late_"), F.col("clip_id"))
+    )
+    real_plan = C._plan_layout
+
+    def plan_during_append(*a, **kw):
+        meta.append(t, late, job_id="late", parts=1)
+        return real_plan(*a, **kw)
+
+    monkeypatch.setattr(C, "_plan_layout", plan_during_append)
+    cluster(t, curve="zorder", target_bytes=1 << 18, job_id="cl-race")
+    ids = [r.clip_id for r in t.scan().select("clip_id").collect()]
+    assert len(ids) == 130
+    assert len(set(ids)) == 130
+    assert t.current_snapshot().operation == "cluster"

@@ -2,8 +2,9 @@
 
 - every data-file write lands a per-row ``_crc`` and a per-file
   manifest ``checksum_bytes`` (= sum of row CRCs);
-- the checksum column survives compact/cluster/merge rewrites and the
-  compaction stats fold reproduces the recomputed sums;
+- the checksum column survives compact/cluster/merge rewrites, and
+  every compaction output entry — split bins included — carries the
+  stats of the file as written (assert_stats_exact);
 - ``verify_table`` (sampled) checks exactly {crc-failing rows ∪
   deterministic sample}, and planted ON-DISK corruption is caught
   through the checksum gate with a failing SNR verdict;
@@ -12,14 +13,40 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
+from fupi_spark import meta
 from fupi_spark.cluster import cluster
 from fupi_spark.compact import compact
 from fupi_spark.integrity import CRC_COL, corrupt_file_on_disk, verify_table
 from fupi_spark.merge import merge_into
+from fupi_spark.synth import synth_clips
 
 from .test_meta_compact import make_table
+
+
+def assert_stats_exact(t, rels: list[str]) -> None:
+    """The manifest entry of each data file in ``rels`` equals the stats
+    read back from the file (Table._stats_for_files), with a non-NULL
+    checksum_bytes equal to its ``_crc`` sum recomputed by Spark."""
+    if not rels:
+        return
+    by_path = {e["file_path"]: e for e in t.data_entries()}
+    paths = [f"{t.root}/{p}" for p in rels]
+    sums = {
+        r["f"]: r["s"]
+        for r in t.read_parquet(paths)
+        .groupBy(F.col("_metadata.file_name").alias("f"))
+        .agg(F.sum(CRC_COL).alias("s"))
+        .collect()
+    }
+    for rel, st in zip(rels, t._stats_for_files(paths)):
+        e = by_path[rel]
+        assert {k: e[k] for k in st} == st, rel
+        assert e["checksum_bytes"] is not None, rel
+        assert e["checksum_bytes"] == sums[rel.rsplit("/", 1)[-1]], rel
 
 
 def test_write_lands_crc_and_manifest_checksum(spark, tmp_table_dir):
@@ -45,13 +72,37 @@ def test_checksum_survives_compact_fold_and_cluster(spark, tmp_table_dir):
     compact(t, target_bytes=1 << 30, job_id="c-fold")
     folded = [e["checksum_bytes"] for e in t.manifest_entries().to_pylist()]
     assert sum(folded) == total and all(v is not None for v in folded)
+    assert_stats_exact(t, t.live_files())
     cluster(t, curve="zorder", target_bytes=1 << 18, job_id="cl")
     entries = t.manifest_entries().to_pylist()
     assert all(e["checksum_bytes"] is not None for e in entries)
     assert sum(e["checksum_bytes"] for e in entries) == total
+    assert_stats_exact(t, t.live_files())
     # verify: clean table → sampled pass flags nothing
     v = verify_table(t, sample_mod=4)
     assert v.filter(~F.col("crc_ok") | ~F.col("pcm_ok")).count() == 0
+
+    # split bins: past compaction's 4 MB scan split (this table is
+    # ~11 MB) a bin's rows span scan tasks and the bin writes several
+    # files; each output's entry is still exactly its own file's stats
+    big = meta.create_table(spark, f"{tmp_table_dir}-split")
+    clips = synth_clips(spark, 1200, dur_range_ms=(100, 200))
+    meta.append(big, clips, job_id="seed", parts=48)
+    before = big.manifest_entries().to_pylist()
+    target = sum(e["byte_size"] for e in before) // 24
+    compact(big, target_bytes=target, job_id="c-split")
+    units = [
+        json.loads(big.storage.read(r))
+        for r in big.storage.list("_lineage/c-split")
+        if r.endswith(".json")
+    ]
+    assert any(len(u["files_out"]) > 1 for u in units)
+    outs = [p for u in units for p in u["files_out"]]
+    assert set(outs) <= set(big.live_files())
+    assert_stats_exact(big, outs)
+    after = big.manifest_entries().to_pylist()
+    assert sum(e["checksum_bytes"] for e in after) == sum(e["checksum_bytes"] for e in before)
+    assert sum(e["row_count"] for e in after) == 1200
 
 
 def test_merge_rewrites_keep_valid_crc(spark, tmp_table_dir):

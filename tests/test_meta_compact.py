@@ -186,6 +186,25 @@ def test_compact_resume_skips_completed_bins(spark, tmp_table_dir, monkeypatch):
     assert [s["operation"] for s in t.lineage_chain()][-1] == "compact"
 
 
+def test_compact_aborts_when_staged_rows_fall_short(spark, tmp_table_dir, monkeypatch):
+    """A rewrite that loses rows (here: a file→bin attach that drops bin
+    0) fails the per-bin footer row check before that bin's lineage
+    unit is written and before any commit."""
+    import importlib
+
+    C = importlib.import_module("fupi_spark.compact")  # the package re-exports compact()
+    t = make_table(spark, tmp_table_dir, n=120, parts=6)
+    head = t.current_snapshot().snapshot_id
+    real_scan = C.bins_scan
+    monkeypatch.setattr(
+        C, "bins_scan", lambda table, bins: real_scan(table, bins).filter(F.col("_bin") != 0)
+    )
+    with pytest.raises(AssertionError, match="bin 0: staged 0 rows"):
+        compact(t, target_bytes=1 << 30, job_id="c-short")
+    assert t.current_snapshot().snapshot_id == head
+    assert t.storage.list("_lineage/c-short") == ["_lineage/c-short/.job"]  # no unit record
+
+
 def test_stats_recomputed_after_compact(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir, n=200, parts=20)
     compact(t, target_bytes=1 << 30)

@@ -3,8 +3,12 @@ content — the whole engine (append / compact / cluster / merge-update /
 merge-delete / mor-delete / consolidate-deletes / expire / rollback)
 must preserve or transform the row
 multiset exactly as the model does, with every live file present after
-every step and every committed job's lineage units accounting for
-exactly the files its commit swapped."""
+every step, every committed job's lineage units accounting for
+exactly the files its commit swapped, and every file a commit added
+carrying exactly its own stats. Every sequence ends with a compaction;
+its targets are drawn below the table's size too, and the table is
+large enough that a bin can span compaction's scan tasks (a split bin:
+several output files)."""
 
 from __future__ import annotations
 
@@ -21,6 +25,8 @@ from fupi_spark.compact import compact
 from fupi_spark.expire import expire_snapshots
 from fupi_spark.merge import merge_into
 from fupi_spark.synth import synth_clips
+
+from .test_integrity import assert_stats_exact
 
 COLS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
 
@@ -60,7 +66,8 @@ def test_random_op_sequence_matches_model(spark, tmp_table_dir, seed):
         nonlocal model, batch_no
         batch_no += 1
         n = rng.randint(30, 80)
-        df = synth_clips(spark, n, seed=seed * 100 + batch_no, dur_range_ms=(50, 80))
+        # ~1 s clips: two batches pass compaction's 4 MB scan split
+        df = synth_clips(spark, n, seed=seed * 100 + batch_no, dur_range_ms=(800, 1200))
         df = df.withColumn("clip_id", _prefix(f"b{batch_no}_"))
         meta.append(t, df, job_id=f"b{batch_no}", parts=rng.randint(2, 4))
         model = pd.concat([model, df.select(*COLS).toPandas()], ignore_index=True)
@@ -148,9 +155,14 @@ def test_random_op_sequence_matches_model(spark, tmp_table_dir, seed):
         else:
             t.delete_tag(f"tag{rng.randint(0, 2)}")
 
+    def compact_op():
+        size = sum(e["byte_size"] for e in t.data_entries())
+        target = rng.choice([1 << 30, size // 2, size // 3])
+        compact(t, target_bytes=target, job_id=f"c{rng.randint(0, 99999)}")
+
     ops = {
         "append": append_batch,
-        "compact": lambda: compact(t, target_bytes=1 << 30, job_id=f"c{rng.randint(0, 99999)}"),
+        "compact": compact_op,
         "cluster": lambda: cluster(t, curve=rng.choice(["zorder", "hilbert"]), target_bytes=1 << 19, job_id=f"z{rng.randint(0, 99999)}")
         if not model.empty
         else None,
@@ -166,14 +178,19 @@ def test_random_op_sequence_matches_model(spark, tmp_table_dir, seed):
         "rollback": rollback_one,
     }
     append_batch()  # never start empty
+    append_batch()
     names = list(ops)
-    for step in range(8):
-        op = rng.choice(names)
+    # eight random ops, then a compaction of whatever layout they left
+    for step in range(9):
+        op = rng.choice(names) if step < 8 else "compact"
         before = t.current_snapshot().snapshot_id
         ops[op]()
         head = t.current_snapshot()
         if head.snapshot_id != before:
             _check_lineage(t, head)
+            parent = set(t.live_files(t.snapshot(head.parent_id)))
+            added = [e["file_path"] for e in t.data_entries(head)]
+            assert_stats_exact(t, [p for p in added if p not in parent])
         got = _content(t)
         want = model.sort_values("clip_id").reset_index(drop=True)
         pd.testing.assert_frame_equal(

@@ -6,8 +6,8 @@
    jobs, and prunes lineage checkpoints of committed jobs;
 4. MERGE rejects duplicate source keys, supports conditional matched
    clauses and NOT MATCHED BY SOURCE;
-5. NULL manifest stats are treated as unbounded (scan_pruned + the
-   compact stats fold).
+5. NULL manifest stats are treated as unbounded (scan_pruned + MERGE
+   pruning), and compaction recomputes them from its output file.
 """
 
 from __future__ import annotations
@@ -203,24 +203,24 @@ def test_null_stats_are_unbounded(spark, tmp_table_dir):
     assert files_read >= 1  # the unbounded file is always read
     df.count()
 
-    # compact stats fold must propagate NULL, not crash on min(None, x)
-    snap = compact(t, target_bytes=1 << 30, job_id="c-null")
-    assert snap is not None
-    folded = t.manifest_entries().to_pylist()
-    assert len(folded) == 1
-    assert folded[0]["min_dur_ms"] is None and folded[0]["max_dur_ms"] is None
-    assert folded[0]["min_clip_id"] is not None  # other columns still folded
-    assert t.scan().count() == 60
-
     # merge's pruning treats the NULL-range file as always-touched
-    from pyspark.sql import functions as F
-
-    entries2 = t.manifest_entries().to_pylist()
     from fupi_spark.merge import plan_touched_files
 
+    null_file = t.manifest_entries().to_pylist()[0]["file_path"]
     src = t.scan().limit(5)
     touched = plan_touched_files(t, src, t.current_snapshot())
-    assert entries2[0]["file_path"] in {e["file_path"] for e in touched}
+    assert null_file in {e["file_path"] for e in touched}
+
+    # compaction over a NULL-stats input reads its output's stats from
+    # the file as written: the range is known again
+    snap = compact(t, target_bytes=1 << 30, job_id="c-null")
+    assert snap is not None
+    out = t.manifest_entries().to_pylist()
+    assert len(out) == 1
+    durs = [r.dur_ms for r in t.scan().select("dur_ms").collect()]
+    assert (out[0]["min_dur_ms"], out[0]["max_dur_ms"]) == (min(durs), max(durs))
+    assert out[0]["min_clip_id"] is not None
+    assert t.scan().count() == 60
 
 
 def test_rollback_restores_previous_state(spark, tmp_table_dir):
