@@ -47,7 +47,6 @@ driver-side state.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -58,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import zorder
-from .lineage import LineageLog
+from .lineage import Rewrite
 from .meta import Snapshot, Table
 
 CLUSTER_DIMS = ["clip_id", "sr_hz", "dur_ms", "codec"]
@@ -409,25 +408,26 @@ def cluster(
     worth of rows, and no range split can divide it). 0 = off, N>1 =
     forced salt factor."""
     assert curve in ("zorder", "hilbert", "linear")
-    if job_id is not None:
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None:
-            return prev  # idempotent re-submission
-    base = table.current_snapshot()
+    rw = Rewrite(table, job_id, f"cluster-{curve}")
+    if rw.committed is not None:
+        return rw.committed
+    base = rw.base
     entries = table.data_entries(base)
     dels = table.delete_entries(base)
     if not entries:
         raise ValueError("cannot cluster an empty table")
     total_bytes = sum(e["byte_size"] for e in entries)
     n_out = max(1, -(-total_bytes // target_bytes))
-    job_id = job_id or f"cluster-{curve}-{uuid.uuid4().hex[:8]}"
+
+    # the read is pinned to ``base``: a file committed meanwhile must
+    # neither feed the rewrite (its rows would be duplicated) nor the
+    # plan. It applies the outstanding MOR deletes, and removing the
+    # delete files too materializes them.
+    src = rw.read([e["file_path"] for e in entries])
 
     # pass 1 (planning): sampled range boundaries (_plan_layout)
     rows_total = sum(e["row_count"] for e in entries)
-    # every read below is pinned to ``base``: a file committed
-    # meanwhile must neither feed the rewrite (its rows would be
-    # duplicated — the commit removes only base's files) nor the plan
-    layout = _plan_layout(table, base, table.scan(base.snapshot_id), curve, n_out, rows_total)
+    layout = _plan_layout(table, base, src, curve, n_out, rows_total)
     boundaries = layout.boundaries
 
     # AUTO skew salting: collapsed boundaries mean one key value owns
@@ -444,9 +444,9 @@ def cluster(
             effective_salt = max(2, -(-n_out // (len(boundaries) + 1)))
 
     # pass 2: the rewrite shuffle (internal columns — the per-row _crc —
-    # must ride the rewrite so the clustered files keep their integrity
+    # ride the rewrite so the clustered files keep their integrity
     # column without touching the payload)
-    df = layout.keyed(table.scan(base.snapshot_id, include_internal=True))
+    df = layout.keyed(src)
     bucket = layout.bucket()
     if effective_salt > 1:
         # spread each range bucket over hash sub-buckets of clip_id
@@ -456,12 +456,7 @@ def cluster(
     df = df.withColumn("_bucket", bucket)
 
     n_parts = (len(boundaries) + 1) * max(effective_salt, 1)
-    # the rewrite reads through scan() -> outstanding MOR deletes are
-    # APPLIED; removing the delete files here materializes them. The
-    # commit pins the applied delete set (expected_delete_paths): a
-    # delete-mor landing mid-rewrite must conflict, not be resurrected.
     summary = {
-        "job_id": job_id,
         "curve": curve,
         "salt_buckets": effective_salt,
         "deletes_materialized": len(dels),
@@ -469,24 +464,17 @@ def cluster(
     if layout.codec_ranks is not None:
         summary["cluster_codec_ranks"] = layout.codec_ranks
     return _write_clustered(
-        table, df, n_parts, layout.sort_cols, job_id, entries + dels, total_bytes, base,
-        summary=summary,
-        applied_delete_paths={e["file_path"] for e in dels},
+        rw, df, n_parts, layout.sort_cols, entries + dels, total_bytes, summary
     )
 
 
 def _write_clustered(
-    table, df, n_parts, sort_cols, job_id, removed_entries, bytes_in, base, summary,
-    applied_delete_paths: set | None = None,
+    rw: Rewrite, df, n_parts, sort_cols, removed_entries, bytes_in, summary
 ) -> Snapshot:
     """Shared rewrite tail: bucket-shuffled sorted write → atomic
-    promote → per-partition lineage → snapshot commit.
-
-    ``applied_delete_paths``: the MOR delete files whose keys this
-    rewrite already applied (its outputs carry a fresh sequence) — the
-    commit raises CommitConflict if the outstanding delete set changed
-    underneath (meta.Table.commit expected_delete_paths)."""
-    staging = table.stage_dir(job_id)
+    promote → per-partition lineage → snapshot commit."""
+    table = rw.table
+    staging = table.stage_dir(rw.job_id)
     (
         # _bucket leads the sort so the partitionBy writer's required
         # ordering is already satisfied — otherwise it inserts its own
@@ -498,18 +486,9 @@ def _write_clustered(
         .partitionBy("_bucket")
         .parquet(staging)
     )
-    added = table.promote_staged(staging, job_id)
-    removed = [e["file_path"] for e in removed_entries]
-    LineageLog(table, job_id).record_outputs(added, removed, bytes_in)
-
-    return table.commit(
-        "cluster",
-        added,
-        removed_paths=set(removed),
-        base=base,
-        summary={**summary, "output_files": added.num_rows},
-        expected_delete_paths=applied_delete_paths,
-    )
+    added = table.promote_staged(staging, rw.job_id)
+    rw.log.record_outputs(added, [e["file_path"] for e in removed_entries], bytes_in)
+    return rw.commit("cluster", added, {**summary, "output_files": added.num_rows})
 
 
 def cluster_incremental(
@@ -536,11 +515,10 @@ def cluster_incremental(
     clustered. No-op (returns the current snapshot) when no files were
     added since the last cluster."""
     assert curve in ("zorder", "hilbert", "linear")
-    if job_id is not None:
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None:
-            return prev  # idempotent re-submission
-    base = table.current_snapshot()
+    rw = Rewrite(table, job_id, f"cluster-inc-{curve}")
+    if rw.committed is not None:
+        return rw.committed
+    base = rw.base
     # the marker (carried in every summary, expire-pinned) is the
     # primary lookup — the chain walk is only a fallback for tables
     # whose history predates the marker
@@ -569,21 +547,18 @@ def cluster_incremental(
     ]
     if not entries:
         return base
-    job_id = job_id or f"cluster-inc-{curve}-{uuid.uuid4().hex[:8]}"
     new_bytes = sum(e["byte_size"] for e in entries)
     n_out = max(1, -(-new_bytes // target_bytes))
 
     # sampled keys-only boundary pass over the NEW files only
     rows_total = sum(e["row_count"] for e in entries)
-    new_df = table._read_files([f"{table.root}/{e['file_path']}" for e in entries], base)
+    # the churn read applies the outstanding deletes to the rewritten
+    # subset and pins the applied set (Rewrite.read)
+    new_df = rw.read([e["file_path"] for e in entries])
     layout = _plan_layout(table, base, new_df, curve, n_out, rows_total)
     df = layout.keyed(new_df).withColumn("_bucket", layout.bucket())
 
-    # the churn read goes through _read_files -> outstanding deletes
-    # are applied to the rewritten subset; pin the applied set so a
-    # concurrent delete-mor conflicts instead of being resurrected
     summary = {
-        "job_id": job_id,
         "curve": curve,
         "mode": "incremental",
         "rewritten_bytes": new_bytes,
@@ -592,7 +567,5 @@ def cluster_incremental(
     if layout.codec_ranks is not None:
         summary["cluster_codec_ranks"] = layout.codec_ranks
     return _write_clustered(
-        table, df, len(layout.boundaries) + 1, layout.sort_cols, job_id, entries, new_bytes, base,
-        summary=summary,
-        applied_delete_paths={e["file_path"] for e in table.delete_entries(base)},
+        rw, df, len(layout.boundaries) + 1, layout.sort_cols, entries, new_bytes, summary
     )

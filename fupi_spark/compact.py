@@ -37,14 +37,13 @@ whenever candidate bytes ≫ 1000 × maxPartitionBytes.
 from __future__ import annotations
 
 import shutil
-import uuid
 from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .lineage import LineageLog
+from .lineage import Rewrite
 from .meta import Snapshot, Table, staged_partition
 from .session import session_conf
 
@@ -125,15 +124,16 @@ def compact(
     per-file stat ranges tight through compaction. Size-blind FFD
     would merge arbitrary files and widen every range back out."""
     spark = table.spark
-    base = table.current_snapshot()
     # idempotent re-submission: a job that already COMMITTED must be a
     # no-op (its own output would otherwise re-qualify as candidates —
     # and a multi-file bin's halves would genuinely re-pack, so the
     # planner cannot distinguish "already done" from "new work" by
     # looking at files alone). Mid-crash resume (no commit yet) still
     # goes through the unit-lineage path below.
-    if job_id is not None and table.committed_snapshot_for_job(job_id) is not None:
+    rw = Rewrite(table, job_id, "compact")
+    if rw.committed is not None:
         return None
+    base = rw.base
     entries = table.data_entries(base)
     dels = table.delete_key_specs(base)
     # bins NEVER mix schema generations (evolve.py): compaction streams
@@ -184,16 +184,12 @@ def compact(
     if not bins:
         return None
 
-    job_id = job_id or f"compact-{uuid.uuid4().hex[:8]}"
-    log = LineageLog(table, job_id)
     # a unit counts as done only if it covered the same input files —
     # guards against a stale lineage dir from a different table state
-    done = {
-        uid: rec
-        for uid, rec in log.completed_units().items()
-        if uid < len(bins)
+    done = rw.log.resume(
+        lambda uid, rec: uid < len(bins)
         and sorted(rec["files_in"]) == sorted(e["file_path"] for e in bins[uid].files)
-    }
+    )
     todo = [b for b in bins if b.bin_id not in done]
 
     added: list[dict] = []
@@ -224,8 +220,8 @@ def compact(
         # rename alongside this attempt's output (duplicate rows). Done
         # bins' files were already renamed out of staging, so wiping the
         # whole staging dir before rewriting is always safe.
-        shutil.rmtree(table.stage_dir(job_id), ignore_errors=True)
-        staging = table.stage_dir(job_id)
+        shutil.rmtree(table.stage_dir(rw.job_id), ignore_errors=True)
+        staging = table.stage_dir(rw.job_id)
         # one write pass per schema generation (mixing would pad old
         # files into the new physical schema); bins are generation-pure
         entry_sid = {e["file_path"]: (e.get("schema_id") or 0) for e in entries}
@@ -263,7 +259,7 @@ def compact(
                 )
                 df.write.mode("append").partitionBy("_bin").parquet(staging)
 
-        added = table.promote_staged(staging, job_id).to_pylist()
+        added = table.promote_staged(staging, rw.job_id).to_pylist()
         outs: dict[int, list[dict]] = {}
         for e in added:
             outs.setdefault(staged_partition(e["file_path"]), []).append(e)
@@ -281,7 +277,7 @@ def compact(
                 f"bin {b.bin_id}: staged {staged_rows} rows != "
                 f"{b.row_count} input rows — aborting before commit"
             )
-            log.complete_unit(
+            rw.log.complete_unit(
                 b.bin_id,
                 files_in=[e["file_path"] for e in b.files],
                 files_out=[e["file_path"] for e in got],
@@ -290,33 +286,24 @@ def compact(
                 rows=b.row_count,
             )
 
-    # assemble commit from lineage (covers resumed + fresh units)
-    expected = {b.bin_id: sorted(e["file_path"] for e in b.files) for b in bins}
-    recs = [
-        r
-        for r in log.records()
-        if r["unit_id"] in expected and sorted(r["files_in"]) == expected[r["unit_id"]]
-    ]
-    assert len(recs) == len(bins), f"lineage incomplete: {len(recs)}/{len(bins)}"
-    removed = {p for r in recs for p in r["files_in"]}
-    # resumed bins' entries come from their files, like fresh ones
-    resumed = [p for r in recs if r["unit_id"] in done for p in r["files_out"]]
+    # every bin is now a fresh or a resumed unit of the log, whose
+    # inputs the commit removes; resumed bins' entries come from their
+    # files, like fresh ones
+    resumed = [p for r in done.values() for p in r["files_out"]]
     if resumed:
         added += table.file_entries(resumed).to_pylist()
     # compaction owns two fields: an output keeps its INPUT generation's
     # physical schema (streamed bytes, never padded — bins are
     # sid-pure) and inherits the (common-applicability) minimum input
-    # sequence so outstanding MOR deletes keep applying
-    ins_of = {p: bins[r["unit_id"]].files for r in recs for p in r["files_out"]}
+    # sequence so outstanding MOR deletes keep applying; its name
+    # carries its bin, fresh or resumed
     for e in added:
-        ins = ins_of[e["file_path"]]
+        ins = bins[staged_partition(e["file_path"])].files
         e["schema_id"] = ins[0].get("schema_id") or 0
         e["sequence"] = min((x.get("sequence") or 0) for x in ins)
 
-    return table.commit(
+    return rw.commit(
         "compact",
         pa.Table.from_pylist(added, schema=table.manifest_schema),
-        removed_paths=removed,
-        base=base,
-        summary={"job_id": job_id, **log.metrics()},
+        rw.log.metrics(),
     )

@@ -333,6 +333,7 @@ def ingest_corpus(
     sentences_table) metadata handles."""
     from . import meta
     from .compact import compact
+    from .lineage import Rewrite
 
     texts = scan_raw_docs(spark, jsonl_path, num_samples)
     sentences = segment(texts)
@@ -378,21 +379,22 @@ def ingest_corpus(
 
     n_groups = max(1, min(index_files, 1 << _NB))
     span = (1 << _NB) // n_groups
-    staging = t_sent.stage_dir("ingest")
-    (
-        sentences.select(
-            "text_id", "sentence_id", "sentence", "dense_embedding",
-            "colbert_embedding", "lsh_bucket",
+    rw = Rewrite(t_sent, "ingest", "ingest")
+    if rw.committed is None:
+        staging = t_sent.stage_dir(rw.job_id)
+        (
+            sentences.select(
+                "text_id", "sentence_id", "sentence", "dense_embedding",
+                "colbert_embedding", "lsh_bucket",
+            )
+            .withColumn("_bgrp", (F.col("lsh_bucket") / span).cast("int"))
+            .repartition(n_groups, "_bgrp")
+            .sortWithinPartitions("_bgrp", "lsh_bucket", "sentence_id")
+            .write.mode("overwrite")
+            .partitionBy("_bgrp")
+            .parquet(staging)
         )
-        .withColumn("_bgrp", (F.col("lsh_bucket") / span).cast("int"))
-        .repartition(n_groups, "_bgrp")
-        .sortWithinPartitions("_bgrp", "lsh_bucket", "sentence_id")
-        .write.mode("overwrite")
-        .partitionBy("_bgrp")
-        .parquet(staging)
-    )
-    added = t_sent.promote_staged(staging, "ingest")
-    t_sent.commit("append", added, summary={"job_id": "ingest"})
+        rw.commit("append", t_sent.promote_staged(staging, rw.job_id))
 
     meta.append(t_text, text_level, job_id="ingest")
     # group-aware compaction for the indexed sentence table: bins never

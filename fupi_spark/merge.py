@@ -60,7 +60,6 @@ path with skew splitting.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -70,7 +69,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lineage import LineageLog
+from .lineage import Rewrite
 from .meta import Snapshot, Table, prune_manifest
 
 MERGE_KEY = "clip_id"
@@ -199,17 +198,11 @@ def merge_into(
     assert not_matched_by_source in (None, "delete")
     keys = list(keys or [MERGE_KEY])
     assert keys, "merge needs at least one key column"
-    if job_id is not None:
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None:
-            return prev  # idempotent re-submission
+    rw = Rewrite(table, job_id, "merge")
+    if rw.committed is not None:
+        return rw.committed
     spark = table.spark
-    base = table.current_snapshot()
-    # the touched-file read below applies the outstanding MOR deletes;
-    # pin that set so a delete-mor landing mid-merge conflicts at
-    # commit instead of having its keys resurrected by our outputs
-    applied_dels = {e["file_path"] for e in table.delete_entries(base)}
-    job_id = job_id or f"merge-{uuid.uuid4().hex[:8]}"
+    base = rw.base
     # recompute the payload checksum for source rows (never trust a
     # caller-supplied _crc against caller-supplied bytes; synth sources
     # arrive without one) so updated/inserted rows land with a valid
@@ -261,13 +254,11 @@ def merge_into(
     touched_paths = [e["file_path"] for e in touched]
 
     if touched_paths:
-        # evolution-aware read: touched files may span schema
-        # generations (evolve.py); _read_files merges footers and
-        # replays the ops so the rewrite materializes the declared
-        # schema (CoW naturally retires evolution debt)
-        target = table._read_files(
-            [f"{table.root}/{p}" for p in touched_paths], base
-        )
+        # evolution-aware, delete-aware read at base (Rewrite.read):
+        # touched files may span schema generations (evolve.py), and
+        # the rewrite materializes the declared schema (CoW naturally
+        # retires evolution debt) with the outstanding deletes applied
+        target = rw.read(touched_paths)
         # legacy table written before the integrity column existed:
         # align the source (the column reappears at the next full write)
         from .integrity import CRC_COL
@@ -381,9 +372,8 @@ def merge_into(
     else:
         result = rewritten
 
-    log = LineageLog(table, job_id)  # marks the job active before any write
     try:
-        added = table.write_datafiles(result, job_id, sort_within=keys)
+        added = table.write_datafiles(result, rw.job_id, sort_within=keys)
     finally:
         _persisted_source.unpersist()
 
@@ -392,7 +382,7 @@ def merge_into(
         # already removed from the read; with deletes in play the input
         # size must come from the MOR-filtered frame or the summary
         # attributes the delete's rows to this merge (ADVICE r4)
-        if applied_dels and touched_paths:
+        if rw.applied_deletes:
             n_target = target.count()
         else:
             n_target = sum(e["row_count"] for e in touched)
@@ -401,16 +391,12 @@ def merge_into(
         n_matched = src_rows - n_inserts
         n_carries = n_target - n_matched
 
-    log.record_outputs(added, touched_paths, sum(x["byte_size"] for x in touched))
+    rw.log.record_outputs(added, touched_paths, sum(x["byte_size"] for x in touched))
 
-    return table.commit(
+    return rw.commit(
         "merge",
         added,
-        removed_paths=set(touched_paths),
-        base=base,
-        expected_delete_paths=applied_dels,
-        summary={
-            "job_id": job_id,
+        {
             "keys": keys,
             "when_matched": when_matched,
             "when_not_matched": when_not_matched,
@@ -446,13 +432,10 @@ def delete_where(
     linear-clustered table a key-range delete touches O(selectivity)
     files (tested); deleted-row counts come from manifest arithmetic
     (inputs − outputs), not an extra count job."""
-    if job_id is not None:
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None:
-            return prev  # idempotent re-submission
-    spark = table.spark
-    base = table.current_snapshot()
-    job_id = job_id or f"delete-{uuid.uuid4().hex[:8]}"
+    rw = Rewrite(table, job_id, "delete")
+    if rw.committed is not None:
+        return rw.committed
+    base = rw.base
     m = table.data_manifest(base)
     if prune is not None:
         col, lo, hi = prune
@@ -462,18 +445,14 @@ def delete_where(
     if not touched_paths:
         return base
 
-    applied_dels = {e["file_path"] for e in table.delete_entries(base)}
-    log = LineageLog(table, job_id)  # marks the job active pre-write
-    target = table._read_files(
-        [f"{table.root}/{p}" for p in touched_paths], base
-    )
+    target = rw.read(touched_paths)
     kept = target.filter(~F.expr(condition))
-    added = table.write_datafiles(kept, job_id)
+    added = table.write_datafiles(kept, rw.job_id)
     # manifest arithmetic over-reports when outstanding MOR deletes
     # already removed rows from the read (they'd be attributed to this
     # DELETE); with deletes in play, count the MOR-filtered input
     # instead (one key-column job, only on the MOR path — ADVICE r4)
-    if applied_dels:
+    if rw.applied_deletes:
         n_in = target.count()
     else:
         n_in = sum(e["row_count"] for e in entries)
@@ -484,16 +463,12 @@ def delete_where(
     # them here (like cluster() does) instead of leaving every later
     # scan to pay their read + anti-join forever. A pruned delete may
     # leave untouched files the deletes still cover, so it keeps them.
-    removed = touched_paths + ([] if prune is not None else sorted(applied_dels))
-    log.record_outputs(added, removed, sum(x["byte_size"] for x in entries))
-    return table.commit(
+    removed = touched_paths + ([] if prune is not None else sorted(rw.applied_deletes))
+    rw.log.record_outputs(added, removed, sum(x["byte_size"] for x in entries))
+    return rw.commit(
         "delete",
         added,
-        removed_paths=set(removed),
-        base=base,
-        expected_delete_paths=applied_dels,
-        summary={
-            "job_id": job_id,
+        {
             "condition": condition,
             "touched_files": len(touched_paths),
             "deleted_rows": n_in - n_out,
@@ -550,12 +525,10 @@ def delete_keys_mor(
     This is the high-update-rate counterpart to delete_where's
     copy-on-write: O(keys) now + read-side anti-join until the next
     rewrite, vs O(touched bytes) now and clean reads."""
-    if job_id is not None:
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None:
-            return prev  # idempotent re-submission
+    rw = Rewrite(table, job_id, "delmor")
+    if rw.committed is not None:
+        return rw.committed
     key_cols = [key] if isinstance(key, str) else list(key)
-    job_id = job_id or f"delmor-{uuid.uuid4().hex[:8]}"
     # persist: the frame is consumed twice (count + write) and a
     # non-deterministic source re-evaluated between them would write a
     # different key set than the one sized
@@ -566,22 +539,16 @@ def delete_keys_mor(
         kdf_out = (
             kdf.repartition(parts, *key_cols) if parts > 1 else kdf.coalesce(1)
         )
-        log = LineageLog(table, job_id)  # marks the job active pre-write
-        added = table.write_datafiles(kdf_out, job_id)
+        added = _as_deletes(table.write_datafiles(kdf_out, rw.job_id))
     finally:
         kdf.unpersist()
-    added = _as_deletes(added)
-    log.record_outputs(added, [], 0)
-    snap = table.commit(
-        "delete-mor",
-        added,
-        summary={"job_id": job_id, "deleted_keys": n_keys, "key": key_cols},
-    )
+    rw.log.record_outputs(added, [], 0)
+    snap = rw.commit("delete-mor", added, {"deleted_keys": n_keys, "key": key_cols})
     if (
         consolidate_after is not None
         and len(table.delete_entries()) > consolidate_after
     ):
-        consolidate_deletes(table, job_id=f"{job_id}-consol")
+        consolidate_deletes(table, job_id=f"{rw.job_id}-consol")
     return snap
 
 
@@ -606,22 +573,16 @@ def consolidate_deletes(
     Reference anchor: Lance folds deletions at compact_files
     (/root/reference/fupi/embedders.py:127-128); Iceberg ships this as
     rewrite_position_delete_files."""
-    if job_id is not None:
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None:
-            return prev  # idempotent re-submission
-    base = table.current_snapshot()
+    rw = Rewrite(table, job_id, "consol")
+    if rw.committed is not None:
+        return rw.committed
     groups: dict[tuple, list[dict]] = {}
-    for e in table.delete_key_specs(base):
+    for e in table.delete_key_specs(rw.base):
         groups.setdefault(e["key_cols"], []).append(e)
     todo = {k: v for k, v in sorted(groups.items()) if len(v) > 1}
     if not todo:
         return None
-    job_id = job_id or f"consol-{uuid.uuid4().hex[:8]}"
-    log = LineageLog(table, job_id)
-    removed: set[str] = set()
     added_tables = []
-    unit = 0
     for key_cols, entries in todo.items():
         del_df = table._delete_keys_df(list(key_cols), entries)
         # manifest row counts upper-bound the distinct key count — size
@@ -632,32 +593,22 @@ def consolidate_deletes(
             del_df.repartition(parts, *key_cols) if parts > 1 else del_df.coalesce(1)
         )
         max_seq = max(int(e.get("sequence") or 0) for e in entries)
-        added = _as_deletes(table.write_datafiles(out, job_id), max_seq)
-        group_removed = [e["file_path"] for e in entries]
-        removed.update(group_removed)
+        added = _as_deletes(table.write_datafiles(out, rw.job_id), max_seq)
         # inputs recorded on each GROUP's first unit (a global first-unit
         # gate would drop every later key set's inputs from provenance)
-        unit = log.record_outputs(
-            added, group_removed, sum(x["byte_size"] or 0 for x in entries), unit
+        rw.log.record_outputs(
+            added, [e["file_path"] for e in entries], sum(x["byte_size"] or 0 for x in entries)
         )
         added_tables.append(added)
-    merged = (
-        pa.concat_tables(added_tables)
-        if len(added_tables) > 1
-        else added_tables[0]
-    )
-    # input_paths = the consumed delete files: a concurrent rewrite that
-    # materialized (removed) them invalidates this fold → conflict. A
-    # concurrent NEW delete file is untouched and stays outstanding.
-    return table.commit(
+    # the consumed delete files are the commit's inputs: a concurrent
+    # rewrite that materialized (removed) them invalidates this fold →
+    # conflict. A concurrent NEW delete file is untouched and stays
+    # outstanding.
+    return rw.commit(
         "consolidate-deletes",
-        merged,
-        removed_paths=removed,
-        base=base,
-        input_paths=set(removed),
-        summary={
-            "job_id": job_id,
-            "consolidated_files": len(removed),
+        pa.concat_tables(added_tables),
+        {
+            "consolidated_files": len(rw.log.files_in),
             "key_sets": [list(k) for k in todo],
         },
     )

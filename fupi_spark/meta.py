@@ -30,10 +30,11 @@ expire.gc_orphans once the job ages past ``abandoned_after_s``
 (in-flight jobs are protected by their lineage marker; a crashed job's
 marker ages out, see expire.py).
 
-Concurrency: optimistic. A committer computes (removed, added) against
-its base snapshot, then claims metadata/v{n+1}.json with a conditional
-PUT of the fully-written snapshot (no torn reads, no rename needed).
-If another writer won, the committer rebases: reload current live set,
+Concurrency: optimistic. A committer (lineage.Rewrite, for every op but
+the metadata-only ones) computes (removed, added) against its base
+snapshot, then claims metadata/v{n+1}.json with a conditional PUT of
+the fully-written snapshot (no torn reads, no rename needed). If
+another writer won, the committer rebases: reload current live set,
 verify none of its input files were removed (no overlap → its rewrite
 is still valid), recompute live = current − removed + added, retry.
 Overlap → CommitConflict, the job re-runs against the new snapshot.
@@ -167,6 +168,8 @@ class Table:
         self._local = urlparse(self.root).scheme in ("", "file")
         # physical schema per data/delete file path (files are immutable)
         self._schema_cache: dict[str, T.StructType] = {}
+        # Arrow manifest per manifest path (immutable too), newest last
+        self._manifest_cache: dict[str, pa.Table] = {}
 
     # -- paths ------------------------------------------------------------
     @property
@@ -227,8 +230,8 @@ class Table:
 
     def committed_snapshot_for_job(self, job_id: str) -> Snapshot | None:
         """The snapshot a job id already committed, if any — the
-        idempotent re-submission guard every maintenance op shares: an
-        orchestrator retrying a job whose commit actually landed (e.g.
+        idempotent re-submission guard every op shares (lineage.Rewrite):
+        an orchestrator retrying a job whose commit actually landed (e.g.
         after a timeout) must be a no-op, not a second full rewrite."""
         for sid in self.snapshot_ids():
             s = self.snapshot(sid)
@@ -301,11 +304,19 @@ class Table:
         snap = snapshot or self.current_snapshot()
         if snap is None or not snap.manifests:
             return _empty_manifest(self.stats_spec)
-        tables = [
-            pad_cast_manifest(pq.read_table(f"{self.root}/{m}"), self.manifest_schema)
-            for m in snap.manifests
-        ]
-        return pa.concat_tables(tables)
+        return pa.concat_tables([self._manifest(m) for m in snap.manifests])
+
+    def _manifest(self, rel: str) -> pa.Table:
+        """One manifest file as Arrow, cached (the newest four) by its
+        never-reused path: an op and its commit load their base
+        manifest once."""
+        m = self._manifest_cache.pop(rel, None)
+        if m is None:
+            m = pad_cast_manifest(pq.read_table(f"{self.root}/{rel}"), self.manifest_schema)
+        self._manifest_cache[rel] = m
+        if len(self._manifest_cache) > 4:
+            self._manifest_cache.pop(next(iter(self._manifest_cache)))
+        return m
 
     def manifest_df(self, snapshot: Snapshot | None = None) -> DataFrame:
         """Manifest entries as a Spark DataFrame (scale path: planning
@@ -904,8 +915,7 @@ class Table:
         the winner's op (a lost update the file validation cannot see),
         so it raises CommitConflict instead.
         ``expected_delete_paths``: the MOR delete-file set this op
-        APPLIED while rewriting (delete-applying rewrites — cluster,
-        merge, delete_where — set it). A delete_keys_mor that lands
+        APPLIED while rewriting (lineage.Rewrite.read pins it). A delete_keys_mor that lands
         between the rewrite's plan and its commit passes the file
         validation (it removes nothing), but the rewrite's outputs get
         sequence > the delete's, silently resurrecting the deleted keys
@@ -1095,13 +1105,24 @@ def _merge_schemas(left: T.StructType, right: T.StructType) -> T.StructType:
     schemas, at the top level where schema evolution acts: left fields
     keep their order, right-only fields append (names match
     case-insensitively, Spark's default), and a column in both must
-    have one type — otherwise the merge fails, as Spark's does."""
+    have one type — otherwise the merge fails, as Spark's does — or two
+    a widen op relates (evolve._WIDEN_OK: a partial rewrite after a
+    widen leaves both live), which merge to the wider; Spark's parquet
+    reader reads the narrower files under it."""
+    from .evolve import _WIDEN_OK
+
     by_name = {f.name.lower(): f for f in right.fields}
+    fields = []
     for f in left.fields:
         r = by_name.pop(f.name.lower(), None)
         if r is not None and r.dataType != f.dataType:
-            raise ValueError(f"cannot merge {f.name}: {f.dataType} vs {r.dataType}")
-    return T.StructType(left.fields + list(by_name.values()))
+            pair = (f.dataType.simpleString(), r.dataType.simpleString())
+            if pair in _WIDEN_OK:
+                f = T.StructField(f.name, r.dataType, True, f.metadata)
+            elif pair[::-1] not in _WIDEN_OK:
+                raise ValueError(f"cannot merge {f.name}: {f.dataType} vs {r.dataType}")
+        fields.append(f)
+    return T.StructType(fields + list(by_name.values()))
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -1280,9 +1301,13 @@ def append(
     """Append write: new data files + new snapshot referencing old ∪ new.
     The caller controls physical layout: pre-repartition (or pass
     ``parts`` for a blind hash repartition) and ``sort_within`` to keep
-    per-file/row-group stats tight on index columns."""
-    job_id = job_id or f"append-{uuid.uuid4().hex[:8]}"
+    per-file/row-group stats tight on index columns. A ``job_id`` that
+    already committed returns that snapshot and writes nothing."""
+    from .lineage import Rewrite
+
+    rw = Rewrite(table, job_id, "append")
+    if rw.committed is not None:
+        return rw.committed
     if parts:
         df = df.repartition(parts)
-    added = table.write_datafiles(df, job_id, sort_within=sort_within)
-    return table.commit("append", added, summary={"job_id": job_id})
+    return rw.commit("append", table.write_datafiles(df, rw.job_id, sort_within=sort_within))

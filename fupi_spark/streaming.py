@@ -11,8 +11,9 @@ resulting small files.
 Semantics: exactly-once table state per micro-batch. The streaming
 checkpoint records which source files each batch consumed; the sink
 side is idempotent against re-delivery because a re-run of batch N
-under the same job id finds its snapshot already committed (job-id
-guard below) — the classic foreachBatch + transactional-sink recipe.
+under the same job id finds its snapshot already committed (the
+append's job-id guard, lineage.Rewrite) — the classic foreachBatch +
+transactional-sink recipe.
 
 Scale notes: this is the 100 TB continuous-ingest path — executors
 scale with source file arrival rate; the per-batch commit is O(files),
@@ -47,40 +48,32 @@ def stream_clips_into_table(
     the batch's rows are audited in isolation, consumers reading via
     the publish tag never see a bad batch, and a rejected batch's files
     are surgically removed (r5 WAP semantics — interleaved commits
-    survive). The job-id short-circuit below covers BOTH outcomes: a
-    redelivered batch whose append snapshot already exists in the chain
-    (published or rejected) is skipped, keeping the sink exactly-once
-    under checkpoint replay."""
+    survive). The job-id guard covers BOTH outcomes: a redelivered batch
+    whose append snapshot already exists in the chain (published or
+    rejected) is skipped, keeping the sink exactly-once under
+    checkpoint replay."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         job_id = f"stream-b{batch_id:08d}"
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None and audit_fn is None:
-            # idempotence: the batch already committed (failure between
-            # commit and checkpoint advance) — skip the re-delivery
-            return
         if audit_fn is None:
+            # a redelivered batch that already committed (failure
+            # between commit and checkpoint advance) is a no-op:
+            # append's job-id guard returns the committed snapshot
             meta.append(table, batch_df, job_id=job_id)
             return
-        from .wap import PUBLISHED_TAG, audited_append, publish_init, resolve_candidate
+        from .wap import PUBLISHED_TAG, audited_append, candidate_outcome, publish_init
+        from .wap import resolve_candidate
 
         tag = publish_tag or PUBLISHED_TAG
+        prev = table.committed_snapshot_for_job(job_id)
         if prev is not None:
             # committed but possibly UNRESOLVED (crash between the
             # append commit and the audit): a plain skip would leave
             # never-audited rows that the NEXT batch's publish exposes
-            # through the tag. Resolved = a rejection commit names this
-            # snapshot, or the tag already advanced to/past it (sink
-            # completion is serial, so a later tag implies this batch
-            # finished). Otherwise resume the audit now.
-            rejected = any(
-                s["summary"].get("wap_rejected_snapshot") == prev.snapshot_id
-                for s in table.lineage_chain()
-            )
-            tag_at = table.tags().get(tag)
-            if rejected or (tag_at is not None and tag_at >= prev.snapshot_id):
-                return
-            resolve_candidate(table, prev, audit_fn, tag=tag)
+            # through the tag. Resume the audit unless it was published
+            # or rejected already.
+            if candidate_outcome(table, prev, tag) is None:
+                resolve_candidate(table, prev, audit_fn, tag=tag)
             return
         if tag not in table.tags():
             publish_init(table, tag)

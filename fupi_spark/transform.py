@@ -21,12 +21,11 @@ payload, so the old checksums are void by definition).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from .lineage import LineageLog
+from .lineage import Rewrite
 from .meta import Snapshot, Table
 
 
@@ -41,18 +40,11 @@ def transform_payloads(
     """Rewrite every visible row through ``transform`` (a DataFrame →
     DataFrame function that must preserve the table's user-facing
     schema) and commit the result as a replacing snapshot."""
-    job_id = job_id or f"{operation}-{uuid.uuid4().hex[:8]}"
-    done = table.committed_snapshot_for_job(job_id)
-    if done is not None:
-        return done
-
-    base = table.current_snapshot()
-    entries = table.data_entries(base)
-    dels = {e["file_path"] for e in table.delete_entries(base)}
-    removed = {e["file_path"] for e in entries} | dels
-    bytes_in = sum(e["byte_size"] for e in entries)
-
-    src = table.scan(base.snapshot_id)
+    rw = Rewrite(table, job_id, operation)
+    if rw.committed is not None:
+        return rw.committed
+    entries = table.data_entries(rw.base)
+    src = Table._drop_internal(rw.read([e["file_path"] for e in entries]))
     out = transform(src)
     # the docstring contract ("must preserve the table's user-facing
     # schema") was unenforced: a callback that drops, adds, or retypes
@@ -67,22 +59,13 @@ def transform_payloads(
         raise ValueError(
             f"transform changed the user-facing schema: expected {want}, got {got}"
         )
-    table.mark_job_active(job_id)
     n_parts = parts or max(1, len(entries))
-    added = table.write_datafiles(out.repartition(n_parts), job_id)
-
-    LineageLog(table, job_id).record_outputs(added, sorted(removed), bytes_in)
-
-    return table.commit(
+    added = table.write_datafiles(out.repartition(n_parts), rw.job_id)
+    # every data file and every applied delete file is replaced
+    removed = {e["file_path"] for e in entries} | rw.applied_deletes
+    rw.log.record_outputs(added, sorted(removed), sum(e["byte_size"] for e in entries))
+    return rw.commit(
         operation,
         added,
-        removed_paths=removed,
-        base=base,
-        expected_delete_paths=dels,
-        summary={
-            "job_id": job_id,
-            "input_files": len(entries),
-            "output_files": added.num_rows,
-            **(summary or {}),
-        },
+        {"input_files": len(entries), "output_files": added.num_rows, **(summary or {})},
     )

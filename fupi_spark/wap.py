@@ -19,7 +19,9 @@ metadata layer already has:
 Crash safety: every step is one of the engine's existing atomic
 commits or tag PUTs. A crash between append and publish leaves the
 tag on the last published snapshot — consumers never see unaudited
-rows; re-running the job re-appends and re-audits.
+rows; re-running the job under its job id finds the committed
+candidate (append's job-id guard) and audits it unless it was
+published or rejected already.
 
 The reference has no audit gate (it trusts its ingest end-to-end);
 this is north-rule operational surface for a 10^12-row table where a
@@ -66,8 +68,38 @@ def audited_append(
     audit_error, rows_in_batch}.
     """
     job_id = job_id or f"wap-{uuid.uuid4().hex[:8]}"
+    head = table.current_snapshot().snapshot_id
     snap = meta.append(table, df, job_id=job_id, parts=parts)
+    outcome = candidate_outcome(table, snap, tag) if snap.snapshot_id <= head else None
+    if outcome is not None:
+        # a re-submitted job whose candidate was published or rejected
+        # already: it is not audited or rejected a second time
+        return _report(snap, outcome)
     return resolve_candidate(table, snap, audit_fn, tag=tag)
+
+
+def _report(snap, published: bool, audit_error=None, rows_in_batch=None) -> dict:
+    return {
+        "snapshot_id": snap.snapshot_id,
+        "published": published,
+        "audit_error": audit_error,
+        "rows_in_batch": rows_in_batch,
+    }
+
+
+def candidate_outcome(table: meta.Table, snap, tag: str = PUBLISHED_TAG) -> bool | None:
+    """How a committed candidate was resolved: False when a later
+    rejection commit names it, True when the publish tag reached it
+    (resolution is serial, so a later tag implies it finished), None
+    while unresolved (a crash between its append and its audit)."""
+    if any(
+        table.snapshot(i).summary.get("wap_rejected_snapshot") == snap.snapshot_id
+        for i in table.snapshot_ids()
+        if i > snap.snapshot_id
+    ):
+        return False
+    tag_at = table.tags().get(tag)
+    return True if tag_at is not None and tag_at >= snap.snapshot_id else None
 
 
 def resolve_candidate(
@@ -90,23 +122,13 @@ def resolve_candidate(
         audit_fn(new_rows)
     except Exception as e:  # noqa: BLE001 — ANY audit failure rejects
         _reject_candidate(table, snap, cand_files)
-        return {
-            "snapshot_id": snap.snapshot_id,
-            "published": False,
-            "audit_error": str(e),
-            "rows_in_batch": None,
-        }
+        return _report(snap, False, audit_error=str(e))
     # never regress the publish pointer: a resumed resolve of an old
     # candidate only advances the tag if it is still behind
     current_tag = table.tags().get(tag)
     if current_tag is None or current_tag < snap.snapshot_id:
         table.set_tag(tag, snap.snapshot_id)
-    return {
-        "snapshot_id": snap.snapshot_id,
-        "published": True,
-        "audit_error": None,
-        "rows_in_batch": new_rows.count(),
-    }
+    return _report(snap, True, rows_in_batch=new_rows.count())
 
 
 def _reject_candidate(table: meta.Table, snap, cand_files: set[str]) -> None:
@@ -133,17 +155,17 @@ def _reject_candidate(table: meta.Table, snap, cand_files: set[str]) -> None:
         )
     from .meta import _empty_manifest
 
-    # input_paths=cand_files closes the TOCTOU window: a rewrite that
-    # consumes the candidate's files between the check above and the
-    # commit claim makes the rebase validation raise CommitConflict
-    # instead of the removal silently no-op'ing while the rejected rows
-    # live on inside the rewrite's output
+    # the candidate's files are the commit's inputs (Table.commit's
+    # default), which closes the TOCTOU window: a rewrite that consumes
+    # them between the check above and the commit claim makes the
+    # rebase validation raise CommitConflict instead of the removal
+    # silently no-op'ing while the rejected rows live on inside the
+    # rewrite's output
     table.commit(
         "rollback",
         _empty_manifest(table.stats_spec),
         removed_paths=cand_files,
         base=current,
-        input_paths=set(cand_files),
         summary={"wap_rejected_snapshot": snap.snapshot_id},
     )
 

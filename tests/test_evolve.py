@@ -43,7 +43,14 @@ def test_add_duplicate_or_reserved_rejected(spark, tmp_table_dir):
 
 
 def test_widen_column(spark, tmp_table_dir):
+    from fupi_spark.merge import merge_into
+
     t = make_table(spark, tmp_table_dir, n=30, parts=2)
+    # a second, disjoint key range, so a MERGE on it rewrites only its file
+    late = synth_clips(spark, 10, seed=3, dur_range_ms=(50, 100)).withColumn(
+        "clip_id", F.concat(F.lit("zz_"), F.col("clip_id"))
+    )
+    meta.append(t, late, job_id="late", parts=1)
     before = {r.clip_id: r.dur_ms for r in t.scan().collect()}
     widen_column(t, "dur_ms", "bigint")
     got = t.scan()
@@ -51,6 +58,49 @@ def test_widen_column(spark, tmp_table_dir):
     assert {r.clip_id: r.dur_ms for r in got.collect()} == before
     with pytest.raises(ValueError, match="lossless"):
         widen_column(t, "clip_id", "int")
+
+    # a partial rewrite after the widen leaves int and bigint files live
+    upd = (
+        t.scan().filter(F.col("clip_id").startswith("zz_")).orderBy("clip_id").limit(3)
+        .withColumn("transcript", F.concat(F.col("transcript"), F.lit(" v2")))
+        .cache()
+    )
+    upd.count()
+    merge_into(t, upd, job_id="m-wide")
+    ops = [s["operation"] for s in t.lineage_chain()]
+    assert ops == ["create", "append", "append", "evolve", "merge"]
+    assert {e["schema_id"] or 0 for e in t.data_entries()} == {0, 1}
+    got = t.scan()
+    assert dict(got.dtypes)["dur_ms"] == "bigint"
+    assert {r.clip_id: r.dur_ms for r in got.collect()} == before
+    assert got.filter(F.col("transcript").like("% v2")).count() == 3
+
+
+def test_widen_pairs_merge_to_the_wider_type(spark, tmp_path):
+    """Every lossless widening folds to the wider type in either order,
+    and Spark's parquet reader, vectorized or not, reads a file of the
+    narrower type under it; unrelated types still fail to merge."""
+    from fupi_spark.evolve import _WIDEN_OK
+    from fupi_spark.meta import _merge_schemas
+    from fupi_spark.session import session_conf
+
+    for i, (narrow, wide) in enumerate(sorted(_WIDEN_OK)):
+        paths = [str(tmp_path / f"{i}-{k}") for k in ("narrow", "wide")]
+        for path, typ in zip(paths, (narrow, wide)):
+            spark.range(3).selectExpr(f"CAST(id AS {typ}) AS x").write.parquet(path)
+        n_schema, w_schema = (spark.read.parquet(p).schema for p in paths)
+        assert _merge_schemas(n_schema, w_schema) == w_schema, (narrow, wide)
+        assert _merge_schemas(w_schema, n_schema) == w_schema, (narrow, wide)
+        for vectorized in ("true", "false"):
+            conf = {"spark.sql.parquet.enableVectorizedReader": vectorized}
+            with session_conf(spark, conf):
+                rows = spark.read.schema(w_schema).parquet(*paths).collect()
+            assert sorted(float(r.x) for r in rows) == [0, 0, 1, 1, 2, 2], (narrow, wide)
+    ints, strings = (
+        spark.range(1).selectExpr(f"CAST(id AS {typ}) AS x").schema for typ in ("int", "string")
+    )
+    with pytest.raises(ValueError, match="cannot merge x"):
+        _merge_schemas(ints, strings)
 
 
 def test_rename_column_across_generations(spark, tmp_table_dir):

@@ -222,3 +222,110 @@ def test_plan_touched_driver_path_matches_distributed(spark, tmp_table_dir):
     src.unpersist()
     assert [e["file_path"] for e in driver] == [e["file_path"] for e in dist]
     assert 0 < len(driver) <= 12
+
+
+def test_committed_job_resubmission_is_noop(spark, tmp_path):
+    """Retrying a job whose commit already landed (orchestrator timeout
+    pattern) must return the SAME snapshot and create no new one — for
+    every op on the rewrite skeleton: append, compaction (which returns
+    None on a re-submission), cluster, merge, delete, MOR delete,
+    delete consolidation, payload transform and incremental cluster."""
+    from pyspark.sql import functions as F
+
+    from fupi_spark.cluster import cluster, cluster_incremental
+    from fupi_spark.merge import consolidate_deletes, delete_keys_mor, delete_where
+    from fupi_spark.transform import transform_payloads
+
+    # a re-submitted append adds no rows and no snapshot
+    a = meta.create_table(spark, str(tmp_path / "a"))
+    batch = synth_clips(spark, 50, seed=4, dur_range_ms=(50, 90)).cache()
+    s_a = meta.append(a, batch, job_id="job-A")
+    assert meta.append(a, batch, job_id="job-A").snapshot_id == s_a.snapshot_id
+    assert a.scan().count() == 50
+    assert a.snapshot_ids() == [1, 2]
+
+    t = make_table(spark, str(tmp_path / "t"), n=200, parts=6)
+    assert compact(t, target_bytes=1 << 30, job_id="j-c") is not None
+    assert compact(t, target_bytes=1 << 30, job_id="j-c") is None
+
+    s1 = cluster(t, curve="linear", target_bytes=1 << 18, job_id="j-cl")
+    assert cluster(t, curve="linear", target_bytes=1 << 18, job_id="j-cl").snapshot_id == s1.snapshot_id
+
+    upd = (
+        t.scan().orderBy("clip_id").limit(5)
+        .withColumn("transcript", F.concat(F.col("transcript"), F.lit(" v2")))
+        .cache()
+    )
+    upd.count()
+    s2 = merge_into(t, upd, job_id="j-m")
+    assert merge_into(t, upd, job_id="j-m").snapshot_id == s2.snapshot_id
+
+    s3 = delete_where(t, "dur_ms % 9 = 0", job_id="j-d")
+    assert delete_where(t, "dur_ms % 9 = 0", job_id="j-d").snapshot_id == s3.snapshot_id
+
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    keys = spark.createDataFrame([(k,) for k in ids[:3]], "clip_id string")
+    s4 = delete_keys_mor(t, keys, job_id="j-dm")
+    assert delete_keys_mor(t, keys, job_id="j-dm").snapshot_id == s4.snapshot_id
+    delete_keys_mor(t, spark.createDataFrame([(ids[5],)], "clip_id string"), job_id="j-dm2")
+    s5 = consolidate_deletes(t, job_id="j-cd")
+    assert consolidate_deletes(t, job_id="j-cd").snapshot_id == s5.snapshot_id
+
+    def shout(df):
+        return df.withColumn("transcript", F.upper("transcript"))
+
+    s6 = transform_payloads(t, shout, job_id="j-t")
+    assert transform_payloads(t, shout, job_id="j-t").snapshot_id == s6.snapshot_id
+    assert t.scan().count() == len(ids) - 4
+
+    extra = synth_clips(spark, 40, seed=6, dur_range_ms=(50, 90)).withColumn(
+        "clip_id", F.concat(F.lit("zz_"), F.col("clip_id"))
+    )
+    meta.append(t, extra, job_id="churn")
+    s7 = cluster_incremental(t, curve="linear", target_bytes=1 << 18, job_id="j-inc")
+    assert cluster_incremental(
+        t, curve="linear", target_bytes=1 << 18, job_id="j-inc"
+    ).snapshot_id == s7.snapshot_id
+
+    # exactly: create + seed-append + compact + cluster + merge + delete
+    # + two delete-mor + consolidate + transform + churn-append +
+    # inc-cluster — and nothing from the re-submissions
+    assert [s["operation"] for s in t.lineage_chain()] == [
+        "create", "append", "compact", "cluster", "merge", "delete", "delete-mor",
+        "delete-mor", "consolidate-deletes", "transform", "append", "cluster",
+    ]
+
+
+@pytest.mark.parametrize("mor_delete", [False, True])
+def test_merge_reads_base_manifest_once(spark, tmp_table_dir, monkeypatch, mor_delete):
+    """A 10-key MERGE loads its base snapshot's manifest file once, with
+    or without an outstanding MOR delete: planning, the delete-aware
+    read and the commit share one load (manifests are immutable)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from fupi_spark.merge import delete_keys_mor
+
+    t = make_table(spark, tmp_table_dir, n=120, parts=6)
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    if mor_delete:
+        delete_keys_mor(t, spark.createDataFrame([(k,) for k in ids[-3:]], "clip_id string"))
+    upd = (
+        t.scan().filter(F.col("clip_id").isin(ids[:10]))
+        .withColumn("transcript", F.concat(F.col("transcript"), F.lit(" v2")))
+        .cache()
+    )
+    upd.count()
+    cold = meta.load_table(spark, t.root)  # a handle that has loaded no manifest
+    base_manifest = cold.current_snapshot().manifests[0]
+    reads = []
+    real_read = pq.read_table
+
+    def counting(source, *a, **kw):
+        reads.append(str(source))
+        return real_read(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    merge_into(cold, upd, job_id="m-10")
+    assert sum(r.endswith(base_manifest) for r in reads) == 1
+    assert cold.scan().filter(F.col("transcript").like("% v2")).count() == 10

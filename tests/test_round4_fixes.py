@@ -589,49 +589,3 @@ def test_delete_where_matches_pandas_and_prunes(spark, tmp_path):
         .count()
         == 0
     )
-
-
-# ---------------------------------------------------------------------------
-# idempotent re-submission across every maintenance op
-# ---------------------------------------------------------------------------
-
-
-def test_committed_job_resubmission_is_noop(spark, tmp_path):
-    """Retrying a job whose commit already landed (orchestrator timeout
-    pattern) must return the SAME snapshot and create no new one — for
-    cluster, incremental cluster, merge, and delete alike (compact
-    already had this; all ops now share the guard)."""
-    import importlib
-
-    C = importlib.import_module("fupi_spark.cluster")
-    from fupi_spark.merge import delete_where, merge_into
-
-    t = make_table(spark, str(tmp_path / "t"), n=200, parts=6)
-
-    s1 = C.cluster(t, curve="linear", target_bytes=1 << 18, job_id="j-cl")
-    assert C.cluster(t, curve="linear", target_bytes=1 << 18, job_id="j-cl").snapshot_id == s1.snapshot_id
-
-    upd = (
-        t.scan().orderBy("clip_id").limit(5)
-        .withColumn("transcript", F.concat(F.col("transcript"), F.lit(" v2")))
-        .cache()
-    )
-    upd.count()
-    s2 = merge_into(t, upd, job_id="j-m")
-    assert merge_into(t, upd, job_id="j-m").snapshot_id == s2.snapshot_id
-
-    s3 = delete_where(t, "dur_ms % 9 = 0", job_id="j-d")
-    assert delete_where(t, "dur_ms % 9 = 0", job_id="j-d").snapshot_id == s3.snapshot_id
-
-    extra = synth_clips(spark, 40, seed=6, dur_range_ms=(50, 90)).withColumn(
-        "clip_id", F.concat(F.lit("zz_"), F.col("clip_id"))
-    )
-    meta.append(t, extra, job_id="churn")
-    s4 = C.cluster_incremental(t, curve="linear", target_bytes=1 << 18, job_id="j-inc")
-    assert C.cluster_incremental(
-        t, curve="linear", target_bytes=1 << 18, job_id="j-inc"
-    ).snapshot_id == s4.snapshot_id
-
-    # exactly: create + seed-append + cluster + merge + delete +
-    # churn-append + inc-cluster — and nothing from the re-submissions
-    assert len(t.snapshot_ids()) == 7
