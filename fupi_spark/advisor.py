@@ -32,8 +32,9 @@ def advise(
     - ``compact``  when > ``small_file_ratio`` of data files are under
       half the target size (FFD bins would merge them);
     - ``consolidate-deletes`` when more than ``max_delete_files``
-      equality-delete files are outstanding (every scan pays one
-      anti-join per key-spec group until then);
+      equality-delete files are outstanding (every scan pays one key
+      filter, or past the driver cap one anti-join, per key-spec group
+      until then);
     - ``cluster`` when the leading stats column's file ranges overlap
       more than ``max_overlap_ratio`` of all ordered pairs (the same
       number lakehouse_cluster_quality reports — it predicts pruning

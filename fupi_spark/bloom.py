@@ -114,7 +114,7 @@ def refresh_bloom_index(table, col: str) -> dict:
         # resolve a renamed index column (AnalysisException). Replay
         # the snapshot's schema ops like every other consumer — but
         # through read_parquet, NOT _read_files: MOR delete application
-        # joins away input_file_name(), and indexing to-be-deleted keys
+        # may union or join away input_file_name(), and indexing to-be-deleted keys
         # is harmless anyway (false positives only, never false
         # negatives).
         df = table.read_parquet(
@@ -208,9 +208,12 @@ def point_lookup(table, col: str, key: str) -> tuple[DataFrame, int, int]:
     """Bloom-pruned point lookup: returns (rows DataFrame, files_read,
     files_total). Reads the O(files) index, tests the key's k bits per
     file driver-side, scans only surviving files with the equality
-    predicate pushed to parquet. No index row for a live file (e.g.
-    refresh not yet run after a commit) means the file cannot be
-    pruned — it is read unconditionally (no false negatives ever)."""
+    predicate pushed to parquet; outstanding MOR deletes add only a key
+    filter planned on the driver (Table._read_files), so the lookup's
+    Spark jobs are the index read and the file read. No index row for a
+    live file (e.g. refresh not yet run after a commit) means the file
+    cannot be pruned — it is read unconditionally (no false negatives
+    ever)."""
     live = [e["file_path"] for e in table.data_entries()]
     pos = probe_positions(key)
     bitsets = {

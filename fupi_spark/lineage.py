@@ -42,7 +42,15 @@ class LineageLog:
         #: inputs of every unit this log recorded or resumed — the files
         #: the job's commit replaces
         self.files_in: set[str] = set()
+        #: running totals over the units recorded or resumed (metrics)
+        self.totals = {"units": 0, "bytes_in": 0, "bytes_out": 0, "rows": 0}
         self._next_unit = 0
+
+    def _count(self, rec: dict) -> None:
+        self.files_in.update(rec["files_in"])
+        self.totals["units"] += 1
+        for k in ("bytes_in", "bytes_out", "rows"):
+            self.totals[k] += rec[k]
 
     def _unit_rel(self, unit_id: int) -> str:
         return f"{self.prefix}/unit-{unit_id:06d}.json"
@@ -69,7 +77,7 @@ class LineageLog:
             **(extra or {}),
         }
         self.table.storage.put(self._unit_rel(unit_id), json.dumps(rec).encode())
-        self.files_in.update(files_in)
+        self._count(rec)
 
     def record_outputs(self, added: pa.Table, files_in: list[str], bytes_in: int) -> None:
         """Unit records of a one-shot rewrite that wrote the manifest
@@ -96,7 +104,7 @@ class LineageLog:
         consumed by this attempt (compaction's per-bin resume)."""
         done = {u: r for u, r in self.completed_units().items() if keep(u, r)}
         for r in done.values():
-            self.files_in.update(r["files_in"])
+            self._count(r)
         return done
 
     def completed_units(self) -> dict[int, dict]:
@@ -110,13 +118,9 @@ class LineageLog:
         return out
 
     def metrics(self) -> dict:
-        units = self.completed_units().values()
-        return {
-            "units": len(list(units)),
-            "bytes_in": sum(u["bytes_in"] for u in units),
-            "bytes_out": sum(u["bytes_out"] for u in units),
-            "rows": sum(u["rows"] for u in units),
-        }
+        """Units, bytes in/out and rows of every unit this log recorded
+        or resumed, kept in memory: no listing, no record read back."""
+        return dict(self.totals)
 
     def records(self) -> list[dict]:
         return sorted(self.completed_units().values(), key=lambda r: r["unit_id"])

@@ -504,14 +504,15 @@ def delete_keys_mor(
 ) -> Snapshot:
     """Merge-on-read equality delete (Iceberg v2 shape): write the key
     set as a DELETE FILE and commit — no data file is touched, so the
-    write cost is O(keys) regardless of table size. Readers anti-join
-    the keys sequence-aware (meta._apply_deletes): the delete applies
+    write cost is O(keys) regardless of table size. Readers apply the
+    keys sequence-aware (meta.Table._read_files): the delete applies
     only to data files whose sequence <= the delete's, so re-inserting
-    a deleted key later is visible while the old copies stay dead.
-    ``key`` may be a list for composite equality deletes (e.g.
-    ``["text_id", "sentence_id"]`` on the sentence-level table); delete
-    files on different key-column sets coexist (applied one anti-join
-    per set).
+    a deleted key later is visible while the old copies stay dead —
+    small delete sets as a key filter planned on the driver, larger
+    ones as an anti-join. ``key`` may be a list for composite equality
+    deletes (e.g. ``["text_id", "sentence_id"]`` on the sentence-level
+    table); delete files on different key-column sets coexist (applied
+    one filter or anti-join per set).
 
     The deletes are physically materialized by the next rewrite that
     reads through ``_read_files`` — a full cluster() drops them
@@ -523,7 +524,7 @@ def delete_keys_mor(
     delete-count trigger for high-update-rate tables).
 
     This is the high-update-rate counterpart to delete_where's
-    copy-on-write: O(keys) now + read-side anti-join until the next
+    copy-on-write: O(keys) now + a read-side key filter until the next
     rewrite, vs O(touched bytes) now and clean reads."""
     rw = Rewrite(table, job_id, "delmor")
     if rw.committed is not None:

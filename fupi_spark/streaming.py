@@ -61,20 +61,13 @@ def stream_clips_into_table(
             # append's job-id guard returns the committed snapshot
             meta.append(table, batch_df, job_id=job_id)
             return
-        from .wap import PUBLISHED_TAG, audited_append, candidate_outcome, publish_init
-        from .wap import resolve_candidate
+        from .wap import PUBLISHED_TAG, audited_append, publish_init
 
         tag = publish_tag or PUBLISHED_TAG
-        prev = table.committed_snapshot_for_job(job_id)
-        if prev is not None:
-            # committed but possibly UNRESOLVED (crash between the
-            # append commit and the audit): a plain skip would leave
-            # never-audited rows that the NEXT batch's publish exposes
-            # through the tag. Resume the audit unless it was published
-            # or rejected already.
-            if candidate_outcome(table, prev, tag) is None:
-                resolve_candidate(table, prev, audit_fn, tag=tag)
-            return
+        # the tag is set before a batch's first append, so a redelivered
+        # batch always finds it; audited_append's job-id guard returns a
+        # redelivered batch's committed candidate and audits it only if
+        # a crash left it unresolved
         if tag not in table.tags():
             publish_init(table, tag)
         audited_append(table, batch_df, audit_fn, job_id=job_id, tag=tag)

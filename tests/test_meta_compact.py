@@ -27,6 +27,22 @@ def clip_multiset(df):
     return sorted((r.clip_id, r.transcript, bytes(r.bytes)) for r in df.collect())
 
 
+def assert_summary_sums_lineage(t, snap) -> None:
+    """A compaction's summary totals equal the sums over its lineage
+    unit records as written to storage."""
+    from fupi_spark.lineage import LineageLog
+
+    recs = LineageLog(t, snap.summary["job_id"]).records()
+    want = {
+        "units": len(recs),
+        "bytes_in": sum(r["bytes_in"] for r in recs),
+        "bytes_out": sum(r["bytes_out"] for r in recs),
+        "rows": sum(r["rows"] for r in recs),
+    }
+    assert {k: snap.summary[k] for k in want} == want
+    assert want["units"] > 0
+
+
 def jobs_launched(spark, fn) -> int:
     """Spark jobs ``fn`` launches, counted through the status tracker
     under a private job group (after draining the listener bus)."""
@@ -111,6 +127,8 @@ def test_create_append_compact_lineage(spark, tmp_table_dir):
 
     snap = compact(t, target_bytes=1 << 30)  # everything into as few bins as possible
     assert snap is not None
+    assert_summary_sums_lineage(t, snap)
+    assert snap.summary["rows"] == 300
     after = clip_multiset(t.scan())
     assert after == before  # row-multiset preservation (FIXTURES.md §4.3)
     assert len(t.live_files()) < n_files_before
@@ -182,6 +200,7 @@ def test_compact_resume_skips_completed_bins(spark, tmp_table_dir, monkeypatch):
     snap = compact(t, target_bytes=target, job_id="job-x")
     assert snap is not None
     assert calls["n"] == 0  # all units were already checkpointed
+    assert_summary_sums_lineage(t, snap)
     assert clip_multiset(t.scan()) == before
     assert [s["operation"] for s in t.lineage_chain()][-1] == "compact"
 
@@ -588,13 +607,21 @@ def test_object_store_root_never_opens_a_local_footer(spark, monkeypatch):
 def test_manifest_df_reads_older_manifests_as_null(spark, tmp_table_dir):
     """manifest_df reads with the declared manifest schema: a column an
     older manifest predates reads as NULL, exactly as
-    pad_cast_manifest pads it for the Arrow path."""
+    pad_cast_manifest pads it for the Arrow path. The old-format
+    manifest is written under a new path, so no cached manifest can
+    answer for it."""
+    import dataclasses
+
     import pyarrow.parquet as pq
 
     t = make_table(spark, tmp_table_dir, n=40, parts=2)
-    path = f"{t.root}/{t.current_snapshot().manifests[0]}"
-    pq.write_table(pq.read_table(path).drop_columns(["content", "sequence", "min_codec"]), path)
-    got = sorted(t.manifest_df().collect(), key=lambda r: r.file_path)
-    want = sorted(t.manifest_entries().to_pylist(), key=lambda e: e["file_path"])
+    snap = t.current_snapshot()
+    old = pq.read_table(f"{t.root}/{snap.manifests[0]}")
+    rel = "metadata/manifests/older-format.parquet"
+    pq.write_table(old.drop_columns(["content", "sequence", "min_codec"]), f"{t.root}/{rel}")
+    older = dataclasses.replace(snap, manifests=[rel])
+    got = sorted(t.manifest_df(older).collect(), key=lambda r: r.file_path)
+    want = sorted(t.manifest_entries(older).to_pylist(), key=lambda e: e["file_path"])
     assert [r.asDict() for r in got] == want
+    assert len(got) == 2
     assert all(r.content is None and r.min_codec is None for r in got)

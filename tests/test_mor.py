@@ -184,16 +184,17 @@ def test_mor_lifecycle_on_object_store_without_rename(spark, tmp_path, monkeypat
 
 
 def test_mor_scan_plan_stays_map_side(spark, tmp_path):
-    """Delete application must never shuffle the payload: the key set
-    and the basename→sequence map both broadcast (two
-    BroadcastHashJoins, no SortMergeJoin); the only exchange in the
-    plan is the tiny delete-key max-sequence aggregation."""
+    """Deletes under DELETE_DRIVER_MAX_BYTES are planned on the driver:
+    the scan is a key filter over the file read, with no join, no
+    exchange and no ``_metadata`` column."""
     t = make_table(spark, str(tmp_path / "t"), n=150, parts=3)
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
     delete_keys_mor(t, _keys_df(spark, ids[:20]), job_id="dm")
     plan = t.scan()._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan
+    assert "Exchange" not in plan
+    assert "_metadata" not in plan
+    assert t.scan().count() == 130
 
 
 def test_mor_delete_racing_compaction_stays_applied(spark, tmp_path, monkeypatch):
@@ -231,21 +232,118 @@ def test_mor_delete_racing_compaction_stays_applied(spark, tmp_path, monkeypatch
 
 
 def test_mor_scan_plan_one_read_per_delete_group(spark, tmp_path):
-    """r5: N outstanding same-key delete files are read in ONE parquet
-    scan (r4 built one plan node per file — plan bloat at thousands of
-    delete files). Plan shape: exactly 2 parquet scans total (data +
-    the grouped delete read)."""
+    """N outstanding same-key delete files add no parquet scan to the
+    plan: their keys are read on the driver, so the plan scans the data
+    files alone, as it does with no delete outstanding."""
     t = make_table(spark, str(tmp_path / "t"), n=150, parts=3)
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    n_plain = t.scan()._jdf.queryExecution().executedPlan().toString().count("Scan parquet")
     for i in range(3):
         delete_keys_mor(
             t, _keys_df(spark, ids[i * 10 : (i + 1) * 10]), job_id=f"d{i}"
         )
     assert len(t.delete_entries()) == 3
     plan = t.scan()._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans == 2, f"expected 2 parquet scans (data + deletes), got {n_scans}"
+    assert plan.count("Scan parquet") == n_plain == 1
     assert t.scan().count() == 120
+
+
+def _rows(t):
+    return sorted((tuple(r) for r in t.scan().drop("bytes").collect()), key=repr)
+
+
+def test_driver_planned_deletes_match_the_anti_join(spark, tmp_path, monkeypatch):
+    """The driver-planned key filter and the anti-join (the path above
+    DELETE_DRIVER_MAX_BYTES, forced by a cap of 0) give identical row
+    multisets through a plain delete, several delete sequences with a
+    re-insert, NULL keys in data and delete files, a composite key and
+    a consolidated keyed file, on a table with a renamed non-key
+    column."""
+    from fupi_spark.evolve import rename_column
+    from fupi_spark.merge import consolidate_deletes
+
+    t = make_table(spark, str(tmp_path / "t"), n=150, parts=3)
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    nulls = synth_clips(spark, 5, seed=9, dur_range_ms=(50, 90)).withColumn(
+        "clip_id", F.lit(None).cast("string")
+    )
+    meta.append(t, nulls, job_id="nulls", parts=1)
+    rename_column(t, "transcript", "text")
+
+    def same_on_both_paths():
+        assert "Join" not in t.scan()._jdf.queryExecution().executedPlan().toString()
+        driver = _rows(t)
+        with monkeypatch.context() as m:
+            m.setattr(meta.Table, "DELETE_DRIVER_MAX_BYTES", 0)
+            assert "Join" in t.scan()._jdf.queryExecution().executedPlan().toString()
+            assert _rows(t) == driver
+        return driver
+
+    delete_keys_mor(t, _keys_df(spark, ids[:10]), job_id="plain")
+    assert len(same_on_both_paths()) == 145
+    # a NULL key deletes nothing, and NULL-keyed data rows survive
+    delete_keys_mor(t, _keys_df(spark, [ids[10], None]), job_id="nullkey")
+    rows = same_on_both_paths()
+    assert len(rows) == 144 and sum(r[0] is None for r in rows) == 5
+    # re-insert 5 deleted keys, then delete 2 of them again
+    old = t.scan(snapshot_id=2).filter(F.col("clip_id").isin(ids[:5]))
+    meta.append(t, old.withColumnRenamed("transcript", "text"), job_id="re", parts=1)
+    delete_keys_mor(t, _keys_df(spark, ids[3:5] + ids[20:25]), job_id="again")
+    assert len(same_on_both_paths()) == 142
+    # composite key: 4 matching (clip_id, codec) pairs, a pair with a
+    # wrong codec and a pair with a NULL field delete exactly 4 rows
+    codec = {r.clip_id: r.codec for r in t.scan().collect() if r.clip_id}
+    pairs = [(k, codec[k]) for k in ids[30:34]] + [(ids[40], "nope"), (None, codec[ids[41]])]
+    delete_keys_mor(
+        t,
+        spark.createDataFrame(pairs, "clip_id string, codec string"),
+        job_id="pairs",
+        key=["clip_id", "codec"],
+    )
+    assert len(same_on_both_paths()) == 138
+    consolidate_deletes(t, job_id="consol")
+    assert any(s["keyed_seq"] for s in t.delete_key_specs())
+    assert len(same_on_both_paths()) == 138
+
+
+def test_outstanding_deletes_launch_no_extra_spark_job(spark, tmp_path):
+    """``scan().count()`` and ``point_lookup`` launch as many Spark jobs
+    with small deletes outstanding as with none: one plain delete file,
+    then three delete files over two key sets, one consolidated."""
+    from fupi_spark.bloom import point_lookup
+    from fupi_spark.merge import consolidate_deletes
+
+    from .test_meta_compact import jobs_launched
+
+    t = make_table(spark, str(tmp_path / "t"), n=150, parts=3)
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+
+    def jobs():
+        return (
+            jobs_launched(spark, lambda: t.scan().count()),
+            jobs_launched(spark, lambda: point_lookup(t, "clip_id", ids[-1])[0].collect()),
+        )
+
+    none_outstanding = jobs()
+    delete_keys_mor(t, _keys_df(spark, ids[:3]), job_id="d1")
+    assert len(t.delete_entries()) == 1
+    assert jobs() == none_outstanding
+    delete_keys_mor(t, _keys_df(spark, ids[3:6]), job_id="d2")
+    consolidate_deletes(t, job_id="c")
+    # a file between delete sequences puts the read in two cohorts
+    meta.append(t, synth_clips(spark, 10, seed=5, dur_range_ms=(50, 90)), job_id="a", parts=1)
+    delete_keys_mor(t, _keys_df(spark, ids[6:9]), job_id="d3")
+    pairs = [(ids[10], "flac")]
+    delete_keys_mor(
+        t,
+        spark.createDataFrame(pairs, "clip_id string, codec string"),
+        job_id="d4",
+        key=["clip_id", "codec"],
+    )
+    specs = t.delete_key_specs()
+    assert len(specs) == 3 and len({s["key_cols"] for s in specs}) == 2
+    assert sum(s["keyed_seq"] for s in specs) == 1
+    assert jobs() == none_outstanding
 
 
 def test_consolidation_on_object_store_without_rename(spark, tmp_path, monkeypatch):

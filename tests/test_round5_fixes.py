@@ -3,9 +3,8 @@
 1. delete-resurrection guard — delete-applying rewrites (cluster,
    merge, delete_where) conflict when a delete-mor lands mid-rewrite
    (ADVICE r4 high / Iceberg RewriteFiles semantics);
-2. mixed-key delete files are readable (one anti-join per key set);
-3. the delete-key broadcast is byte-gated with an identical-result
-   shuffle fallback (VERDICT r4 #2b);
+2. mixed-key delete files are readable (each key set applies on its own);
+3. (moved: the driver-planned vs anti-join parity test is in test_mor.py);
 4. consolidate_deletes folds N delete files -> 1 per key set with
    per-key sequences preserved (VERDICT r4 #2a);
 5. WAP rejection removes only the candidate's files — a concurrent
@@ -129,23 +128,6 @@ def test_mixed_key_delete_files_apply_independently(spark, tmp_path):
     assert t.scan().count() == 150 - n_codec0 - n_id_not_codec0
     assert t.scan().filter(F.col("clip_id").isin(ids[:20])).count() == 0
     assert t.scan().filter(F.col("codec") == codecs[0]).count() == 0
-
-
-# -- 3. byte-gated broadcast with identical shuffle fallback ------------------
-
-
-def test_delete_broadcast_gate_and_shuffle_fallback(spark, tmp_path, monkeypatch):
-    t = make_table(spark, str(tmp_path / "t"), n=150, parts=3)
-    victims = _ids(t)[:25]
-    delete_keys_mor(t, _keys_df(spark, victims), job_id="d")
-    broadcast_rows = _scan_multiset(t)
-    plan_b = t.scan()._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan_b
-
-    monkeypatch.setattr(Table, "DELETE_BROADCAST_MAX_BYTES", 0)
-    shuffle_rows = _scan_multiset(t)
-    assert shuffle_rows == broadcast_rows
-    monkeypatch.undo()
 
 
 # -- 4. consolidate_deletes ---------------------------------------------------

@@ -209,3 +209,33 @@ def test_streaming_wap_audited_ingest(spark, tmp_path):
         spark, f"{src}/*", t, ckpt, max_files_per_trigger=1, audit_fn=snr_audit()
     )
     assert t.current_snapshot().snapshot_id == v
+
+
+def test_streaming_wap_runs_the_job_guard_once_per_batch(spark, tmp_path, monkeypatch):
+    """With an audit, each fresh micro-batch runs the job-id guard
+    (committed_snapshot_for_job, which reads every snapshot JSON) once:
+    in its append, not again in the sink."""
+    src = str(tmp_path / "landing")
+    for i in range(2):
+        synth_clips(spark, 10, seed=i, dur_range_ms=(50, 90)).coalesce(1).write.parquet(
+            f"{src}/f{i}"
+        )
+    t = meta.create_table(spark, str(tmp_path / "table"))
+    calls = []
+    real = meta.Table.committed_snapshot_for_job
+
+    def counting(self, job_id):
+        calls.append(job_id)
+        return real(self, job_id)
+
+    monkeypatch.setattr(meta.Table, "committed_snapshot_for_job", counting)
+    stream_clips_into_table(
+        spark,
+        f"{src}/*",
+        t,
+        str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+        audit_fn=lambda rows: None,
+    )
+    assert calls == ["stream-b00000000", "stream-b00000001"]
+    assert t.scan(tag="published").count() == 20
