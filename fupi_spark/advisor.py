@@ -40,7 +40,8 @@ def advise(
       number lakehouse_cluster_quality reports — it predicts pruning
       fan-in);
     - ``bloom-refresh`` when live files lack bloom index rows for
-      ``bloom_col`` (point lookups read those files unconditionally);
+      ``bloom_col`` — all of them when the index was built for another
+      column or schema (point lookups read those files unconditionally);
     - ``expire`` when the snapshot log exceeds ``max_snapshots``.
     """
     recs: list[dict] = []
@@ -105,7 +106,7 @@ def advise(
                 )
 
     if bloom_col is not None:
-        idx = read_index(table)
+        idx = read_index(table, bloom_col, table.current_snapshot())
         missing = [e["file_path"] for e in entries if e["file_path"] not in idx]
         if missing:
             recs.append(

@@ -6,24 +6,32 @@ data file, so each file's (min, max) range covers nearly the whole key
 space and stats pruning (meta.scan_pruned) degenerates to a full scan —
 the exact case Iceberg solves with parquet bloom filters / Puffin blobs.
 This module builds the same structure engine-side: one fixed-size bloom
-bitset per data file, stored as a parquet sidecar under the table's
-metadata directory.
+bitset per data file, kept in one parquet object, ``metadata/bloom.parquet``,
+written and read with pyarrow through the table's ``Storage``.
 
 Scale properties:
 
-- the build is one distributed pass: each file's rows hash inside a
-  per-file ``applyInPandas`` group (k=4 md5-derived probes into an
-  m-bit set, packed with ``np.packbits``), so the index job shuffles
-  only (file, key-hash) pairs and emits O(files) rows of m/8 bytes;
-- data files are IMMUTABLE, so bloom rows are too: a refresh after new
-  commits hashes ONLY files without an index row (incremental by
-  construction — compaction outputs get fresh rows, their inputs' rows
-  are dropped with the listing);
-- a lookup reads the O(files) index (a few MB per million files at
-  m=2^15), tests k bits per candidate file DRIVER-side, and scans only
-  the surviving files with the key predicate pushed down — a point
-  lookup on a 10^12-row unclustered table touches ~the one file that
-  holds the key (+ deterministic false positives at ~(1-e^{-kn/m})^k);
+- the object is stamped (parquet key-value metadata) with the indexed
+  column and a digest of the schema ops of the snapshot it was built
+  from; an index whose stamp differs from the reading snapshot's is
+  absent — a lookup prunes nothing, a refresh rebuilds every file — so
+  a lookup on another column, or after a rename, widen, added default
+  or rollback, can never prune a file that holds the key;
+- the build is one Spark job: the to-do files are read with the
+  snapshot's schema ops replayed, each non-null key hashes JVM-side to
+  k=4 md5-derived positions in an m-bit set, and only DISTINCT
+  (file name, position) pairs reach the driver — at most m per file,
+  never the file's row count — where numpy packs them into bitsets;
+- data files are IMMUTABLE, so bitsets are too: a refresh hashes ONLY
+  live files without a bitset (compaction outputs get fresh ones, their
+  inputs' are dropped), and writes the object only when its rows
+  change — one atomic ``storage.put``, no Spark write;
+- a lookup reads the O(files) object (a few MB per thousand files at
+  m=2^15) on the driver, tests k bits per candidate file, and scans only
+  the surviving files with the key predicate pushed down: its one Spark
+  job is that scan — a point lookup on a 10^12-row unclustered table
+  touches ~the one file that holds the key (+ deterministic false
+  positives at ~(1-e^{-kn/m})^k);
 - false positives only ever cost an extra file read; misses are
   impossible (bits are set for every present key — the pytest asserts
   the no-false-negative invariant exhaustively).
@@ -31,20 +39,24 @@ Scale properties:
 
 from __future__ import annotations
 
+import hashlib
+import json
 import logging
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from .session import session_conf
 
 #: bits per file bitset (2^15 = 4 KiB packed); with k=4 probes this
 #: holds ~2.3k keys/file at <1% false-positive rate
 BLOOM_BITS = 1 << 15
 BLOOM_K = 4
 
-INDEX_REL = "metadata/bloom"
+INDEX_REL = "metadata/bloom.parquet"
 
 _log = logging.getLogger("fupi_spark")
 
@@ -53,8 +65,6 @@ def _positions(keys: np.ndarray) -> np.ndarray:
     """k deterministic bit positions per key: md5(key|i) low 60 bits
     mod m — the same engine-portable hash family the portable sketches
     use (pipeline_queries), so index and probe can never drift."""
-    import hashlib
-
     out = np.empty((len(keys), BLOOM_K), np.int64)
     for r, key in enumerate(keys):
         for i in range(BLOOM_K):
@@ -67,169 +77,123 @@ def probe_positions(key: str) -> list[int]:
     return _positions(np.array([key], dtype=object))[0].tolist()
 
 
-_INDEX_SCHEMA = T.StructType(
-    [
-        T.StructField("file_path", T.StringType(), False),
-        T.StructField("bitset", T.BinaryType(), False),
-        # set-bit count: fill ratio (n_bits/m) gives the file's
-        # false-positive rate estimate ((n_bits/m)^k) for free
-        T.StructField("n_bits", T.LongType(), False),
-    ]
-)
+def _stamp(table, col: str, snap) -> dict[bytes, bytes]:
+    """What an index's bits mean: the column hashed and the schema ops
+    its values were read with."""
+    ops = json.dumps(table.schema_ops(snap), sort_keys=True).encode()
+    return {b"bloom_column": col.encode(), b"schema_ops": hashlib.sha256(ops).hexdigest().encode()}
 
 
-def read_index(table) -> dict[str, tuple[str, bytes, int]]:
-    """The table's bloom rows as {file_path: (file_path, bitset,
-    n_bits)}. An index that was never written reads as empty without a
-    Spark job. Any other read failure is logged and also reads as
-    empty: files without a row are never pruned, so a lost index costs
-    reads, never rows."""
-    if not table.storage.list(INDEX_REL):
+def read_index(table, col: str, snap) -> dict[str, bytes]:
+    """The table's bloom bitsets for ``col`` at ``snap`` as
+    {file_path: packed bitset}. An index that was never written, or
+    whose stamp is not ``snap``'s, reads as empty; an unreadable one is
+    logged and reads as empty too: files without a bitset are never
+    pruned, so a lost index costs reads, never rows."""
+    if not table.storage.exists(INDEX_REL):
         return {}
     try:
-        rows = table.read_with_schema([f"{table.root}/{INDEX_REL}"], _INDEX_SCHEMA).collect()
-    except Exception as e:
+        idx = pq.read_table(pa.BufferReader(table.storage.read(INDEX_REL)))
+    except (OSError, pa.ArrowException) as e:
         _log.warning("bloom index of %s unreadable, not pruning: %s", table.root, e)
         return {}
-    return {r.file_path: (r.file_path, bytes(r.bitset), int(r.n_bits)) for r in rows}
+    if not _stamp(table, col, snap).items() <= (idx.schema.metadata or {}).items():
+        return {}
+    return dict(zip(idx["file_path"].to_pylist(), idx["bitset"].to_pylist()))
 
 
 def refresh_bloom_index(table, col: str) -> dict:
-    """Build/refresh the bloom sidecar for ``col`` at the CURRENT
-    snapshot: hash only live data files that have no index row yet
-    (immutability makes old rows permanently valid), drop rows for
-    files no longer live. Returns {'indexed': bitsets built now (files
-    with no non-null key get an empty sentinel and are not counted),
-    'kept': reused, 'files': total_live}."""
-    spark = table.spark
-    live = set(e["file_path"] for e in table.data_entries())
-    existing = {p: row for p, row in read_index(table).items() if p in live}
-    todo = sorted(p for p in live if p not in existing)
-
-    rows: list[tuple] = list(existing.values())
-    built: dict[str, tuple] = {}
+    """Build/refresh the bloom index for ``col`` at the CURRENT
+    snapshot: hash only live data files that have no bitset yet
+    (immutability keeps old bitsets valid while the stamp holds), drop
+    bitsets of files no longer live. Returns {'indexed': bitsets built
+    now (files with no non-null key get an empty sentinel and are not
+    counted), 'kept': reused, 'files': total_live}."""
+    snap = table.current_snapshot()
+    live = [e["file_path"] for e in table.data_entries(snap)]
+    old = read_index(table, col, snap)
+    rows = {p: old[p] for p in live if p in old}
+    kept = len(rows)
+    todo = {p.rsplit("/", 1)[-1]: p for p in live if p not in old}
+    built = 0
     if todo:
-        # evolution-aware read of the todo files: old files store the
-        # PHYSICAL pre-rename column names, so a raw read would fail to
-        # resolve a renamed index column (AnalysisException). Replay
-        # the snapshot's schema ops like every other consumer — but
-        # through read_parquet, NOT _read_files: MOR delete application
-        # may union or join away input_file_name(), and indexing to-be-deleted keys
-        # is harmless anyway (false positives only, never false
-        # negatives).
-        df = table.read_parquet(
-            [f"{table.root}/{p}" for p in todo], table.current_snapshot()
-        )
-        # NULL keys carry no probe positions (md5(NULL) is NULL; the
-        # NaN positions crashed the bitset scatter) and a point lookup
-        # is by definition on a concrete key — leave them unindexed.
-        # A file of ONLY null keys yields no row here; it gets an empty
-        # sentinel bitset below.
-        df = df.select(
-            F.col(col).cast("string").alias("_key"),
-            F.input_file_name().alias("_file"),
-        ).filter(F.col("_key").isNotNull())
-        # hash to bit positions JVM-side (md5 inside codegen — the
-        # same bytes hashlib computes in probe_positions), then
-        # distinct: the shuffle carries at most m=BLOOM_BITS
-        # (file, position) pairs per file, and each applyInPandas
-        # group is bounded by the bitset size — never by the file's
-        # row count
+        # the evolved read: old files store PHYSICAL pre-rename names,
+        # and a widened column must hash as the type lookups compare
+        # in. read_parquet, not _read_files: indexing to-be-deleted
+        # keys costs false positives only, and a delete-aware read
+        # may not keep _metadata. NULL keys have no probe positions
+        # (md5(NULL) is NULL) and a lookup is on a concrete key.
+        df = table.read_parquet([f"{table.root}/{p}" for p in todo.values()], snap)
+        key = F.col(col).cast("string")
         probe = F.explode(
             F.array(
                 *[
-                    (
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat(F.col("_key"), F.lit(f"|{i}"))),
-                                1,
-                                15,
-                            ),
-                            16,
-                            10,
-                        ).cast("long")
-                        % BLOOM_BITS
-                    )
+                    F.conv(F.substring(F.md5(F.concat(key, F.lit(f"|{i}"))), 1, 15), 16, 10)
+                    .cast("long")
+                    % BLOOM_BITS
                     for i in range(BLOOM_K)
                 ]
             )
         )
-        pos_df = (
-            df.select("_file", probe.alias("_pos")).distinct()
+        pairs = (
+            df.where(key.isNotNull())
+            .select(F.col("_metadata.file_name").alias("file_name"), probe.alias("pos"))
+            .distinct()
         )
-
-        root = table.root.split("://", 1)[-1].rstrip("/") + "/"
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            from urllib.parse import unquote
-
+        # without AQE the distinct's shuffle runs inside the collect's
+        # one job instead of being submitted as a job of its own
+        with session_conf(table.spark, {"spark.sql.adaptive.enabled": "false"}):
+            pairs = pairs.toArrow()
+        grouped = pairs.group_by("file_name").aggregate([("pos", "list")])
+        built = grouped.num_rows
+        for name, pos in zip(
+            grouped["file_name"].to_pylist(), grouped["pos_list"].to_numpy(zero_copy_only=False)
+        ):
             bits = np.zeros(BLOOM_BITS, bool)
-            bits[pdf["_pos"].to_numpy()] = True
-            # normalize the absolute input_file_name URI back to the
-            # manifest-relative path ("file:///.../table/data/x.parquet"
-            # -> "data/x.parquet"; the root may carry a scheme too)
-            f = unquote(pdf["_file"].iloc[0]).split("://", 1)[-1]
-            rel = f.split(root, 1)[-1]
-            return pd.DataFrame(
-                {
-                    "file_path": [rel],
-                    "bitset": [np.packbits(bits).tobytes()],
-                    "n_bits": [int(bits.sum())],
-                }
-            )
-
-        built = {
-            r.file_path: (r.file_path, bytes(r.bitset), int(r.n_bits))
-            for r in pos_df.groupBy("_file")
-            .applyInPandas(build, schema=_INDEX_SCHEMA)
-            .collect()
-        }
-        stray = set(built) - set(todo)
-        if stray:
-            # a sentinel for a file whose real row went astray would
-            # prune it for every key: fail loudly instead
-            raise RuntimeError(f"bloom rows for unknown files: {sorted(stray)[:3]}")
-        rows.extend(built.values())
+            bits[pos] = True
+            rows[todo.pop(name)] = np.packbits(bits).tobytes()
         # files with no non-null key get an all-zero bitset: immutability
-        # makes it permanently valid, so later refreshes skip them, and
-        # point_lookup prunes them for every key (col == key never
-        # matches NULL)
-        empty = bytes(BLOOM_BITS // 8)
-        rows.extend((p, empty, 0) for p in todo if p not in built)
+        # keeps it valid, so later refreshes skip them, and point_lookup
+        # prunes them for every key (col == key never matches NULL)
+        rows.update((p, bytes(BLOOM_BITS // 8)) for p in todo.values())
 
-    if rows:
-        spark.createDataFrame(rows, _INDEX_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{table.root}/{INDEX_REL}")
-    return {"indexed": len(built), "kept": len(existing), "files": len(live)}
+    if rows.keys() != old.keys():
+        paths = sorted(rows)
+        idx = pa.table(
+            {
+                "file_path": pa.array(paths, pa.string()),
+                "bitset": pa.array([rows[p] for p in paths], pa.binary()),
+            }
+        ).replace_schema_metadata(_stamp(table, col, snap))
+        buf = pa.BufferOutputStream()
+        pq.write_table(idx, buf)
+        table.storage.put(INDEX_REL, buf.getvalue().to_pybytes())
+    return {"indexed": built, "kept": kept, "files": len(live)}
 
 
 def point_lookup(table, col: str, key: str) -> tuple[DataFrame, int, int]:
     """Bloom-pruned point lookup: returns (rows DataFrame, files_read,
-    files_total). Reads the O(files) index, tests the key's k bits per
-    file driver-side, scans only surviving files with the equality
+    files_total). Tests the key's k bits in each live file's bitset on
+    the driver and scans only surviving files with the equality
     predicate pushed to parquet; outstanding MOR deletes add only a key
     filter planned on the driver (Table._read_files), so the lookup's
-    Spark jobs are the index read and the file read. No index row for a
-    live file (e.g. refresh not yet run after a commit) means the file
-    cannot be pruned — it is read unconditionally (no false negatives
-    ever)."""
-    live = [e["file_path"] for e in table.data_entries()]
+    one Spark job is the file read. A live file without a bitset (e.g.
+    refresh not yet run after a commit, or an index stamped for another
+    column or schema) cannot be pruned — it is read unconditionally (no
+    false negatives ever)."""
+    snap = table.current_snapshot()
+    live = [e["file_path"] for e in table.data_entries(snap)]
     pos = probe_positions(key)
-    bitsets = {
-        p: np.unpackbits(np.frombuffer(bits, np.uint8))
-        for p, (_, bits, _) in read_index(table).items()
-    }
+    idx = read_index(table, col, snap)
+    # np.packbits order: bit i is bit 7 - i % 8 of byte i // 8
     keep = [
         p
         for p in live
-        if p not in bitsets or all(bitsets[p][i] for i in pos)
+        if p not in idx or all(idx[p][i >> 3] & (0x80 >> (i & 7)) for i in pos)
     ]
     if not keep:
-        return table.empty_scan().filter(F.col(col) == key), 0, len(live)
+        return table.empty_scan(snap).filter(F.col(col) == key), 0, len(live)
     df = table._drop_internal(
-        table._read_files(
-            [f"{table.root}/{p}" for p in keep], table.current_snapshot()
-        )
+        table._read_files([f"{table.root}/{p}" for p in keep], snap)
     ).filter(F.col(col).cast("string") == key)
     return df, len(keep), len(live)

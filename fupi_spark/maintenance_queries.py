@@ -1576,7 +1576,7 @@ def lakehouse_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-indexed point lookup on an UNCLUSTERED table — the case
     min/max stats pruning cannot touch (every file's clip_id range
     spans the key space after a plain append). The engine builds the
-    per-file bloom sidecar, then answers 6 present + 2 absent probes;
+    per-file bloom index, then answers 6 present + 2 absent probes;
     the oracle predicts per key BOTH the payload (from the pre-state
     sidecar) and the pruning arithmetic itself: a present unique key
     must read exactly 1 of the 8 files, an absent key exactly 0 —

@@ -178,7 +178,7 @@ class Table:
         self._schema_cache: dict[str, T.StructType] = {}
         # Arrow manifest per manifest path (immutable too), newest last
         self._manifest_cache: dict[str, pa.Table] = {}
-        # MOR delete keys with their sequences per delete file path
+        # MOR delete files as Arrow per path (immutable too)
         self._delete_key_cache: dict[str, pa.Table] = {}
 
     # -- paths ------------------------------------------------------------
@@ -358,14 +358,19 @@ class Table:
         """Outstanding delete entries annotated with their key-column
         set and whether they carry PER-KEY sequences (``_del_seq``
         column — written by consolidate_deletes; plain delete files
-        apply at their single manifest sequence). Key columns come from
-        the reader's per-file schema (file_schema, cached per path —
-        delete files are immutable), so repeated scans cost O(new delete
-        files) footer reads — and consolidation keeps the outstanding
-        count at ~1 per key set."""
+        apply at their single manifest sequence). A delete file small
+        enough for the driver path takes its column names from the
+        pyarrow read of its keys (_delete_file: through ``storage``,
+        cached per path — delete files are immutable), so no root runs
+        a Spark job for them; a larger one, only ever anti-joined, from
+        the reader's per-file schema. Consolidation keeps the
+        outstanding count at ~1 per key set."""
         out = []
         for e in self.delete_entries(snapshot):
-            names = self.file_schema(f"{self.root}/{e['file_path']}").names
+            if (e["byte_size"] or 0) <= self.DELETE_DRIVER_MAX_BYTES:
+                names = self._delete_file(e["file_path"]).column_names
+            else:
+                names = self.file_schema(f"{self.root}/{e['file_path']}").names
             out.append(
                 {
                     **e,
@@ -440,13 +445,20 @@ class Table:
         planned on the driver (_read_cohorts: a key filter per sequence
         cohort, no join, no Spark job); larger sets are anti-joined
         (_apply_deletes)."""
+        return reduce(DataFrame.union, self._read_parts(paths, snap))
+
+    def _read_parts(self, paths: list[str], snap: Snapshot | None) -> list[DataFrame]:
+        """_read_files as the frames its read is the union of: one per
+        sequence cohort, each a single file scan whose ``_metadata``
+        column still resolves (a ``Union`` hides it), or the one
+        anti-joined read."""
         snap = snap or self.current_snapshot()
         dels = self.delete_key_specs(snap)
         if not dels:
-            return self.read_parquet(paths, snap)
+            return [self.read_parquet(paths, snap)]
         if sum(e["byte_size"] or 0 for e in dels) <= self.DELETE_DRIVER_MAX_BYTES:
             return self._read_cohorts(paths, snap, dels)
-        return self._apply_deletes(self.read_parquet(paths, snap), snap, dels)
+        return [self._apply_deletes(self.read_parquet(paths, snap), snap, dels)]
 
     def read_parquet(self, paths: list[str], snap: Snapshot | None = None) -> DataFrame:
         """The engine's one reader of table files: ``paths`` (taken from
@@ -540,9 +552,9 @@ class Table:
     #: 3 extra Spark jobs whatever the key count. A 3-key file is ~1 KB.
     DELETE_DRIVER_MAX_BYTES = 8 << 10
 
-    def _read_cohorts(self, paths: list[str], snap: Snapshot, dels: list[dict]) -> DataFrame:
-        """Read ``paths`` with the outstanding deletes ``dels``
-        (delete_key_specs rows) planned on the driver, Iceberg
+    def _read_cohorts(self, paths: list[str], snap: Snapshot, dels: list[dict]) -> list[DataFrame]:
+        """``paths`` read per cohort with the outstanding deletes
+        ``dels`` (delete_key_specs rows) planned on the driver, Iceberg
         DeleteFileIndex-style: a delete with sequence d applies to a
         data file of sequence s iff s <= d, so files are split into
         cohorts by ``bisect_left(sorted delete sequences, s)`` — every
@@ -550,7 +562,7 @@ class Table:
         read with the schema of the whole path set (a split never
         changes a column's type) and filtered by its keys per key-column
         set (_key_filter); a cohort no delete applies to is read
-        unfiltered. The union has no join, no exchange and no
+        unfiltered. Their union has no join, no exchange and no
         ``_metadata`` column, and the key read launches no Spark job."""
         from .evolve import apply_schema_ops
 
@@ -575,7 +587,7 @@ class Table:
                     if live.num_rows:
                         df = df.filter(_key_filter(df, key_cols, live))
             parts.append(df)
-        return reduce(DataFrame.union, parts)
+        return parts
 
     def _delete_key_sets(self, dels: list[dict]) -> dict[tuple, pa.Table]:
         """Per key-column set, its outstanding delete keys folded to
@@ -594,23 +606,25 @@ class Table:
             for key_cols, tables in sorted(groups.items())
         }
 
-    def _delete_keys(self, e: dict) -> pa.Table:
-        """One delete file's keys and their ``_del_seq`` as Arrow, read
-        on the driver through ``storage`` (so on every root, object
-        stores included) and cached by path: delete files are immutable
-        and a file's manifest sequence never changes. A consolidated
-        file carries per-key ``_del_seq``; a plain one applies at its
-        manifest sequence."""
-        rel = e["file_path"]
+    def _delete_file(self, rel: str) -> pa.Table:
+        """One delete file as Arrow, read on the driver through
+        ``storage`` (so on every root, object stores included) and
+        cached by path: delete files are immutable."""
         t = self._delete_key_cache.get(rel)
         if t is None:
-            cols = [*e["key_cols"], "_del_seq"] if e["keyed_seq"] else list(e["key_cols"])
-            t = pq.read_table(pa.BufferReader(self.storage.read(rel)), columns=cols)
-            if not e["keyed_seq"]:
-                seq = pa.array([e["sequence"] or 0] * t.num_rows, pa.int64())
-                t = t.append_column("_del_seq", seq)
+            t = pq.read_table(pa.BufferReader(self.storage.read(rel)))
             self._delete_key_cache[rel] = t
         return t
+
+    def _delete_keys(self, e: dict) -> pa.Table:
+        """One delete file's keys and their ``_del_seq``: a consolidated
+        file carries per-key ``_del_seq``; a plain one applies at its
+        manifest sequence (which never changes)."""
+        t = self._delete_file(e["file_path"])
+        if e["keyed_seq"]:
+            return t.select([*e["key_cols"], "_del_seq"])
+        seq = pa.array([e["sequence"] or 0] * t.num_rows, pa.int64())
+        return t.select(list(e["key_cols"])).append_column("_del_seq", seq)
 
     def _apply_deletes(self, df: DataFrame, snap: Snapshot, dels: list[dict]) -> DataFrame:
         """The anti-join for delete sets above DELETE_DRIVER_MAX_BYTES,
@@ -783,10 +797,11 @@ class Table:
         exact physical order (file order from the manifest, row order
         within a parquet file is preserved by the reader).
 
-        One scan + a broadcast join of (file → ordinal) on
-        ``_metadata.file_path`` — NOT a union of per-file branches,
-        whose plan grows O(files) and whose per-branch footer reads
-        serialize on the driver."""
+        One scan per delete cohort (_read_parts) + a broadcast join of
+        (file → ordinal) on ``_metadata.file_name``, attached to each
+        cohort before their union hides ``_metadata`` — NOT a union of
+        per-file branches, whose plan grows O(files) and whose
+        per-branch footer reads serialize on the driver."""
         snap = self.snapshot(snapshot_id) if snapshot_id else self.current_snapshot()
         entries = sorted(self.data_entries(snap), key=lambda e: e["file_path"])
         if not entries:
@@ -795,15 +810,19 @@ class Table:
             [(e["file_path"].rsplit("/", 1)[-1], i) for i, e in enumerate(entries)],
             "_fname string, _file_ord int",
         )
-        df = self._drop_internal(
-            self._read_files(
-                [f"{self.root}/{e['file_path']}" for e in entries], snap
-            )
-        )
         # join on the basename (unique in data/) — robust to whatever
         # canonical path form Spark reports in _metadata.file_path
-        df = df.withColumn("_fname", F.col("_metadata.file_name"))
-        return df.join(F.broadcast(ord_df), "_fname").drop("_fname")
+        parts = self._read_parts([f"{self.root}/{e['file_path']}" for e in entries], snap)
+        df = reduce(
+            DataFrame.union,
+            (
+                p.withColumn("_fname", F.col("_metadata.file_name"))
+                .join(F.broadcast(ord_df), "_fname")
+                .drop("_fname")
+                for p in parts
+            ),
+        )
+        return self._drop_internal(df)
 
     # -- writes --------------------------------------------------------------
     def stage_dir(self, job_id: str) -> str:

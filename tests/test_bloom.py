@@ -1,6 +1,7 @@
 """Bloom-filter file index: no-false-negative invariant, pruning
 power on unclustered tables, incremental refresh, unindexed-file
-fallback."""
+fallback, the column/schema stamp, and the index's Spark jobs and
+storage writes."""
 
 from __future__ import annotations
 
@@ -138,7 +139,6 @@ def test_unreadable_index_logs_and_disables_pruning(spark, tmp_path, caplog):
     """A never-written index is silently empty; an unreadable one logs
     a warning and prunes nothing, so lookups stay exact."""
     import logging
-    import os
 
     t = make_table(spark, str(tmp_path / "t"), n=40, parts=2)
     key = t.scan().select("clip_id").first().clip_id
@@ -147,10 +147,88 @@ def test_unreadable_index_logs_and_disables_pruning(spark, tmp_path, caplog):
         assert df.count() == 1 and files_read == total == 2
         assert not caplog.records
 
-        os.makedirs(f"{t.root}/metadata/bloom")
-        with open(f"{t.root}/metadata/bloom/part-00000.parquet", "wb") as f:
+        with open(f"{t.root}/metadata/bloom.parquet", "wb") as f:
             f.write(b"not a parquet file")
         df, files_read, total = point_lookup(t, "clip_id", key)
         assert [r.clip_id for r in df.collect()] == [key]
         assert files_read == total == 2
     assert any("bloom index" in r.getMessage() for r in caplog.records)
+
+
+def test_index_of_another_column_prunes_nothing(spark, tmp_path):
+    """The index is stamped with the column it hashed: a lookup on
+    another column reads every file, and the advisor asks for a refresh
+    of that column."""
+    from fupi_spark.advisor import advise
+    from fupi_spark.evolve import add_column
+
+    t = make_table(spark, str(tmp_path / "t"), n=120, parts=6)
+    add_column(t, "lang", "string", default="bg")
+    refresh_bloom_index(t, "clip_id")
+    df, files_read, total = point_lookup(t, "lang", "bg")
+    assert df.count() == 120 and files_read == total == 6
+    recs = {r["op"]: r for r in advise(t, bloom_col="lang")}
+    assert recs["bloom-refresh"]["unindexed_files"] == 6
+    assert "bloom-refresh" not in {r["op"] for r in advise(t, bloom_col="clip_id")}
+
+
+def test_widened_column_lookup_before_and_after_refresh(spark, tmp_path):
+    """The index is stamped with the schema ops it was read with: after
+    widening the indexed column a lookup in the new type's text finds
+    its row, before the next refresh (nothing pruned) and after it (the
+    refresh rebuilds every file rather than keep the old bits)."""
+    from fupi_spark.evolve import widen_column
+
+    t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
+    refresh_bloom_index(t, "dur_ms")
+    dur = t.scan().select("dur_ms").first().dur_ms
+    n = t.scan().filter(F.col("dur_ms") == dur).count()
+    widen_column(t, "dur_ms", "double")
+    df, files_read, total = point_lookup(t, "dur_ms", f"{dur}.0")
+    assert df.count() == n and files_read == total == 3
+    assert refresh_bloom_index(t, "dur_ms") == {"indexed": 3, "kept": 0, "files": 3}
+    df, files_read, total = point_lookup(t, "dur_ms", f"{dur}.0")
+    assert df.count() == n and files_read <= total
+
+
+def test_index_jobs_and_writes(spark, tmp_path, monkeypatch):
+    """A lookup against a current index launches one Spark job (the
+    file read); a refresh with new files launches one, and one with
+    nothing to do launches none and writes nothing. The index is the
+    one ``metadata/bloom.parquet`` object."""
+    import os
+
+    from fupi_spark.bloom import INDEX_REL
+
+    from .test_meta_compact import jobs_launched
+
+    t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
+    assert jobs_launched(spark, lambda: refresh_bloom_index(t, "clip_id")) == 1
+    assert os.path.isfile(f"{t.root}/{INDEX_REL}")
+    assert not os.path.exists(f"{t.root}/metadata/bloom")
+    k = t.scan().select("clip_id").first().clip_id
+    out = {}
+    jobs = jobs_launched(spark, lambda: out.update(rows=point_lookup(t, "clip_id", k)[0].collect()))
+    assert jobs == 1 and len(out["rows"]) == 1
+
+    puts = []
+    monkeypatch.setattr(t.storage, "put", lambda rel, data: puts.append(rel))
+    jobs = jobs_launched(spark, lambda: out.update(rep=refresh_bloom_index(t, "clip_id")))
+    assert out["rep"] == {"indexed": 0, "kept": 3, "files": 3}
+    assert jobs == 0 and puts == []
+
+
+def test_refresh_and_lookup_on_object_store(spark, tmp_path):
+    """The index is written and read through the table's Storage, so a
+    refresh and a lookup round-trip on the S3-semantics storage."""
+    from fupi_spark.storage import ObjectStoreStorage
+
+    root = str(tmp_path / "obj")
+    t = meta.create_table(spark, root, storage=ObjectStoreStorage(root))
+    meta.append(t, synth_clips(spark, 60, dur_range_ms=(50, 90), parts=3), job_id="s")
+    assert refresh_bloom_index(t, "clip_id") == {"indexed": 3, "kept": 0, "files": 3}
+    k = t.scan().select("clip_id").first().clip_id
+    df, files_read, total = point_lookup(t, "clip_id", k)
+    assert [r.clip_id for r in df.collect()] == [k]
+    assert files_read == 1 and total == 3
+    assert t.storage.list("metadata/bloom") == []

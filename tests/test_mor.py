@@ -380,3 +380,46 @@ def test_consolidation_on_object_store_without_rename(spark, tmp_path, monkeypat
         assert not os.path.exists(f"{root}/{p}")
     assert os.path.exists(f"{root}/{t.delete_entries()[0]['file_path']}")
     assert t.scan().count() == 100
+
+
+def test_scan_in_manifest_order_with_deletes_in_two_cohorts(spark, tmp_path):
+    """scan_in_manifest_order gives every row its file's ordinal while
+    MOR deletes are outstanding: two deletes around an append split the
+    driver-planned read into two sequence cohorts, whose union hides
+    ``_metadata``."""
+    import pyarrow.parquet as pq
+
+    t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    delete_keys_mor(t, _keys_df(spark, ids[:3]), job_id="d1")
+    meta.append(t, synth_clips(spark, 10, seed=5, dur_range_ms=(50, 90)), job_id="a", parts=1)
+    delete_keys_mor(t, _keys_df(spark, ids[3:6]), job_id="d2")
+    files = sorted(e["file_path"] for e in t.data_entries())
+    want = sorted(
+        (k, i)
+        for i, f in enumerate(files)
+        for k in pq.read_table(f"{t.root}/{f}", columns=["clip_id"])["clip_id"].to_pylist()
+        if k not in ids[:6]
+    )
+    assert len(files) == 4 and len(want) == 64
+
+    df = t.scan_in_manifest_order().select("clip_id", "_file_ord")
+    assert sorted((r.clip_id, r._file_ord) for r in df.collect()) == want
+
+
+def test_object_store_root_reads_deletes_without_inference(spark, tmp_path, monkeypatch):
+    """Under an object-store root the reader takes each data file's
+    schema from Spark's inference; a small delete file's column names
+    come from the pyarrow read of its keys through ``storage`` instead,
+    so a read after delete_keys_mor infers nothing."""
+    t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
+    t._local = False  # read as under an s3a:// root
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+
+    def no_inference(self, path):
+        raise AssertionError(f"inferred the schema of {path}")
+
+    monkeypatch.setattr(meta.Table, "_infer_schema", no_inference)
+    delete_keys_mor(t, _keys_df(spark, ids[:3]), job_id="d1")
+    assert t.scan().count() == 57
+    assert [s["key_cols"] for s in t.delete_key_specs()] == [("clip_id",)]
