@@ -31,7 +31,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 FAKE_MAGIC = b"FAKE"
@@ -486,27 +485,8 @@ def extract_features(clips: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# resample (multimodal resize stage) — real numpy polyphase kernel with
-# a guarded scipy upgrade path
+# resample (multimodal resize stage) — real numpy polyphase kernel
 # ---------------------------------------------------------------------------
-
-
-def _load_resampler():
-    """Guarded kernel seam (same pattern as the ONNX/pysbd seams):
-    scipy.signal.resample_poly when importable AND FUPI_USE_SCIPY=1;
-    otherwise the in-repo windowed-sinc polyphase below. Textbook
-    multirate DSP (zero-stuff → lowpass at π/max(L,M) → decimate) —
-    public-knowledge algorithm, implemented from the definition."""
-    import os as _o
-
-    if _o.environ.get("FUPI_USE_SCIPY") == "1":
-        try:
-            from scipy.signal import resample_poly
-
-            return lambda x, up, down: resample_poly(x, up, down)
-        except ImportError:
-            pass
-    return _resample_poly_np
 
 
 def _resample_poly_np(x: np.ndarray, up: int, down: int) -> np.ndarray:
@@ -555,12 +535,7 @@ def resample_clips(clips: DataFrame, target_sr: int) -> DataFrame:
     payload change. Fake-container codecs are re-framed as-is."""
     from .schema import CLIPS_SCHEMA
 
-    resample = None  # loaded once per worker inside the closure
-
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nonlocal resample
-        if resample is None:
-            resample = _load_resampler()
         for full in it:
             if len(full) == 0:
                 yield full
@@ -570,7 +545,7 @@ def resample_clips(clips: DataFrame, target_sr: int) -> DataFrame:
                 bufs = []
                 for b, codec, sr in zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"]):
                     pcm = _decode_one(b, codec).astype(np.float64)
-                    res = resample(pcm, int(target_sr), int(sr))
+                    res = _resample_poly_np(pcm, int(target_sr), int(sr))
                     res16 = np.clip(res, -32768, 32767).astype(np.int16)
                     if codec == "pcm_s16le":
                         bufs.append(wav_encode(res16, target_sr))
@@ -582,12 +557,6 @@ def resample_clips(clips: DataFrame, target_sr: int) -> DataFrame:
 
     cols = [f.name for f in CLIPS_SCHEMA.fields]
     return clips.select(*cols).mapInPandas(run, schema=CLIPS_SCHEMA)
-
-
-def resample_stub(clips: DataFrame, target_sr: int) -> DataFrame:
-    """Backward-compat alias for the round-2 stub name; the kernel is
-    now real (see resample_clips)."""
-    return resample_clips(clips, target_sr)
 
 
 def chunk_clips(clips: DataFrame, window_ms: int) -> DataFrame:

@@ -32,7 +32,7 @@ whole table:
 MOR awareness: a delete-mor snapshot changes visible rows WITHOUT
 touching data files, so "live in both snapshots" is not enough to skip
 a file — each common file is skipped only when its applicable
-equality-delete signature (the set of delete files with
+equality-delete set (meta.applicable_deletes: the delete files with
 ``sequence >= file sequence``) is identical at both endpoints; both
 sides read through ``_read_files``, which applies each snapshot's own
 delete state. Schema evolution between the endpoints (rename/add ops)
@@ -48,21 +48,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .meta import applicable_deletes
+
 CHANGE_TYPE_COL = "_change_type"
-
-
-def _delete_signature(specs: list[dict], file_seq: int) -> tuple:
-    """The applicable-delete identity of a data file under one
-    snapshot: which (immutable) delete files would filter its rows.
-    Identical signatures at both endpoints => identical visible rows
-    for an identical data file."""
-    return tuple(
-        sorted(
-            d["file_path"]
-            for d in specs
-            if int(d.get("sequence") or 0) >= file_seq
-        )
-    )
 
 
 def _schema_frame(table, snap) -> DataFrame:
@@ -123,27 +111,22 @@ def changelog_scan(
     new_only = sorted(set(new_entries) - set(old_entries))
     common = set(old_entries) & set(new_entries)
 
-    # a common file's visible rows changed iff its delete state or the
-    # table's schema replay changed between the endpoints
+    # a common file's visible rows changed iff the table's schema replay
+    # or the (immutable) delete files that may filter it changed between
+    # the endpoints
     schema_drift = table.schema_ops(old_snap) != table.schema_ops(new_snap)
-    if common and not schema_drift:
-        old_specs = table.delete_key_specs(old_snap)
-        new_specs = table.delete_key_specs(new_snap)
-        if old_specs or new_specs:
-            changed = sorted(
-                p
-                for p in common
-                if _delete_signature(
-                    old_specs, int(old_entries[p].get("sequence") or 0)
-                )
-                != _delete_signature(
-                    new_specs, int(new_entries[p].get("sequence") or 0)
-                )
-            )
-        else:
-            changed = []
-    else:
-        changed = sorted(common) if schema_drift else []
+    old_dels = table.delete_entries(old_snap)
+    new_dels = table.delete_entries(new_snap)
+
+    def deletes_on(dels: list[dict], entry: dict) -> set[str]:
+        return {d["file_path"] for d in applicable_deletes(dels, entry.get("sequence"))}
+
+    changed = sorted(
+        p
+        for p in common
+        if schema_drift
+        or deletes_on(old_dels, old_entries[p]) != deletes_on(new_dels, new_entries[p])
+    )
 
     new_side_paths = new_only + changed
     old_side_paths = old_only + changed

@@ -11,7 +11,7 @@ becomes an explicit, resumable Spark job:
 2. rewrite— ZERO-shuffle job: compaction is pure concatenation, so no
             row ever needs to change tasks. ONE single-branch scan of
             all candidate files; each row's bin id attaches via a
-            BroadcastHashJoin on ``_metadata.file_name`` (map-side);
+            BroadcastHashJoin on its file name (Table.tag_files);
             ``write.partitionBy(_bin)`` streams each bin into its own
             file(s). The plan is O(1) in bin count — the round-2
             union-of-branches design paid ~10 s of driver
@@ -41,10 +41,9 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .lineage import Rewrite
-from .meta import Snapshot, Table, staged_partition
+from .meta import Snapshot, Table, applicable_deletes, staged_partition
 from .session import session_conf
 
 
@@ -89,22 +88,10 @@ def ffd_pack(entries: list[dict], target_bytes: int, min_file_bytes: int | None 
 def bins_scan(table, bins: list[Bin]) -> DataFrame:
     """Compaction's rewrite input for one schema generation: ONE scan of
     every bin's files through the engine reader (raw physical read — no
-    schema ops, no deletes), each row tagged with its ``_bin`` by a
-    broadcast join on ``_metadata.file_name`` (map-side, no shuffle).
-    Keying on the basename is immune to path-representation drift
-    (symlinked or relative table roots, non-file:/ schemes) that a
-    full-path string match would silently miss, dropping every row of a
-    candidate while still removing the file at commit."""
-    map_df = table.spark.createDataFrame(
-        [(e["file_path"].rsplit("/", 1)[-1], b.bin_id) for b in bins for e in b.files],
-        "_fname string, _bin int",
-    )
-    df = table.read_parquet([f"{table.root}/{e['file_path']}" for b in bins for e in b.files])
-    return (
-        df.withColumn("_fname", F.col("_metadata.file_name"))
-        .join(F.broadcast(map_df), "_fname")
-        .drop("_fname")
-    )
+    schema ops, no deletes), each row tagged with its ``_bin`` by
+    Table.tag_files (a map-side broadcast join on the file name)."""
+    paths = {f"{table.root}/{e['file_path']}": (b.bin_id,) for b in bins for e in b.files}
+    return table.tag_files(table.read_parquet(list(paths)), "_bin int", paths)
 
 
 def compact(
@@ -157,22 +144,12 @@ def compact(
     # a consolidated delete may cover (manifest max-seq >= file seq)
     # only packs with files of the SAME sequence — min-inheritance then
     # changes nothing and per-key semantics survive the byte stream.
-    def _applicability(e):
-        fseq = e.get("sequence") or 0
-        plain = frozenset(
-            (d.get("sequence") or 0)
-            for d in dels
-            if not d["keyed_seq"] and (d.get("sequence") or 0) >= fseq
-        )
-        keyed_covers = any(
-            d["keyed_seq"] and (d.get("sequence") or 0) >= fseq for d in dels
-        )
-        return (plain, fseq if keyed_covers else None)
-
     groups: dict = {}
     for e in entries:
-        sid = e.get("schema_id") or 0
-        key = (sid, _applicability(e))
+        app = applicable_deletes(dels, e.get("sequence"))
+        plain = tuple(sorted(d["file_path"] for d in app if not d["keyed_seq"]))
+        keyed_covers = any(d["keyed_seq"] for d in app)
+        key = (e.get("schema_id") or 0, plain, (e.get("sequence") or 0) if keyed_covers else None)
         if group_fn is not None:
             key = key + (group_fn(e),)
         groups.setdefault(key, []).append(e)
@@ -197,9 +174,8 @@ def compact(
         # Zero-shuffle rewrite: compaction is pure concatenation, so no
         # data needs to move between tasks. ONE single-branch job per
         # schema generation (bins_scan): scan all candidate files,
-        # attach each row's bin id via a BroadcastHashJoin on
-        # _metadata.file_name (map-side, no shuffle),
-        # write.partitionBy(_bin). Round 2
+        # attach each row's bin id via a BroadcastHashJoin on its file
+        # name (map-side, no shuffle), write.partitionBy(_bin). Round 2
         # built a union of one branch PER BIN instead — at 64 bins the
         # driver spent ~10 s per compaction analyzing/codegen-ing the
         # 64-branch plan, a constant that didn't parallelize and

@@ -48,7 +48,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window as W
 
 EMB_DIM = 16  # parametric (reference uses 1024, fupi/utils.py:23)
 

@@ -5,14 +5,18 @@ The reference never updates rows (append-only + overwrite,
 that replaces that wholesale-overwrite habit with surgical rewrites:
 
 1. prune    — map source keys onto per-file [min_clip_id, max_clip_id]
-              ranges from the manifest. File ranges are driver-small by
-              design (the FFD packer already assumes that), so the
-              range test becomes: bin boundaries = sorted file mins,
-              each source key gets its bin via a vectorized
-              searchsorted pandas UDF, files explode (driver-side) into
-              the bins their range covers, and touched = equi-join on
-              bin + residual range filter. No BroadcastNestedLoopJoin,
-              never O(files × keys).
+              ranges from the manifest. A small source collects its
+              distinct keys and tests them against the manifest on the
+              driver (meta.stats_keep_mask). A large one stays
+              distributed: file ranges are driver-small by design (the
+              FFD packer already assumes that), so bin boundaries =
+              sorted file mins, each source key gets its bin from
+              clustering's range-bucket expression (cluster._bucket_expr:
+              a codegen fold, or a searchsorted UDF past
+              BUCKET_FOLD_MAX boundaries), files explode (driver-side)
+              into the bins their range covers, and touched = equi-join
+              on bin + residual range filter. No
+              BroadcastNestedLoopJoin, never O(files × keys).
 2. classify — hash-shuffle FULL-OUTER join of source keys vs touched
               target keys (BASELINE.json: "MERGE INTO implemented as a
               hash-shuffle full-outer join") — *keys only*: the audio
@@ -60,15 +64,13 @@ path with skew splitting.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from bisect import bisect_left
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from .cluster import _bucket_expr
 from .lineage import Rewrite
 from .meta import Snapshot, Table, prune_manifest
 
@@ -77,10 +79,9 @@ MERGE_KEY = "clip_id"
 
 #: distinct source keys up to this count prune on the DRIVER (one
 #: collect of the key column, then meta.stats_keep_mask over the
-#: manifest) instead of a Spark job with a pandas-UDF bin assignment —
-#: that job cost a fixed ~0.5-0.8 s per merge (measured r6, guide §4:
-#: the Python-worker roundtrip is pure overhead at this size). Larger
-#: sources keep the distributed equi-join path.
+#: manifest) instead of the distributed bin equi-join — that job cost a
+#: fixed ~0.5-0.8 s per merge (measured r6). Larger sources keep the
+#: distributed path.
 PRUNE_KEYS_DRIVER_MAX = 100_000
 
 
@@ -100,9 +101,11 @@ def plan_touched_files(
     intervals — no Spark job beyond the key collect. Larger or
     uncounted sources stay distributed, as an equi-join (no
     nested-loop): bin the key space at the sorted file-min boundaries
-    (driver-small by design), assign each source key its bin with one
-    vectorized searchsorted, explode each file into the bins its range
-    covers, equi-join on bin with a residual range filter.
+    (driver-small by design), assign each non-NULL source key its bin
+    with cluster._bucket_expr (bin b holds the keys in
+    ``(boundaries[b-1], boundaries[b]]``), explode each file into the
+    bins its range covers, equi-join on bin with a residual range
+    filter.
 
     Composite merge keys prune on their LEADING column only — sound
     (a superset of the truly touched files) and exactly what a
@@ -128,35 +131,22 @@ def plan_touched_files(
     if not bounded:
         return entries
     boundaries = sorted({e[lo_k] for e in bounded})
-    barr = np.array(boundaries, dtype=object)
-
     # driver-side file→bins explode (total size ∝ overlap, 1-2 bins per
-    # file once the table is clustered)
-    file_bins = []
-    for ord_, e in enumerate(bounded):
-        b_lo = int(np.searchsorted(barr, e[lo_k], side="right")) - 1
-        b_hi = int(np.searchsorted(barr, e[hi_k], side="right")) - 1
-        for b in range(max(b_lo, 0), b_hi + 1):
-            file_bins.append((b, ord_, e[lo_k], e[hi_k]))
-
-    spark = table.spark
-    # schema inferred so the key's min/max type follows the key column
-    # (string clip_id or an int key alike)
-    files_df = spark.createDataFrame(
-        file_bins, ["bin", "file_ord", "f_min", "f_max"]
+    # file once the table is clustered); schema inferred so the key's
+    # min/max type follows the key column (string clip_id or an int key)
+    files_df = table.spark.createDataFrame(
+        [
+            (b, ord_, e[lo_k], e[hi_k])
+            for ord_, e in enumerate(bounded)
+            for b in range(
+                bisect_left(boundaries, e[lo_k]), bisect_left(boundaries, e[hi_k]) + 1
+            )
+        ],
+        ["bin", "file_ord", "f_min", "f_max"],
     )
-
-    @F.pandas_udf(T.IntegerType())
-    def key_bin(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        b = np.array(boundaries, dtype=object)
-        for s in it:
-            yield pd.Series(
-                np.searchsorted(b, s.to_numpy(dtype=object), side="right") - 1
-            ).astype("int32")
-
-    keys = source.select(F.col(key).alias("_k")).distinct()
+    keys = source.select(F.col(key).alias("_k")).dropna().distinct()
     touched_ords = (
-        keys.withColumn("bin", key_bin(F.col("_k")))
+        keys.withColumn("bin", _bucket_expr(boundaries, "_k"))
         .join(F.broadcast(files_df), "bin")
         .filter((F.col("_k") >= F.col("f_min")) & (F.col("_k") <= F.col("f_max")))
         .select("file_ord")

@@ -51,11 +51,11 @@ one vectorized driver pass over the Arrow manifest (stats_keep_mask —
 the same load every commit already makes), not a Spark job; every
 write, compaction included, becomes manifest entries through
 Table.promote_staged, whose per-file stats come from the file as
-written (Iceberg's data-file metrics): its parquet footer plus its
-8-byte ``_crc`` column, read in a driver loop or, past
-FOOTER_DRIVER_MAX files, fanned out over the cluster — with a
-distributed DataFrame aggregation as the fallback for footers without
-usable statistics (manifest "rewrite + stats recomputation as
+written (Iceberg's data-file metrics): on a file-local root and up to
+FOOTER_DRIVER_MAX files, its parquet footer plus its 8-byte ``_crc``
+column, read in a driver loop; otherwise — more files, an object-store
+root, or a footer without usable statistics — one distributed
+DataFrame aggregation (manifest "rewrite + stats recomputation as
 DataFrame aggregations", BASELINE.json north_star); the snapshot JSON itself
 holds only manifest *paths* (O(commits), not O(files)). Reads never
 list storage and never infer a schema: every read of table files goes
@@ -64,11 +64,13 @@ and hands Spark the physical schema from one cached parquet footer
 (one per schema generation on evolved snapshots) — building a scan of
 any file count launches no Spark job on a file-local root. Outstanding
 MOR equality deletes are planned on the driver the same way (Iceberg's
-DeleteFileIndex): under DELETE_DRIVER_MAX_BYTES their keys are read
-with pyarrow through ``storage`` and cached per path, the read's files
-are split into sequence cohorts, and each cohort gets one pushed-down
-key filter — no join and no Spark job; larger delete sets are
-anti-joined.
+DeleteFileIndex): up to DELETE_DRIVER_MAX_KEYS keys are read with
+pyarrow through ``storage`` and cached per path, the read's files are
+split into sequence cohorts, and each cohort gets one pushed-down key
+filter — no join and no Spark job; larger delete sets are anti-joined.
+A per-file value a read needs on its rows (compaction's bin, the
+anti-join's file sequence, a test's file ordinal) is attached by one
+broadcast join on ``_metadata.file_name`` (Table.tag_files).
 """
 
 from __future__ import annotations
@@ -189,13 +191,6 @@ class Table:
     @property
     def meta_dir(self) -> str:
         return f"{self.root}/metadata"
-
-    @property
-    def manifest_dir(self) -> str:
-        return f"{self.meta_dir}/manifests"
-
-    def _snap_path(self, snapshot_id: int) -> str:
-        return f"{self.meta_dir}/v{snapshot_id:05d}.json"
 
     # -- snapshot log ------------------------------------------------------
     def snapshot_ids(self) -> list[int]:
@@ -358,8 +353,8 @@ class Table:
         """Outstanding delete entries annotated with their key-column
         set and whether they carry PER-KEY sequences (``_del_seq``
         column — written by consolidate_deletes; plain delete files
-        apply at their single manifest sequence). A delete file small
-        enough for the driver path takes its column names from the
+        apply at their single manifest sequence). A delete file of at
+        most DELETE_DRIVER_MAX_KEYS keys takes its column names from the
         pyarrow read of its keys (_delete_file: through ``storage``,
         cached per path — delete files are immutable), so no root runs
         a Spark job for them; a larger one, only ever anti-joined, from
@@ -367,7 +362,7 @@ class Table:
         outstanding count at ~1 per key set."""
         out = []
         for e in self.delete_entries(snapshot):
-            if (e["byte_size"] or 0) <= self.DELETE_DRIVER_MAX_BYTES:
+            if (e["row_count"] or 0) <= self.DELETE_DRIVER_MAX_KEYS:
                 names = self._delete_file(e["file_path"]).column_names
             else:
                 names = self.file_schema(f"{self.root}/{e['file_path']}").names
@@ -441,24 +436,45 @@ class Table:
         compaction reads read_parquet without a snapshot instead (it
         streams bytes and partitions bins by delete applicability).
 
-        Deletes whose files total at most DELETE_DRIVER_MAX_BYTES are
+        Deletes of at most DELETE_DRIVER_MAX_KEYS keys in all are
         planned on the driver (_read_cohorts: a key filter per sequence
         cohort, no join, no Spark job); larger sets are anti-joined
         (_apply_deletes)."""
         return reduce(DataFrame.union, self._read_parts(paths, snap))
 
-    def _read_parts(self, paths: list[str], snap: Snapshot | None) -> list[DataFrame]:
+    def _read_parts(
+        self, paths: list[str], snap: Snapshot | None, tag: tuple[str, dict] | None = None
+    ) -> list[DataFrame]:
         """_read_files as the frames its read is the union of: one per
-        sequence cohort, each a single file scan whose ``_metadata``
-        column still resolves (a ``Union`` hides it), or the one
-        anti-joined read."""
+        sequence cohort, or the one anti-joined read. ``tag`` —
+        (schema, {path: values}) as tag_files takes them — is attached
+        to each file scan before any delete applies, while
+        ``_metadata`` still resolves (a join or a ``Union`` hides it)."""
+        from .evolve import apply_schema_ops
+
         snap = snap or self.current_snapshot()
         dels = self.delete_key_specs(snap)
+        schema = self.physical_schema(paths, snap)
+
+        def read(ps: list[str], tags: tuple[str, dict] | None = tag) -> DataFrame:
+            df = self.read_with_schema(ps, schema)
+            return apply_schema_ops(self.tag_files(df, *tags) if tags else df, self.schema_ops(snap))
+
         if not dels:
-            return [self.read_parquet(paths, snap)]
-        if sum(e["byte_size"] or 0 for e in dels) <= self.DELETE_DRIVER_MAX_BYTES:
-            return self._read_cohorts(paths, snap, dels)
-        return [self._apply_deletes(self.read_parquet(paths, snap), snap, dels)]
+            return [read(paths)]
+        m = self.data_manifest(snap)
+        seq = dict(zip(m["file_path"].to_pylist(), m["sequence"].to_pylist()))
+        seqs = {p: seq.get(p[len(self.root) + 1:]) or 0 for p in paths}
+        if sum(e["row_count"] or 0 for e in dels) <= self.DELETE_DRIVER_MAX_KEYS:
+            return self._read_cohorts(seqs, dels, read)
+        # the anti-join compares each row's file sequence, attached in
+        # the same join as the caller's tag
+        tag_schema, values = tag or ("", {})
+        with_seq = (
+            ", ".join(filter(None, ["_fseq long", tag_schema])),
+            {p: (s, *values.get(p, ())) for p, s in seqs.items()},
+        )
+        return [self._apply_deletes(read(paths, with_seq), dels)]
 
     def read_parquet(self, paths: list[str], snap: Snapshot | None = None) -> DataFrame:
         """The engine's one reader of table files: ``paths`` (taken from
@@ -539,48 +555,43 @@ class Table:
         df = self.spark.createDataFrame([], self.physical_schema(files, snap))
         return self._drop_internal(apply_schema_ops(df, self.schema_ops(snap)))
 
-    #: outstanding delete files totalling at most this many manifest
-    #: bytes are read on the driver and applied as key filters
-    #: (_read_cohorts); above it the keys are anti-joined (_apply_deletes),
-    #: so a 10^8-key GDPR sweep never lands on the driver. Set at the
-    #: measured crossover: ``scan().count()`` of a 2,000-clip, 12-file
-    #: table with one delete file outstanding, warm median of 5 on a
-    #: 4-core host, driver path vs anti-join: 10^3 keys (6.3 KB) 0.63-0.73
-    #: vs 0.63-0.88 s; 2x10^3 (11.6 KB) 1.02 vs 0.64 s; 10^4 (55 KB) 4.9
-    #: vs 0.71 s; 10^5 (531 KB) 57 vs 1.2 s. The driver path pays about
-    #: 0.5 ms per key to build its IN list over py4j; the anti-join pays
-    #: 3 extra Spark jobs whatever the key count. A 3-key file is ~1 KB.
-    DELETE_DRIVER_MAX_BYTES = 8 << 10
+    #: outstanding delete files holding at most this many keys in all
+    #: (the sum of their manifest row counts) are read on the driver and
+    #: applied as key filters (_read_cohorts); above it the keys are
+    #: anti-joined (_apply_deletes), so a 10^8-key GDPR sweep never lands
+    #: on the driver. Set at the measured crossover: ``scan().count()``
+    #: of a 2,000-clip, 12-file table with one delete file outstanding,
+    #: warm median of 5 on a 4-core host, driver path vs anti-join: 10^3
+    #: keys 0.63-0.73 vs 0.63-0.88 s; 2x10^3 1.02 vs 0.64 s; 10^4 4.9 vs
+    #: 0.71 s; 10^5 57 vs 1.2 s. The driver path pays about 0.5 ms per
+    #: key to build its IN list over py4j; the anti-join pays 3 extra
+    #: Spark jobs whatever the key count. Counted in keys, not bytes: a
+    #: 3-key delete file is ~570 bytes of parquet overhead.
+    DELETE_DRIVER_MAX_KEYS = 1000
 
-    def _read_cohorts(self, paths: list[str], snap: Snapshot, dels: list[dict]) -> list[DataFrame]:
-        """``paths`` read per cohort with the outstanding deletes
-        ``dels`` (delete_key_specs rows) planned on the driver, Iceberg
-        DeleteFileIndex-style: a delete with sequence d applies to a
-        data file of sequence s iff s <= d, so files are split into
-        cohorts by ``bisect_left(sorted delete sequences, s)`` — every
-        file of a cohort is subject to the same keys. Each cohort is
-        read with the schema of the whole path set (a split never
-        changes a column's type) and filtered by its keys per key-column
-        set (_key_filter); a cohort no delete applies to is read
-        unfiltered. Their union has no join, no exchange and no
-        ``_metadata`` column, and the key read launches no Spark job."""
-        from .evolve import apply_schema_ops
-
+    def _read_cohorts(self, seqs: dict[str, int], dels: list[dict], read) -> list[DataFrame]:
+        """The files of ``seqs`` (path → data sequence) read per cohort
+        with the outstanding deletes ``dels`` (delete_key_specs rows)
+        planned on the driver, Iceberg DeleteFileIndex-style: a delete
+        with sequence d applies to a data file of sequence s iff s <= d,
+        so files are split into cohorts by ``bisect_left(sorted delete
+        sequences, s)`` — every file of a cohort is subject to the same
+        keys. ``read`` scans one cohort with the schema of the whole
+        path set (a split never changes a column's type); each cohort is
+        filtered by its keys per key-column set (_key_filter), and a
+        cohort no delete applies to is read unfiltered. Their union has
+        no join and no exchange, and the key read launches no Spark
+        job."""
         key_sets = self._delete_key_sets(dels)
         bounds = sorted(
             set().union(*(k["_del_seq_max"].to_pylist() for k in key_sets.values()))
         )
-        m = self.data_manifest(snap)
-        seq = dict(zip(m["file_path"].to_pylist(), m["sequence"].to_pylist()))
         cohorts: dict[int, list[str]] = {}
-        for p in paths:
-            s = seq.get(p[len(self.root) + 1:]) or 0
+        for p, s in seqs.items():
             cohorts.setdefault(bisect_left(bounds, s), []).append(p)
-        schema = self.physical_schema(paths, snap)
-        ops = self.schema_ops(snap)
         parts = []
         for i, cohort in sorted(cohorts.items()):
-            df = apply_schema_ops(self.read_with_schema(cohort, schema), ops)
+            df = read(cohort)
             if i < len(bounds):
                 for key_cols, keys in key_sets.items():
                     live = keys.filter(pc.greater_equal(keys["_del_seq_max"], bounds[i]))
@@ -626,29 +637,22 @@ class Table:
         seq = pa.array([e["sequence"] or 0] * t.num_rows, pa.int64())
         return t.select(list(e["key_cols"])).append_column("_del_seq", seq)
 
-    def _apply_deletes(self, df: DataFrame, snap: Snapshot, dels: list[dict]) -> DataFrame:
-        """The anti-join for delete sets above DELETE_DRIVER_MAX_BYTES,
-        sequence-aware: a row from data file f is removed iff its key
-        appears in a delete file d with sequence(f) <= sequence(d).
+    def _apply_deletes(self, df: DataFrame, dels: list[dict]) -> DataFrame:
+        """The anti-join for delete sets above DELETE_DRIVER_MAX_KEYS,
+        sequence-aware: a row of ``df`` — tagged with its data file's
+        sequence ``_fseq`` (_read_parts) — is removed iff its key
+        appears in a delete file d with ``_fseq`` <= sequence(d).
         Re-inserted keys (newer data sequence) survive — Iceberg v2
         equality-delete semantics.
 
         Plan shape: ONE parquet read per (key-column set × plain/keyed)
         group — never a per-file driver loop — then a union+agg to
         (key, max_sequence); delete files on DIFFERENT key columns get
-        one anti-join each. The basename→sequence map broadcasts
-        (O(files) tiny rows); the key set, too large for the driver by
+        one anti-join each. The key set, too large for the driver by
         construction, shuffle-joins. Consolidated delete files carry
         per-key ``_del_seq`` in the file itself; plain files apply at
         their manifest sequence."""
-        seq_rows = [
-            (e["file_path"].rsplit("/", 1)[-1], int(e.get("sequence") or 0))
-            for e in self.data_entries(snap)
-        ]
-        seq_df = self.spark.createDataFrame(seq_rows, "_fname string, _fseq long")
-        out = df.withColumn("_fname", F.col("_metadata.file_name")).join(
-            F.broadcast(seq_df), "_fname", "left"
-        )
+        out = df
         groups: dict[tuple, list[dict]] = {}
         for e in dels:
             groups.setdefault(e["key_cols"], []).append(e)
@@ -656,58 +660,36 @@ class Table:
             del_df = self._delete_keys_df(list(key_cols), entries)
             out = (
                 out.join(del_df, list(key_cols), "left")
-                .filter(
-                    F.col("_del_seq").isNull()
-                    | (F.coalesce(F.col("_fseq"), F.lit(0)) > F.col("_del_seq"))
-                )
+                .filter(F.col("_del_seq").isNull() | (F.col("_fseq") > F.col("_del_seq")))
                 .drop("_del_seq")
             )
         # the key joins lead with their USING columns: restore the
         # read's column order, which then never depends on delete state
-        return out.select(*df.columns)
+        return out.select(*(c for c in df.columns if c != "_fseq"))
 
     def _delete_keys_df(self, key_cols: list[str], entries: list[dict]) -> DataFrame:
         """(key → max applicable sequence) frame for one key-column
         group of delete entries (delete_key_specs rows). Plain files
-        read in one batch with their manifest sequence attached via a
-        broadcast basename map; keyed (consolidated) files read their
-        in-file per-key ``_del_seq``."""
-        spark = self.spark
+        read in one batch with their manifest sequence attached
+        (tag_files); keyed (consolidated) files read their in-file
+        per-key ``_del_seq``."""
         parts = []
         for keyed in (False, True):
             sub = [e for e in entries if e["keyed_seq"] == keyed]
             if not sub:
                 continue
             d = self.read_parquet([f"{self.root}/{e['file_path']}" for e in sub])
+            seqs = {e["file_path"]: int(e.get("sequence") or 0) for e in sub}
             if keyed:
                 parts.append(d.select(*key_cols, "_del_seq"))
-                continue
-            seqs = {int(e.get("sequence") or 0) for e in sub}
-            if len(seqs) == 1:
+            elif len(set(seqs.values())) == 1:
                 # uniform sequence (single file, or one consolidation
-                # cohort): a literal needs no basename join
-                parts.append(
-                    d.select(
-                        *key_cols,
-                        F.lit(seqs.pop()).cast("long").alias("_del_seq"),
-                    )
-                )
+                # cohort): a literal needs no join
+                seq = F.lit(next(iter(seqs.values()))).cast("long")
+                parts.append(d.select(*key_cols, seq.alias("_del_seq")))
             else:
-                dseq = spark.createDataFrame(
-                    [
-                        (
-                            e["file_path"].rsplit("/", 1)[-1],
-                            int(e.get("sequence") or 0),
-                        )
-                        for e in sub
-                    ],
-                    "_dfname string, _del_seq long",
-                )
-                parts.append(
-                    d.withColumn("_dfname", F.col("_metadata.file_name"))
-                    .join(F.broadcast(dseq), "_dfname")
-                    .select(*key_cols, "_del_seq")
-                )
+                tagged = self.tag_files(d, "_del_seq long", {p: (s,) for p, s in seqs.items()})
+                parts.append(tagged.select(*key_cols, "_del_seq"))
         return (
             reduce(lambda a, b: a.unionByName(b), parts)
             .groupBy(*key_cols)
@@ -797,32 +779,35 @@ class Table:
         exact physical order (file order from the manifest, row order
         within a parquet file is preserved by the reader).
 
-        One scan per delete cohort (_read_parts) + a broadcast join of
-        (file → ordinal) on ``_metadata.file_name``, attached to each
-        cohort before their union hides ``_metadata`` — NOT a union of
+        The ordinal is attached to each file scan by tag_files, before
+        any outstanding delete applies (_read_parts) — NOT a union of
         per-file branches, whose plan grows O(files) and whose
         per-branch footer reads serialize on the driver."""
         snap = self.snapshot(snapshot_id) if snapshot_id else self.current_snapshot()
-        entries = sorted(self.data_entries(snap), key=lambda e: e["file_path"])
-        if not entries:
+        paths = sorted(f"{self.root}/{e['file_path']}" for e in self.data_entries(snap))
+        if not paths:
             raise ValueError("empty table: no files in snapshot")
-        ord_df = self.spark.createDataFrame(
-            [(e["file_path"].rsplit("/", 1)[-1], i) for i, e in enumerate(entries)],
-            "_fname string, _file_ord int",
+        ords = ("_file_ord int", {p: (i,) for i, p in enumerate(paths)})
+        return self._drop_internal(reduce(DataFrame.union, self._read_parts(paths, snap, ords)))
+
+    def tag_files(self, df: DataFrame, schema: str, values: dict[str, tuple]) -> DataFrame:
+        """``df`` — a scan of table files whose ``_metadata`` column
+        still resolves — with per-file columns: ``schema`` declares them
+        (DDL, e.g. ``"_bin int"``) and ``values`` maps a file's path to
+        its row of them. One broadcast join of the (basename → values)
+        map on ``_metadata.file_name``: map-side, no shuffle. Keying on
+        the basename (unique in ``data/``) is immune to the
+        path-representation drift — symlinked or relative roots,
+        non-file: schemes — that a full-path match would silently miss.
+        Rows of a file absent from ``values`` are dropped."""
+        m = self.spark.createDataFrame(
+            [(p.rsplit("/", 1)[-1], *v) for p, v in values.items()], f"_fname string, {schema}"
         )
-        # join on the basename (unique in data/) — robust to whatever
-        # canonical path form Spark reports in _metadata.file_path
-        parts = self._read_parts([f"{self.root}/{e['file_path']}" for e in entries], snap)
-        df = reduce(
-            DataFrame.union,
-            (
-                p.withColumn("_fname", F.col("_metadata.file_name"))
-                .join(F.broadcast(ord_df), "_fname")
-                .drop("_fname")
-                for p in parts
-            ),
+        return (
+            df.withColumn("_fname", F.col("_metadata.file_name"))
+            .join(F.broadcast(m), "_fname")
+            .drop("_fname")
         )
-        return self._drop_internal(df)
 
     # -- writes --------------------------------------------------------------
     def stage_dir(self, job_id: str) -> str:
@@ -861,55 +846,34 @@ class Table:
         if not self.storage.list(f"_lineage/{job_id}"):
             self.storage.put(f"_lineage/{job_id}/.job", b"")
 
-    #: past this many files the footer-stat reads fan out over the
-    #: cluster (mapInPandas over the path list) instead of a driver loop
+    #: past this many files (or on a root that is not file-local) the
+    #: stats come from one Spark aggregation instead of a driver loop
     FOOTER_DRIVER_MAX = 4096
 
     def footer_file_stats(self, paths: list[str]) -> list[dict] | None:
         """Every manifest stat of each file (row_count, checksum_bytes,
         min/max per stats column) from the file as written
         (_footer_stats_one): the parquet FOOTER plus the 8-byte ``_crc``
-        column, never the payload. Returns one dict per path (same
-        order), or None when any footer lacks a usable statistic —
-        callers fall back to the Spark aggregation, so this is purely an
-        optimization, never a correctness dependence.
-
-        Scale: a driver loop up to FOOTER_DRIVER_MAX files; past that
-        the reads run as a mapInPandas over the path list, so a
-        10^5-file append reads footers executor-parallel and ships only
-        the tiny stat records back. The ``_crc`` read stays small on
-        the driver: the column exists only on tables with a ``bytes``
-        payload, where it is 8 bytes next to KB-sized audio per row."""
-        if len(paths) <= self.FOOTER_DRIVER_MAX:
-            out = [_footer_stats_one(local_path(p), self.stats_cols) for p in paths]
-        else:
-            cols = list(self.stats_cols)
-            pdf = self.spark.createDataFrame([(p,) for p in paths], "p string")
-
-            def run(it):
-                import pandas as pd
-
-                for chunk in it:
-                    recs = []
-                    for p in chunk["p"]:
-                        s = _footer_stats_one(local_path(p), cols)
-                        recs.append(json.dumps({"p": p, "s": s}))
-                    yield pd.DataFrame({"rec": recs})
-
-            by_path = {}
-            for r in pdf.mapInPandas(run, schema="rec string").collect():
-                d = json.loads(r["rec"])
-                by_path[d["p"]] = d["s"]
-            out = [by_path.get(p) for p in paths]
-        if any(o is None for o in out):
+        column, never the payload, read in a driver loop. Returns one
+        dict per path (same order), or None — the caller then runs the
+        Spark aggregation — when any footer lacks a usable statistic,
+        when there are more than FOOTER_DRIVER_MAX paths, or when the
+        root is not file-local (the driver cannot open its files). So
+        this is purely an optimization, never a correctness dependence.
+        The ``_crc`` read stays small: the column exists only on tables
+        with a ``bytes`` payload, where it is 8 bytes next to KB-sized
+        audio per row."""
+        if not self._local or len(paths) > self.FOOTER_DRIVER_MAX:
             return None
-        return out
+        out = [_footer_stats_one(local_path(p), self.stats_cols) for p in paths]
+        return None if any(o is None for o in out) else out
 
     def _stats_for_files(self, paths: list[str]) -> list[dict]:
         """Per-file manifest stats (row_count, checksum_bytes, min/max
-        per stats column), in ``paths`` order: the per-file reader
-        (footer_file_stats), or one Spark aggregation when any footer
-        lacks a usable statistic."""
+        per stats column), in ``paths`` order: the footer reader
+        (footer_file_stats), or else one Spark aggregation, where a file
+        with no rows forms no group and gets row_count 0 and NULL
+        stats, as its footer gives."""
         fstats = self.footer_file_stats(paths)
         if fstats is not None:
             return fstats
@@ -917,7 +881,7 @@ class Table:
             r["file_name"]: r.asDict()
             for r in self._file_stats_df(self.read_parquet(paths)).collect()
         }
-        return [by_name[p.rsplit("/", 1)[-1]] for p in paths]
+        return [by_name.get(p.rsplit("/", 1)[-1], {"row_count": 0}) for p in paths]
 
     def promote_staged(self, staging: str, job_id: str) -> pa.Table:
         """Promote a staged Spark write into ``data/`` and return its
@@ -1076,38 +1040,22 @@ class Table:
             stamped = _stamp_added(added.cast(self.manifest_schema), next_id)
             merged = pa.concat_tables([live.cast(self.manifest_schema), stamped])
             manifest_rel = self.write_manifest(merged)
-            # schema evolution ops are table-level state: inherit them
-            # from the base snapshot unless this commit sets them
-            # explicitly (evolve.py does; everything else inherits)
-            inherited_ops = (base.summary.get("schema_ops") if base else None) or []
+            # table-level state every commit carries forward from its
+            # base unless it sets it itself: the schema-evolution ops
+            # (evolve.py); the last-cluster marker, so it survives
+            # snapshot expiry (expire_snapshots pins the marked snapshot;
+            # without it cluster_incremental would silently degrade to a
+            # full-table recluster); and the cluster codec-rank
+            # dictionary, since a re-packed layout can hide a ranked
+            # value from every file's min/max stats and shift the curve
+            # order of clustered data (cluster.dimension_bounds). A
+            # cluster commit stamps itself as the marker.
             extra = dict(summary or {})
-            if "schema_ops" not in extra and inherited_ops:
-                extra["schema_ops"] = inherited_ops
-            # last-cluster marker: carried forward by EVERY commit (like
-            # schema_ops) so it survives snapshot expiry — without it,
-            # expire's retain_last would routinely prune the cluster
-            # snapshot and cluster_incremental would silently degrade to
-            # a full-table recluster (losing its O(churn) guarantee).
-            # expire_snapshots pins the marked snapshot as retained.
+            for k in ("schema_ops", "last_cluster_snapshot_id", "cluster_codec_ranks"):
+                if k not in extra and base is not None and base.summary.get(k) is not None:
+                    extra[k] = base.summary[k]
             if operation == "cluster":
                 extra["last_cluster_snapshot_id"] = next_id
-            else:
-                inherited_lc = (
-                    base.summary.get("last_cluster_snapshot_id") if base else None
-                )
-                if "last_cluster_snapshot_id" not in extra and inherited_lc is not None:
-                    extra["last_cluster_snapshot_id"] = inherited_lc
-            # the cluster codec-rank dictionary is table-level state the
-            # same way (r6): once a codec value is ranked, later
-            # rewrites must not forget it — a re-packed layout can hide
-            # an interior value from every file's min/max stats, which
-            # would silently shift the curve order of already-clustered
-            # data (cluster.dimension_bounds)
-            inherited_cr = (
-                base.summary.get("cluster_codec_ranks") if base else None
-            )
-            if "cluster_codec_ranks" not in extra and inherited_cr is not None:
-                extra["cluster_codec_ranks"] = inherited_cr
             # wall-clock commit stamp (ms): enables AS-OF-timestamp time
             # travel (snapshot_as_of) — informational, never used for
             # ordering (snapshot ids are the total order)
@@ -1218,6 +1166,15 @@ def _key_filter(df: DataFrame, key_cols: tuple, keys: pa.Table) -> Column:
             ]
         )
     return reduce(operator.or_, (c.isNull() for c in cols)) | ~hit
+
+
+def applicable_deletes(dels: list[dict], file_sequence: int | None) -> list[dict]:
+    """The outstanding delete specs (delete entries or delete_key_specs
+    rows) that may apply to a data file of ``file_sequence``: those
+    with sequence >= it (Iceberg's equality-delete rule; NULL == 0). A
+    consolidated file among them applies per key (its ``_del_seq``), so
+    this is a superset of what actually removes the file's rows."""
+    return [d for d in dels if (d.get("sequence") or 0) >= (file_sequence or 0)]
 
 
 def staged_partition(rel: str) -> int:

@@ -302,17 +302,13 @@ def dedup_jaccard_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-from .ann import bucket_expr, hamming_probes, lsh_planes, plane_dot_expr, query_bucket  # noqa: E402
+from .ann import bucket_expr, hamming_probes, lsh_planes, query_bucket  # noqa: E402
 
 LSH_PLANES = lsh_planes(8, 64)
 
 
 def _plane_dot_duck(p: list[int]) -> str:
     return " + ".join(f"CAST(embedding[{i + 1}] AS DOUBLE) * {w}.0" for i, w in enumerate(p))
-
-
-def _plane_dot_spark(p: list[int]):
-    return plane_dot_expr("embedding", p)  # canonical impl lives in ann.py
 
 
 @register(

@@ -19,46 +19,3 @@ CLIPS_SCHEMA = T.StructType(
         T.StructField("transcript", T.StringType(), False),
     ]
 )
-
-# fupi corpus tables (reference: fupi/utils.py:18-25 text-level,
-# :28-36 sentence-level; 1024-d embeddings become parametric-width
-# ArrayType — Spark has no fixed-size list, enforced by test invariant).
-def text_level_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("text_id", T.LongType(), False),
-            T.StructField("date", T.DateType(), True),
-            T.StructField("title", T.StringType(), True),
-            T.StructField("dense_embedding", T.ArrayType(T.FloatType()), True),
-        ]
-    )
-
-
-def sentence_level_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("text_id", T.LongType(), False),
-            T.StructField("sentence_id", T.LongType(), False),
-            T.StructField("sentence", T.StringType(), True),
-            T.StructField("dense_embedding", T.ArrayType(T.FloatType()), True),
-            T.StructField("colbert_embedding", T.ArrayType(T.FloatType()), True),
-        ]
-    )
-
-
-# Columns the metadata layer keeps per-file min/max stats for (drives
-# MERGE file pruning and clustering bounds; FIXTURES.md `file_stats`).
-CLIPS_STATS_COLS = ["clip_id", "sr_hz", "dur_ms", "codec", "zval"]
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("unit_id", T.IntegerType(), False),
-        T.StructField("files_in", T.ArrayType(T.StringType()), True),
-        T.StructField("files_out", T.ArrayType(T.StringType()), True),
-        T.StructField("bytes_in", T.LongType(), True),
-        T.StructField("bytes_out", T.LongType(), True),
-        T.StructField("rows", T.LongType(), True),
-        T.StructField("committed", T.BooleanType(), False),
-    ]
-)

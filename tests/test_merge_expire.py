@@ -204,24 +204,40 @@ def test_gc_never_deletes_referenced_property(spark, tmp_table_dir):
     assert t.scan().count() == 150
 
 
-def test_plan_touched_driver_path_matches_distributed(spark, tmp_table_dir):
-    """r6: the small-source driver-side prune (numpy searchsorted, no
-    Spark job) must produce the identical touched-file set as the
-    distributed equi-join path."""
+def test_plan_touched_driver_path_matches_distributed(spark, tmp_table_dir, monkeypatch):
+    """The small-source driver-side prune (meta.stats_keep_mask, no
+    Spark job) and the distributed equi-join — bins from the codegen
+    fold, and from the searchsorted UDF past BUCKET_FOLD_MAX (forced
+    by a cap of 0) — touch identical file sets on a linear-clustered
+    table, where a key set touches fewer files than exist: one key, a
+    contiguous key range, keys scattered over the table, and the
+    first and last key."""
+    import importlib
+
     from fupi_spark import meta
     from fupi_spark.merge import plan_touched_files
     from fupi_spark.synth import synth_clips
 
+    C = importlib.import_module("fupi_spark.cluster")  # the package exports cluster()
     t = meta.create_table(spark, tmp_table_dir)
     meta.append(t, synth_clips(spark, 300, dur_range_ms=(50, 80)), job_id="seed", parts=12)
+    C.cluster(t, curve="linear", target_bytes=1 << 16)
     base = t.current_snapshot()
-    src = t.scan().select("clip_id").limit(20).cache()
-    n = src.count()
-    driver = plan_touched_files(t, src, base, n_keys=n)
-    dist = plan_touched_files(t, src, base, n_keys=None)
-    src.unpersist()
-    assert [e["file_path"] for e in driver] == [e["file_path"] for e in dist]
-    assert 0 < len(driver) <= 12
+    n_files = len(t.data_entries(base))
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    key_sets = [ids[150:151], ids[40:90], ids[::37], [ids[0], ids[-1]]]
+    touched = []
+    for keys in key_sets:
+        src = spark.createDataFrame([(k,) for k in keys], "clip_id string")
+        sides = [plan_touched_files(t, src, base, n_keys=len(keys))]
+        sides.append(plan_touched_files(t, src, base, n_keys=None))
+        with monkeypatch.context() as m:
+            m.setattr(C, "BUCKET_FOLD_MAX", 0)
+            sides.append(plan_touched_files(t, src, base, n_keys=None))
+        paths = [[e["file_path"] for e in side] for side in sides]
+        assert paths[0] == paths[1] == paths[2]
+        touched.append(len(paths[0]))
+    assert n_files > 8 and all(0 < n < n_files for n in touched), (n_files, touched)
 
 
 def test_committed_job_resubmission_is_noop(spark, tmp_path):

@@ -240,8 +240,9 @@ def test_stats_recomputed_after_compact(spark, tmp_table_dir):
 def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
     """The footer path and the Spark-agg fallback must produce
     identical manifest entries (stats exactness is what scan_pruned
-    and MERGE pruning rely on); the distributed footer path (forced
-    via FOOTER_DRIVER_MAX=0) must agree too. A partitioned staging
+    and MERGE pruning rely on); past FOOTER_DRIVER_MAX files (forced by
+    a cap of 0) the stats come from the aggregation, which must agree
+    too. A partitioned staging
     layout promotes in partition-value order with the same parity, and
     on the footer path promote_staged launches no Spark job and reads
     the schema id at most once."""
@@ -256,9 +257,15 @@ def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
     with monkeypatch.context() as mp:
         mp.setattr(meta.Table, "footer_file_stats", lambda self, paths: None)
         meta.append(t2, clips, job_id="seed")
+    aggregated = []
+    real_agg = meta.Table._file_stats_df
     with monkeypatch.context() as mp:
         mp.setattr(meta.Table, "FOOTER_DRIVER_MAX", 0)
+        mp.setattr(
+            meta.Table, "_file_stats_df", lambda self, df: aggregated.append(1) or real_agg(self, df)
+        )
         meta.append(t3, clips, job_id="seed")
+    assert aggregated == [1]
 
     def canon(entries):  # names differ by nonce
         return [tuple(e[k] for k in sorted(e) if k != "file_path") for e in entries]
@@ -309,6 +316,42 @@ def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
     assert all(e["max_dur_ms"] // 10 == k for e, k in zip(part1, ks))
     assert sum(e["row_count"] for e in part1) == 150
     assert canon(part1) == canon(part2)
+
+
+def test_object_store_root_takes_stats_from_the_aggregation(spark, tmp_path, monkeypatch):
+    """A root that is not file-local never opens a footer on the driver
+    for stats: an append and a delete-everything rewrite through such a
+    handle, with every ``pq.ParquetFile`` open failing, get their
+    entries from the Spark aggregation, equal to the footer path's."""
+    from fupi_spark.merge import delete_where
+
+    def canon(t):  # names differ by nonce
+        return sorted(
+            tuple(e[k] for k in sorted(e) if k != "file_path")
+            for e in t.manifest_entries().to_pylist()
+        )
+
+    # an append, then a rewrite that keeps no row and so writes one
+    # empty file: the aggregation has no group for it, and its entry
+    # must still match its footer's
+    def steps(t):
+        meta.append(t, clips, job_id="seed")
+        appended = canon(t)
+        delete_where(t, "true", job_id="all")
+        return appended, canon(t)
+
+    clips = synth_clips(spark, 150, dur_range_ms=(50, 150), parts=5)
+    footer = steps(meta.create_table(spark, str(tmp_path / "local")))
+    assert [len(entries) for entries in footer] == [5, 1]
+    remote = meta.create_table(spark, str(tmp_path / "remote"))
+    remote._local = False  # read as under an s3a:// root
+
+    def no_footer(*_a, **_k):
+        raise AssertionError("opened a footer on the driver")
+
+    monkeypatch.setattr(meta.pq, "ParquetFile", no_footer)
+    assert steps(remote) == footer
+    assert [e["row_count"] for e in remote.manifest_entries().to_pylist()] == [0]
 
 
 def test_scan_pruned_skips_files_after_clustering(spark, tmp_table_dir):

@@ -184,7 +184,7 @@ def test_mor_lifecycle_on_object_store_without_rename(spark, tmp_path, monkeypat
 
 
 def test_mor_scan_plan_stays_map_side(spark, tmp_path):
-    """Deletes under DELETE_DRIVER_MAX_BYTES are planned on the driver:
+    """Deletes under DELETE_DRIVER_MAX_KEYS are planned on the driver:
     the scan is a key filter over the file read, with no join, no
     exchange and no ``_metadata`` column."""
     t = make_table(spark, str(tmp_path / "t"), n=150, parts=3)
@@ -254,7 +254,7 @@ def _rows(t):
 
 def test_driver_planned_deletes_match_the_anti_join(spark, tmp_path, monkeypatch):
     """The driver-planned key filter and the anti-join (the path above
-    DELETE_DRIVER_MAX_BYTES, forced by a cap of 0) give identical row
+    DELETE_DRIVER_MAX_KEYS, forced by a cap of 0) give identical row
     multisets through a plain delete, several delete sequences with a
     re-insert, NULL keys in data and delete files, a composite key and
     a consolidated keyed file, on a table with a renamed non-key
@@ -274,7 +274,7 @@ def test_driver_planned_deletes_match_the_anti_join(spark, tmp_path, monkeypatch
         assert "Join" not in t.scan()._jdf.queryExecution().executedPlan().toString()
         driver = _rows(t)
         with monkeypatch.context() as m:
-            m.setattr(meta.Table, "DELETE_DRIVER_MAX_BYTES", 0)
+            m.setattr(meta.Table, "DELETE_DRIVER_MAX_KEYS", 0)
             assert "Join" in t.scan()._jdf.queryExecution().executedPlan().toString()
             assert _rows(t) == driver
         return driver
@@ -346,6 +346,23 @@ def test_outstanding_deletes_launch_no_extra_spark_job(spark, tmp_path):
     assert jobs() == none_outstanding
 
 
+def test_many_small_delete_files_stay_on_the_driver_path(spark, tmp_path):
+    """The driver path is gated on keys, not bytes: 15 outstanding
+    3-key delete files (45 keys, ~8.5 KB of parquet) add no Spark job
+    to ``scan().count()``."""
+    from .test_meta_compact import jobs_launched
+
+    t = make_table(spark, str(tmp_path / "t"), n=150, parts=3)
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    none_outstanding = jobs_launched(spark, lambda: t.scan().count())
+    for i in range(15):
+        delete_keys_mor(t, _keys_df(spark, ids[3 * i : 3 * i + 3]), job_id=f"d{i}")
+    dels = t.delete_entries()
+    assert len(dels) == 15 and sum(e["byte_size"] for e in dels) > 8 << 10
+    assert jobs_launched(spark, lambda: t.scan().count()) == none_outstanding
+    assert t.scan().count() == 105
+
+
 def test_consolidation_on_object_store_without_rename(spark, tmp_path, monkeypatch):
     """Delete-file consolidation + GC of the folded files on the
     S3-semantics storage with os.rename forbidden."""
@@ -382,11 +399,12 @@ def test_consolidation_on_object_store_without_rename(spark, tmp_path, monkeypat
     assert t.scan().count() == 100
 
 
-def test_scan_in_manifest_order_with_deletes_in_two_cohorts(spark, tmp_path):
+def test_scan_in_manifest_order_with_deletes_in_two_cohorts(spark, tmp_path, monkeypatch):
     """scan_in_manifest_order gives every row its file's ordinal while
     MOR deletes are outstanding: two deletes around an append split the
     driver-planned read into two sequence cohorts, whose union hides
-    ``_metadata``."""
+    ``_metadata``; above DELETE_DRIVER_MAX_KEYS (forced by a cap of 0)
+    the anti-join's joins hide it too."""
     import pyarrow.parquet as pq
 
     t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
@@ -405,21 +423,33 @@ def test_scan_in_manifest_order_with_deletes_in_two_cohorts(spark, tmp_path):
 
     df = t.scan_in_manifest_order().select("clip_id", "_file_ord")
     assert sorted((r.clip_id, r._file_ord) for r in df.collect()) == want
+    monkeypatch.setattr(meta.Table, "DELETE_DRIVER_MAX_KEYS", 0)
+    df = t.scan_in_manifest_order()
+    assert "_fseq" not in df.columns
+    assert sorted((r.clip_id, r._file_ord) for r in df.select("clip_id", "_file_ord").collect()) == want
 
 
 def test_object_store_root_reads_deletes_without_inference(spark, tmp_path, monkeypatch):
     """Under an object-store root the reader takes each data file's
     schema from Spark's inference; a small delete file's column names
     come from the pyarrow read of its keys through ``storage`` instead,
-    so a read after delete_keys_mor infers nothing."""
+    so a read after delete_keys_mor infers nothing. (Writing the delete
+    file infers its schema once: there its stats come from the Spark
+    aggregation, which reads it with the engine reader. That cached
+    schema is dropped before the read, so the read cannot lean on it.)"""
     t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
     t._local = False  # read as under an s3a:// root
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
 
-    def no_inference(self, path):
-        raise AssertionError(f"inferred the schema of {path}")
-
-    monkeypatch.setattr(meta.Table, "_infer_schema", no_inference)
+    inferred = []
+    real_infer = meta.Table._infer_schema
+    monkeypatch.setattr(
+        meta.Table, "_infer_schema", lambda self, p: inferred.append(p) or real_infer(self, p)
+    )
     delete_keys_mor(t, _keys_df(spark, ids[:3]), job_id="d1")
+    delete_file = f"{t.root}/{t.delete_entries()[0]['file_path']}"
+    assert inferred == [delete_file]
+    del t._schema_cache[delete_file]
     assert t.scan().count() == 57
     assert [s["key_cols"] for s in t.delete_key_specs()] == [("clip_id",)]
+    assert inferred == [delete_file]
