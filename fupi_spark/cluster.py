@@ -22,14 +22,17 @@ Physical plan (idiomatic Spark, no RDDs):
    O(n_buckets) boundary list ever reaching the driver;
 4. bucket id assigned JVM-side (codegen fold over the boundary array;
    past BUCKET_FOLD_MAX boundaries a vectorized searchsorted pandas
-   UDF, O(log n) per row), ONE hash shuffle on it,
-   ``sortWithinPartitions(_zval, clip_id)``,
-   ``write.partitionBy(_bucket)`` — Table.promote_staged renames the
-   bucket directories to range-ordered file names, so file-name order
-   IS curve order and concatenating files reproduces the global
-   clustering order (tested against the pandas oracle). A hash collision that co-locates two
-   buckets in one task still emits one file per bucket, each
-   internally sorted, so the property survives;
+   UDF, O(log n) per row), ONE hash shuffle on it, then
+   Table.write_datafiles' multi-file write with ``_bucket`` as the file
+   column: the shuffle's partitions are coalesced into write_tasks
+   tasks (about one per core on a small table, one per bucket once the
+   buckets are large), each sorted by ``(_bucket, _zval, clip_id)``
+   and written with ``partitionBy(_bucket)``. Each bucket becomes one
+   file, promoted to a range-ordered name, so file-name order IS curve
+   order and concatenating files reproduces the global clustering
+   order (tested against the pandas oracle). A task that holds several
+   buckets (a hash collision, or the coalesce) still emits one file
+   per bucket, each internally sorted, so the property survives;
 5. manifest rewrite + per-file stats recomputation, snapshot commit
    (operation='cluster'), per-partition lineage.
 
@@ -356,9 +359,8 @@ class _Layout:
 
     @property
     def sort_cols(self) -> list[str]:
-        if self.zval is None:
-            return ["_bucket", "clip_id"]
-        return ["_bucket", "_zval", "clip_id"]
+        """The in-bucket row order."""
+        return ["clip_id"] if self.zval is None else ["_zval", "clip_id"]
 
     def bucket(self) -> Column:
         """The range-bucket id of a row of a ``keyed`` frame."""
@@ -471,22 +473,16 @@ def cluster(
 def _write_clustered(
     rw: Rewrite, df, n_parts, sort_cols, removed_entries, bytes_in, summary
 ) -> Snapshot:
-    """Shared rewrite tail: bucket-shuffled sorted write → atomic
-    promote → per-partition lineage → snapshot commit."""
-    table = rw.table
-    staging = table.stage_dir(rw.job_id)
-    (
-        # _bucket leads the sort so the partitionBy writer's required
-        # ordering is already satisfied — otherwise it inserts its own
-        # (unstable) sort by _bucket and destroys the curve order
-        df.repartition(n_parts, F.col("_bucket"))
-        .sortWithinPartitions(*sort_cols)
-        .drop("_zval")
-        .write.mode("overwrite")
-        .partitionBy("_bucket")
-        .parquet(staging)
+    """Shared rewrite tail: bucket-shuffled sorted write and promote
+    (one file per bucket) → per-partition lineage → snapshot commit."""
+    added = rw.table.write_datafiles(
+        df.repartition(n_parts, F.col("_bucket")),
+        rw.job_id,
+        sort_within=sort_cols,
+        file_col="_bucket",
+        n_files=n_parts,
+        sort_only=("_zval",),
     )
-    added = table.promote_staged(staging, rw.job_id)
     rw.log.record_outputs(added, [e["file_path"] for e in removed_entries], bytes_in)
     return rw.commit("cluster", added, {**summary, "output_files": added.num_rows})
 

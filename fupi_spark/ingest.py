@@ -367,8 +367,8 @@ def ingest_corpus(
     t_sent = meta.create_table(spark, f"{warehouse}/sentence_level", stats_spec=sent_stats)
     t_text = meta.create_table(spark, f"{warehouse}/text_level", stats_spec=text_stats)
 
-    # index layout: files carry CONTIGUOUS lsh_bucket ranges (staged
-    # partitionBy over a bucket-group column, like cluster.py's rewrite)
+    # index layout: files carry CONTIGUOUS lsh_bucket ranges (one file
+    # per bucket-group column value, like cluster.py's rewrite)
     # so probe sets prune at the manifest level; in-file sort by bucket
     # adds parquet row-group pruning. A plain hash repartition would
     # scatter all 256 bucket values into every file and make the
@@ -380,20 +380,22 @@ def ingest_corpus(
     span = (1 << _NB) // n_groups
     rw = Rewrite(t_sent, "ingest", "ingest")
     if rw.committed is None:
-        staging = t_sent.stage_dir(rw.job_id)
-        (
+        index = (
             sentences.select(
                 "text_id", "sentence_id", "sentence", "dense_embedding",
                 "colbert_embedding", "lsh_bucket",
             )
             .withColumn("_bgrp", (F.col("lsh_bucket") / span).cast("int"))
             .repartition(n_groups, "_bgrp")
-            .sortWithinPartitions("_bgrp", "lsh_bucket", "sentence_id")
-            .write.mode("overwrite")
-            .partitionBy("_bgrp")
-            .parquet(staging)
         )
-        rw.commit("append", t_sent.promote_staged(staging, rw.job_id))
+        added = t_sent.write_datafiles(
+            index,
+            rw.job_id,
+            sort_within=["lsh_bucket", "sentence_id"],
+            file_col="_bgrp",
+            n_files=n_groups,
+        )
+        rw.commit("append", added)
 
     meta.append(t_text, text_level, job_id="ingest")
     # group-aware compaction for the indexed sentence table: bins never

@@ -50,7 +50,7 @@ Scale notes: manifests are parquet (not driver JSON); file skipping is
 one vectorized driver pass over the Arrow manifest (stats_keep_mask —
 the same load every commit already makes), not a Spark job; every
 write, compaction included, becomes manifest entries through
-Table.promote_staged, whose per-file stats come from the file as
+Table.file_entries, whose per-file stats come from the file as
 written (Iceberg's data-file metrics): on a file-local root and up to
 FOOTER_DRIVER_MAX files, its parquet footer plus its 8-byte ``_crc``
 column, read in a driver loop; otherwise — more files, an object-store
@@ -820,13 +820,29 @@ class Table:
         df: DataFrame,
         job_id: str,
         sort_within: list[str] | None = None,
+        file_col: str | None = None,
+        n_files: int = 0,
+        sort_only: tuple[str, ...] = (),
     ) -> pa.Table:
         """Write df into immutable data files and return their manifest
-        entries (promote_staged: stats read from the files as written).
+        entries (stats read from the files as written).
 
         The caller controls physical partitioning (repartition /
-        repartitionByRange) before calling; this preserves it 1 task →
-        1 file (maxRecordsPerFile intentionally unset).
+        repartitionByRange) before calling. Without ``file_col`` each
+        write task writes one file. With it — an int column giving each
+        row's output file, ``n_files`` values the caller has already
+        partitioned on — the partitions are coalesced into write_tasks
+        tasks, each writing its files in sequence: every write task pays
+        a fixed cost (deserializing the task and its Hadoop
+        configuration) that a small file does not amortize. The sort
+        after the coalesce leads with ``file_col``, so the partitionBy
+        writer's required ordering already holds and Spark inserts no
+        (unstable) sort of its own: each file gets the rows, in the
+        order, of a one-task-per-file write. ``sort_only`` columns order
+        the rows but are not written.
+
+        The schema written seeds the schema cache of the new files, so
+        the stats read that follows infers no schema on any root.
         """
         from .integrity import with_crc
 
@@ -834,9 +850,23 @@ class Table:
         # payload checksum computed inline with the write (JVM crc32 —
         # no extra pass); rides every later rewrite of the row
         w = with_crc(df)
-        w = w.sortWithinPartitions(*sort_within) if sort_within else w
-        w.write.mode("overwrite").parquet(staging)
-        return self.promote_staged(staging, job_id)
+        keys = list(sort_within or [])
+        if file_col:
+            w = w.coalesce(write_tasks(w, n_files))
+            keys = [file_col, *keys]
+        w = w.sortWithinPartitions(*keys) if keys else w
+        w = w.drop(*sort_only) if sort_only else w
+        writer = w.write.mode("overwrite")
+        (writer.partitionBy(file_col) if file_col else writer).parquet(staging)
+        schema = _as_nullable(T.StructType([f for f in w.schema.fields if f.name != file_col]))
+        if file_col and not any("=" in d for d in os.listdir(staging)):
+            # no rows: a partitioned write leaves no file, a one-file-per-
+            # task write leaves one empty file that carries the schema
+            self.spark.createDataFrame([], schema).write.mode("overwrite").parquet(staging)
+        rels = self._promote(staging, job_id)
+        for rel in rels:
+            self._schema_cache[f"{self.root}/{rel}"] = schema
+        return self.file_entries(rels)
 
     def mark_job_active(self, job_id: str) -> None:
         """Register the job's lineage marker before any file lands in
@@ -885,12 +915,17 @@ class Table:
 
     def promote_staged(self, staging: str, job_id: str) -> pa.Table:
         """Promote a staged Spark write into ``data/`` and return its
-        manifest entries (file_entries) — the one way a staged write
+        manifest entries (file_entries)."""
+        return self.file_entries(self._promote(staging, job_id))
+
+    def _promote(self, staging: str, job_id: str) -> list[str]:
+        """Move a staged Spark write into ``data/`` and return the new
+        files' paths relative to the root — the one way a staged write
         becomes table files, for appends, MERGE, DELETE, clustering,
         transforms and compaction alike. The layout comes from the
         staging directory: flat part files, or one ``<col>=<int>``
-        directory per partition value (compaction's ``_bin``,
-        clustering's ``_bucket``). Output names are
+        directory per partition value (write_datafiles' file column,
+        compaction's ``_bin``). Output names are
         ``data/<job>-<nonce>-...`` (the prefix orphan GC protects while
         the job is in flight), and name order is (partition value, part
         file) order, so a range-partitioned write (cluster, the LSH
@@ -913,7 +948,7 @@ class Table:
         self.storage.ensure_dir("data")
         self.storage.promote_many(pairs)
         shutil.rmtree(staging, ignore_errors=True)
-        return self.file_entries([rel for _src, rel in pairs])
+        return [rel for _src, rel in pairs]
 
     def file_entries(self, rels: list[str]) -> pa.Table:
         """Manifest entries of data files already in ``data/``: stats
@@ -1177,8 +1212,22 @@ def applicable_deletes(dels: list[dict], file_sequence: int | None) -> list[dict
     return [d for d in dels if (d.get("sequence") or 0) >= (file_sequence or 0)]
 
 
+def write_tasks(df: DataFrame, files: int) -> int:
+    """Write tasks for ``files`` files of ``df``: the session's default
+    parallelism, raised to one task per ``spark.sql.files.maxPartitionBytes``
+    of the optimizer's size estimate of ``df``, and at most one task
+    per file. An unknown estimate is huge, so it keeps one task per
+    file, as do files larger than maxPartitionBytes; no task sorts much
+    more than maxPartitionBytes."""
+    spark = df.sparkSession
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    per_task = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    by_bytes = -(-est // max(per_task, 1))
+    return max(1, min(files, max(spark.sparkContext.defaultParallelism, by_bytes)))
+
+
 def staged_partition(rel: str) -> int:
-    """The partition value of a file Table.promote_staged promoted from
+    """The partition value of a file Table._promote promoted from
     a ``<col>=<int>`` staging directory, read back from its name
     (``data/<job>-<nonce>-<value>-<part>.parquet``)."""
     return int(rel.rsplit("-", 2)[1])
@@ -1383,15 +1432,22 @@ def append(
     sort_within: list[str] | None = None,
 ) -> Snapshot:
     """Append write: new data files + new snapshot referencing old ∪ new.
-    The caller controls physical layout: pre-repartition (or pass
-    ``parts`` for a blind hash repartition) and ``sort_within`` to keep
-    per-file/row-group stats tight on index columns. A ``job_id`` that
-    already committed returns that snapshot and writes nothing."""
+    The caller controls physical layout: pre-repartition (one file per
+    partition), or pass ``parts`` for round-robin into ``parts`` files
+    (written by Table.write_datafiles' multi-file write), and
+    ``sort_within`` to keep per-file/row-group stats tight on index
+    columns. A ``job_id`` that already committed returns that snapshot
+    and writes nothing."""
     from .lineage import Rewrite
 
     rw = Rewrite(table, job_id, "append")
     if rw.committed is not None:
         return rw.committed
+    file_col = None
     if parts:
-        df = df.repartition(parts)
-    return rw.commit("append", table.write_datafiles(df, rw.job_id, sort_within=sort_within))
+        df = df.repartition(parts).withColumn("_part", F.spark_partition_id())
+        file_col = "_part"
+    added = table.write_datafiles(
+        df, rw.job_id, sort_within=sort_within, file_col=file_col, n_files=parts or 0
+    )
+    return rw.commit("append", added)

@@ -5,7 +5,10 @@ and compares rows + schema + order-insensitive normalized values
 against its DuckDB oracle (tests/oracle_check semantics), writing the
 per-entry status/timing artifact ``CORRECTNESS_LOCAL_r{N}.json``.
 
-Usage:  python tests/local_sweep.py [round_number]
+Usage:  python tests/local_sweep.py <round_number>
+
+The round number is required: each round's artefact is a tracked file,
+so a run without one would overwrite an earlier round's record.
 """
 
 from __future__ import annotations
@@ -29,8 +32,14 @@ from tests.oracle_check import duck_conn, normalize_rows  # noqa: E402
 SF = "/root/testdata/sf0.01"
 
 
+USAGE = "usage: python tests/local_sweep.py <round_number>"
+
+
 def main() -> None:
-    rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 6
+    if len(sys.argv) != 2 or not sys.argv[1].isdigit():
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
+    rnd = int(sys.argv[1])
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")

@@ -6,13 +6,13 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from fupi_spark import refimpl, zorder
+from fupi_spark import meta, refimpl, zorder
 from fupi_spark.cluster import cluster, dimension_bounds
 from fupi_spark.compact import ffd_pack
 from fupi_spark.meta import create_table
 from fupi_spark.synth import synth_clips
 
-from .test_meta_compact import make_table
+from .test_meta_compact import make_table, write_tasks_launched
 
 
 def test_morton_matches_scalar_oracle():
@@ -375,3 +375,51 @@ def test_cluster_ignores_append_committed_while_planning(spark, tmp_table_dir, m
     assert len(ids) == 130
     assert len(set(ids)) == 130
     assert t.current_snapshot().operation == "cluster"
+
+
+def test_multi_file_write_runs_one_task_per_core(spark, tmp_path, monkeypatch):
+    """``append(parts=32)`` and a zorder ``cluster()`` on a small table
+    each write their files in at most defaultParallelism tasks, and
+    their manifest entries (row_count, checksum_bytes, min/max,
+    byte_size), file by file in name order, equal those of the same ops
+    run with ``spark.sql.files.maxPartitionBytes=1`` for the task count,
+    which gives each file its own task."""
+    from fupi_spark.session import session_conf
+
+    src = str(tmp_path / "src")
+    synth_clips(spark, 400, dur_range_ms=(50, 150)).coalesce(1).write.parquet(src)
+    cores = spark.sparkContext.defaultParallelism
+
+    def canon(t):
+        return [
+            tuple(e[k] for k in sorted(e) if k != "file_path")
+            for e in sorted(t.manifest_entries().to_pylist(), key=lambda e: e["file_path"])
+        ]
+
+    def run(root):
+        t = create_table(spark, root)
+        tasks = [
+            write_tasks_launched(
+                spark, lambda: meta.append(t, spark.read.parquet(src), job_id="a", parts=32)
+            )
+        ]
+        appended = canon(t)
+        tasks.append(
+            write_tasks_launched(spark, lambda: cluster(t, curve="zorder", target_bytes=1 << 16))
+        )
+        return tasks, appended, canon(t)
+
+    tasks, appended, clustered = run(str(tmp_path / "packed"))
+    assert len(appended) == 32 and len(clustered) > cores
+    assert max(tasks) <= cores, tasks
+
+    real = meta.write_tasks
+
+    def one_task_per_file(df, files):
+        with session_conf(spark, {"spark.sql.files.maxPartitionBytes": "1"}):
+            return real(df, files)
+
+    monkeypatch.setattr(meta, "write_tasks", one_task_per_file)
+    per_file = run(str(tmp_path / "per_file"))
+    assert per_file[0][0] == 32 and per_file[0][1] >= len(clustered)
+    assert per_file[1:] == (appended, clustered)

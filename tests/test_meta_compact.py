@@ -43,9 +43,10 @@ def assert_summary_sums_lineage(t, snap) -> None:
     assert want["units"] > 0
 
 
-def jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through the status tracker
-    under a private job group (after draining the listener bus)."""
+def _jobs_of(spark, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn`` launches, from the status
+    tracker under a private job group (after draining the listener
+    bus)."""
     sc = spark.sparkContext
     group = f"probe-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group, False)
@@ -54,7 +55,22 @@ def jobs_launched(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches."""
+    return len(_jobs_of(spark, fn))
+
+
+def write_tasks_launched(spark, fn) -> int:
+    """Tasks ``fn`` runs in stages that write output files, from the
+    status store."""
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    stages = {sid for jid in _jobs_of(spark, fn) for sid in tracker.getJobInfo(jid).stageIds}
+    attempts = [store.lastStageAttempt(sid) for sid in sorted(stages)]
+    return sum(a.numCompleteTasks() for a in attempts if a.outputBytes() > 0)
 
 
 # -- FFD packer unit/property tests ------------------------------------------
@@ -140,6 +156,17 @@ def test_create_append_compact_lineage(spark, tmp_table_dir):
 
     # time travel still sees the pre-compact state
     assert clip_multiset(t.scan(snapshot_id=2)) == before
+
+
+def test_append_parts_of_no_rows_commits_one_empty_file(spark, tmp_table_dir):
+    """An append of an empty frame with ``parts`` commits one empty file
+    that carries the schema, so the table reads as empty, not missing."""
+    t = meta.create_table(spark, tmp_table_dir)
+    clips = synth_clips(spark, 10, dur_range_ms=(50, 60))
+    meta.append(t, clips.limit(0), job_id="empty", parts=4)
+    assert [e["row_count"] for e in t.manifest_entries().to_pylist()] == [0]
+    assert t.scan().count() == 0
+    assert t.scan().columns == clips.columns
 
 
 def test_compact_respects_target_size(spark, tmp_table_dir):

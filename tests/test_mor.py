@@ -433,10 +433,11 @@ def test_object_store_root_reads_deletes_without_inference(spark, tmp_path, monk
     """Under an object-store root the reader takes each data file's
     schema from Spark's inference; a small delete file's column names
     come from the pyarrow read of its keys through ``storage`` instead,
-    so a read after delete_keys_mor infers nothing. (Writing the delete
-    file infers its schema once: there its stats come from the Spark
-    aggregation, which reads it with the engine reader. That cached
-    schema is dropped before the read, so the read cannot lean on it.)"""
+    so a read after delete_keys_mor infers nothing. Writing the delete
+    file infers nothing either: its stats come from the Spark
+    aggregation, which reads it with the schema the write seeded. That
+    cached schema is dropped before the read, so the read cannot lean
+    on it."""
     t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
     t._local = False  # read as under an s3a:// root
     ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
@@ -448,8 +449,29 @@ def test_object_store_root_reads_deletes_without_inference(spark, tmp_path, monk
     )
     delete_keys_mor(t, _keys_df(spark, ids[:3]), job_id="d1")
     delete_file = f"{t.root}/{t.delete_entries()[0]['file_path']}"
-    assert inferred == [delete_file]
+    assert inferred == []
     del t._schema_cache[delete_file]
     assert t.scan().count() == 57
     assert [s["key_cols"] for s in t.delete_key_specs()] == [("clip_id",)]
-    assert inferred == [delete_file]
+    assert inferred == []
+
+
+def test_written_schema_seeds_the_footer_schema(spark, tmp_path):
+    """The schema a write seeds for its new files is the one their
+    footers hold: for an append, a zorder cluster and a MOR delete, a
+    fresh handle (empty cache) reads each file's footer schema and gets
+    the seeded one."""
+    from fupi_spark.cluster import cluster
+
+    t = make_table(spark, str(tmp_path / "t"), n=60, parts=3)
+    cluster(t, curve="zorder", target_bytes=1 << 14)
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    delete_keys_mor(t, _keys_df(spark, ids[:3]), job_id="d1")
+
+    fresh = meta.load_table(spark, t.root)
+    ops = {s.operation for s in map(t.snapshot, t.snapshot_ids())}
+    assert ops == {"create", "append", "cluster", "delete-mor"}
+    written = sorted(f"{t.data_dir}/{f}" for f in os.listdir(t.data_dir))
+    assert len(written) > 3 + 1
+    for p in written:
+        assert t._schema_cache[p] == fresh.file_schema(p), p

@@ -4,6 +4,8 @@ avoids global sorts, and maintenance jobs contain no surprise shuffles."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from fupi_spark import queries as Q
@@ -66,6 +68,65 @@ def test_compact_plan_has_no_shuffle(spark, tmp_table_dir):
     assert "Exchange hashpartitioning" not in p, p
     assert "SinglePartition" not in p, p
     assert "BroadcastHashJoin" in p, p
+
+
+def write_plans(spark, fn) -> list[str]:
+    """The formatted final physical plan of each file write ``fn``
+    runs, from the SQL status store (what ``.explain("formatted")``
+    prints for the write command once it has run)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > seen
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    # keep the final plan's tree and the details of its nodes
+    out = []
+    for d in plans:
+        tree = d.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+        ids = set(re.findall(r"\((\d+)\)", tree))
+        details = [
+            b for b in d.split("\n\n") if (m := re.match(r"\((\d+)\)", b)) and m.group(1) in ids
+        ]
+        out.append("\n\n".join([tree, *details]))
+    return out
+
+
+def assert_multi_file_write(plan: str, file_col: str) -> None:
+    """One shuffle, a coalesce above it and one sort whose keys lead
+    with the file column: the writer adds no sort of its own."""
+    tree = plan.split("\n\n(", 1)[0]
+    nodes = re.findall(r"^\s*(?:\+- )?\*?\s*([A-Za-z][\w ]*?) \(\d+\)", tree, re.M)
+    assert nodes.count("Exchange") == 1, plan
+    assert nodes.count("Coalesce") == 1, plan
+    assert nodes.count("Sort") == 1, plan
+    sort = re.search(r"^\(\d+\) Sort.*\nInput.*\nArguments: \[(\w+)#", plan, re.M)
+    assert sort and sort.group(1) == file_col, plan
+
+
+def test_multi_file_write_plan(spark, tmp_table_dir):
+    """append(parts) and cluster() each write their files with one
+    shuffle, one coalesce into write tasks and one in-task sort led by
+    the file column — no second (writer-inserted) sort."""
+    from fupi_spark import meta
+    from fupi_spark.cluster import cluster
+    from fupi_spark.synth import synth_clips
+
+    t = meta.create_table(spark, tmp_table_dir)
+    clips = synth_clips(spark, 200, dur_range_ms=(50, 80))
+    [append] = write_plans(spark, lambda: meta.append(t, clips, job_id="seed", parts=32))
+    assert_multi_file_write(append, "_part")
+    [clustered] = write_plans(spark, lambda: cluster(t, curve="zorder", target_bytes=1 << 14))
+    assert_multi_file_write(clustered, "_bucket")
 
 
 def test_merge_prune_join_is_metadata_only(spark, tmp_table_dir):

@@ -468,8 +468,8 @@ def test_wap_audit_scope_excludes_commit_during_write(spark, tmp_path, monkeypat
     real_write = Table.write_datafiles
     fired = {"n": 0}
 
-    def write_then_stranger(self, df, job_id, sort_within=None):
-        added = real_write(self, df, job_id, sort_within=sort_within)
+    def write_then_stranger(self, df, job_id, **kw):
+        added = real_write(self, df, job_id, **kw)
         if job_id == "wap-b" and fired["n"] == 0:
             fired["n"] = 1  # stranger commits before the candidate does
             meta.append(t, stranger, job_id="stranger", parts=1)
