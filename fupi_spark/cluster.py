@@ -480,7 +480,6 @@ def _write_clustered(
         rw.job_id,
         sort_within=sort_cols,
         file_col="_bucket",
-        n_files=n_parts,
         sort_only=("_zval",),
     )
     rw.log.record_outputs(added, [e["file_path"] for e in removed_entries], bytes_in)

@@ -10,20 +10,22 @@ becomes an explicit, resumable Spark job:
             10^12-row scale, safely driver-sized);
 2. rewrite— ZERO-shuffle job: compaction is pure concatenation, so no
             row ever needs to change tasks. ONE single-branch scan of
-            all candidate files; each row's bin id attaches via a
-            BroadcastHashJoin on its file name (Table.tag_files);
-            ``write.partitionBy(_bin)`` streams each bin into its own
-            file(s). The plan is O(1) in bin count — the round-2
-            union-of-branches design paid ~10 s of driver
-            analysis/codegen per 64-bin job, a constant that didn't
-            parallelize and capped the stage at every core count;
-3. record — the staged ``_bin=<id>`` output becomes table files
-            through Table.promote_staged, whose entries carry each
-            output file's own stats (footer + ``_crc`` column, like
-            every other write); each bin's footer row counts must
-            equal its input rows before its lineage unit (files-in/out,
-            bytes, rows) is checkpointed; a resumed job re-uses
-            completed bins and reads their entries the same way;
+            all candidate files per schema generation; each row's bin
+            id attaches via a BroadcastHashJoin on its file name
+            (Table.tag_files), and Table.write_datafiles — the one
+            writer of table files — writes it with ``_bin`` as its
+            file column, so each bin streams into its own file(s). The
+            plan is O(1) in bin count — the round-2 union-of-branches
+            design paid ~10 s of driver analysis/codegen per 64-bin
+            job, a constant that didn't parallelize and capped the
+            stage at every core count;
+3. record — the writer's entries carry each output file's own stats
+            (footer + ``_crc`` column, like every other write) and its
+            bin in its name (staged_partition); each bin's footer row
+            counts must equal its input rows before its lineage unit
+            (files-in/out, bytes, rows) is checkpointed; a resumed job
+            re-uses completed bins and reads their entries the same
+            way (Table.file_entries);
 4. commit — optimistic snapshot commit replacing packed files; outputs
             keep their inputs' schema generation and minimum sequence.
 
@@ -36,7 +38,6 @@ whenever candidate bytes ≫ 1000 × maxPartitionBytes.
 
 from __future__ import annotations
 
-import shutil
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -175,31 +176,24 @@ def compact(
         # data needs to move between tasks. ONE single-branch job per
         # schema generation (bins_scan): scan all candidate files,
         # attach each row's bin id via a BroadcastHashJoin on its file
-        # name (map-side, no shuffle), write.partitionBy(_bin). Round 2
-        # built a union of one branch PER BIN instead — at 64 bins the
-        # driver spent ~10 s per compaction analyzing/codegen-ing the
-        # 64-branch plan, a constant that didn't parallelize and
-        # dominated the stage at every core count (measured: compact
-        # ~12 s at local[2] AND local[8] on a 0.35 GB table). The plan
-        # here is O(1) in bin count; the file→bin map is a broadcast of
-        # O(files) tiny rows, fine at 10^5 bins.
+        # name (map-side, no shuffle), and write it with ``_bin`` as
+        # write_datafiles' file column. Round 2 built a union of one
+        # branch PER BIN instead — at 64 bins the driver spent ~10 s
+        # per compaction analyzing/codegen-ing the 64-branch plan, a
+        # constant that didn't parallelize and dominated the stage at
+        # every core count (measured: compact ~12 s at local[2] AND
+        # local[8] on a 0.35 GB table). The plan here is O(1) in bin
+        # count; the file→bin map is a broadcast of O(files) tiny rows,
+        # fine at 10^5 bins.
         #
         # Scan partitioning packs small files to maxPartitionBytes, so
         # a bin's rows can span tasks → a bin may emit several files
-        # (promote_staged + lineage handle multi-file bins, and each
-        # file gets its own exact stats); setting maxPartitionBytes ≈
-        # target keeps it to ~1-2 per bin.
+        # (lineage handles multi-file bins, and each file gets its own
+        # exact stats); setting maxPartitionBytes ≈ target keeps it to
+        # ~1-2 per bin.
         #
-        # Crash-resume hygiene: a previous attempt may have died between
-        # the write and promote_staged, leaving staged part files that
-        # mode('append') would keep and promote_staged would then
-        # rename alongside this attempt's output (duplicate rows). Done
-        # bins' files were already renamed out of staging, so wiping the
-        # whole staging dir before rewriting is always safe.
-        shutil.rmtree(table.stage_dir(rw.job_id), ignore_errors=True)
-        staging = table.stage_dir(rw.job_id)
-        # one write pass per schema generation (mixing would pad old
-        # files into the new physical schema); bins are generation-pure
+        # one write per schema generation (mixing would pad old files
+        # into the new physical schema); bins are generation-pure
         entry_sid = {e["file_path"]: (e.get("schema_id") or 0) for e in entries}
         by_sid: dict = {}
         for b in todo:
@@ -227,15 +221,16 @@ def compact(
         }
         with session_conf(spark, packing):
             for sid in sorted(by_sid):
-                # _bin leads the in-task sort so the partitionBy writer's
-                # required ordering is already satisfied (it would
-                # otherwise insert its own unstable sort)
-                df = bins_scan(table, by_sid[sid]).sortWithinPartitions(
-                    "_bin", *(sort_within or [])
-                )
-                df.write.mode("append").partitionBy("_bin").parquet(staging)
+                # bins of no rows write nothing: the writer's empty,
+                # schema-carrying file of a rowless write is no bin's
+                if any(b.row_count for b in by_sid[sid]):
+                    added += table.write_datafiles(
+                        bins_scan(table, by_sid[sid]),
+                        rw.job_id,
+                        sort_within=sort_within,
+                        file_col="_bin",
+                    ).to_pylist()
 
-        added = table.promote_staged(staging, rw.job_id).to_pylist()
         outs: dict[int, list[dict]] = {}
         for e in added:
             outs.setdefault(staged_partition(e["file_path"]), []).append(e)

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .meta import Snapshot, Table, _empty_manifest
+from .meta import FILE_COL, Snapshot, Table, _empty_manifest
 
 #: lossless widenings (parquet physical → declared read type)
 _WIDEN_OK = {
@@ -50,7 +50,7 @@ _WIDEN_OK = {
     ("float", "double"),
 }
 
-_RESERVED = {"_crc", "_bin", "_bucket", "_zval"}
+_RESERVED = {"_crc", "_bin", "_bucket", "_zval", FILE_COL}
 
 
 def apply_schema_ops(df: DataFrame, ops: list[dict]) -> DataFrame:

@@ -393,7 +393,6 @@ def ingest_corpus(
             rw.job_id,
             sort_within=["lsh_bucket", "sentence_id"],
             file_col="_bgrp",
-            n_files=n_groups,
         )
         rw.commit("append", added)
 

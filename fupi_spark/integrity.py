@@ -13,8 +13,9 @@ replaces routine full-table verification with a checksum design:
   its source rows).
 - manifest ``checksum_bytes``: per-file sum of ``_crc`` — read from
   each file as written, like the other stats, by the one per-file stats
-  reader every write (compaction included) promotes through (reads
-  only the 8-byte column, never the payload).
+  reader behind Table.write_datafiles, the one writer of table files
+  (compaction included; reads only the 8-byte column, never the
+  payload).
 - ``verify_table``: ONE JVM pass computes ``crc32(bytes) == _crc`` per
   row; only rows that fail (post-write corruption) plus a deterministic
   sample (coverage against wrong-at-write bytes) enter the Python SNR

@@ -485,6 +485,14 @@ def _as_deletes(added: pa.Table, sequence: int | None = None) -> pa.Table:
 KEYS_PER_DELETE_FILE = 4_000_000
 
 
+def _key_files(keys: DataFrame, n_keys: int, key_cols) -> DataFrame:
+    """``keys`` partitioned into delete files: one per
+    KEYS_PER_DELETE_FILE of ``n_keys`` (a count or an upper bound),
+    hash-partitioned on the key columns when there are several."""
+    parts = max(1, -(-n_keys // KEYS_PER_DELETE_FILE))
+    return keys.repartition(parts, *key_cols) if parts > 1 else keys.coalesce(1)
+
+
 def delete_keys_mor(
     table: Table,
     keys: DataFrame,
@@ -526,11 +534,7 @@ def delete_keys_mor(
     kdf = keys.select(*key_cols).distinct().persist()
     try:
         n_keys = kdf.count()
-        parts = max(1, -(-n_keys // KEYS_PER_DELETE_FILE))
-        kdf_out = (
-            kdf.repartition(parts, *key_cols) if parts > 1 else kdf.coalesce(1)
-        )
-        added = _as_deletes(table.write_datafiles(kdf_out, rw.job_id))
+        added = _as_deletes(table.write_datafiles(_key_files(kdf, n_keys, key_cols), rw.job_id))
     finally:
         kdf.unpersist()
     rw.log.record_outputs(added, [], 0)
@@ -579,10 +583,7 @@ def consolidate_deletes(
         # manifest row counts upper-bound the distinct key count — size
         # the write without an extra count job
         est = sum(e["row_count"] for e in entries)
-        parts = max(1, -(-est // KEYS_PER_DELETE_FILE))
-        out = (
-            del_df.repartition(parts, *key_cols) if parts > 1 else del_df.coalesce(1)
-        )
+        out = _key_files(del_df, est, list(key_cols))
         max_seq = max(int(e.get("sequence") or 0) for e in entries)
         added = _as_deletes(table.write_datafiles(out, rw.job_id), max_seq)
         # inputs recorded on each GROUP's first unit (a global first-unit

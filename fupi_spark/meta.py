@@ -7,11 +7,11 @@ On-disk layout (object-store friendly: immutable objects + one
 conditional PUT per commit):
 
     <root>/
-      data/<job>-<k>.parquet            immutable data files
-      metadata/v00001.json ...          snapshot log (conditional-PUT claims)
-      metadata/manifests/<id>.parquet   manifest files (file entries + stats)
-      _staging/<job>/                   transient local write area
-      _lineage/<job>/unit-<k>.json      per-partition lineage checkpoints
+      data/<job>-<nonce>-<k>-<j>.parquet  immutable data files
+      metadata/v00001.json ...            snapshot log (conditional-PUT claims)
+      metadata/manifests/<id>.parquet     manifest files (file entries + stats)
+      _staging/<job>/                     transient local write area
+      _lineage/<job>/unit-<k>.json        per-partition lineage checkpoints
 
 Every metadata mutation, promotion, and GC delete goes through the
 ``storage.py`` interface — primitives every object store offers (the
@@ -49,11 +49,14 @@ fupi/embedders.py:124-128) is the seed of this snapshot chain.
 Scale notes: manifests are parquet (not driver JSON); file skipping is
 one vectorized driver pass over the Arrow manifest (stats_keep_mask —
 the same load every commit already makes), not a Spark job; every
-write, compaction included, becomes manifest entries through
-Table.file_entries, whose per-file stats come from the file as
-written (Iceberg's data-file metrics): on a file-local root and up to
-FOOTER_DRIVER_MAX files, its parquet footer plus its 8-byte ``_crc``
-column, read in a driver loop; otherwise — more files, an object-store
+write of table files, compaction included, goes through
+Table.write_datafiles — one Spark write shape: rows tagged with their
+output file, coalesced into write_tasks tasks, sorted by file first,
+written with partitionBy and promoted by Table._promote — and becomes
+manifest entries through Table.file_entries, whose per-file stats
+come from the file as written (Iceberg's data-file metrics): on a
+file-local root and up to FOOTER_DRIVER_MAX files, its parquet footer
+plus its 8-byte ``_crc`` column, read in a driver loop; otherwise — more files, an object-store
 root, or a footer without usable statistics — one distributed
 DataFrame aggregation (manifest "rewrite + stats recomputation as
 DataFrame aggregations", BASELINE.json north_star); the snapshot JSON itself
@@ -102,6 +105,10 @@ from .storage import LocalStorage, Storage
 SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 #: above this many paths Spark lists files with a Spark job, one task each
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+#: the column Table.write_datafiles tags each row with when the caller
+#: names no file column: the row's Spark partition, so each partition
+#: becomes one file
+FILE_COL = "_file"
 
 
 def local_path(uri: str) -> str:
@@ -821,48 +828,46 @@ class Table:
         job_id: str,
         sort_within: list[str] | None = None,
         file_col: str | None = None,
-        n_files: int = 0,
         sort_only: tuple[str, ...] = (),
     ) -> pa.Table:
         """Write df into immutable data files and return their manifest
-        entries (stats read from the files as written).
+        entries (stats read from the files as written) — the one code
+        that writes table files.
 
-        The caller controls physical partitioning (repartition /
-        repartitionByRange) before calling. Without ``file_col`` each
-        write task writes one file. With it — an int column giving each
-        row's output file, ``n_files`` values the caller has already
-        partitioned on — the partitions are coalesced into write_tasks
-        tasks, each writing its files in sequence: every write task pays
-        a fixed cost (deserializing the task and its Hadoop
-        configuration) that a small file does not amortize. The sort
-        after the coalesce leads with ``file_col``, so the partitionBy
-        writer's required ordering already holds and Spark inserts no
-        (unstable) sort of its own: each file gets the rows, in the
-        order, of a one-task-per-file write. ``sort_only`` columns order
-        the rows but are not written.
+        ``file_col`` is an int column giving each row's output file, on
+        which the caller has already partitioned its rows; without it
+        each row's file is its Spark partition (FILE_COL), so the
+        caller controls the files by its partitioning (repartition /
+        repartitionByRange / coalesce). The partitions are coalesced
+        into write_tasks tasks, each writing its files in sequence:
+        every write task pays a fixed cost (deserializing the task and
+        its Hadoop configuration) that a small file does not amortize.
+        The sort after the coalesce leads with the file column, so the
+        partitionBy writer's required ordering already holds and Spark
+        inserts no (unstable) sort of its own: each file gets the rows,
+        in the order, of a one-task-per-file write. ``sort_only``
+        columns order the rows but are not written. A write of no rows
+        leaves one empty file that carries the schema.
 
         The schema written seeds the schema cache of the new files, so
         the stats read that follows infers no schema on any root.
         """
         from .integrity import with_crc
 
+        if file_col is None:
+            file_col = FILE_COL
+            df = df.withColumn(FILE_COL, F.spark_partition_id())
         staging = self.stage_dir(job_id)
         # payload checksum computed inline with the write (JVM crc32 —
         # no extra pass); rides every later rewrite of the row
         w = with_crc(df)
-        keys = list(sort_within or [])
-        if file_col:
-            w = w.coalesce(write_tasks(w, n_files))
-            keys = [file_col, *keys]
-        w = w.sortWithinPartitions(*keys) if keys else w
+        w = w.coalesce(write_tasks(w)).sortWithinPartitions(file_col, *(sort_within or []))
         w = w.drop(*sort_only) if sort_only else w
-        writer = w.write.mode("overwrite")
-        (writer.partitionBy(file_col) if file_col else writer).parquet(staging)
+        w.write.mode("overwrite").partitionBy(file_col).parquet(staging)
         schema = _as_nullable(T.StructType([f for f in w.schema.fields if f.name != file_col]))
-        if file_col and not any("=" in d for d in os.listdir(staging)):
-            # no rows: a partitioned write leaves no file, a one-file-per-
-            # task write leaves one empty file that carries the schema
-            self.spark.createDataFrame([], schema).write.mode("overwrite").parquet(staging)
+        if not any("=" in d for d in os.listdir(staging)):
+            # no rows: a partitioned write leaves no file
+            self.spark.createDataFrame([], schema).write.parquet(f"{staging}/{file_col}=0")
         rels = self._promote(staging, job_id)
         for rel in rels:
             self._schema_cache[f"{self.root}/{rel}"] = schema
@@ -913,37 +918,25 @@ class Table:
         }
         return [by_name.get(p.rsplit("/", 1)[-1], {"row_count": 0}) for p in paths]
 
-    def promote_staged(self, staging: str, job_id: str) -> pa.Table:
-        """Promote a staged Spark write into ``data/`` and return its
-        manifest entries (file_entries)."""
-        return self.file_entries(self._promote(staging, job_id))
-
     def _promote(self, staging: str, job_id: str) -> list[str]:
-        """Move a staged Spark write into ``data/`` and return the new
-        files' paths relative to the root — the one way a staged write
-        becomes table files, for appends, MERGE, DELETE, clustering,
-        transforms and compaction alike. The layout comes from the
-        staging directory: flat part files, or one ``<col>=<int>``
-        directory per partition value (write_datafiles' file column,
-        compaction's ``_bin``). Output names are
-        ``data/<job>-<nonce>-...`` (the prefix orphan GC protects while
-        the job is in flight), and name order is (partition value, part
-        file) order, so a range-partitioned write (cluster, the LSH
-        index) keeps its order in file names; staged_partition reads
-        the value back. The per-attempt nonce means a job-id reuse
-        never renames over a live file of an earlier run."""
-        dirs = sorted(
-            (int(d.split("=", 1)[1]), f"{staging}/{d}")
-            for d in os.listdir(staging)
-            if "=" in d and os.path.isdir(f"{staging}/{d}")
-        )
+        """Move a staged write_datafiles output — one ``<col>=<int>``
+        directory per file-column value — into ``data/`` and return the
+        new files' paths relative to the root. Output names are
+        ``data/<job>-<nonce>-<value:06d>-<part:02d>.parquet`` (the prefix
+        orphan GC protects while the job is in flight), and name order
+        is (value, part file) order, so a range-partitioned write
+        (cluster, the LSH index) keeps its order in file names;
+        staged_partition reads the value back. The per-attempt nonce
+        means a job-id reuse never renames over a live file of an
+        earlier run."""
         nonce = uuid.uuid4().hex[:6]
         pairs = []
-        for k, d in dirs or [(None, staging)]:
+        for k, d in sorted(
+            (int(d.split("=", 1)[1]), f"{staging}/{d}") for d in os.listdir(staging) if "=" in d
+        ):
             parts = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
             for j, f in enumerate(parts):
-                tag = f"{j:05d}" if k is None else f"{k:06d}-{j:02d}"
-                pairs.append((f"{d}/{f}", f"data/{job_id}-{nonce}-{tag}.parquet"))
+                pairs.append((f"{d}/{f}", f"data/{job_id}-{nonce}-{k:06d}-{j:02d}.parquet"))
         self.mark_job_active(job_id)
         self.storage.ensure_dir("data")
         self.storage.promote_many(pairs)
@@ -1212,24 +1205,25 @@ def applicable_deletes(dels: list[dict], file_sequence: int | None) -> list[dict
     return [d for d in dels if (d.get("sequence") or 0) >= (file_sequence or 0)]
 
 
-def write_tasks(df: DataFrame, files: int) -> int:
-    """Write tasks for ``files`` files of ``df``: the session's default
-    parallelism, raised to one task per ``spark.sql.files.maxPartitionBytes``
-    of the optimizer's size estimate of ``df``, and at most one task
-    per file. An unknown estimate is huge, so it keeps one task per
-    file, as do files larger than maxPartitionBytes; no task sorts much
-    more than maxPartitionBytes."""
+def write_tasks(df: DataFrame) -> int:
+    """Write tasks for ``df``: the session's default parallelism,
+    raised to one task per ``spark.sql.files.maxPartitionBytes`` of the
+    optimizer's size estimate of ``df``. The caller coalesces to it, so
+    it never raises the partition count: an unknown estimate is huge
+    and keeps one task per partition, as do partitions larger than
+    maxPartitionBytes; no task sorts much more than maxPartitionBytes.
+    Capped at the largest JVM int, which ``coalesce`` takes."""
     spark = df.sparkSession
     est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     per_task = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     by_bytes = -(-est // max(per_task, 1))
-    return max(1, min(files, max(spark.sparkContext.defaultParallelism, by_bytes)))
+    return min(max(spark.sparkContext.defaultParallelism, by_bytes), 2**31 - 1)
 
 
 def staged_partition(rel: str) -> int:
-    """The partition value of a file Table._promote promoted from
-    a ``<col>=<int>`` staging directory, read back from its name
-    (``data/<job>-<nonce>-<value>-<part>.parquet``)."""
+    """The file-column value a data file was written under, read back
+    from its name (``data/<job>-<nonce>-<value>-<part>.parquet``,
+    Table._promote)."""
     return int(rel.rsplit("-", 2)[1])
 
 
@@ -1432,22 +1426,16 @@ def append(
     sort_within: list[str] | None = None,
 ) -> Snapshot:
     """Append write: new data files + new snapshot referencing old ∪ new.
-    The caller controls physical layout: pre-repartition (one file per
-    partition), or pass ``parts`` for round-robin into ``parts`` files
-    (written by Table.write_datafiles' multi-file write), and
-    ``sort_within`` to keep per-file/row-group stats tight on index
-    columns. A ``job_id`` that already committed returns that snapshot
-    and writes nothing."""
+    The caller controls physical layout: pre-partition (one file per
+    partition), or pass ``parts`` for round-robin into ``parts`` files,
+    and ``sort_within`` to keep per-file/row-group stats tight on index
+    columns; Table.write_datafiles writes the files. A ``job_id`` that
+    already committed returns that snapshot and writes nothing."""
     from .lineage import Rewrite
 
     rw = Rewrite(table, job_id, "append")
     if rw.committed is not None:
         return rw.committed
-    file_col = None
     if parts:
-        df = df.repartition(parts).withColumn("_part", F.spark_partition_id())
-        file_col = "_part"
-    added = table.write_datafiles(
-        df, rw.job_id, sort_within=sort_within, file_col=file_col, n_files=parts or 0
-    )
-    return rw.commit("append", added)
+        df = df.repartition(parts)
+    return rw.commit("append", table.write_datafiles(df, rw.job_id, sort_within=sort_within))

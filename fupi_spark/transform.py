@@ -13,8 +13,9 @@ fresh sequence, so outstanding MOR deletes are applied and retired —
 exactly cluster()'s semantics).
 
 Scale shape: one linear pass — scan → mapInPandas transform →
-write — with parallelism equal to the output partition count; no
-shuffle unless the caller's transform itself needs one. CRCs are
+round-robin repartition into one partition per output file → write,
+where Table.write_datafiles coalesces those partitions into about one
+write task per core on a small table. CRCs are
 recomputed inline by write_datafiles (the transform changed the
 payload, so the old checksums are void by definition).
 """

@@ -378,13 +378,17 @@ def test_cluster_ignores_append_committed_while_planning(spark, tmp_table_dir, m
 
 
 def test_multi_file_write_runs_one_task_per_core(spark, tmp_path, monkeypatch):
-    """``append(parts=32)`` and a zorder ``cluster()`` on a small table
-    each write their files in at most defaultParallelism tasks, and
-    their manifest entries (row_count, checksum_bytes, min/max,
-    byte_size), file by file in name order, equal those of the same ops
-    run with ``spark.sql.files.maxPartitionBytes=1`` for the task count,
-    which gives each file its own task."""
+    """``append(parts=32)``, a ``transform_payloads`` of the 32-file
+    table and a zorder ``cluster()`` on a small table each write their
+    files in at most defaultParallelism tasks, and their manifest
+    entries (row_count, checksum_bytes, min/max, byte_size), file by
+    file in name order, equal those of the same ops run with
+    ``spark.sql.files.maxPartitionBytes=1`` for the task count, which
+    gives each file its own task."""
+    from pyspark.sql import functions as F
+
     from fupi_spark.session import session_conf
+    from fupi_spark.transform import transform_payloads
 
     src = str(tmp_path / "src")
     synth_clips(spark, 400, dur_range_ms=(50, 150)).coalesce(1).write.parquet(src)
@@ -396,6 +400,9 @@ def test_multi_file_write_runs_one_task_per_core(spark, tmp_path, monkeypatch):
             for e in sorted(t.manifest_entries().to_pylist(), key=lambda e: e["file_path"])
         ]
 
+    def upper(df):
+        return df.withColumn("transcript", F.upper("transcript"))
+
     def run(root):
         t = create_table(spark, root)
         tasks = [
@@ -404,22 +411,24 @@ def test_multi_file_write_runs_one_task_per_core(spark, tmp_path, monkeypatch):
             )
         ]
         appended = canon(t)
+        tasks.append(write_tasks_launched(spark, lambda: transform_payloads(t, upper)))
+        transformed = canon(t)
         tasks.append(
             write_tasks_launched(spark, lambda: cluster(t, curve="zorder", target_bytes=1 << 16))
         )
-        return tasks, appended, canon(t)
+        return tasks, appended, transformed, canon(t)
 
-    tasks, appended, clustered = run(str(tmp_path / "packed"))
-    assert len(appended) == 32 and len(clustered) > cores
+    tasks, appended, transformed, clustered = run(str(tmp_path / "packed"))
+    assert len(appended) == len(transformed) == 32 and len(clustered) > cores
     assert max(tasks) <= cores, tasks
 
     real = meta.write_tasks
 
-    def one_task_per_file(df, files):
+    def one_task_per_file(df):
         with session_conf(spark, {"spark.sql.files.maxPartitionBytes": "1"}):
-            return real(df, files)
+            return real(df)
 
     monkeypatch.setattr(meta, "write_tasks", one_task_per_file)
     per_file = run(str(tmp_path / "per_file"))
-    assert per_file[0][0] == 32 and per_file[0][1] >= len(clustered)
-    assert per_file[1:] == (appended, clustered)
+    assert per_file[0][:2] == [32, 32] and per_file[0][2] >= len(clustered)
+    assert per_file[1:] == (appended, transformed, clustered)

@@ -5,6 +5,7 @@ v1(create) → v2(append) → v3(compact), plus FFD invariants and resume."""
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pytest
@@ -232,6 +233,26 @@ def test_compact_resume_skips_completed_bins(spark, tmp_table_dir, monkeypatch):
     assert [s["operation"] for s in t.lineage_chain()][-1] == "compact"
 
 
+def test_compact_resume_wipes_stale_staging(spark, tmp_table_dir):
+    """A crash between the wave write and the promote loop leaves staged
+    part files; the re-run must not promote them alongside its own
+    output (round-1 used mode('append') over dirty staging)."""
+    t = make_table(spark, tmp_table_dir, n=120, parts=6)
+    before = clip_multiset(t.scan())
+
+    job = "c-crashy"
+    staging = t.stage_dir(job)
+    os.makedirs(f"{staging}/_bin=0", exist_ok=True)
+    # stale leftovers: a full copy of a real data file = duplicate rows
+    a_file = t.live_files()[0]
+    shutil.copy(f"{t.root}/{a_file}", f"{staging}/_bin=0/part-stale-attempt.parquet")
+
+    snap = compact(t, target_bytes=1 << 30, job_id=job)
+    assert snap is not None
+    assert t.scan().count() == 120
+    assert clip_multiset(t.scan()) == before
+
+
 def test_compact_aborts_when_staged_rows_fall_short(spark, tmp_table_dir, monkeypatch):
     """A rewrite that loses rows (here: a file→bin attach that drops bin
     0) fails the per-bin footer row check before that bin's lineage
@@ -271,10 +292,8 @@ def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
     a cap of 0) the stats come from the aggregation, which must agree
     too. A partitioned staging
     layout promotes in partition-value order with the same parity, and
-    on the footer path promote_staged launches no Spark job and reads
-    the schema id at most once."""
-    import shutil
-
+    on the footer path its promotion and entries launch no Spark job
+    and read the schema id at most once."""
     t1 = meta.create_table(spark, str(tmp_path / "t1"))
     t2 = meta.create_table(spark, str(tmp_path / "t2"))
     t3 = meta.create_table(spark, str(tmp_path / "t3"))
@@ -329,12 +348,15 @@ def test_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
         lambda self: schema_reads.append(1) or real_schema_id(self),
     )
     promoted = []
-    assert jobs_launched(spark, lambda: promoted.append(t1.promote_staged(d1, "part"))) == 0
+    assert (
+        jobs_launched(spark, lambda: promoted.append(t1.file_entries(t1._promote(d1, "part"))))
+        == 0
+    )
     part1 = promoted[0].to_pylist()
     assert len(schema_reads) <= 1
     with monkeypatch.context() as mp:
         mp.setattr(meta.Table, "footer_file_stats", lambda self, paths: None)
-        part2 = t2.promote_staged(t2.stage_dir("part"), "part").to_pylist()
+        part2 = t2.file_entries(t2._promote(t2.stage_dir("part"), "part")).to_pylist()
 
     names = [e["file_path"] for e in part1]
     assert names == sorted(names) and all(n.startswith("data/part-") for n in names)

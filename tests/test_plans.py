@@ -89,10 +89,15 @@ def write_plans(spark, fn) -> list[str]:
         if e.executionId() > seen
         and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
     ]
-    # keep the final plan's tree and the details of its nodes
+    # keep the final plan's tree (the only tree of a plan without an
+    # exchange, which adaptive execution leaves alone) and the details
+    # of its nodes
     out = []
     for d in plans:
-        tree = d.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+        if "== Final Plan ==" in d:
+            tree = d.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+        else:
+            tree = d.split("\n\n", 1)[0]
         ids = set(re.findall(r"\((\d+)\)", tree))
         details = [
             b for b in d.split("\n\n") if (m := re.match(r"\((\d+)\)", b)) and m.group(1) in ids
@@ -101,12 +106,14 @@ def write_plans(spark, fn) -> list[str]:
     return out
 
 
-def assert_multi_file_write(plan: str, file_col: str) -> None:
-    """One shuffle, a coalesce above it and one sort whose keys lead
-    with the file column: the writer adds no sort of its own."""
+def assert_multi_file_write(plan: str, file_col: str, exchanges: int | None = 1) -> None:
+    """``exchanges`` shuffles (any number for None), one coalesce and
+    one sort whose keys lead with the file column: the writer adds no
+    sort of its own."""
     tree = plan.split("\n\n(", 1)[0]
     nodes = re.findall(r"^\s*(?:\+- )?\*?\s*([A-Za-z][\w ]*?) \(\d+\)", tree, re.M)
-    assert nodes.count("Exchange") == 1, plan
+    if exchanges is not None:
+        assert nodes.count("Exchange") == exchanges, plan
     assert nodes.count("Coalesce") == 1, plan
     assert nodes.count("Sort") == 1, plan
     sort = re.search(r"^\(\d+\) Sort.*\nInput.*\nArguments: \[(\w+)#", plan, re.M)
@@ -114,19 +121,30 @@ def assert_multi_file_write(plan: str, file_col: str) -> None:
 
 
 def test_multi_file_write_plan(spark, tmp_table_dir):
-    """append(parts) and cluster() each write their files with one
-    shuffle, one coalesce into write tasks and one in-task sort led by
-    the file column — no second (writer-inserted) sort."""
+    """Every write of table files runs one coalesce into write tasks and
+    one in-task sort led by the file column — no second
+    (writer-inserted) sort: append(parts) and cluster() behind their one
+    shuffle, a MERGE, and the shuffle-free delete_where and compaction."""
     from fupi_spark import meta
     from fupi_spark.cluster import cluster
+    from fupi_spark.compact import compact
+    from fupi_spark.merge import delete_where, merge_into
     from fupi_spark.synth import synth_clips
 
     t = meta.create_table(spark, tmp_table_dir)
     clips = synth_clips(spark, 200, dur_range_ms=(50, 80))
     [append] = write_plans(spark, lambda: meta.append(t, clips, job_id="seed", parts=32))
-    assert_multi_file_write(append, "_part")
+    assert_multi_file_write(append, meta.FILE_COL)
     [clustered] = write_plans(spark, lambda: cluster(t, curve="zorder", target_bytes=1 << 14))
     assert_multi_file_write(clustered, "_bucket")
+    ids = sorted(r.clip_id for r in t.scan().select("clip_id").collect())
+    src = t.scan().filter(F.col("clip_id").isin(ids[::50])).withColumn("transcript", F.lit("u"))
+    [merged] = write_plans(spark, lambda: merge_into(t, src))
+    assert_multi_file_write(merged, meta.FILE_COL, exchanges=None)
+    [deleted] = write_plans(spark, lambda: delete_where(t, f"clip_id < '{ids[20]}'"))
+    assert_multi_file_write(deleted, meta.FILE_COL, exchanges=0)
+    [compacted] = write_plans(spark, lambda: compact(t, target_bytes=1 << 30))
+    assert_multi_file_write(compacted, "_bin", exchanges=0)
 
 
 def test_merge_prune_join_is_metadata_only(spark, tmp_table_dir):

@@ -1,7 +1,8 @@
 """Regression tests for the round-2 correctness fixes (ADVICE.md):
 
 1. commit rebase re-validates input files after losing the O_EXCL race;
-2. compact resume wipes stale staging output (no duplicate promotion);
+2. compact resume wipes stale staging output (no duplicate promotion;
+   now tests/test_meta_compact.py::test_compact_resume_wipes_stale_staging);
 3. orphan GC never deletes promoted-but-uncommitted files of in-flight
    jobs, and prunes lineage checkpoints of committed jobs;
 4. MERGE rejects duplicate source keys, supports conditional matched
@@ -60,26 +61,6 @@ def test_commit_rebase_revalidates_inputs_after_lost_race(spark, tmp_table_dir, 
         )
     monkeypatch.setattr(meta.Table, "current_snapshot", real)
     assert t.snapshot_ids() == [1, 2, 3]  # nothing stale was committed
-
-
-def test_compact_resume_wipes_stale_staging(spark, tmp_table_dir):
-    """A crash between the wave write and the promote loop leaves staged
-    part files; the re-run must not promote them alongside its own
-    output (round-1 used mode('append') over dirty staging)."""
-    t = make_table(spark, tmp_table_dir, n=120, parts=6)
-    before = clip_multiset(t.scan())
-
-    job = "c-crashy"
-    staging = t.stage_dir(job)
-    os.makedirs(f"{staging}/_bin=0", exist_ok=True)
-    # stale leftovers: a full copy of a real data file = duplicate rows
-    a_file = t.live_files()[0]
-    shutil.copy(f"{t.root}/{a_file}", f"{staging}/_bin=0/part-stale-attempt.parquet")
-
-    snap = compact(t, target_bytes=1 << 30, job_id=job)
-    assert snap is not None
-    assert t.scan().count() == 120
-    assert clip_multiset(t.scan()) == before
 
 
 def test_gc_protects_inflight_jobs_and_prunes_committed_lineage(spark, tmp_table_dir):
