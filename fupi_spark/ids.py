@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .meta import local_frame
+
 _POS_MASK = (1 << 33) - 1
 
 #: above this many partitions the literal offset map becomes a
@@ -134,7 +136,7 @@ def dense_ids(
         # large-partition-count path: broadcast-join the offsets (the
         # plan stays O(1) in n_partitions; the join key is the
         # partition id)
-        off_df = spark.createDataFrame(offsets, "_pid int, _offset long")
+        off_df = local_frame(spark, offsets, "_pid int, _offset long")
         ids = (
             d.withColumn("_pid", F.shiftright("_mid", 33).cast("int"))
             .join(F.broadcast(off_df), "_pid")

@@ -72,7 +72,7 @@ from pyspark.sql import functions as F
 
 from .cluster import _bucket_expr
 from .lineage import Rewrite
-from .meta import Snapshot, Table, prune_manifest
+from .meta import Snapshot, Table, local_frame, prune_manifest
 
 MERGE_KEY = "clip_id"
 
@@ -132,9 +132,11 @@ def plan_touched_files(
         return entries
     boundaries = sorted({e[lo_k] for e in bounded})
     # driver-side file→bins explode (total size ∝ overlap, 1-2 bins per
-    # file once the table is clustered); schema inferred so the key's
-    # min/max type follows the key column (string clip_id or an int key)
-    files_df = table.spark.createDataFrame(
+    # file once the table is clustered); Arrow types inferred so the
+    # key's min/max type follows the key column (string clip_id or an
+    # int key)
+    files_df = local_frame(
+        table.spark,
         [
             (b, ord_, e[lo_k], e[hi_k])
             for ord_, e in enumerate(bounded)
@@ -257,7 +259,7 @@ def merge_into(
             source = source.drop(CRC_COL)
             data_cols = [c for c in data_cols if c != CRC_COL]
     else:
-        target = spark.createDataFrame([], source.schema)
+        target = local_frame(spark, [], source.schema)
 
     # -- classify: matched/insert/carry counts for the commit summary.
     # DEFAULT PATH (plain upsert: one unconditional UPDATE clause +

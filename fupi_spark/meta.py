@@ -73,7 +73,11 @@ split into sequence cohorts, and each cohort gets one pushed-down key
 filter — no join and no Spark job; larger delete sets are anti-joined.
 A per-file value a read needs on its rows (compaction's bin, the
 anti-join's file sequence, a test's file ordinal) is attached by one
-broadcast join on ``_metadata.file_name`` (Table.tag_files).
+broadcast join on ``_metadata.file_name`` (Table.tag_files). Every
+frame the engine builds from driver rows — that map, the empty frames
+that carry only a schema, MERGE's file→bin map — is one Arrow table
+handed to Spark (local_frame): a local relation of known size, so it
+starts no Python worker and write_tasks can size a write over it.
 """
 
 from __future__ import annotations
@@ -336,7 +340,7 @@ class Table:
         snap = snapshot or self.current_snapshot()
         schema = _manifest_spark_schema(self.stats_spec)
         if snap is None or not snap.manifests:
-            return self.spark.createDataFrame([], schema=schema)
+            return local_frame(self.spark, [], schema)
         return self.read_with_schema([f"{self.root}/{m}" for m in snap.manifests], schema)
 
     def live_files(self, snapshot: Snapshot | None = None) -> list[str]:
@@ -559,7 +563,7 @@ class Table:
             raise ValueError("empty table: no committed snapshot with files")
         from .evolve import apply_schema_ops
 
-        df = self.spark.createDataFrame([], self.physical_schema(files, snap))
+        df = local_frame(self.spark, [], self.physical_schema(files, snap))
         return self._drop_internal(apply_schema_ops(df, self.schema_ops(snap)))
 
     #: outstanding delete files holding at most this many keys in all
@@ -802,13 +806,18 @@ class Table:
         still resolves — with per-file columns: ``schema`` declares them
         (DDL, e.g. ``"_bin int"``) and ``values`` maps a file's path to
         its row of them. One broadcast join of the (basename → values)
-        map on ``_metadata.file_name``: map-side, no shuffle. Keying on
-        the basename (unique in ``data/``) is immune to the
-        path-representation drift — symlinked or relative roots,
-        non-file: schemes — that a full-path match would silently miss.
-        Rows of a file absent from ``values`` are dropped."""
-        m = self.spark.createDataFrame(
-            [(p.rsplit("/", 1)[-1], *v) for p, v in values.items()], f"_fname string, {schema}"
+        map on ``_metadata.file_name``: map-side, no shuffle. The map
+        is an Arrow local relation (local_frame): a ``LocalTableScan``
+        in the plan, built with no Python worker, whose size the
+        optimizer knows. Keying on the basename (unique in ``data/``)
+        is immune to the path-representation drift — symlinked or
+        relative roots, non-file: schemes — that a full-path match
+        would silently miss. Rows of a file absent from ``values`` are
+        dropped."""
+        m = local_frame(
+            self.spark,
+            [(p.rsplit("/", 1)[-1], *v) for p, v in values.items()],
+            f"_fname string, {schema}",
         )
         return (
             df.withColumn("_fname", F.col("_metadata.file_name"))
@@ -867,7 +876,7 @@ class Table:
         schema = _as_nullable(T.StructType([f for f in w.schema.fields if f.name != file_col]))
         if not any("=" in d for d in os.listdir(staging)):
             # no rows: a partitioned write leaves no file
-            self.spark.createDataFrame([], schema).write.parquet(f"{staging}/{file_col}=0")
+            local_frame(self.spark, [], schema).write.parquet(f"{staging}/{file_col}=0")
         rels = self._promote(staging, job_id)
         for rel in rels:
             self._schema_cache[f"{self.root}/{rel}"] = schema
@@ -1205,16 +1214,46 @@ def applicable_deletes(dels: list[dict], file_sequence: int | None) -> list[dict
     return [d for d in dels if (d.get("sequence") or 0) >= (file_sequence or 0)]
 
 
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType | list[str]
+) -> DataFrame:
+    """A DataFrame of driver rows, handed to Spark as one Arrow table —
+    the engine's one way to build a frame on the driver. Below
+    ``spark.sql.execution.arrow.localRelationThreshold`` it is a
+    ``LocalRelation`` (a ``LocalTableScan`` of known size in the plan),
+    so building or running it starts no Python worker; a frame of a
+    Python list is a PythonRDD job through a second pool of Python
+    workers and an ``ExistingRDD`` scan of unknown size. ``schema`` is
+    a DDL string or a StructType; a list of column names infers each
+    column's Arrow type from its values (so ``rows`` must not be
+    empty)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols = list(zip(*rows))
+    if isinstance(schema, list):
+        return spark.createDataFrame(pa.table(dict(zip(schema, map(pa.array, cols)))))
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    cols = cols or [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
+
+
 def write_tasks(df: DataFrame) -> int:
     """Write tasks for ``df``: the session's default parallelism,
     raised to one task per ``spark.sql.files.maxPartitionBytes`` of the
-    optimizer's size estimate of ``df``. The caller coalesces to it, so
-    it never raises the partition count: an unknown estimate is huge
-    and keeps one task per partition, as do partitions larger than
-    maxPartitionBytes; no task sorts much more than maxPartitionBytes.
-    Capped at the largest JVM int, which ``coalesce`` takes."""
+    bytes ``df`` reads — the sum of the optimizer's size estimates of
+    its plan's leaves. Not the root's estimate: Spark's size-only
+    estimate of a join is the product of its sides, so any join (a
+    MERGE, a broadcast tag map) would read as astronomically large. The
+    caller coalesces to it, so it never raises the partition count: a
+    leaf of unknown size (an RDD) is huge and keeps one task per
+    partition, as do partitions larger than maxPartitionBytes; no task
+    sorts much more than maxPartitionBytes. Capped at the largest JVM
+    int, which ``coalesce`` takes."""
     spark = df.sparkSession
-    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    est = sum(int(str(leaves.apply(i).stats().sizeInBytes())) for i in range(leaves.size()))
     per_task = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     by_bytes = -(-est // max(per_task, 1))
     return min(max(spark.sparkContext.defaultParallelism, by_bytes), 2**31 - 1)

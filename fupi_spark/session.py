@@ -9,6 +9,17 @@ Scale notes (100 TB / 1000 executors):
   executor memory flat regardless of table size).
 - shuffle.partitions defaults to cores here; on a cluster you set it to
   2-3x total cores or rely on AQE coalescing from a high initial value.
+
+Hadoop side files: ``file:`` is served by ``RawLocalFileSystem``, not
+the checksummed local filesystem (Hive's ``ProxyLocalFileSystem`` on
+this classpath), and the output committer writes no ``_SUCCESS``
+marker. Both only added files nobody reads: a ``.crc`` sidecar beside
+every staged file, which Table._promote never moves (so reads of table
+files never verified one), and a marker in a staging directory that
+promotion deletes. Without native libhadoop every file Hadoop creates
+also costs a ``chmod`` child process. Table integrity rests on the
+per-row ``_crc`` column, the manifest's ``checksum_bytes`` and
+parquet's own page CRCs, none of which the settings touch.
 """
 
 from __future__ import annotations
@@ -50,6 +61,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         .config("spark.sql.session.timeZone", "UTC")
+        # no .crc sidecars and no _SUCCESS markers (module docstring)
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .config("spark.ui.enabled", "false")
         # zstd over snappy (guide §6): measured on the clip payload —
         # 314 MB vs 350 MB written AND ~20% faster write; every

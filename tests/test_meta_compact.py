@@ -170,6 +170,43 @@ def test_append_parts_of_no_rows_commits_one_empty_file(spark, tmp_table_dir):
     assert t.scan().columns == clips.columns
 
 
+def test_write_tasks_sums_leaf_sizes_not_join_products(spark, tmp_table_dir):
+    """A write of a joined frame gets tasks for the bytes it reads:
+    Spark's size-only estimate of a join is the product of its sides,
+    so a broadcast join over a small table read as far more than
+    maxPartitionBytes (and a tag map of unknown size as the cap). A
+    leaf of unknown size still keeps the cap."""
+    from pyspark.sql import DataFrame
+
+    from fupi_spark.compact import bins_scan
+
+    t = make_table(spark, tmp_table_dir, n=120, parts=12)
+    small = t.scan()
+    par = spark.sparkContext.defaultParallelism
+    ids = spark.range(4000).select(F.format_string("c%d", "id").alias("k"))
+    joined = small.join(F.broadcast(ids), small.clip_id == ids.k)
+    assert meta.write_tasks(joined) == par
+    bins = ffd_pack(t.manifest_entries().to_pylist(), 1 << 30)
+    assert meta.write_tasks(bins_scan(t, bins)) == par
+    # an RDD-backed frame (built in the JVM: no Python worker) has no size
+    rdd_df = DataFrame(spark._jsparkSession.createDataFrame(small._jdf.rdd(), small._jdf.schema()), spark)
+    assert meta.write_tasks(rdd_df) == 2**31 - 1
+
+
+def test_writes_leave_no_hadoop_side_files(spark, tmp_path):
+    """The session writes local files through RawLocalFileSystem and
+    marks no successful job: a parquet write leaves its part files and
+    nothing else — no ``.crc`` sidecars, no ``_SUCCESS``."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    assert fs.getClass().getName() == "org.apache.hadoop.fs.RawLocalFileSystem"
+    d = str(tmp_path / "out")
+    spark.range(3).write.parquet(d)
+    names = sorted(os.listdir(d))
+    assert names and all(n.startswith("part-") and n.endswith(".parquet") for n in names), names
+
+
 def test_compact_respects_target_size(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir, n=400, parts=40)
     entries = t.manifest_entries().to_pylist()

@@ -68,6 +68,11 @@ def test_compact_plan_has_no_shuffle(spark, tmp_table_dir):
     assert "Exchange hashpartitioning" not in p, p
     assert "SinglePartition" not in p, p
     assert "BroadcastHashJoin" in p, p
+    # the map is an Arrow local relation built on the driver, not an
+    # RDD of Python rows (which a Python worker pool would serve)
+    broadcast_side = p.split("BroadcastExchange", 1)[1]
+    assert "LocalTableScan" in broadcast_side, p
+    assert "ExistingRDD" not in p, p
 
 
 def write_plans(spark, fn) -> list[str]:

@@ -2,7 +2,10 @@
 and the manifest writer), ``session.py`` (the warm-up) and the
 query-entry modules, which write scratch inputs for their oracles, no
 module of ``fupi_spark/`` builds a Spark DataFrame writer or promotes
-files itself. Parsed with stdlib ``ast``, so it runs without Spark."""
+files itself. One builder of driver-side frames: outside ``meta.py``
+(meta.local_frame, an Arrow local relation) and the query-entry
+modules, no module calls ``createDataFrame``. Parsed with stdlib
+``ast``, so it runs without Spark."""
 
 from __future__ import annotations
 
@@ -13,7 +16,8 @@ import os
 import pytest
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fupi_spark")
-ALLOWED = {"meta.py", "session.py", "queries.py", "maintenance_queries.py", "pipeline_queries.py"}
+QUERY_ENTRIES = {"queries.py", "maintenance_queries.py", "pipeline_queries.py"}
+ALLOWED = {"meta.py", "session.py", *QUERY_ENTRIES}
 #: calls on ``<frame>.write`` that make it a DataFrame writer; a file
 #: object's own ``f.write(data)`` is a call of ``write`` itself
 WRITER_CALLS = {"mode", "partitionBy", "parquet"}
@@ -61,3 +65,33 @@ def test_checker_flags_writers_not_file_objects():
 def test_only_write_datafiles_writes_table_files(path):
     with open(path) as f:
         assert file_writes(f.read()) == []
+
+
+def frame_builds(source: str) -> list[str]:
+    """``createDataFrame(...)`` calls in ``source``, as ``line n``."""
+    calls = [n for n in ast.walk(ast.parse(source)) if isinstance(n, ast.Call)]
+    return [
+        f"line {n.lineno}"
+        for n in sorted(calls, key=lambda n: (n.lineno, n.col_offset))
+        if (n.func.attr if isinstance(n.func, ast.Attribute) else getattr(n.func, "id", None))
+        == "createDataFrame"
+    ]
+
+
+def test_checker_flags_frame_builds():
+    src = "a = spark.createDataFrame(rows, 'x int')\nb = local_frame(spark, rows, 'x int')\n"
+    assert frame_builds(src) == ["line 1"]
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(
+        p
+        for p in glob.glob(os.path.join(PKG, "*.py"))
+        if os.path.basename(p) not in {"meta.py", *QUERY_ENTRIES}
+    ),
+    ids=os.path.basename,
+)
+def test_only_local_frame_builds_driver_frames(path):
+    with open(path) as f:
+        assert frame_builds(f.read()) == []
