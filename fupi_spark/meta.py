@@ -100,6 +100,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .session import session_conf
 from .storage import LocalStorage, Storage
@@ -1227,8 +1228,6 @@ def local_frame(
     a DDL string or a StructType; a list of column names infers each
     column's Arrow type from its values (so ``rows`` must not be
     empty)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     cols = list(zip(*rows))
     if isinstance(schema, list):
         return spark.createDataFrame(pa.table(dict(zip(schema, map(pa.array, cols)))))
